@@ -135,6 +135,55 @@ object Bench {
     }.headOption
   }
 
+  /** What the sf1 tier's timed passes leave: each query's best time, how
+    * many passes timed it, the queries pass 1 dropped past the budget, the
+    * errors of each query's last failed pass not followed by a clean one,
+    * and the seconds spent. */
+  private[graft] final case class TierRun(
+      best: mutable.LinkedHashMap[String, Double],
+      reps: mutable.LinkedHashMap[String, Int],
+      dropped: Seq[String],
+      errors: mutable.LinkedHashMap[String, String],
+      spentSec: Double)
+
+  /** Min-of-2 passes over the sf1 tier, budget-bounded: single-pass sf1
+    * values swung up to 4x between same-tree runs (mid-tier host phases
+    * the bracket canaries cannot capture); a second pass takes the
+    * per-query min exactly like the main suite's legs. Pass 1 drops (and
+    * RECORDS) queries past the budget; pass 2 stops silently when the
+    * budget is spent — those queries keep their pass-1 value at reps=1.
+    * A clean pass clears the error an earlier pass recorded. */
+  private[graft] def sf1Passes(tier: Seq[(String, () => Unit)],
+      budgetSec: Double): TierRun = {
+    val best = mutable.LinkedHashMap.empty[String, Double]
+    val reps = mutable.LinkedHashMap.empty[String, Int]
+    val dropped = mutable.ListBuffer.empty[String]
+    val errs = mutable.LinkedHashMap.empty[String, String]
+    var spent = 0.0
+    (1 to 2).foreach { pass =>
+      tier.foreach { case (n, run) =>
+        if (spent > budgetSec) { if (pass == 1) dropped += n }
+        else {
+          val t0 = System.nanoTime()
+          try {
+            run()
+            val t = (System.nanoTime() - t0) / 1e9
+            spent += t
+            best(n) = math.min(t, best.getOrElse(n, Double.MaxValue))
+            reps(n) = reps.getOrElse(n, 0) + 1
+            errs.remove(n)
+          } catch {
+            case t: Throwable =>
+              spent += (System.nanoTime() - t0) / 1e9
+              errs(n) = (t.getClass.getSimpleName + ": " +
+                String.valueOf(t.getMessage)).take(120)
+          }
+        }
+      }
+    }
+    TierRun(best, reps, dropped.toSeq, errs, spent)
+  }
+
   def main(args: Array[String]): Unit = {
     preflightDisk().foreach(emitEnvFailure)
     try run(args)
@@ -604,10 +653,10 @@ object Bench {
     var sf1Field = ""
     val sf1On = childOut.isEmpty && only.isEmpty &&
       sys.env.getOrElse("SPARK_GRAFT_SF1", "1") != "0"
+    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1_bench")
     if (sf1On) try {
       import org.apache.spark.sql.functions.{col, lit}
       val tGen0 = System.nanoTime()
-      val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1_bench")
       val budgetSec = sys.env.get("SPARK_GRAFT_SF1_BUDGET")
         .flatMap(_.toDoubleOption).getOrElse(900.0)
       graft.streaming.Streams.deleteRecursivelyNoFollow(sf1Dir)
@@ -637,54 +686,25 @@ object Bench {
         "p75_containment", "p76_quality_dedup", "p77_subsumption",
         "p78_incr_containment", "p94_dedup_audit")
       val calS1 = canary("sf1_cal_start")
-      val res1 = mutable.LinkedHashMap.empty[String, Double]
-      val reps1 = mutable.LinkedHashMap.empty[String, Int]
-      val dropped1 = mutable.ListBuffer.empty[String]
-      val errs1 = mutable.LinkedHashMap.empty[String, String]
-      var spent1 = 0.0
-      // min-of-2 passes, budget-bounded: single-pass sf1 values swung up
-      // to 4x between same-tree runs (mid-tier host phases the bracket
-      // canaries cannot capture); a second pass takes the per-query min
-      // exactly like the main suite's legs. Pass 1 drops (and RECORDS)
-      // queries past the budget; pass 2 stops silently when the budget
-      // is spent — those queries keep their pass-1 value at reps=1.
-      (1 to 2).foreach { pass =>
-        tier.foreach { n =>
-          if (spent1 > budgetSec) { if (pass == 1) dropped1 += n }
-          else SparkEntry.queries.get(n).foreach { fn =>
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, sf1Dir).count()
-              val t = (System.nanoTime() - t0) / 1e9
-              spent1 += t
-              res1(n) = math.min(t, res1.getOrElse(n, Double.MaxValue))
-              reps1(n) = reps1.getOrElse(n, 0) + 1
-            } catch {
-              case t: Throwable =>
-                spent1 += (System.nanoTime() - t0) / 1e9
-                errs1(n) = (t.getClass.getSimpleName + ": " +
-                  String.valueOf(t.getMessage)).take(120)
-            }
-          }
-        }
-      }
+      val r1 = sf1Passes(tier.flatMap(n => SparkEntry.queries.get(n).map(fn =>
+        n -> (() => { fn(spark, sf1Dir).count(); () }))), budgetSec)
       val calE1 = canary("sf1_cal_end")
       val cal1 = Seq(calS1, calE1).flatten
-      val sf1Total = res1.values.sum
-      val doc1 = s"""{"sf1":${jsonMap(res1, 3)},""" +
+      val sf1Total = r1.best.values.sum
+      val doc1 = s"""{"sf1":${jsonMap(r1.best, 3)},""" +
         s""""sf1_total":${fmt(sf1Total, 3)},"gen_sec":${fmt(genSec, 2)},""" +
         s""""sf1_cal":[${cal1.map(fmt(_, 3)).mkString(",")}],""" +
-        s""""sf1_reps":${reps1.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
-        s""""sf1_spent_sec":${fmt(spent1, 1)},""" +
-        s""""dropped":[${dropped1.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""errors":${jsonStrMap(errs1)},"copies":$copies,""" +
+        s""""sf1_reps":${r1.reps.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
+        s""""sf1_spent_sec":${fmt(r1.spentSec, 1)},""" +
+        s""""dropped":[${r1.dropped.map("\"" + _ + "\"").mkString(",")}],""" +
+        s""""errors":${jsonStrMap(r1.errors)},"copies":$copies,""" +
         s""""budget_sec":${fmt(budgetSec, 0)},"base_sf":"$sfDir"}"""
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("SF1_latest.json"), doc1 + "\n")
       println(doc1)
-      sf1Field = s""""s1":[${fmtC(sf1Total, 0.3)},${res1.size}],"""
-      graft.streaming.Streams.deleteRecursivelyNoFollow(sf1Dir)
+      sf1Field = s""""s1":[${fmtC(sf1Total, 0.3)},${r1.best.size}],"""
     } catch { case _: Throwable => () }
+    finally if (sf1On) graft.streaming.Streams.deleteRecursivelyNoFollow(sf1Dir)
     def headline(cut: Double): String = {
       def jm(m: Iterable[(String, Double)]): String =
         m.map { case (k, v) => "\"" + shortKey(k) + "\":" + fmtC(v, cut) }.mkString("{", ",", "}")

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -27,14 +28,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 case class JaccardSorted(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true // element nullability irrelevant
-      case _ => false
-    }))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs two array<bigint> inputs, got ${left.dataType} / ${right.dataType}")
+  override def checkInputDataTypes(): TypeCheckResult =
+    SetExpressions.checkSortedSets(prettyName, left, right)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_jaccard_sorted"
 
@@ -82,14 +77,8 @@ case class JaccardSorted(left: Expression, right: Expression)
 case class ContainmentSorted(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs two array<bigint> inputs, got ${left.dataType} / ${right.dataType}")
+  override def checkInputDataTypes(): TypeCheckResult =
+    SetExpressions.checkSortedSets(prettyName, left, right)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_containment_sorted"
 
@@ -135,14 +124,69 @@ case class ContainmentSorted(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** `array<bigint>` narrowed to `containsNull=false`, failing on a null
+  * element. The set kernels read elements without a null check, so an
+  * input whose type allows nulls (any array read back from parquet, say)
+  * passes through this first; an input typed without nulls never does. */
+case class NoNullElements(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName needs array<bigint>, got $t")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_no_null_elements"
+
+  override def nullSafeEval(a: Any): Any = NoNullElements.check(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, x => s"${classOf[NoNullElements].getName}.check($x)")
+
+  override protected def withNewChildInternal(newChild: Expression): NoNullElements =
+    copy(child = newChild)
+}
+
+object NoNullElements {
+  /** `x` unchanged, or an error naming the first null element; called by
+    * the interpreted and the generated path alike. */
+  def check(x: ArrayData): ArrayData = {
+    var i = 0
+    while (i < x.numElements()) {
+      if (x.isNullAt(i)) throw new IllegalArgumentException(
+        s"graft_no_null_elements: null element at index $i of a sorted hash set")
+      i += 1
+    }
+    x
+  }
+}
+
 /** Registration, mirroring [[VectorExpressions]]. */
 object SetExpressions {
+  /** Both kernels take two `array<bigint>` inputs typed without null
+    * elements: a null element has no value to merge on. */
+  private[functions] def checkSortedSets(name: String, left: Expression,
+      right: Expression): TypeCheckResult =
+    if (Seq(left, right).forall(_.dataType == ArrayType(LongType, containsNull = false)))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name needs two array<bigint> inputs without null elements, got " +
+        s"${left.dataType} / ${right.dataType} (wrap a nullable-element " +
+        "array in NoNullElements)")
+
+  /** The function builders narrow an input typed with null elements
+    * through [[NoNullElements]]; inputs typed without them are untouched,
+    * so their plans carry no extra node. */
+  private def nonNull(e: Expression): Expression = e.dataType match {
+    case ArrayType(LongType, true) => NoNullElements(e)
+    case _ => e
+  }
+
   def register(spark: SparkSession): Unit = synchronized {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("graft_jaccard_sorted",
-      exprs => JaccardSorted(exprs(0), exprs(1)), "built-in")
+      exprs => JaccardSorted(nonNull(exprs(0)), nonNull(exprs(1))), "built-in")
     reg.createOrReplaceTempFunction("graft_containment_sorted",
-      exprs => ContainmentSorted(exprs(0), exprs(1)), "built-in")
+      exprs => ContainmentSorted(nonNull(exprs(0)), nonNull(exprs(1))), "built-in")
   }
 
   def jaccardSorted(spark: SparkSession, a: Column, b: Column): Column = {

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB path: hash-partitioned group-bys, band-bucketed candidate
@@ -181,38 +182,6 @@ object Dedup {
     * Returns array<bigint> of length k. */
   def minhashSignature(shingles: Column, k: Int = 128): Column =
     minhashKernel(shingles, lit(k))
-
-  /** Fused shingle+minhash kernel: w-gram shingling and the k-minima loop
-    * in one pass over the token array, no intermediate shingle strings
-    * (hashes are chained per-token: h(w-gram) = mix of the w token hashes).
-    */
-  private val minhashTextKernel = udf((text: String, w: Int, k: Int) => {
-    val sig = Array.fill(k)(Long.MaxValue)
-    if (text != null) {
-      val toks = text.trim.toLowerCase.split("\\W+").filter(_.nonEmpty)
-      val th = toks.map(hash64)
-      var i = 0
-      val last = th.length - w
-      while (i <= last) {
-        var h = 0x27D4EB2F165667C5L
-        var j = 0
-        while (j < w) { h = mix64(h ^ th(i + j)); j += 1 }
-        var s = 0
-        while (s < k) {
-          val v = mix64(h + s * 0xC2B2AE3D27D4EB4FL)
-          if (v < sig(s)) sig(s) = v
-          s += 1
-        }
-        i += 1
-      }
-    }
-    sig
-  })
-
-  /** Text → minhash signature directly — murmur/splitmix hashing (the raw
-    * throughput variant; not replicable by an external SQL engine). */
-  def minhashOfTextFast(text: Column, shingleWords: Int = 3, k: Int = 128): Column =
-    minhashTextKernel(text, lit(shingleWords), lit(k))
 
   /** Oracle-exact fused shingle+minhash kernel: w-gram shingles over
     * `\W+`-split lowercase tokens, base hash = md5-lower-64 masked to 31
@@ -701,9 +670,9 @@ object Dedup {
   /** 64-bit SimHash over whitespace tokens: per-bit majority vote of token
     * hash bits. Tight-loop UDF kernel for the same CodegenFallback reason
     * as [[minhashSignature]]. Token hash = md5-lower-64 ([[Md5.lower64]])
-    * so the DuckDB oracle recomputes identical simhashes; `simhashFast`
-    * keeps the murmur variant. */
-  private def simhashBody(hash: String => Long): String => Long = { text =>
+    * so the DuckDB oracle recomputes identical simhashes. */
+  private val simhashMd5Kernel = udf { (text: String) =>
+    val md = Md5.newDigest()
     val counts = new Array[Int](64)
     var n = 0
     if (text != null) {
@@ -711,7 +680,7 @@ object Dedup {
       n = toks.length
       var t = 0
       while (t < toks.length) {
-        val h = hash(toks(t))
+        val h = Md5.lower64(md, toks(t))
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) counts(b) += 1
@@ -729,14 +698,7 @@ object Dedup {
     sh
   }
 
-  private val simhashMd5Kernel = udf { (text: String) =>
-    val md = Md5.newDigest()
-    simhashBody(Md5.lower64(md, _))(text)
-  }
-  private val simhashFastKernel = udf(simhashBody(hash64))
-
   def simhash(text: Column): Column = simhashMd5Kernel(text)
-  def simhashFast(text: Column): Column = simhashFastKernel(text)
 
   /** Hamming distance between two 64-bit simhashes. */
   def hammingDistance(a: Column, b: Column): Column =
@@ -1546,7 +1508,8 @@ object Dedup {
         lit(s"containment verify: doc exceeds maxShinglesPerDoc=$cap ("),
         size(arr).cast("string"),
         lit(" shingles) — raise the cap or pre-chunk the document")))
-        .cast("array<bigint>"))
+        // arr's type: elements typed non-null, so the set kernels need no check
+        .cast(ArrayType(LongType, containsNull = false)))
       .otherwise(arr)
 
   /** Containment of sorted distinct hash array `a` IN `b`:

@@ -109,7 +109,7 @@ object TextAnalysis {
     * replicable in DuckDB (`list_reduce` over `md5_number_lower`), so the
     * oracle checks fingerprints bit-for-bit; see [[graft.pipeline.Md5]].
     * BigInt only guards the 61×20-bit product — ~100 tokens/doc, cold
-    * path. `fingerprintFast` keeps the chained-xxhash64 Column variant. */
+    * path. */
   def fingerprint(text: Column): Column = fingerprintKernel(text)
 
   private val fingerprintKernel = udf { (text: String) =>
@@ -121,13 +121,6 @@ object TextAnalysis {
         acc = (acc * 1000003 + BigInt(Md5.lower64(md, t) & Md5.M61)) % M
       }
     acc.toLong
-  }
-
-  /** Chained-xxhash64 fingerprint (pure Column expression, codegen'd) —
-    * the throughput variant when oracle replication is not needed. */
-  def fingerprintFast(text: Column): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    aggregate(toks, lit(1125899906842597L), (acc, t) => xxhash64(acc, t))
   }
 
   /** Convenience: annotate a documents DataFrame with the full suite. */

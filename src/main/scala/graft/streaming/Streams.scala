@@ -803,17 +803,23 @@ object Streams {
   /** Total row count of a directory of parquet part files, read from
     * the file FOOTERS on the driver — metadata only, no Spark job (the
     * staging dir holds `parts` files, so this is a handful of footer
-    * reads against the local FS). */
+    * reads). Listed through Hadoop `FileSystem`, so `file:` URIs and
+    * non-local stores count too; a directory with no `part-` files falls
+    * back to a Spark count rather than reporting 0 rows. */
   private[graft] def parquetFooterRowCount(s: SparkSession, dir: String): Long = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = s.sparkContext.hadoopConfiguration
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val parts = fs.listStatus(root).toSeq
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+    if (parts.isEmpty) s.read.parquet(dir).count()
+    else parts.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   private[graft] def deleteRecursivelyNoFollow(path: String): Unit = {

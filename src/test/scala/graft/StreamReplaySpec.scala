@@ -392,6 +392,22 @@ class StreamReplaySpec extends SparkTestBase {
     assert(adaptiveStateParts(32, 600000L, 16384L, Some(0L)) == 1)
   }
 
+  test("footer row count reads a file: URI, and counts through Spark " +
+      "when there are no part- files") {
+    val dir = scratch("footer_uri")
+    ev.select("event_id").repartition(3).write.mode("overwrite")
+      .parquet(s"$dir/stage")
+    val n = graft.streaming.Streams.parquetFooterRowCount(spark, s"file://$dir/stage")
+    assert(n == ev.count(), s"footer row count via file: URI $n != true count")
+    // files Spark reads but whose names do not start with part-
+    val stage = new java.io.File(s"$dir/stage")
+    stage.listFiles().filter(_.getName.startsWith("part-")).foreach { f =>
+      assert(f.renameTo(new java.io.File(stage, "data" + f.getName.stripPrefix("part"))))
+    }
+    val m = graft.streaming.Streams.parquetFooterRowCount(spark, s"$dir/stage")
+    assert(m == ev.count(), s"row count without part- files $m != true count")
+  }
+
   test("unordered staging: footer row count matches, and stateKeyHint " +
       "leaves the sketch result unchanged") {
     import spark.implicits._

@@ -171,6 +171,9 @@ def sf1_compare(art_path, ref_path):
             continue
         nr = nr / (fr[0] + pos * (fr[1] - fr[0]))
         rows.append((q, t, na, nr, na / nr if nr else float("inf")))
+    if not rows:
+        print(f"sf1 tier: no shared queries between {art_path} and {ref_path}")
+        return
     rows.sort(key=lambda r: -r[4])
     print(f"sf1 tier ({len(rows)} shared queries; cal legs "
           f"[{fs[0]:.2f},{fs[1]:.2f}]):")
