@@ -126,7 +126,8 @@ object Dedup {
     * The normalized text is LET-BOUND via a one-element `transform`
     * before the index lambda references it — Catalyst does not CSE
     * through lambdas, so an inline capture would re-run the regex once
-    * per shingle INDEX (the minhashKernel lesson, same trap). */
+    * per shingle INDEX (the same trap the minhash kernel's fused UDF
+    * avoids). */
   def charShingles(text: Column, n: Int = 5): Column = {
     val norm = regexp_replace(lower(text), "\\s+", " ")
     array_distinct(flatten(transform(array(norm), nm =>
@@ -141,47 +142,6 @@ object Dedup {
       transform(sequence(lit(0), greatest(size(ts) - w, lit(0))),
         i => concat_ws(" ", slice(ts, i + 1, lit(w)))))))
   }
-
-  /** splitmix64 finalizer — a strong, cheap 64-bit mix. */
-  @inline private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  @inline private def hash64(s: String): Long = {
-    // 64-bit string hash from two independent 32-bit murmurs
-    val h1 = scala.util.hashing.MurmurHash3.stringHash(s, 0x9747b28c)
-    val h2 = scala.util.hashing.MurmurHash3.stringHash(s, 0x85ebca6b)
-    (h1.toLong << 32) | (h2.toLong & 0xFFFFFFFFL)
-  }
-
-  /** MinHash signature kernel: each shingle string is hashed once, then k
-    * permutation-minima via a splitmix64 seed mix — a tight primitive loop.
-    * A typed UDF beats the equivalent `transform`/`array_min` pipeline
-    * ~1000× here: Spark higher-order functions are CodegenFallback
-    * (interpreted per element), catastrophic at k×|shingles| evaluations.
-    */
-  private val minhashKernel = udf((shingles: Seq[String], k: Int) => {
-    val sig = Array.fill(k)(Long.MaxValue)
-    val it = shingles.iterator
-    while (it.hasNext) {
-      val h = hash64(it.next())
-      var i = 0
-      while (i < k) {
-        val v = mix64(h + i * 0xC2B2AE3D27D4EB4FL)
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-    }
-    sig
-  })
-
-  /** MinHash signature: k permutation-minima over the shingle set.
-    * Returns array<bigint> of length k. */
-  def minhashSignature(shingles: Column, k: Int = 128): Column =
-    minhashKernel(shingles, lit(k))
 
   /** Oracle-exact fused shingle+minhash kernel: w-gram shingles over
     * `\W+`-split lowercase tokens, base hash = md5-lower-64 masked to 31
@@ -228,24 +188,6 @@ object Dedup {
   private def bandKey(sig: Column, b: Int, r: Int): Column =
     concat_ws(",", (0 until r).map(i => sig.getItem(b * r + i).cast("string")): _*)
 
-  /** LSH banding: split the k-length signature into `bands` bands and hash
-    * each; docs sharing any (band_idx, band_hash) are candidates.
-    * Returns (idCol, band, band_hash) — one row per band. */
-  def lshBands(df: DataFrame, idCol: String, sigCol: String, bands: Int,
-      sigLen: Int): DataFrame = {
-    val sig = col(sigCol)
-    // sigLen is required: a head() fallback would be a driver job inside a
-    // library function before any action the caller scheduled
-    val k = sigLen
-    require(k > 0, s"sigLen must be positive, got $sigLen")
-    require(k % bands == 0, s"signature length $k not divisible by $bands bands")
-    val r = k / bands
-    val bandStructs = array((0 until bands).map(b =>
-      struct(lit(b).as("band"), xxhash64(slice(sig, b * r + 1, r)).as("band_hash"))): _*)
-    df.select(col(idCol), explode(bandStructs).as("b"))
-      .select(col(idCol), col("b.band"), col("b.band_hash"))
-  }
-
   /** Banded minhash signatures: one (idCol, band, band_key) row per band,
     * where band_key is the band's r signature values rendered as a string
     * (see [[minhashCandidates]] for why values, not hashes). This is the
@@ -280,7 +222,8 @@ object Dedup {
     * false pairs. Docs with fewer than `shingleWords` tokens produce no
     * shingles and are excluded (they cannot be near-dups of anything).
     * At 100 TB the string key costs marginally more shuffle width than a
-    * 64-bit hash; swap in [[lshBands]] (xxhash64 keys) if that matters.
+    * 64-bit hash of the band would; a hashed key would also admit the
+    * collision pairs this contract excludes.
     *
     * Hot-bucket guard: a degenerate band key (viral boilerplate, shared
     * templates) would make one bucket's self-join quadratic — a single
@@ -669,7 +612,7 @@ object Dedup {
 
   /** 64-bit SimHash over whitespace tokens: per-bit majority vote of token
     * hash bits. Tight-loop UDF kernel for the same CodegenFallback reason
-    * as [[minhashSignature]]. Token hash = md5-lower-64 ([[Md5.lower64]])
+    * as the minhash kernel's. Token hash = md5-lower-64 ([[Md5.lower64]])
     * so the DuckDB oracle recomputes identical simhashes. */
   private val simhashMd5Kernel = udf { (text: String) =>
     val md = Md5.newDigest()
@@ -812,17 +755,45 @@ object Dedup {
     * and labels come back as min ORIGINAL id per component (one extra
     * groupBy: surrogate order is arbitrary, so the min surrogate's
     * original id is NOT the min original id).
+    *
+    * A graph whose at most 2m nodes + 2m directed edges (m input pairs)
+    * fit `spark.graft.broadcastNodeLimit`, with integral ids, skips the
+    * loop: union-find in one task ([[GraphLocal.componentRows]]), the
+    * same rows including the fallback's.
     * Returns (id, component) with component = min id in the cluster. */
-  def components(edges: DataFrame, maxIter: Int = 10): DataFrame = {
-    // undirected: both directions. Materialize the FORWARD edges once —
-    // the union references them twice, and they usually sit atop an
-    // expensive candidate-generation chain (minhash → jaccard) that must
-    // not run once per union branch. The symmetrized view itself stays
-    // lazy: re-deriving it per iteration is two cheap scans of the
-    // checkpointed edges, one job less than materializing it too.
-    val fwd = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .transform(graft.Stage.materialize)
-    val sym = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
+  def components(edges: DataFrame, maxIter: Int = 10): DataFrame =
+    GraphLocal.describing(edges.sparkSession) {
+      val spark = edges.sparkSession
+      GraphLocal.describe(spark, "dedup.components")
+      // undirected: both directions. Materialize the FORWARD edges once —
+      // the union references them twice, and they usually sit atop an
+      // expensive candidate-generation chain (minhash → jaccard) that must
+      // not run once per union branch. The same job counts them.
+      val (counted, rows) = GraphLocal.counting(
+        edges.select(col("id_a").as("src"), col("id_b").as("dst")))
+      val fwd = counted.transform(graft.Stage.materialize)
+      val m = 2 * rows.value.longValue // directed; nodes are at most as many
+      val integral = GraphLocal.integral(
+        fwd.schema("src").dataType, fwd.schema("dst").dataType)
+      if (GraphLocal.path(spark, m, m, integral) == "local") {
+        GraphLocal.describe(spark, s"dedup.components local n<=$m m=$m")
+        GraphLocal.components(fwd, symmetric(fwd).schema("src").dataType, maxIter)
+      } else {
+        GraphLocal.describe(spark, s"dedup.components distributed n<=$m m=$m")
+        labelLoop(fwd, maxIter)
+      }
+    }
+
+  private def symmetric(fwd: DataFrame): DataFrame =
+    fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** [[components]]' min-label loop over the materialized forward edges,
+    * with its star-contraction fallback. */
+  private def labelLoop(fwd: DataFrame, maxIter: Int): DataFrame = {
+    // the symmetrized view stays lazy: re-deriving it per iteration is
+    // two cheap scans of the checkpointed edges, one job less than
+    // materializing it too
+    val sym = symmetric(fwd)
     // round 0 fused into initialization: label = min(id, min neighbor) —
     // resolves all simple pairs before the loop even starts
     var labels = sym.groupBy(col("src").as("id"))
@@ -839,7 +810,7 @@ object Dedup {
       // materialization job runs — zero extra jobs per round (the old
       // filter(_chg).count() scanned the checkpointed result again).
       // Retries/speculation can only over-count; we only test > 0.
-      val acc = edges.sparkSession.sparkContext.longAccumulator("graft.cc.changed")
+      val acc = fwd.sparkSession.sparkContext.longAccumulator("graft.cc.changed")
       val flag = udf { (chg: Boolean) => if (chg) acc.add(1L); chg }
       val neighborMin = sym
         .join(labels.withColumnRenamed("id", "dst")

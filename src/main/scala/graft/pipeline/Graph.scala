@@ -20,21 +20,32 @@ import org.apache.spark.sql.functions._
   * the SQL unrolls one CTE per step, generated by the same loop). */
 object Graph {
 
-  /** Node-count ceiling for broadcasting the node-sized rank/label
-    * table into the per-iteration edge join (`spark.graft
-    * .broadcastNodeLimit`, default 10M ≈ 160 MB serialized). Below it
-    * the edge join is a broadcast-hash join — NO shuffle by src, so a
-    * mega-family hub vertex CANNOT concentrate edge mass in one
-    * partition (measured on the skew×scale corpus: the p51 rank-
-    * contribution sort-merge join carried the hub's partition in one
-    * task at a 4.9–8.9× max/median ratio; broadcast removes the stage
-    * entirely). Above it — node tables too big for executor memory,
-    * the true 100-TB regime — the join stays sort-merge and the
-    * mitigation is AQE skew-join splitting, validated on the same
-    * corpus (ratio 4.9×→2.4×; see docs/PIPELINE.md scale knobs). */
+  /** The limit `spark.graft.broadcastNodeLimit` (default 10M ≈ 160 MB
+    * serialized node table) splits the iterative analytics three ways
+    * ([[GraphLocal.path]]):
+    *
+    *  - nodes + directed edges at or below it, integral ids: "local" —
+    *    the whole graph runs in one task ([[GraphLocal]]), no per-
+    *    iteration jobs at all;
+    *  - nodes at or below it: "broadcast" — the node-sized rank/label
+    *    table is broadcast into the per-iteration edge join, so a
+    *    mega-family hub vertex CANNOT concentrate edge mass in one
+    *    partition (measured on the skew×scale corpus: the p51 rank-
+    *    contribution sort-merge join carried the hub's partition in one
+    *    task at a 4.9–8.9× max/median ratio; broadcast removes the stage
+    *    entirely);
+    *  - above it — node tables too big for executor memory, the true
+    *    100-TB regime — "sort-merge", mitigated by AQE skew-join
+    *    splitting, validated on the same corpus (ratio 4.9×→2.4×; see
+    *    docs/PIPELINE.md scale knobs). */
+  private def pathOf(nodes: DataFrame, edges: DataFrame, n: Long, m: Long): String =
+    GraphLocal.path(nodes.sparkSession, n, m, GraphLocal.integral(
+      nodes.schema("id").dataType, edges.schema("src").dataType,
+      edges.schema("dst").dataType))
+
+  /** Broadcast decision of [[triangleCounts]], which has no local path. */
   private def broadcastNodes(df: DataFrame, n: Long): Boolean =
-    n <= df.sparkSession.conf
-      .get("spark.graft.broadcastNodeLimit", "10000000").toLong
+    n <= GraphLocal.limit(df.sparkSession)
 
   /** Materialize the running rank/label table every k-th iteration
     * (`spark.graft.graph.checkpointInterval`, default 2) instead of
@@ -76,14 +87,25 @@ object Graph {
     * (the standard simplified formulation — in a SYMMETRIC similarity
     * graph only isolated nodes dangle, and they hold the base rank).
     *
-    * One shuffle per iteration (contributions groupBy dst) plus the
-    * rank join; the rank table is node-sized and re-materialized per
-    * step so the plan depth stays O(1). The per-source contribution
-    * `rank div outdeg` is computed on the NODE-sized (rank ⋈ outdeg)
-    * table before touching the edges, so each iteration pays one
-    * edge-sized join, not two (round 9). `edges` must be directed
-    * (symmetrize an undirected pair list first); `nodes` one `id` per
-    * vertex. Returns (id, rank) with rank at scale S. */
+    * A graph whose nodes + directed edges fit `spark.graft
+    * .broadcastNodeLimit` (integral ids) runs every iteration in one task
+    * ([[GraphLocal]]) and comes back materialized. Above that, one
+    * shuffle per iteration (contributions groupBy dst) plus the rank
+    * join; the rank table is node-sized and re-materialized every k-th
+    * step ([[ckptInterval]]) so the plan depth stays bounded. The
+    * per-source contribution `rank div outdeg` is computed on the
+    * NODE-sized (rank ⋈ outdeg) table before touching the edges, so each
+    * iteration pays one edge-sized join, not two (round 9). On this
+    * distributed path the final iteration stays lazy: EVERY action on
+    * the returned frame recomputes the iterations since the last
+    * boundary — up to k of them with `checkpointInterval` k, so k ≥ 2
+    * repeats the k−1 iterations a per-iteration boundary would have
+    * kept. Cache or materialize the result when it is read more than
+    * once.
+    *
+    * `edges` must be directed (symmetrize an undirected pair list
+    * first); `nodes` one `id` per vertex. Returns (id, rank) with rank at
+    * scale S. ANSI overflow fails loudly on both paths. */
   def pageRankInt(
       edges: DataFrame, // (src, dst)
       nodes: DataFrame, // (id)
@@ -91,51 +113,79 @@ object Graph {
       scale: Long = 1000000000000L,
       dampNum: Long = 85L,
       dampDen: Long = 100L,
-      nNodes: Option[Long] = None): DataFrame = {
+      nNodes: Option[Long] = None): DataFrame =
+    GraphLocal.describing(nodes.sparkSession)(
+      rank(edges, nodes, iters, nNodes, None, scale, dampNum, dampDen))
+
+  /** [[pageRankInt]] with the directed edge count when the caller
+    * already has it (`nEdges`); otherwise the out-degree job counts it.
+    * Labels its jobs; callers restore the description
+    * ([[GraphLocal.describing]]). */
+  private def rank(edges: DataFrame, nodes: DataFrame, iters: Int,
+      nNodes: Option[Long], nEdges: Option[Long], scale: Long = 1000000000000L,
+      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampNum >= 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen must lie in [0, 1]")
+    val spark = nodes.sparkSession
+    GraphLocal.describe(spark, "graph.pageRankInt")
     // the invariant id set, materialized once: the per-iteration
     // join-back reads it, so the running rank table is read exactly
     // ONCE per iteration (the contribution join) and iterations need
     // not materialize individually to avoid recomputation
     val ids = materializedIds(nodes)
     // callers that already know |nodes| pass it (nNodes) so the count
-    // job — needed here for the base-rank divisor AND the broadcast
+    // job — needed here for the base-rank divisor AND the path
     // decision — is not re-paid per analytic over the same node table
     // (counted off the materialized ids, not the source)
     val n = nNodes.getOrElse(ids.count())
     require(n > 0, "pageRankInt needs at least one node")
     val base = (scale * (dampDen - dampNum)) / (dampDen * n)
-    val bcast = broadcastNodes(nodes, n)
-    val every = ckptInterval(nodes)
-    val out = edges.groupBy("src").agg(count(lit(1)).as("_outdeg"))
+    def outDegrees(e: DataFrame) = e.groupBy("src").agg(count(lit(1)).as("_outdeg"))
       .transform(graft.Stage.materialize) // read every iteration
-    var r = ids.select(col("id"), lit(scale / n).as("rank"))
-    for (i <- 1 to iters) {
-      val perSrc0 = r.withColumnRenamed("id", "src")
-        .join(out, "src")
-        .select(col("src"), expr("rank div _outdeg").as("_c"))
-      // node-sized and n is known: broadcast under the limit so the
-      // edge join never shuffles by src (hub-vertex skew immunity)
-      val perSrc = if (bcast) broadcast(perSrc0) else perSrc0
-      val contrib = edges
-        .join(perSrc, "src")
-        .select(col("dst").as("id"), col("_c"))
-      val sums = contrib.groupBy("id").agg(sum(col("_c")).as("_s"))
-      // join back onto the materialized invariant id table — keeps
-      // zero-in-contribution nodes without re-scanning the node source
-      // (round 17) and without re-reading the running table (round 18)
-      r = ids
-        .join(sums, Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(base) + expr(s"($dampNum * coalesce(_s, 0)) div $dampDen"))
-            .as("rank"))
-      // stage boundary every k-th iteration only (see ckptInterval);
-      // the final iteration stays lazy — its one consumer executes it
-      if (i % every == 0 && i < iters) r = r.transform(graft.Stage.materialize)
+    // an unknown edge count rides the out-degree job the distributed
+    // loop reads anyway
+    val (m, counted) = nEdges match {
+      case Some(m) => (m, None)
+      case None =>
+        val (e, rows) = GraphLocal.counting(edges)
+        val out = outDegrees(e)
+        (rows.value.longValue, Some(out))
     }
-    r
+    val path = pathOf(nodes, edges, n, m)
+    GraphLocal.describe(spark, s"graph.pageRankInt $path n=$n m=$m")
+    if (path == "local")
+      GraphLocal.pageRank(ids, edges, iters, n, scale, base, dampNum, dampDen)
+    else {
+      val bcast = path == "broadcast"
+      val every = ckptInterval(nodes)
+      val out = counted.getOrElse(outDegrees(edges))
+      var r = ids.select(col("id"), lit(scale / n).as("rank"))
+      for (i <- 1 to iters) {
+        val perSrc0 = r.withColumnRenamed("id", "src")
+          .join(out, "src")
+          .select(col("src"), expr("rank div _outdeg").as("_c"))
+        // node-sized and n is known: broadcast under the limit so the
+        // edge join never shuffles by src (hub-vertex skew immunity)
+        val perSrc = if (bcast) broadcast(perSrc0) else perSrc0
+        val contrib = edges
+          .join(perSrc, "src")
+          .select(col("dst").as("id"), col("_c"))
+        val sums = contrib.groupBy("id").agg(sum(col("_c")).as("_s"))
+        // join back onto the materialized invariant id table — keeps
+        // zero-in-contribution nodes without re-scanning the node source
+        // (round 17) and without re-reading the running table (round 18)
+        r = ids
+          .join(sums, Seq("id"), "left_outer")
+          .select(col("id"),
+            (lit(base) + expr(s"($dampNum * coalesce(_s, 0)) div $dampDen"))
+              .as("rank"))
+        // stage boundary every k-th iteration only (see ckptInterval);
+        // the final iteration stays lazy — its one consumer executes it
+        if (i % every == 0 && i < iters) r = r.transform(graft.Stage.materialize)
+      }
+      r
+    }
   }
 
   /** Per-node triangle counts + local clustering coefficient over an
@@ -231,14 +281,18 @@ object Graph {
     * connected components when hub edges bridge families, because a
     * bridge's single vote loses to the family majority.
     *
-    * Per iteration: one shuffle for the (node, label) neighbor vote
+    * Paths as in [[pageRankInt]]: in one task ([[GraphLocal]]) when
+    * nodes + directed edges fit `spark.graft.broadcastNodeLimit`, else
+    * per iteration one shuffle for the (node, label) neighbor vote
     * count (map-side combinable), ONE winner aggregation — the
     * (max count, min label) pick is a single `min(struct(-count,
     * label))` (lexicographic struct order makes the two-key argmin one
     * pass; works for any orderable label type and saved a second agg +
     * join per iteration, round 9) — and one node-sized join. All
     * label-table-sized except the edge join. O(iters) passes over the
-    * edges, same scale family as [[pageRankInt]].
+    * edges, same scale family as [[pageRankInt]], and the same lazy
+    * final iteration: every action on a distributed result recomputes
+    * up to `checkpointInterval` iterations.
     *
     * `edges` directed (symmetrize an undirected pair list first);
     * returns (id, label). */
@@ -246,36 +300,48 @@ object Graph {
       edges: DataFrame, // (src, dst)
       nodes: DataFrame, // (id)
       iters: Int,
-      nNodes: Option[Long] = None): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    val e = edges.transform(graft.Stage.materialize) // read every iteration
-    // invariant id set materialized once — the join-back target, so the
-    // running label table is read exactly once per iteration (the vote
-    // join) and need not materialize every round (see pageRankInt)
-    val ids = materializedIds(nodes)
-    // n only gates the broadcast; a known count skips the count job
-    val bcast = broadcastNodes(nodes, nNodes.getOrElse(ids.count()))
-    val every = ckptInterval(nodes)
-    var l = ids.select(col("id"), col("id").as("label"))
-    for (i <- 1 to iters) {
-      val lbl = l.withColumnRenamed("id", "src")
-      // same hub-skew immunity as pageRankInt's contribution join
-      val votes = e.join(if (bcast) broadcast(lbl) else lbl, "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("_c"))
-      // min over (-count, label) = (max count, min label) in one agg
-      val picked = votes.groupBy("id")
-        .agg(min(struct((-col("_c")).as("_nc"), col("label").as("_lb"))).as("_b"))
-        .select(col("id"), col("_b._lb").as("_l"))
-      // join back onto the materialized invariant id table (node-set
-      // invariant of the loop, same as pageRankInt)
-      l = ids
-        .join(picked, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("_l"), col("id")).as("label"))
-      if (i % every == 0 && i < iters) l = l.transform(graft.Stage.materialize)
+      nNodes: Option[Long] = None): DataFrame =
+    GraphLocal.describing(nodes.sparkSession) {
+      require(iters >= 0, s"iters must be >= 0, got $iters")
+      val spark = nodes.sparkSession
+      GraphLocal.describe(spark, "graph.labelPropagate")
+      // read every iteration; the same job counts the edges
+      val (counted, rows) = GraphLocal.counting(edges)
+      val e = counted.transform(graft.Stage.materialize)
+      val m = rows.value.longValue
+      // invariant id set materialized once — the join-back target, so the
+      // running label table is read exactly once per iteration (the vote
+      // join) and need not materialize every round (see pageRankInt)
+      val ids = materializedIds(nodes)
+      // n only picks the path; a known count skips the count job
+      val n = nNodes.getOrElse(ids.count())
+      val path = pathOf(nodes, edges, n, m)
+      GraphLocal.describe(spark, s"graph.labelPropagate $path n=$n m=$m")
+      if (path == "local") GraphLocal.labelPropagate(ids, e, iters)
+      else {
+        val bcast = path == "broadcast"
+        val every = ckptInterval(nodes)
+        var l = ids.select(col("id"), col("id").as("label"))
+        for (i <- 1 to iters) {
+          val lbl = l.withColumnRenamed("id", "src")
+          // same hub-skew immunity as pageRankInt's contribution join
+          val votes = e.join(if (bcast) broadcast(lbl) else lbl, "src")
+            .groupBy(col("dst").as("id"), col("label"))
+            .agg(count(lit(1)).as("_c"))
+          // min over (-count, label) = (max count, min label) in one agg
+          val picked = votes.groupBy("id")
+            .agg(min(struct((-col("_c")).as("_nc"), col("label").as("_lb"))).as("_b"))
+            .select(col("id"), col("_b._lb").as("_l"))
+          // join back onto the materialized invariant id table (node-set
+          // invariant of the loop, same as pageRankInt)
+          l = ids
+            .join(picked, Seq("id"), "left_outer")
+            .select(col("id"), coalesce(col("_l"), col("id")).as("label"))
+          if (i % every == 0 && i < iters) l = l.transform(graft.Stage.materialize)
+        }
+        l
+      }
     }
-    l
-  }
 
   /** Symmetrize an undirected (id_a, id_b) pair list into the directed
     * (src, dst) edge table [[pageRankInt]] / [[labelPropagate]] take. */
@@ -296,9 +362,13 @@ object Graph {
     * point, like [[communitiesFromPairs]]). Returns (id, rank). */
   def rankFromPairs(pairs: DataFrame, nodes: DataFrame,
       iters: Int = 5, nNodes: Option[Long] = None): DataFrame =
-    pageRankInt(
-      symmetrize(pairs).transform(graft.Stage.materialize),
-      nodes, iters, nNodes = nNodes)
+    GraphLocal.describing(nodes.sparkSession) {
+      GraphLocal.describe(nodes.sparkSession, "graph.pageRankInt")
+      // the materialization job counts the directed edges for the path
+      val (counted, rows) = GraphLocal.counting(symmetrize(pairs))
+      val edges = counted.transform(graft.Stage.materialize)
+      rank(edges, nodes, iters, nNodes, Some(rows.value.longValue))
+    }
 
   /** Template-family communities of a corpus: [[labelPropagate]] over the
     * symmetrized MinHash candidate graph. Returns (idCol, community). */

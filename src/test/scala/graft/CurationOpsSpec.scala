@@ -388,10 +388,13 @@ class CurationOpsSpec extends SparkTestBase {
     val nodes = (1L to 6L).toDF("id")
     val edges = Graph.symmetrize(pairs)
     def both[A](run: => A): (A, A) = {
-      val a = run // default: broadcast (6 nodes << 10M limit)
-      spark.conf.set("spark.graft.broadcastNodeLimit", "0")
-      try { val b = run; (a, b) }
-      finally spark.conf.unset("spark.graft.broadcastNodeLimit")
+      // broadcast: 6 nodes fit, nodes + edges do not (no one-task path)
+      spark.conf.set("spark.graft.broadcastNodeLimit", "6")
+      try {
+        val a = run
+        spark.conf.set("spark.graft.broadcastNodeLimit", "0")
+        (a, run)
+      } finally spark.conf.unset("spark.graft.broadcastNodeLimit")
     }
     val (ra, rb) = both(Graph.pageRankInt(edges, nodes, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)

@@ -14,7 +14,11 @@ import graft.pipeline.Graph
   * join must broadcast; above it the plan must degrade to sort-merge —
   * with bit-identical results on both sides), and the `nNodes`
   * known-count threading (a caller-supplied count must eliminate the
-  * analytic's own count job, at equal output). */
+  * analytic's own count job, at equal output). The test graph has 6
+  * nodes and 10 directed edges: at a limit of 16 or more pageRankInt and
+  * labelPropagate run in one task ([[graft.pipeline.GraphLocal]]), so
+  * the tests of the distributed loops pin them with a limit of 10
+  * (broadcast) or 5 (sort-merge). */
 class GraphCrossoverSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -91,6 +95,12 @@ class GraphCrossoverSpec extends SparkTestBase {
     }
   }
 
+  /** Pins the distributed loops: 6 nodes <= 10 < 16 rows (broadcast). */
+  private def distributed[A](thunk: => A): A = {
+    spark.conf.set("spark.graft.broadcastNodeLimit", "10")
+    try thunk finally spark.conf.unset("spark.graft.broadcastNodeLimit")
+  }
+
   private def bhj(plans: Seq[String]): Int =
     plans.count(_.contains("BroadcastHashJoin"))
 
@@ -99,10 +109,10 @@ class GraphCrossoverSpec extends SparkTestBase {
     val (_, nodes, edges) = graph()
     def run() = Graph.pageRankInt(edges, nodes, iters = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (under, underPlans) = withConf(limit = 100L)(plansOf(run()))
+    val (under, underPlans) = withConf(limit = 10L)(plansOf(run()))
     val (over, overPlans) = withConf(limit = 5L)(plansOf(run()))
     assert(bhj(underPlans) > 0,
-      s"limit 100 > 6 nodes: the contribution join must broadcast; " +
+      s"limit 10 > 6 nodes: the contribution join must broadcast; " +
         s"plans:\n${underPlans.mkString("\n---\n")}")
     assert(bhj(overPlans) == 0,
       "limit 5 < 6 nodes: every join must degrade to sort-merge " +
@@ -116,7 +126,7 @@ class GraphCrossoverSpec extends SparkTestBase {
     val (_, nodes, edges) = graph()
     def run() = Graph.labelPropagate(edges, nodes, iters = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (under, underPlans) = withConf(limit = 100L)(plansOf(run()))
+    val (under, underPlans) = withConf(limit = 10L)(plansOf(run()))
     val (over, overPlans) = withConf(limit = 5L)(plansOf(run()))
     assert(bhj(underPlans) > 0, "vote join must broadcast under the limit")
     assert(bhj(overPlans) == 0, "vote join must sort-merge above the limit")
@@ -138,43 +148,47 @@ class GraphCrossoverSpec extends SparkTestBase {
   test("nNodes threading: a caller-supplied count removes the analytic's " +
       "count job, output unchanged") {
     val (pairs, nodes, edges) = graph()
-    // LPA: n is ONLY used for the broadcast decision
-    val (a1, j1) = jobsOf(Graph.labelPropagate(edges, nodes, iters = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val (a2, j2) = jobsOf(
-      Graph.labelPropagate(edges, nodes, iters = 2, nNodes = Some(6L))
+    distributed {
+      // LPA: n is ONLY used for the broadcast decision
+      val (a1, j1) = jobsOf(Graph.labelPropagate(edges, nodes, iters = 2)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    assert(a1 == a2, s"nNodes must not change LPA output: $a1 vs $a2")
-    assert(j2 < j1,
-      s"known count must remove the count job(s) (AQE splits a count " +
-        s"into 2): $j1 -> $j2")
-    // triangles: likewise broadcast-decision-only
-    val (t1, tj1) = jobsOf(Graph.triangleCounts(pairs, nodes)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet)
-    val (t2, tj2) = jobsOf(
-      Graph.triangleCounts(pairs, nodes, nNodes = Some(6L))
+      val (a2, j2) = jobsOf(
+        Graph.labelPropagate(edges, nodes, iters = 2, nNodes = Some(6L))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(a1 == a2, s"nNodes must not change LPA output: $a1 vs $a2")
+      assert(j2 < j1,
+        s"known count must remove the count job(s) (AQE splits a count " +
+          s"into 2): $j1 -> $j2")
+      // triangles: likewise broadcast-decision-only
+      val (t1, tj1) = jobsOf(Graph.triangleCounts(pairs, nodes)
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSet)
-    assert(t1 == t2, s"nNodes must not change triangle output: $t1 vs $t2")
-    assert(tj2 < tj1,
-      s"known count must remove the count job(s): $tj1 -> $tj2")
-    // pageRank needs n for the base-rank divisor too — a WRONG supplied
-    // count would change ranks, so parity here proves the value is used
-    val (r1, rj1) = jobsOf(Graph.pageRankInt(edges, nodes, iters = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val (r2, rj2) = jobsOf(
-      Graph.pageRankInt(edges, nodes, iters = 2, nNodes = Some(6L))
+      val (t2, tj2) = jobsOf(
+        Graph.triangleCounts(pairs, nodes, nNodes = Some(6L))
+          .collect().map(r => (r.getLong(0), r.getLong(2))).toSet)
+      assert(t1 == t2, s"nNodes must not change triangle output: $t1 vs $t2")
+      assert(tj2 < tj1,
+        s"known count must remove the count job(s): $tj1 -> $tj2")
+      // pageRank needs n for the base-rank divisor too — a WRONG supplied
+      // count would change ranks, so parity here proves the value is used
+      val (r1, rj1) = jobsOf(Graph.pageRankInt(edges, nodes, iters = 2)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    assert(r1 == r2, s"nNodes must not change rank output: $r1 vs $r2")
-    assert(rj2 < rj1,
-      s"known count must remove the count job(s): $rj1 -> $rj2")
+      val (r2, rj2) = jobsOf(
+        Graph.pageRankInt(edges, nodes, iters = 2, nNodes = Some(6L))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(r1 == r2, s"nNodes must not change rank output: $r1 vs $r2")
+      assert(rj2 < rj1,
+        s"known count must remove the count job(s): $rj1 -> $rj2")
+    }
   }
 
   test("checkpointInterval: fewer eager jobs at wider intervals, " +
       "bit-identical ranks and labels at every interval") {
     val (_, nodes, edges) = graph()
+    // the interval applies to the distributed loops only (see the class doc)
     def withInterval[A](k: Int)(thunk: => A): A = {
       spark.conf.set("spark.graft.graph.checkpointInterval", k.toString)
-      try thunk finally spark.conf.unset("spark.graft.graph.checkpointInterval")
+      try distributed(thunk)
+      finally spark.conf.unset("spark.graft.graph.checkpointInterval")
     }
     def ranks() = Graph.pageRankInt(edges, nodes, iters = 5, nNodes = Some(6L))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -195,5 +209,28 @@ class GraphCrossoverSpec extends SparkTestBase {
       s"LPA checkpoint interval must be result-neutral: $l1 / $l2 / $l4")
     assert(lj2 < lj1,
       s"interval 2 must launch fewer LPA jobs: $lj1 -> $lj2")
+  }
+
+  test("three regions: local at or below nodes + edges, broadcast at or " +
+      "below nodes, sort-merge above, identical results") {
+    val (_, nodes, edges) = graph() // 6 nodes + 10 directed edges
+    def joins(plans: Seq[String]) = (bhj(plans), plans.count(_.contains("SortMergeJoin")))
+    def ranks() = Graph.pageRankInt(edges, nodes, iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labels() = Graph.labelPropagate(edges, nodes, iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for ((name, run) <- Seq[(String, () => Map[Long, Long])](
+        "pageRankInt" -> (() => ranks()), "labelPropagate" -> (() => labels()))) {
+      val (local, localPlans) = withConf(limit = 16L)(plansOf(run()))
+      val (bcast, bcastPlans) = withConf(limit = 15L)(plansOf(run()))
+      val (smj, smjPlans) = withConf(limit = 5L)(plansOf(run()))
+      assert(joins(localPlans) == ((0, 0)),
+        s"$name at 16 = nodes + edges: one task, no join; got ${joins(localPlans)}")
+      assert(bhj(bcastPlans) > 0, s"$name at 15 >= 6 nodes: broadcast joins")
+      assert(bhj(smjPlans) == 0 && joins(smjPlans)._2 > 0,
+        s"$name at 5 < 6 nodes: sort-merge joins; got ${joins(smjPlans)}")
+      assert(local == bcast && bcast == smj,
+        s"$name: the regions must agree: $local / $bcast / $smj")
+    }
   }
 }

@@ -646,8 +646,12 @@ class PipelineSpec extends SparkTestBase {
     // unconverged and must hand off to componentsStar rather than return
     // partial labels
     val chain = (1 until 50).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
-    val comp = Dedup.components(chain, maxIter = 5).collect()
+    // pin the distributed loop: below 4 x 49 rows the chain would run
+    // in one task, which never iterates
+    spark.conf.set("spark.graft.broadcastNodeLimit", "100")
+    val comp = try Dedup.components(chain, maxIter = 5).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally spark.conf.unset("spark.graft.broadcastNodeLimit")
     assert(comp.size == 50 && comp.values.forall(_ == 1L),
       s"expected one component labeled 1, got ${comp.values.toSet}")
   }
@@ -686,8 +690,11 @@ class PipelineSpec extends SparkTestBase {
     val chain = (1 until 50).map(i => (d(i), d(i + 1)))
     val extra = Seq((d(900), d(901)), (d(950), d(950)))
     val edges = (chain ++ extra).toDF("id_a", "id_b")
-    val comp = Dedup.components(edges, maxIter = 5).collect()
+    // string ids never run in one task; the pin keeps it so regardless
+    spark.conf.set("spark.graft.broadcastNodeLimit", "100")
+    val comp = try Dedup.components(edges, maxIter = 5).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
+    finally spark.conf.unset("spark.graft.broadcastNodeLimit")
     val expected =
       (1 to 50).map(i => d(i) -> d(1)).toMap ++
         Map(d(900) -> d(900), d(901) -> d(900), d(950) -> d(950))
