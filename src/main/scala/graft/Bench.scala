@@ -198,29 +198,10 @@ object Bench {
 
   private def run(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // profiling conf overrides, same contract as Verify's (split on ';'
-    // when present else ','; malformed entries fail loudly). The driver
+    // SPARK_GRAFT_CONF profiling overrides (LocalSession): the driver
     // never sets it; child JVMs inherit it so isolated re-measures run
     // under the same overrides as the parent.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { raw =>
-      val sep = if (raw.contains(';')) ';' else ','
-      raw.split(sep).map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => builder.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not key=value (separate entries with ';' or ',')")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("WARN")
     // SPARK_GRAFT_ONLY=p11,p17 runs a subset (local profiling; driver unsets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

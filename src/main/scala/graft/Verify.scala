@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -33,30 +32,10 @@ object Verify {
   }
 
   private def runAll(sfDir: String, outDir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // extra confs for cross-checks, e.g. disabling whole-stage codegen to
-    // exercise the interpreted path of custom expressions:
-    // SPARK_GRAFT_CONF="spark.sql.codegen.wholeStage=false,..."
-    // Entries split on ';' when present (for values that contain commas,
-    // e.g. extraJavaOptions), else on ','; malformed entries fail loudly.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { raw =>
-      val sep = if (raw.contains(';')) ';' else ','
-      raw.split(sep).map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => builder.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not key=value (separate entries with ';' or ',')")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same confs as Bench (LocalSession); SPARK_GRAFT_CONF cross-checks,
+    // e.g. disabling whole-stage codegen to exercise the interpreted path
+    // of custom expressions, must leave the dump unchanged
+    val spark = LocalSession("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (comma-separated names); the driver never
     // sets it, so the contract run always dumps every query

@@ -112,10 +112,11 @@ object Publish {
   private[graft] val noHook: String => Unit = _ => ()
 
   /** Observability: recursive-listing call count ([[dataFiles]]) —
-    * PublishProbe and the spec use it to show fold sizing reads
-    * manifest-recorded sizes, not O(batches) listings. Thread-local:
-    * every dataFiles call runs on its caller's (driver) thread, so a
-    * test's count can't be polluted by concurrently-running suites. */
+    * PublishSpec (and BASELINE.md "PublishProbe") use it to show fold
+    * sizing reads manifest-recorded sizes, not O(batches) listings.
+    * Thread-local: every dataFiles call runs on its caller's (driver)
+    * thread, so a test's count can't be polluted by concurrently-running
+    * suites. */
   private[graft] val listingCalls: ThreadLocal[java.lang.Long] =
     ThreadLocal.withInitial(() => java.lang.Long.valueOf(0L))
 

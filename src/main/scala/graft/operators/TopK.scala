@@ -19,11 +19,12 @@ import scala.collection.mutable.ArrayBuffer
   * The window-rank plan ([[graft.logic.LimitAgg]]) sorts everything; this
   * one never materializes or sorts a full group anywhere.
   *
-  * Measured regime guidance (ScaleProbe, 6M rows, local[32]): the window
-  * plan is FASTER locally (1.9 s vs 3.9 s on 3×2M-row groups) — Spark's
-  * radix sort costs less per row than the object-aggregator's encoder
-  * boundary. What the heap plan reduces is SHUFFLE VOLUME: ≤ n·tasks rows
-  * per group cross the wire instead of the group's entirety (here ~10^6×
+  * Measured regime guidance (BASELINE.md "Recorded baseline — round 2",
+  * top-k plan study, 6M rows, local[32]): the window plan is FASTER
+  * locally (1.9 s vs 3.9 s on 3×2M-row groups) — Spark's radix sort
+  * costs less per row than the object-aggregator's encoder boundary.
+  * What the heap plan reduces is SHUFFLE VOLUME: ≤ n·tasks rows per
+  * group cross the wire instead of the group's entirety (here ~10^6×
   * less). Local mode has no network, so the CPU tax shows and the win
   * doesn't; on a network-bound cluster reading 100 TB the trade inverts.
   * Default stays window-rank (+ salting for skew); this is the opt-in

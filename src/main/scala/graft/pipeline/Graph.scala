@@ -55,10 +55,10 @@ object Graph {
     * never recomputed — skipping boundaries trades bounded extra plan
     * depth (≤ k iterations) for k× fewer eager jobs and k× fewer
     * between-job driver planning rounds, which at sf0.1 is ~40% of the
-    * iterative family's wall (JobProf, round 18). Set 1 to restore a
-    * boundary per iteration (e.g. on clusters where a broadcast build
-    * must never execute a full unmaterialized iteration inside the
-    * broadcastTimeout window). */
+    * iterative family's wall (BASELINE.md "Round-18: optimization round
+    * 2"). Set 1 to restore a boundary per iteration (e.g. on clusters
+    * where a broadcast build must never execute a full unmaterialized
+    * iteration inside the broadcastTimeout window). */
   private def ckptInterval(df: DataFrame): Int = {
     val k = df.sparkSession.conf
       .get("spark.graft.graph.checkpointInterval", "2").toInt

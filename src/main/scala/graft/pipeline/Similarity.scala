@@ -33,12 +33,12 @@ object Similarity {
     * WindowGroupLimit BELOW the exchange, so at most k narrow
     * (probe, corpus, dist) rows per probe per task cross the wire —
     * the premise that the window shuffles every scored pair (VERDICT r6
-    * item #5) does not hold on Spark 4. ScaleProbe @20k corpus × 64
+    * item #5) does not hold on Spark 4. Measured @20k corpus × 64
     * probes: window 0.10 MiB shuffled / 1.45 s vs heap 0.76 MiB /
     * 2.22 s — the heap's kryo'd partial buffers (compound key + Row per
     * entry) are ~50× fatter per surviving row than the window's pruned
-    * rows (BASELINE.md round-7). `heap = true` — the reference's
-    * keep-n-of-2n limit combiner as a typed aggregation
+    * rows (BASELINE.md "Round-7 knn-tail shuffle study"). `heap = true`
+    * — the reference's keep-n-of-2n limit combiner as a typed aggregation
     * ([[graft.operators.TopK]]) — stays as the opt-in, parity-tested
     * alternative for orderings the WindowGroupLimit rewrite cannot
     * cover. Descending orders ride a negated sort column: distances are

@@ -180,7 +180,8 @@ object Unigram {
     * hard-EM refinements. Returns (piece, cnt, score_q) — KBs at any
     * corpus scale; persist with any sink and restore via [[vocabSeq]].
     * Training is FLAT across corpus replication (the type table, not
-    * the corpus, drives every step — the BPE ScaleProbe contract). */
+    * the corpus, drives every step — BASELINE.md "Round-10 ScaleProbe
+    * additions"). */
   def train(docs: DataFrame, vocabSize: Int, rounds: Int = 2,
       maxPieceLen: Int = 4, minFreq: Long = 2L,
       textCol: String = "text"): DataFrame = {

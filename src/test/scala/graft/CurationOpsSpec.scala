@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Sketches
 import graft.pipeline.{Dedup, TextAnalysis}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-4 curation operators: duplicate-span statistics, KMV distinct
@@ -409,6 +410,25 @@ class CurationOpsSpec extends SparkTestBase {
     // contribution join's shape is not visible from the output plan
     // here; HeavyShuffleProbe measures it: the broadcast path drops
     // the rank-join shuffle entirely, BASELINE.md r15 skew section)
+  }
+
+  test("graph analytics over a persisted candidate tap == the inline similarity* analytics") {
+    import graft.pipeline.Graph
+    // writeCandidates pairs the corpus once; rank, communities and
+    // triangles then read the tap instead of re-pairing — same rows
+    val tap = java.nio.file.Files.createTempDirectory("graft_cand_tap").toString + "/pairs"
+    Dedup.writeCandidates(docs001, tap)
+    val pairs = Dedup.candidatesTap(spark, tap)
+    assert(pairs.count() > 0, "sf0.001 documents should yield candidate pairs")
+    val nodes = docs001.select(col("doc_id").as("id"))
+    def drift(tapped: DataFrame, inline: DataFrame): Long =
+      tapped.exceptAll(inline).count() + inline.exceptAll(tapped).count()
+    assert(drift(Graph.rankFromPairs(pairs, nodes),
+      Graph.similarityRank(docs001).toDF("id", "rank")) == 0)
+    assert(drift(Graph.communitiesFromPairs(pairs, nodes),
+      Graph.similarityCommunities(docs001).toDF("id", "community")) == 0)
+    assert(drift(Graph.triangleCounts(pairs, nodes),
+      Graph.similarityTriangles(docs001).toDF("id", "degree", "n_triangles", "clustering")) == 0)
   }
 
   test("triangleCounts: K4, open wedges, isolated nodes, dup families") {

@@ -2,22 +2,17 @@ package graft
 
 import graft.dsl._
 import graft.ops.Ops
-import org.apache.spark.sql.SparkSession
 
 /** Manual smoke driver: runs real queries through the public DSL against
   * the driver-generated parquet testdata. `sbt "Test/runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // fresh warehouse per run: a stale managed-table DIRECTORY plus a
-      // fresh in-memory catalog would make the bucketed-sink demo
-      // non-idempotent (LOCATION_ALREADY_EXISTS)
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-demo-wh-${java.util.UUID.randomUUID()}")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fresh warehouse per run: a stale managed-table DIRECTORY plus a
+    // fresh in-memory catalog would make the bucketed-sink demo
+    // non-idempotent (LOCATION_ALREADY_EXISTS)
+    val spark = LocalSession("WARN", extra = Seq("spark.sql.warehouse.dir" ->
+      s"/tmp/graft-demo-wh-${java.util.UUID.randomUUID()}"))
 
     // TPC-H-ish pricing summary through the DSL (join-free agg)
     val q1 = query("?l_returnflag", "?l_linestatus", "?sum_qty", "?cnt")(

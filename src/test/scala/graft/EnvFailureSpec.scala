@@ -43,6 +43,19 @@ class EnvFailureSpec extends SparkTestBase {
       m.contains("duckdb_spill")), s"got $msg")
   }
 
+  test("duck_env preflight: the free-/tmp floor follows the sf dir's input size") {
+    assume(sys.env.getOrElse("PATH", "").split(':').exists(d =>
+      new java.io.File(d, "python3").canExecute), "python3 not on PATH")
+    // sf0.01's gate spills nothing and must start on a disk with under
+    // 20 GB free; sf0.1 and up keep the full 20 GB
+    val out = scala.sys.process.Process(Seq("python3", "-c",
+      "import sys; sys.path.insert(0, 'tools'); import duck_env; " +
+        "print(*(duck_env.required_free_gb(f'/root/testdata/{sf}') for sf in ('sf0.01', 'sf0.1')))")).!!
+    val Array(small, large) = out.trim.split(' ').map(_.toDouble)
+    assert(small >= 1.0 && small < 5.0, s"sf0.01 needs $small GB")
+    assert(large == 20.0, s"sf0.1 needs $large GB")
+  }
+
   test("envFailureHeadline: the simulated disk-full artifact parses and self-describes") {
     // the full path a disk-full round takes: preflight message -> headline.
     // The headline must (a) start with {"metric" (the driver's parse

@@ -1,18 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Proof that `spark.sql.extensions=graft.GraftExtensions` wires the
   * native expressions into a fresh session's SQL surface (run manually —
   * needs to own the session): the expression is reachable by NAME from
   * pure SQL with no library call at all. */
 object ExtensionsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR",
+      extra = Seq("spark.sql.extensions" -> "graft.GraftExtensions"))
     val one = spark.sql(
       "SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c").head.getDouble(0)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** sf10 heavy-family probe (run manually, results in BASELINE.md):
   * executes the dedup/graph heavy queries at a derived 100×-sf0.1
@@ -11,6 +10,12 @@ import org.apache.spark.sql.SparkSession
   * over stages with enough tasks to make the ratio meaningful).
   *
   *   sbt "Test/runMain graft.HeavyShuffleProbe /tmp/graft_sf10 p11_neardup_dedup,..."
+  *
+  * The session is always local[32] (32 shuffle partitions), the width
+  * the straggler gate and the STRAGGLER records are defined at. Session
+  * conf overrides go through `SPARK_GRAFT_CONF` like every other main,
+  * e.g. `SPARK_GRAFT_CONF=spark.graft.maxBucketSize=256` to engage the
+  * hot-bucket guard.
   */
 object HeavyShuffleProbe {
 
@@ -63,20 +68,14 @@ object HeavyShuffleProbe {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length <= 2, "usage: HeavyShuffleProbe [dir] [query,...]; session " +
+      "conf overrides (once a third argument) go in SPARK_GRAFT_CONF, e.g. " +
+      "SPARK_GRAFT_CONF=spark.graft.maxBucketSize=256")
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft_sf10"
     val names = (if (args.length > 1) args(1).split(",").toSeq
       else Seq("p11_neardup_dedup", "p15_curate", "p17_neardup_star",
         "p36_semantic_dedup", "p51_similarity_rank", "p72_candidates_tap"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // optional 3rd arg: comma-separated session conf overrides, e.g.
-    // "spark.graft.maxBucketSize=256" to engage the hot-bucket guard
-    if (args.length > 2) args(2).split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-      println(s"conf: $k=$v")
-    }
+    val spark = LocalSession("ERROR", cpus = "32")
     val budget = readBudget()
     val violations = scala.collection.mutable.ArrayBuffer[String]()
     // machine-diffable gate artifact (VERDICT r16 #7): one JSON row per
@@ -126,13 +125,21 @@ object HeavyShuffleProbe {
       val dominant = shufStages.filter(_.wallMs > 0.1 * qWallMs)
       val worstDom = ratio(dominant)
       val (allowed, cause) = budget.getOrElse(name, (DefaultBudgetRatio, ""))
-      val qPass = dominant.isEmpty || worstDom <= allowed
+      // a query with no shuffle stage wide enough for a ratio (too small
+      // a corpus, or partitions coalesced away) was not checked at all:
+      // that fails the gate rather than passing it on an empty set
+      val wideShuffles = acc.stages.count(s =>
+        s.tasks >= 8 && (s.shuffleRead > 0 || s.shuffleWrite > 0))
+      val qPass = wideShuffles > 0 && (dominant.isEmpty || worstDom <= allowed)
       jsonRows += f"""{"query":"$name","wall_s":$wall%.1f,"rows":$rows,""" +
         f""""shuffle_read_mb":${rd / 1048576.0}%.0f,"shuffle_write_mb":${wr / 1048576.0}%.0f,""" +
         f""""hot_stage_mb":${hot / 1048576.0}%.0f,"straggler":$strag%.2f,""" +
         f""""scan_straggler":$stragScan%.2f,"dominant_straggler":$worstDom%.2f,""" +
+        f""""wide_shuffle_stages":$wideShuffles,""" +
         f""""budget":$allowed%.1f,"whitelisted":${cause.nonEmpty},"pass":$qPass}"""
-      if (dominant.nonEmpty && worstDom > allowed) {
+      if (wideShuffles == 0) {
+        violations += s"$name: no shuffle stage ran >= 8 tasks, so nothing was checked"
+      } else if (dominant.nonEmpty && worstDom > allowed) {
         violations += f"$name: dominant-stage straggler $worstDom%.1fx > budget $allowed%.1fx" +
           (if (cause.isEmpty) " (no whitelist entry)" else s" [whitelisted cause: $cause]")
       } else if (dominant.nonEmpty && worstDom > DefaultBudgetRatio && cause.nonEmpty) {

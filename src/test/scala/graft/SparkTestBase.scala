@@ -96,18 +96,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** Fixed at 4 cores and deaf to `SPARK_GRAFT_CPUS` and
+    * `SPARK_GRAFT_CONF`: partition counts and plan shapes the specs
+    * assert stay the same on every host and in every shell. */
+  lazy val session: SparkSession = LocalSession("ERROR", cpus = "4", extra = Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}"),
+    env = Map.empty)
 }

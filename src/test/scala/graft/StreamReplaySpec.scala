@@ -208,7 +208,8 @@ class StreamReplaySpec extends SparkTestBase {
   test("RocksDB state store: gate-query state shapes replay to the same results") {
     // the gate queries run under the default HDFS-backed provider; a real
     // deployment at volume runs RocksDB (bounded heap, the
-    // StreamStateProbe configuration). Parity here pins that the choice
+    // configuration of BASELINE.md's "Streaming state-scale probe").
+    // Parity here pins that the choice
     // of state store is an ops knob, not a semantics knob, for all SEVEN
     // state shapes the gate uses: streaming agg, mapGroupsWithState
     // (upsert), flatMapGroupsWithState (closed sessions), the symmetric

@@ -132,7 +132,7 @@ else:
     # WITH RECURSIVE with no recursive CTE left is still valid SQL in DuckDB
     edges_sql = head + ' SELECT id_a, id_b FROM verified'
 
-duck_env.preflight()
+duck_env.preflight(sf)
 con = duck_env.connect()  # spill capped + swept on exit (r14 postmortem)
 for t in TABLES:
     p = f'{sf}/{t}.parquet'

@@ -122,7 +122,7 @@ def stat_contracts():
 
 
 def main():
-    duck_env.preflight()
+    duck_env.preflight(sf)
     # a Verify run that died on an environment failure (disk full, OOM)
     # writes env_failure.json instead of a dump — surface the
     # classification instead of crashing on the missing oracle file

@@ -21,6 +21,8 @@ import atexit, os, shutil, sys
 
 import duckdb
 
+import janitor
+
 SPILL_DIR = '/tmp/duckdb_spill'
 _cleanup_registered = False
 
@@ -82,39 +84,62 @@ def connect(mem_env='GRAFT_ORACLE_MEM', mem_default='48GB'):
     return con
 
 
-def preflight(min_free_gb=20):
+# Free /tmp (GB) a gate run needs grows with its input. The sf0.01 gate
+# (1.9 MB of parquet, 152 queries in 20 s on 4 vCPU) grew /tmp by under
+# 0.1 MB at its peak, sampled every 50 ms: it spills nothing, so its
+# 2.6 GB need is far over 2x its use. The factor keeps sf0.1 (17.5 MB,
+# 24 GB by the factor) and every larger input at the 20 GB cap, the
+# need those runs have always had; the floor covers tiny inputs.
+MAX_FREE_GB = 20
+FLOOR_GB = 1
+GB_PER_INPUT_GB = 1500
+
+
+def parquet_bytes(sf_dir):
+    """Bytes of the sf dir's tables (`<table>.parquet` files or dirs)."""
+    try:
+        names = os.listdir(sf_dir)
+    except OSError:
+        return 0
+    return sum(janitor.du(p) if os.path.isdir(p) else os.path.getsize(p)
+               for p in (os.path.join(sf_dir, n) for n in names
+                         if n.endswith('.parquet')))
+
+
+def required_free_gb(sf_dir):
+    """Free /tmp (GB) a gate run over ``sf_dir`` must start with."""
+    return min(MAX_FREE_GB, max(FLOOR_GB, GB_PER_INPUT_GB
+                                * parquet_bytes(sf_dir) / (1 << 30)))
+
+
+def preflight(sf_dir):
     """Fail fast (exit 3, stderr diagnosis) if the disk can't host a gate
-    run; lists EVERY multi-GB resident (named suspects + the probe-debris
-    globs janitor.py manages) and prints the cleanup command."""
+    run over ``sf_dir``; lists EVERY multi-GB resident (named suspects +
+    the probe-debris globs janitor.py manages) and prints the cleanup
+    command."""
+    min_free_gb = required_free_gb(sf_dir)
     st = shutil.disk_usage('/tmp')
     free_gb = st.free / (1 << 30)
     if free_gb >= min_free_gb:
         return
     print(f"PRE-FLIGHT FAIL: only {free_gb:.1f} GB free on /tmp "
-          f"(need {min_free_gb}). Likely culprits:", file=sys.stderr)
+          f"(need {min_free_gb:.1f} for {sf_dir}). Likely culprits:",
+          file=sys.stderr)
     # fixed suspects + every probe-corpus / verify-dump family under /tmp
-    # (the same prefixes janitor.py sweeps), so a low-disk run names
-    # every multi-GB resident instead of a hand-maintained subset
+    # that janitor.py sweeps, so a low-disk run names every multi-GB
+    # resident instead of a hand-maintained subset
     suspects = [SPILL_DIR, '/root/repo/target']
-    debris_prefixes = ('graft_sf', 'graft_skew', 'graft_test_', 'graft-',
-                       'v10', 'v1f', 'vout', 'staged_', 'graft_pub_stage')
     try:
         for d in sorted(os.listdir('/tmp')):
             p = os.path.join('/tmp', d)
             if os.path.isdir(p) and p not in suspects and \
-                    any(d.startswith(pre) for pre in debris_prefixes):
+                    any(d.startswith(pre) for pre in janitor.PATTERNS):
                 suspects.append(p)
     except OSError:
         pass
     for d in suspects:
         if os.path.isdir(d):
-            total = 0
-            for root, _, files in os.walk(d):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
+            total = janitor.du(d)
             if total >= (1 << 28) or d == SPILL_DIR:
                 print(f"  {d}: {total / (1 << 30):.1f} GB", file=sys.stderr)
     print("  cleanup: python3 tools/janitor.py "

@@ -201,7 +201,7 @@ def main():
     shards = int(flags.get('--shards', '8') or '8')
     work = flags.get('--workdir') or f'/tmp/staged_{name}'
     stop_at = flags.get('--stop-at') or None
-    duck_env.preflight()
+    duck_env.preflight(sf)
     sql = json.load(open(f'{out}/oracle_sql.json'))[name]
     if stop_at:
         # recursive-closure composition (p35 class): materialize only the
