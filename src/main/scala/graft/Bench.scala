@@ -56,6 +56,22 @@ object Bench {
     * table). Changing either side requires re-recording the other. */
   private val CanaryQueries = Seq("q19_cross_join", "q23_sample")
   private val CanaryBaselineSec = 0.53
+
+  /** The sf1 heavy tier: the heavy batch families over documents/
+    * embeddings — the set whose sf0.1 numbers the host tail kept
+    * destroying. Streaming queries are excluded: they already run solo
+    * in fresh child JVMs. */
+  val Sf1Tier: Seq[String] = Seq(
+    "p06_minhash_pairs", "p11_neardup_dedup", "p13_jaccard_verify",
+    "p15_curate", "p16_capped_candidates", "p17_neardup_star",
+    "p27_incremental_neardup", "p28_embedding_neardup", "p34_ivf_knn",
+    "p35_embedding_dedup", "p36_semantic_dedup", "p37_incr_semantic",
+    "p39_ivfpq_knn", "p42_ivfpq_refine", "p48_curate_modern",
+    "p51_similarity_rank", "p54_similarity_triangles",
+    "p55_similarity_communities", "p57_decontaminate",
+    "p67_decontam_bloom", "p71_hamming_neardup", "p72_candidates_tap",
+    "p75_containment", "p76_quality_dedup", "p77_subsumption",
+    "p78_incr_containment", "p94_dedup_audit")
   /** Headline byte budget: 2000-char driver window minus the ~80-char
     * sbt epilogue, with slack (bench-output forensics, BASELINE.md). */
   private val HeadlineBudget = 1920
@@ -203,13 +219,9 @@ object Bench {
     // under the same overrides as the parent.
     val spark = LocalSession("WARN")
     // SPARK_GRAFT_ONLY=p11,p17 runs a subset (local profiling; driver unsets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val subset = only match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None => SparkEntry.queries
-    }
-    // Streaming-replay queries (*_stream*) are re-measured in a FRESH
+    val only = SparkEntry.onlyNames
+    val subset = SparkEntry.select(only)
+    // Streaming-replay queries are re-measured in a FRESH
     // child JVM when running the full suite (VERDICT r12-r13 item #1:
     // three rounds running, the in-suite number for a p8x query flagged
     // >2x and a fresh-JVM re-measure refuted it — r13: p86 13.5 s
@@ -223,14 +235,12 @@ object Bench {
     val isolateOn = childOut.isEmpty && only.isEmpty &&
       sys.env.getOrElse("SPARK_GRAFT_ISOLATE", "1") != "0"
     val (isoSel, selected) =
-      if (isolateOn) subset.partition { case (n, _) => n.contains("_stream") }
-      else (Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame], subset)
+      if (isolateOn) subset.partition(_.streaming) else (Nil, subset)
     // A failing query must not report a healthy time (VERDICT r5 #3) and
     // must not leak its time-to-exception into the maps or totals either
     // (VERDICT r6 #2): on error, record the message and return None.
     val errors = mutable.LinkedHashMap.empty[String, String]
-    def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def timeOne(name: String, fn: QuerySpec.Plan): Option[Double] = {
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -256,7 +266,7 @@ object Bench {
       }
     }
     // pass 0: warmup — also the honest "cold driver" number, reported
-    val firstRun = selected.flatMap { case (name, fn) =>
+    val firstRun = selected.flatMap { case QuerySpec(name, fn, _, _) =>
       timeOne(name, fn).map(name -> _)
     }
     // two untimed warm-throughs, results discarded: one still caught
@@ -290,7 +300,7 @@ object Bench {
     val legTimes = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
     val samples = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
     (1 to timedPasses).foreach { _ =>
-      selected.foreach { case (name, fn) =>
+      selected.foreach { case QuerySpec(name, fn, _, _) =>
         var acc = 0.0
         var reps = 0
         var best = Double.MaxValue
@@ -401,7 +411,7 @@ object Bench {
     // 4.9 s solo — nearly the full in-suite inflation). A solo child's
     // number is also independent of suite composition and family order,
     // i.e. reproducible across rounds by construction.
-    isoSel.foreach { case (n, fn) =>
+    isoSel.foreach { case QuerySpec(n, fn, _, _) =>
       runIsolated(Seq(n)) match {
         case Some(cr) =>
           firstAll = firstAll ++ cr.first
@@ -423,10 +433,10 @@ object Bench {
     }
     // a query absent from steady (failed every timed pass) is absent
     // from the results and the total — its errors entry is the record.
-    // Order: the FULL suite map's iteration order, so headline query
-    // positions stay comparable with prior rounds' records even though
-    // the streaming family executed out-of-band.
-    val results = subset.keys.flatMap(n => steadyAll.get(n).map(n -> _)).toSeq
+    // Order: the suite's (registry) order, so headline query positions
+    // stay comparable across runs even though the streaming family
+    // executed out-of-band.
+    val results = subset.flatMap(q => steadyAll.get(q.name).map(q.name -> _))
     def fmt(v: Double, decimals: Int): String =
       s"%.${decimals}f".formatLocal(java.util.Locale.ROOT, v)
     // headline seconds: 0 decimals at >=100, 1 decimal at >=cut, 2
@@ -450,7 +460,7 @@ object Bench {
         .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // firstAll preserves no global order; emit in suite order like results
-    val firstSeq = subset.keys.flatMap(n => firstAll.get(n).map(n -> _)).toSeq
+    val firstSeq = subset.flatMap(q => firstAll.get(q.name).map(q.name -> _))
     val firstTotal = firstSeq.map(_._2).sum
     val calFull = Seq(calStart, calEnd).flatten
     // child-mode result file: full-precision, trivially parseable lines
@@ -520,14 +530,9 @@ object Bench {
     // at 87 queries the full names alone (~24 chars each) overflow the
     // 2000-char capture window at ANY precision, and the suite keeps
     // growing. Full names ride the full-precision aux lines; BASELINE.md
-    // documents the key scheme. A prefix that ever collided would fall
-    // back to the full name (correct, if over-budget — visible, never
-    // ambiguous).
-    val shortKey: String => String = {
-      val pref = results.map { case (n, _) => n -> n.takeWhile(_ != '_') }.toMap
-      val counts = pref.values.groupBy(identity).map { case (k, v) => k -> v.size }
-      n => if (counts.getOrElse(pref(n), 0) == 1) pref(n) else n
-    }
+    // documents the key scheme. SparkEntry.registry fails at init on a
+    // repeated prefix, so a key names one query.
+    val shortKey: String => String = QuerySpec.shortKey
     // ---- in-run adjudication of movers (VERDICT r16 #2) -------------
     // bench_ratio.py's --recheck-top existed but ran only ad hoc, so
     // recorded artifacts shipped unadjudicated 1.4-1.7x movers a judge
@@ -652,23 +657,9 @@ object Bench {
             .repartition(16).write.mode("overwrite").parquet(s"$sf1Dir/$t.parquet")
       }
       val genSec = (System.nanoTime() - tGen0) / 1e9
-      // the heavy batch families over documents/embeddings — the set
-      // whose sf0.1 numbers the host tail kept destroying. Streaming
-      // queries are excluded: they already run solo in fresh child JVMs.
-      val tier = Seq(
-        "p06_minhash_pairs", "p11_neardup_dedup", "p13_jaccard_verify",
-        "p15_curate", "p16_capped_candidates", "p17_neardup_star",
-        "p27_incremental_neardup", "p28_embedding_neardup", "p34_ivf_knn",
-        "p35_embedding_dedup", "p36_semantic_dedup", "p37_incr_semantic",
-        "p39_ivfpq_knn", "p42_ivfpq_refine", "p48_curate_modern",
-        "p51_similarity_rank", "p54_similarity_triangles",
-        "p55_similarity_communities", "p57_decontaminate",
-        "p67_decontam_bloom", "p71_hamming_neardup", "p72_candidates_tap",
-        "p75_containment", "p76_quality_dedup", "p77_subsumption",
-        "p78_incr_containment", "p94_dedup_audit")
       val calS1 = canary("sf1_cal_start")
-      val r1 = sf1Passes(tier.flatMap(n => SparkEntry.queries.get(n).map(fn =>
-        n -> (() => { fn(spark, sf1Dir).count(); () }))), budgetSec)
+      val r1 = sf1Passes(SparkEntry.select(Sf1Tier).map(q =>
+        q.name -> (() => { q.plan(spark, sf1Dir).count(); () })), budgetSec)
       val calE1 = canary("sf1_cal_end")
       val cal1 = Seq(calS1, calE1).flatten
       val sf1Total = r1.best.values.sum

@@ -20,17 +20,12 @@ object Prof {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
-    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",")
-      .map(_.trim).filter(_.nonEmpty)
+    val sel = SparkEntry.select(SparkEntry.onlyNames)
     val outDir = args.headOption.map(new java.io.File(_))
     outDir.foreach(_.mkdirs())
     val spark = LocalSession("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    val sel =
-      if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
-      else names.toSeq.map(n => n -> SparkEntry.queries.getOrElse(n,
-        throw new IllegalArgumentException(s"unknown query $n")))
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
     val listener = new SparkListener {
@@ -50,7 +45,7 @@ object Prof {
       }
     }
     var total = 0.0
-    sel.foreach { case (name, fn) =>
+    sel.foreach { case QuerySpec(name, fn, _, _) =>
       outDir.foreach { dir =>
         // stage-boundary queries (localCheckpoint / scratch taps) must
         // EXECUTE their upstream stages before the final frame can even

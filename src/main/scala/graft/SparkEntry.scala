@@ -4,6 +4,7 @@ import graft.dsl._
 import graft.logic.Query
 import graft.ops.Ops
 import graft.pipeline.{Bpe, Dedup, Similarity, TextAnalysis}
+import graft.QuerySpec.{Contract, Oracle}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1537,11 +1538,6 @@ object SparkEntry {
       .agg(count(lit(1)).as("cnt"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
 
-  private def p82(s: SparkSession, d: String): DataFrame =
-    graft.streaming.Streams.replayAsStream(
-      tbl(d, "events")(s), scratchDir("p82_stream", d), 4, "complete")(
-      p82Transform)
-
   /** Watermarked event-time windows in the oracle gate: daily counts
     * with a 6-hour watermark, append mode, replayed as 4 event-time-
     * ORDERED micro-batches (replayAsStream's `orderedBy` staging — no
@@ -1562,11 +1558,6 @@ object SparkEntry {
       .groupBy(window(col("ets"), "1 day"))
       .agg(count(lit(1)).as("cnt"))
       .select(unix_micros(col("window.start")).as("ws_us"), col("cnt"))
-
-  private def p83(s: SparkSession, d: String): DataFrame =
-    graft.streaming.Streams.replayAsStream(
-      p83Staged(s, d), scratchDir("p83_stream", d), 4, "append",
-      orderedBy = Some("ets"))(p83Transform)
 
   /** [[Dedup.hammingCandidates]] over PRECOMPUTED 64-bit codes — the
     * engine every multimodal near-dup rides (image pHash, audio
@@ -1669,11 +1660,6 @@ object SparkEntry {
       .select(col("k").cast("long").as("o_orderkey"),
         col("w.v").as("version"), col("w.payload").as("payload"))
 
-  private def p84(s: SparkSession, d: String): DataFrame =
-    p84Post(graft.streaming.Streams.replayAsStream(
-      p84Staged(s, d), scratchDir("p84_stream", d), 4, "update",
-      orderedBy = Some("v"))(p84Transform))
-
   /** STREAMING CLOSED SESSIONS in the oracle gate: q34's gap
     * sessionization driven through
     * [[graft.streaming.Streams.sessionizeClosed]]
@@ -1703,11 +1689,6 @@ object SparkEntry {
   private def p85Post(sessions: DataFrame): DataFrame =
     sessions.select(
       col("user_id"), col("n_events"), col("start_us"), col("end_us"))
-
-  private def p85(s: SparkSession, d: String): DataFrame =
-    p85Post(graft.streaming.Streams.replayAsStream(
-      p85Staged(s, d), scratchDir("p85_stream", d), 4, "append",
-      orderedBy = Some("us"))(p85Transform))
 
   /** STREAM-STREAM INTERVAL JOIN in the oracle gate: each click joined
     * to the same user's purchases within [click, click+1d] via
@@ -1739,11 +1720,6 @@ object SparkEntry {
         before = "0 seconds", after = "1 day")
       .select(col("user_id"), col("l_id"), col("r_id"))
   }
-
-  private def p86(s: SparkSession, d: String): DataFrame =
-    graft.streaming.Streams.replayAsStream(
-      p86Staged(s, d), scratchDir("p86_stream", d), 4, "append",
-      orderedBy = Some("ets"))(p86Transform)
 
   /** STREAMING EXACT DEDUP in the oracle gate: distinct
     * (user_id, event_type) via [[graft.streaming.Streams.streamingDedup]]
@@ -1809,16 +1785,6 @@ object SparkEntry {
       .select(col("l_returnflag"), col("n_rows"),
         col("w.kmv_size").as("kmv_size"),
         col("w.kmv_estimate").as("kmv_estimate"))
-
-  private def p88(s: SparkSession, d: String): DataFrame =
-    // sketch-shaped state: 3 returnflag keys hold the entire state (128
-    // longs each) however many rows fold in, so the row-based partition
-    // sizing is capped at the key count — empty state partitions would
-    // pay store init/commit/checkpoint IO per micro-batch for nothing
-    p88Post(graft.streaming.Streams.replayAsStream(
-      p88Staged(s, d), scratchDir("p88_stream", d), 4, "update",
-      stateKeyHint = Some(3L))(
-      p88Transform))
 
   /** STREAMING SHARDED CMS in the oracle gate: p68's global count-min
     * sketch built through the state store, SCALE-OUT SHAPE — tokens key
@@ -1902,11 +1868,6 @@ object SparkEntry {
 
   private def p90Post(pairs: DataFrame): DataFrame = pairs.distinct()
 
-  private def p90(s: SparkSession, d: String): DataFrame =
-    p90Post(graft.streaming.Streams.replayAsStream(
-      p90Staged(s, d), scratchDir("p90_stream", d), 4, "append")(
-      p90Transform))
-
   /** STREAMING EMBEDDING NEAR-DUP CANDIDATES in the oracle gate — the
     * vector face of p90 through the same capped bucket-state core
     * ([[graft.streaming.Streams.streamingEmbeddingCandidates]]): each
@@ -1925,16 +1886,6 @@ object SparkEntry {
     graft.streaming.Streams.streamingEmbeddingCandidates(
         src, planes = 6, maxBucketSize = 1 << 20)
       .toDF("id_a", "id_b")
-
-  private def p91(s: SparkSession, d: String): DataFrame =
-    // parquet replay sink: p91's candidate-pair output grows with the
-    // corpus (the one gate query whose RESULT is corpus-sized) — the
-    // memory sink's driver collect kills a 64 GB heap at the sf10 probe
-    // scale, the file sink streams it with bounded driver memory
-    graft.streaming.Streams.replayAsStream(
-      p91Staged(s, d), scratchDir("p91_stream", d), 4, "append",
-      sink = "parquet")(
-      p91Transform)
 
   /** SMALL-FILE COMPACTION in the oracle gate
     * ([[graft.operators.Publish.compact]] — the maintenance pass every
@@ -2364,159 +2315,53 @@ object SparkEntry {
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = q03(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_multi_agg" -> (q01 _),
-    "q02_filter_map" -> (q02 _),
-    "q03_join_agg" -> (q03 _),
-    "q04_dim_join" -> (q04 _),
-    "q05_outer_count" -> (q05 _),
-    "q06_semi_join" -> (q06 _),
-    "q07_anti_join" -> (q07 _),
-    "q08_exists_flag" -> (q08 _),
-    "q09_distinct" -> (q09 _),
-    "q10_union" -> (q10 _),
-    "q11_union_all" -> (q11 _),
-    "q12_topk_global" -> (q12 _),
-    "q13_topk_pergroup" -> (q13 _),
-    "q14_count_distinct" -> (q14 _),
-    "q15_having" -> (q15 _),
-    "q16_dup_var_eq" -> (q16 _),
-    "q17_wordcount" -> (q17 _),
-    "q18_buffer_first" -> (q18 _),
-    "q19_cross_join" -> (q19 _),
-    "q20_global_agg" -> (q20 _),
-    "q21_variance" -> (q21 _),
-    "q22_events_agg" -> (q22 _),
-    "q23_sample" -> (q23 _),
-    "q24_subquery" -> (q24 _),
-    "q25_predmacro_avg" -> (q25 _),
-    "q26_intersect" -> (q26 _),
-    "q27_except" -> (q27 _),
-    "q28_window_running" -> (q28 _),
-    "q29_full_outer" -> (q29 _),
-    "q30_lag_buffer" -> (q30 _),
-    "q31_multigroup" -> (q31 _),
-    "q32_preagg_join" -> (q32 _),
-    "q33_rollup" -> (q33 _),
-    "q34_sessionize" -> (q34 _),
-    "q35_asof_join" -> (q35 _),
-    "q36_range_join" -> (q36 _),
-    "q37_json_destructure" -> (q37 _),
-    "q38_asof_forward" -> (q38 _),
-    "q39_sample_det" -> (q39 _),
-    "p01_exact_dedup" -> (p01 _),
-    "p02_token_count" -> (p02 _),
-    "p03_chars_per_token" -> (p03 _),
-    "p04_stopword_hits" -> (p04 _),
-    "p05_fingerprint_langid" -> (p05 _),
-    "p06_minhash_pairs" -> (p06 _),
-    "p07_simhash" -> (p07 _),
-    "p08_knn_brute" -> (p08 _),
-    "p09_knn_lsh" -> (p09 _),
-    "p10_simhash_neardup" -> (p10 _),
-    "p11_neardup_dedup" -> (p11 _),
-    "p12_quality_score" -> (p12 _),
-    "p13_jaccard_verify" -> (p13 _),
-    "p14_length_quantiles" -> (p14 _),
-    "p15_curate" -> (p15 _),
-    "p16_capped_candidates" -> (p16 _),
-    "p17_neardup_star" -> (p17 _),
-    "p18_contamination" -> (p18 _),
-    "p19_pii_scrub" -> (p19 _),
-    "p20_repetition" -> (p20 _),
-    "p21_mixture_sample" -> (p21 _),
-    "p22_token_packing" -> (p22 _),
-    "q40_bloom_join" -> (q40 _),
-    "q41_salted_join" -> (q41 _),
-    "q42_moving_window" -> (q42 _),
-    "q43_cube" -> (q43 _),
-    "q44_japi_agg" -> (q44 _),
-    "q45_funnel" -> (q45 _),
-    "q46_retention" -> (q46 _),
-    "q47_scd2_history" -> (q47 _),
-    "q48_trap_divert" -> (q48 _),
-    "q49_checkpoint_flow" -> (q49 _),
-    "q50_template_tap" -> (q50 _),
-    "q51_stats_counters" -> (q51 _),
-    "q52_bucket_join" -> (q52 _),
-    "q53_proto_tap" -> (q53 _),
-    "q54_delimited_tap" -> (q54 _),
-    "q55_thrift_tap" -> (q55 _),
-    "q56_seqfile_tap" -> (q56 _),
-    "p81_bpe_batch" -> (p81 _),
-    "p82_stream_agg" -> (p82 _),
-    "p83_stream_window" -> (p83 _),
-    "p84_stream_upsert" -> (p84 _),
-    "p85_stream_sessions" -> (p85 _),
-    "p86_stream_interval_join" -> (p86 _),
-    "p87_stream_dedup" -> (p87 _),
-    "p88_stream_kmv" -> (p88 _),
-    "p89_stream_cms" -> (p89 _),
-    "p90_stream_lsh" -> (p90 _),
-    "p91_stream_embed" -> (p91 _),
-    "p23_heavy_hitters" -> (p23 _),
-    "p24_span_dedup" -> (p24 _),
-    "p25_kmv_distinct" -> (p25 _),
-    "p26_url_dedup" -> (p26 _),
-    "p27_incremental_neardup" -> (p27 _),
-    "p28_embedding_neardup" -> (p28 _),
-    "p29_rare_tokens" -> (p29 _),
-    "p30_kmv_overlap" -> (p30 _),
-    "p34_ivf_knn" -> (p34 _),
-    "p35_embedding_dedup" -> (p35 _),
-    "p36_semantic_dedup" -> (p36 _),
-    "p37_incr_semantic" -> (p37 _),
-    "p38_pq_knn" -> (p38 _),
-    "p39_ivfpq_knn" -> (p39 _),
-    "p40_ann_recall" -> (p40 _),
-    "p41_sq_knn" -> (p41 _),
-    "p42_ivfpq_refine" -> (p42 _),
-    "p43_clf_gate" -> (p43 _),
-    "p44_lm_score" -> (p44 _),
-    "p45_shuffle_shards" -> (p45 _),
-    "p46_importance_sample" -> (p46 _),
-    "p47_bpe_encode" -> (p47 _),
-    "p48_curate_modern" -> (p48 _),
-    "p49_kn_score" -> (p49 _),
-    "p50_bpe_ids" -> (p50 _),
-    "p51_similarity_rank" -> (p51 _),
-    "p52_kn3_score" -> (p52 _),
-    "p53_line_dedup" -> (p53 _),
-    "p54_similarity_triangles" -> (p54 _),
-    "p55_similarity_communities" -> (p55 _),
-    "p56_length_percentiles" -> (p56 _),
-    "p57_decontaminate" -> (p57 _),
-    "p58_zorder_layout" -> (p58 _),
-    "p59_stratified_split" -> (p59 _),
-    "p60_snapshot_upsert" -> (p60 _),
-    "p61_snapshot_diff" -> (p61 _),
-    "p62_normalize_text" -> (p62 _),
-    "p63_resample_ffill" -> (p63 _),
-    "p64_bm25_relevance" -> (p64 _),
-    "p65_tfidf_keywords" -> (p65 _),
-    "p66_cluster_sample" -> (p66 _),
-    "p67_decontam_bloom" -> (p67 _),
-    "p68_cms_heavy" -> (p68 _),
-    "p69_data_card" -> (p69 _),
-    "p70_hybrid_rank" -> (p70 _),
-    "p71_hamming_neardup" -> (p71 _),
-    "p72_candidates_tap" -> (p72 _),
-    "p73_unigram_seed" -> (p73 _),
-    "p74_ngram_decontam" -> (p74 _),
-    "p75_containment" -> (p75 _),
-    "p76_quality_dedup" -> (p76 _),
-    "p77_subsumption" -> (p77 _),
-    "p78_incr_containment" -> (p78 _),
-    "p79_profile" -> (p79 _),
-    "p80_constraints" -> (p80 _),
-    "p31_span_excise" -> (p31 _),
-    "p32_chunking" -> (p32 _),
-    "p33_mixture_weights" -> (p33 _),
-    "p92_compact" -> (p92 _),
-    "p93_publish" -> (p93 _),
-    "p94_dedup_audit" -> (p94 _),
-    "p95_stream_retention" -> (p95 _)
-  )
+  /** The query name → plan view of [[registry]] (perfbench and the specs
+    * look plans up by name). */
+  lazy val queries: Map[String, QuerySpec.Plan] =
+    registry.map(q => q.name -> q.plan).toMap
+
+  /** The name → DuckDB SQL view of every [[QuerySpec.Oracle]] check. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case QuerySpec(n, _, Oracle(sql), _) => n -> sql }.toMap
+
+  private lazy val byName: Map[String, QuerySpec] = registry.map(q => q.name -> q).toMap
+
+  /** The named queries in the order given, or the whole registry for no
+    * names. An unknown name fails and lists the valid ones. */
+  def select(names: Seq[String]): Seq[QuerySpec] = {
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty, s"unknown query ${unknown.mkString(", ")}; valid: " +
+      registry.map(_.name).sorted.mkString(", "))
+    if (names.isEmpty) registry else names.distinct.map(byName)
+  }
+
+  /** `SPARK_GRAFT_ONLY`: comma-separated query names restricting a local
+    * run of Verify, Bench or Prof (unset or empty = every query). */
+  def onlyNames: Seq[String] =
+    sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** A streaming gate query: `staged` replayed through
+    * [[graft.streaming.Streams.replayAsStream]] as 4 file micro-batches
+    * into `transform`, then `post`, checked against the oracle `sql`.
+    * Its batch plan is the same `post(transform(staged))` with no replay. */
+  private def replayed(name: String, mode: String, staged: QuerySpec.Plan,
+      transform: DataFrame => DataFrame, post: DataFrame => DataFrame = identity,
+      orderedBy: Option[String] = None, sink: String = "memory",
+      stateKeyHint: Option[Long] = None)(sql: String): QuerySpec =
+    QuerySpec(name, (s, d) => post(graft.streaming.Streams.replayAsStream(staged(s, d),
+        scratchDir(QuerySpec.shortKey(name) + "_stream", d), 4, mode, orderedBy, sink,
+        stateKeyHint)(transform)),
+      Oracle(sql), batchPlan = Some((s, d) => post(transform(staged(s, d)))))
+
+  /** Fails on a repeated name or short key: a repeated key would make one
+    * query shadow another in every name-keyed view and headline. */
+  private[graft] def unique(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    Seq[QuerySpec => String](_.name, _.shortKey).foreach { key =>
+      val dups = specs.groupBy(key).collect { case (k, v) if v.size > 1 => k }
+      require(dups.isEmpty, s"duplicate query keys: ${dups.mkString(", ")}")
+    }
+    specs
+  }
 
   /** q22's events rollup contract, shared VERBATIM by p82 (the streaming
     * replay of the same aggregation — the p57/p67 shared-oracle idiom). */
@@ -2524,39 +2369,6 @@ object SparkEntry {
     """SELECT event_type, COUNT(*) AS cnt,
       |CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY event_type""".stripMargin
-
-  /** The streaming gate queries' computation applied to their BATCH
-    * inputs — the plan surface PlanLintSpec lints for every "_stream"
-    * query. The gate queries themselves return a memory-sink table whose
-    * physical plan is a LocalTableScan; the real computation lives in
-    * the streaming transform, which Spark also plans in batch mode (the
-    * analyzer strips the watermark on a batch plan; (flat)
-    * mapGroupsWithState run per-key with empty initial state; p87's
-    * entry substitutes the batch-exact `dropDuplicates` because
-    * `dropDuplicatesWithinWatermark` has no batch execution).
-    * DriverContractSpec pins the two-way contract: every key here is a
-    * query, and every "_stream" query has an entry here. */
-  val streamingBatchPlans: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p82_stream_agg" -> ((s, d) => p82Transform(tbl(d, "events")(s))),
-    "p83_stream_window" -> ((s, d) => p83Transform(p83Staged(s, d))),
-    "p84_stream_upsert" -> ((s, d) => p84Post(p84Transform(p84Staged(s, d)))),
-    "p85_stream_sessions" -> ((s, d) => p85Post(p85Transform(p85Staged(s, d)))),
-    "p86_stream_interval_join" -> ((s, d) => p86Transform(p86Staged(s, d))),
-    // dropDuplicatesWithinWatermark has no batch execution — lint the
-    // batch-exact analog (same keys, same scan, same shuffle shape)
-    "p87_stream_dedup" -> ((s, d) =>
-      p87Staged(s, d).dropDuplicates("user_id", "event_type")
-        .select(col("user_id"), col("event_type"))),
-    "p88_stream_kmv" -> ((s, d) => p88Post(p88Transform(p88Staged(s, d)))),
-    "p89_stream_cms" -> ((s, d) => p89Post(s, d)(p89Transform(p89Staged(s, d)))),
-    "p90_stream_lsh" -> ((s, d) => p90Post(p90Transform(p90Staged(s, d)))),
-    "p91_stream_embed" -> ((s, d) => p91Transform(p91Staged(s, d))),
-    // p95's computation is the aggregate over the served union; the
-    // batch-equivalent plan is the same aggregate over the clean slices
-    "p95_stream_retention" -> ((s, d) => p95Agg(
-      tbl(d, "orders")(s).select("o_orderkey", "o_custkey", "o_totalprice")
-        .filter(col("o_orderkey") % 6 =!= 3)))
-  )
 
   /** Shared by p55 (inline LPA) and p72 (LPA off the persisted
     * candidate tap): deterministic synchronous LPA, unrolled like p51 —
@@ -2770,149 +2582,144 @@ object SparkEntry {
         |FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
         |WHERE l.doc_id < r.doc_id GROUP BY 1, 2""".stripMargin
 
-  /** Statistical contracts for the queries that are rows-only BY DESIGN
-    * (in [[queries]] but deliberately absent from [[oracleSql]] — today
-    * exactly q23's engine-RNG Bernoulli sample). [[Verify]] executes
-    * these at dump time and writes `<name>.contract.json` beside the
-    * parquet, so the correctness artifact SELF-DESCRIBES the check that
-    * replaces the hash (VERDICT r13 item #7) instead of a bare
-    * `no_oracle`. Each entry returns (check, passed, detail) triples;
-    * every check is a distributed computation (no driver-side collect of
-    * the data), so the contract also runs at the sf10 sweep scale.
-    * DriverContractSpec pins keySet == the unoracled set. */
-  def statContracts: Map[String, (SparkSession, String) => Seq[(String, Boolean, String)]] = Map(
-    "q23_sample" -> { (s, d) =>
-      val q = queries("q23_sample")
-      // (1) determinism: the seeded sample is run-to-run identical on
-      // the same data + partitioning — compared by a distributed
-      // content signature (order-free hash sum + count), never a collect
-      def sig(df: DataFrame): Row = df.agg(
-        // decimal sum: a Long sum of 64-bit hashes overflows under ANSI
-        sum(xxhash64(col("l_orderkey"), col("l_linenumber"))
-          .cast(DecimalType(38, 0))).as("h"),
-        count(lit(1)).as("n")).collect()(0)
-      val s1 = sig(q(s, d)); val s2 = sig(q(s, d))
-      val n1 = s1.getLong(1)
-      // (2) source-subset: no sampled row outside the source relation
-      val src = tbl(d, "lineitem")(s).select("l_orderkey", "l_linenumber")
-      val extra = q(s, d).except(src).count()
-      // (3) binomial bound: count within 5 sigma of fraction*n
-      val n = src.count().toDouble
-      val expect = 0.1 * n
-      val sigma = math.sqrt(n * 0.1 * 0.9)
-      Seq(
-        ("deterministic_fixed_seed", s1 == s2, s"sig run1=$s1 run2=$s2"),
-        ("subset_of_source", extra == 0L, s"rows outside source: $extra"),
-        ("binomial_5sigma", math.abs(n1 - expect) <= 5 * sigma,
-          f"sampled $n1 of ${n.toLong} (expect $expect%.1f ± ${5 * sigma}%.1f)"))
-    })
+  /** q23's statistical contract, the check that replaces the hash for the
+    * rows-only engine-RNG Bernoulli sample. [[Verify]] executes it at
+    * dump time and writes `q23_sample.contract.json` beside the parquet,
+    * so the correctness artifact SELF-DESCRIBES the check (VERDICT r13
+    * item #7) instead of a bare `no_oracle`. It returns (check, passed,
+    * detail) triples; every check is a distributed computation (no
+    * driver-side collect of the data), so it also runs at sf10 scale. */
+  private def q23Checks(s: SparkSession, d: String): Seq[(String, Boolean, String)] = {
+    // (1) determinism: the seeded sample is run-to-run identical on
+    // the same data + partitioning — compared by a distributed
+    // content signature (order-free hash sum + count), never a collect
+    def sig(df: DataFrame): Row = df.agg(
+      // decimal sum: a Long sum of 64-bit hashes overflows under ANSI
+      sum(xxhash64(col("l_orderkey"), col("l_linenumber"))
+        .cast(DecimalType(38, 0))).as("h"),
+      count(lit(1)).as("n")).collect()(0)
+    val s1 = sig(q23(s, d)); val s2 = sig(q23(s, d))
+    val n1 = s1.getLong(1)
+    // (2) source-subset: no sampled row outside the source relation
+    val src = tbl(d, "lineitem")(s).select("l_orderkey", "l_linenumber")
+    val extra = q23(s, d).except(src).count()
+    // (3) binomial bound: count within 5 sigma of fraction*n
+    val n = src.count().toDouble
+    val expect = 0.1 * n
+    val sigma = math.sqrt(n * 0.1 * 0.9)
+    Seq(
+      ("deterministic_fixed_seed", s1 == s2, s"sig run1=$s1 run2=$s2"),
+      ("subset_of_source", extra == 0L, s"rows outside source: $extra"),
+      ("binomial_5sigma", math.abs(n1 - expect) <= 5 * sigma,
+        f"sampled $n1 of ${n.toLong} (expect $expect%.1f ± ${5 * sigma}%.1f)"))
+  }
 
-  /** Contract oracles (VERDICT r16 #3): DuckDB SQL for the by-design
-    * rows-only queries, authored by [[Verify]] at dump time because the
-    * SQL reads the dumped parquet itself (the dump dir is only known
-    * then). The SQL recomputes the statistical contract INDEPENDENTLY
-    * in DuckDB — every sampled row must exist in the source `lineitem`
-    * table, and the sampled count must sit within 6σ of the 10%
-    * Bernoulli bound on the source row count — and echoes the dumped
-    * rows IFF every check passes (else it returns zero rows and the
-    * hash compare fails loudly). So the driver's q23 row reads
-    * rows/schema/hash-match exactly when the DuckDB-verified contract
-    * holds, instead of `no_oracle` nulls. This is NOT an
-    * exact-membership oracle and is not presented as one: row
+  /** q23's contract oracle (VERDICT r16 #3): DuckDB SQL authored by
+    * [[Verify]] at dump time because it reads the dumped parquet itself
+    * (the dump dir is only known then). The SQL recomputes the
+    * statistical contract INDEPENDENTLY in DuckDB — every sampled row
+    * must exist in the source `lineitem` table, and the sampled count
+    * must sit within 6σ of the 10% Bernoulli bound on the source row
+    * count — and echoes the dumped rows IFF every check passes (else it
+    * returns zero rows and the hash compare fails loudly). So the
+    * driver's q23 row reads rows/schema/hash-match exactly when the
+    * DuckDB-verified contract holds, instead of `no_oracle` nulls. This
+    * is NOT an exact-membership oracle and is not presented as one: row
     * membership is engine-RNG by design (reference `sample*`,
     * cascading/operations.clj:109-116 — Bernoulli by percentage,
     * seeded); q39_sample_det is the hash-exact deterministic twin, and
-    * [[statContracts]] additionally checks run-to-run determinism
-    * distributedly. Keys must be a subset of [[statContracts]] keys
-    * (DriverContractSpec pins this). */
-  def contractOracleSql(dumpDir: String): Map[String, String] = Map(
-    "q23_sample" ->
-      s"""WITH s AS (SELECT l_orderkey, l_linenumber
-         |           FROM read_parquet('$dumpDir/q23_sample/*.parquet')),
-         |chk AS (SELECT
-         |  (SELECT COUNT(*) FROM s) AS k,
-         |  (SELECT COUNT(*) FROM lineitem) AS n,
-         |  (SELECT COUNT(*) FROM s WHERE NOT EXISTS (SELECT 1
-         |     FROM lineitem l WHERE l.l_orderkey = s.l_orderkey
-         |       AND l.l_linenumber = s.l_linenumber)) AS extra)
-         |SELECT s.l_orderkey, s.l_linenumber FROM s, chk
-         |WHERE chk.extra = 0
-         |  AND abs(chk.k - 0.1 * chk.n) <= 6.0 * sqrt(chk.n * 0.1 * 0.9)""".stripMargin)
+    * [[q23Checks]] additionally checks run-to-run determinism
+    * distributedly. */
+  private def q23ContractSql(dumpDir: String): String =
+    s"""WITH s AS (SELECT l_orderkey, l_linenumber
+       |           FROM read_parquet('$dumpDir/q23_sample/*.parquet')),
+       |chk AS (SELECT
+       |  (SELECT COUNT(*) FROM s) AS k,
+       |  (SELECT COUNT(*) FROM lineitem) AS n,
+       |  (SELECT COUNT(*) FROM s WHERE NOT EXISTS (SELECT 1
+       |     FROM lineitem l WHERE l.l_orderkey = s.l_orderkey
+       |       AND l.l_linenumber = s.l_linenumber)) AS extra)
+       |SELECT s.l_orderkey, s.l_linenumber FROM s, chk
+       |WHERE chk.extra = 0
+       |  AND abs(chk.k - 0.1 * chk.n) <= 6.0 * sqrt(chk.n * 0.1 * 0.9)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q01_multi_agg" ->
+  /** Every contract query, once: its name, plan, check and — for the
+    * streaming gate queries — the batch plan of the streaming transform.
+    * Lazy, so every SQL val above is initialized before it is read. */
+  lazy val registry: Seq[QuerySpec] = unique(Seq(
+    QuerySpec("q01_multi_agg", q01, Oracle(
       """SELECT l_returnflag, l_linestatus,
         |CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
         |CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)/COUNT(l_quantity) AS avg_qty,
         |COUNT(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_map" ->
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin)),
+    QuerySpec("q02_filter_map", q02, Oracle(
       """SELECT l_orderkey, l_extendedprice * (1.0 - l_discount) AS revenue
-        |FROM lineitem WHERE l_quantity < 3.0""".stripMargin,
-    "q03_join_agg" ->
+        |FROM lineitem WHERE l_quantity < 3.0""".stripMargin)),
+    QuerySpec("q03_join_agg", q03, Oracle(
       """SELECT c_mktsegment,
         |CAST(SUM(CAST(FLOOR(l_extendedprice * (1.0 - l_discount) * 10000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue,
         |COUNT(*) AS n_items
         |FROM customer JOIN orders ON o_custkey = c_custkey
         |JOIN lineitem ON l_orderkey = o_orderkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q04_dim_join" ->
+        |GROUP BY c_mktsegment""".stripMargin)),
+    QuerySpec("q04_dim_join", q04, Oracle(
       """SELECT r_name, COUNT(*) AS n_nations
         |FROM region JOIN nation ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
-    "q05_outer_count" ->
+        |GROUP BY r_name""".stripMargin)),
+    QuerySpec("q05_outer_count", q05, Oracle(
       """SELECT c_custkey, COUNT(o_orderkey) AS order_cnt
         |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-        |GROUP BY c_custkey""".stripMargin,
-    "q06_semi_join" ->
+        |GROUP BY c_custkey""".stripMargin)),
+    QuerySpec("q06_semi_join", q06, Oracle(
       """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-    "q07_anti_join" ->
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin)),
+    QuerySpec("q07_anti_join", q07, Oracle(
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin,
-    "q08_exists_flag" ->
+        |  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin)),
+    QuerySpec("q08_exists_flag", q08, Oracle(
       """SELECT c_custkey,
         |c_custkey IN (SELECT o_custkey FROM orders) AS has_order
-        |FROM customer""".stripMargin,
-    "q09_distinct" ->
-      "SELECT DISTINCT c_mktsegment AS mktsegment FROM customer",
-    "q10_union" ->
+        |FROM customer""".stripMargin)),
+    QuerySpec("q09_distinct", q09, Oracle(
+      "SELECT DISTINCT c_mktsegment AS mktsegment FROM customer")),
+    QuerySpec("q10_union", q10, Oracle(
       """SELECT c_nationkey AS nationkey FROM customer
-        |UNION SELECT s_nationkey FROM supplier""".stripMargin,
-    "q11_union_all" ->
+        |UNION SELECT s_nationkey FROM supplier""".stripMargin)),
+    QuerySpec("q11_union_all", q11, Oracle(
       """SELECT c_nationkey AS nationkey FROM customer
-        |UNION ALL SELECT s_nationkey FROM supplier""".stripMargin,
-    "q12_topk_global" ->
+        |UNION ALL SELECT s_nationkey FROM supplier""".stripMargin)),
+    QuerySpec("q12_topk_global", q12, Oracle(
       """SELECT c_custkey, c_acctbal FROM customer
-        |ORDER BY c_acctbal DESC, c_custkey DESC LIMIT 10""".stripMargin,
-    "q13_topk_pergroup" ->
+        |ORDER BY c_acctbal DESC, c_custkey DESC LIMIT 10""".stripMargin)),
+    QuerySpec("q13_topk_pergroup", q13, Oracle(
       """SELECT o_custkey, o_orderkey AS top_orderkey, o_totalprice AS top_price
         |FROM (SELECT o_custkey, o_orderkey, o_totalprice,
         |  ROW_NUMBER() OVER (PARTITION BY o_custkey
         |    ORDER BY o_totalprice DESC, o_orderkey DESC) AS rn FROM orders) t
-        |WHERE rn <= 3""".stripMargin,
-    "q14_count_distinct" ->
-      "SELECT COUNT(DISTINCT o_custkey) AS n_cust FROM orders",
-    "q15_having" ->
-      "SELECT o_custkey FROM orders GROUP BY o_custkey HAVING COUNT(*) = 10",
-    "q16_dup_var_eq" ->
+        |WHERE rn <= 3""".stripMargin)),
+    QuerySpec("q14_count_distinct", q14, Oracle(
+      "SELECT COUNT(DISTINCT o_custkey) AS n_cust FROM orders")),
+    QuerySpec("q15_having", q15, Oracle(
+      "SELECT o_custkey FROM orders GROUP BY o_custkey HAVING COUNT(*) = 10")),
+    QuerySpec("q16_dup_var_eq", q16, Oracle(
       """SELECT l_orderkey, l_partkey AS k FROM lineitem
-        |WHERE l_partkey = l_suppkey""".stripMargin,
-    "q17_wordcount" ->
+        |WHERE l_partkey = l_suppkey""".stripMargin)),
+    QuerySpec("q17_wordcount", q17, Oracle(
       """SELECT token AS word, COUNT(*) AS cnt FROM
         |(SELECT UNNEST(regexp_extract_all(text, '\S+')) AS token FROM documents) t
-        |GROUP BY token""".stripMargin,
-    "q18_buffer_first" ->
+        |GROUP BY token""".stripMargin)),
+    QuerySpec("q18_buffer_first", q18, Oracle(
       """SELECT o_custkey, MIN(o_orderdate) AS first_date
-        |FROM orders GROUP BY o_custkey""".stripMargin,
-    "q19_cross_join" ->
-      "SELECT r_name, n_name FROM region CROSS JOIN nation",
-    "q20_global_agg" ->
+        |FROM orders GROUP BY o_custkey""".stripMargin)),
+    QuerySpec("q19_cross_join", q19, Oracle(
+      "SELECT r_name, n_name FROM region CROSS JOIN nation")),
+    QuerySpec("q20_global_agg", q20, Oracle(
       """SELECT COUNT(*) AS cnt,
         |CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |MAX(l_shipdate) AS max_ship FROM lineitem""".stripMargin,
+        |MAX(l_shipdate) AS max_ship FROM lineitem""".stripMargin)),
     // q21: the DECIMAL(28,8) sum exceeds 2^53 units at sf>=0.1, so its
     // double conversion rounds. Spark's cast is correctly rounded
     // (BigDecimal.doubleValue); DuckDB's direct decimal->double is off by
@@ -2920,84 +2727,85 @@ object SparkEntry {
     // conversion through VARCHAR — decimal->string is exact and
     // string->double correctly rounded in both engines — making the
     // contract "correctly rounded" rather than "whatever the engine does"
-    "q21_variance" ->
+    QuerySpec("q21_variance", q21, Oracle(
       """SELECT c_mktsegment, a - m*m AS var_bal FROM
         |(SELECT c_mktsegment,
         |  CAST(CAST(SUM(CAST(CAST(c_acctbal AS DECIMAL(18,4)) * CAST(c_acctbal AS DECIMAL(18,4))
         |    AS DECIMAL(28,8))) AS VARCHAR) AS DOUBLE)/COUNT(*) AS a,
         |  CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)/COUNT(*) AS m
-        | FROM customer GROUP BY c_mktsegment) t""".stripMargin,
-    "q22_events_agg" -> eventsAggOracleSql,
-    "q24_subquery" ->
+        | FROM customer GROUP BY c_mktsegment) t""".stripMargin)),
+    QuerySpec("q22_events_agg", q22, Oracle(eventsAggOracleSql)),
+    QuerySpec("q23_sample", q23, Contract(q23Checks, q23ContractSql)),
+    QuerySpec("q24_subquery", q24, Oracle(
       """SELECT c_mktsegment, COUNT(*) AS big_orders
         |FROM customer JOIN (SELECT o_orderkey, o_custkey FROM orders
         |  WHERE o_totalprice > 100000.0) t ON t.o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q25_predmacro_avg" ->
+        |GROUP BY c_mktsegment""".stripMargin)),
+    QuerySpec("q25_predmacro_avg", q25, Oracle(
       """SELECT c_mktsegment,
         |CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)/COUNT(*) AS avg_bal
-        |FROM customer GROUP BY c_mktsegment""".stripMargin,
-    "q26_intersect" ->
+        |FROM customer GROUP BY c_mktsegment""".stripMargin)),
+    QuerySpec("q26_intersect", q26, Oracle(
       """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT SELECT s_nationkey FROM supplier""".stripMargin,
-    "q27_except" ->
+        |INTERSECT SELECT s_nationkey FROM supplier""".stripMargin)),
+    QuerySpec("q27_except", q27, Oracle(
       """SELECT c_nationkey AS nationkey FROM customer WHERE c_acctbal > 9000.0
-        |EXCEPT SELECT s_nationkey FROM supplier WHERE s_acctbal > 9000.0""".stripMargin,
-    "q28_window_running" ->
+        |EXCEPT SELECT s_nationkey FROM supplier WHERE s_acctbal > 9000.0""".stripMargin)),
+    QuerySpec("q28_window_running", q28, Oracle(
       """SELECT o_custkey, o_orderkey,
         |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
         |  PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |AS running_total FROM orders""".stripMargin,
-    "q32_preagg_join" ->
+        |AS running_total FROM orders""".stripMargin)),
+    QuerySpec("q32_preagg_join", q32, Oracle(
       """SELECT c_mktsegment,
         |CAST(SUM(CAST(FLOOR(l_extendedprice * (1.0 - l_discount) * 10000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue,
         |COUNT(*) AS n_items
         |FROM customer JOIN orders ON o_custkey = c_custkey
         |JOIN lineitem ON l_orderkey = o_orderkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q33_rollup" ->
+        |GROUP BY c_mktsegment""".stripMargin)),
+    QuerySpec("q33_rollup", q33, Oracle(
       """SELECT l_returnflag, l_linestatus,
         |CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |COUNT(*) AS cnt
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q29_full_outer" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin)),
+    QuerySpec("q29_full_outer", q29, Oracle(
       """SELECT COALESCE(c.nk, s.nk) AS nk, c.c_cnt, s.s_cnt FROM
         |(SELECT c_nationkey AS nk, COUNT(*) AS c_cnt FROM customer
         |  WHERE c_acctbal > 9000.0 GROUP BY 1) c
         |FULL OUTER JOIN
         |(SELECT s_nationkey AS nk, COUNT(*) AS s_cnt FROM supplier
         |  WHERE s_acctbal > 9000.0 GROUP BY 1) s
-        |ON c.nk = s.nk""".stripMargin,
-    "q30_lag_buffer" ->
+        |ON c.nk = s.nk""".stripMargin)),
+    QuerySpec("q30_lag_buffer", q30, Oracle(
       """SELECT o_custkey, o_orderkey AS ok2,
         |o_totalprice - LAG(o_totalprice) OVER (PARTITION BY o_custkey
         |  ORDER BY o_orderdate, o_orderkey) AS delta
-        |FROM orders""".stripMargin,
-    "q31_multigroup" ->
+        |FROM orders""".stripMargin)),
+    QuerySpec("q31_multigroup", q31, Oracle(
       """SELECT COALESCE(c.nationkey, s.nationkey) AS nationkey,
         |COALESCE(c.n_cust, 0) AS n_cust, COALESCE(s.n_supp, 0) AS n_supp
         |FROM (SELECT c_nationkey AS nationkey, COUNT(*) AS n_cust
         |  FROM customer GROUP BY 1) c
         |FULL OUTER JOIN (SELECT s_nationkey AS nationkey, COUNT(*) AS n_supp
         |  FROM supplier GROUP BY 1) s
-        |ON c.nationkey = s.nationkey""".stripMargin,
-    "p01_exact_dedup" ->
+        |ON c.nationkey = s.nationkey""".stripMargin)),
+    QuerySpec("p01_exact_dedup", p01, Oracle(
       """SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id,
-        |COUNT(*) AS dup_count FROM documents GROUP BY md5(text)""".stripMargin,
-    "p02_token_count" ->
+        |COUNT(*) AS dup_count FROM documents GROUP BY md5(text)""".stripMargin)),
+    QuerySpec("p02_token_count", p02, Oracle(
       """SELECT doc_id, CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)
-        |AS token_count FROM documents""".stripMargin,
-    "p03_chars_per_token" ->
+        |AS token_count FROM documents""".stripMargin)),
+    QuerySpec("p03_chars_per_token", p03, Oracle(
       """SELECT doc_id, CAST(LENGTH(text) AS DOUBLE) /
         |GREATEST(CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT), 1)
-        |AS chars_per_token FROM documents""".stripMargin,
-    "p04_stopword_hits" ->
+        |AS chars_per_token FROM documents""".stripMargin)),
+    QuerySpec("p04_stopword_hits", p04, Oracle(
       """SELECT doc_id, CAST(len(list_intersect(
         |list_distinct(regexp_extract_all(lower(text), '[a-z]+')),
         |['the','and','of','to','in','is','that','it','for','was'])) AS BIGINT)
-        |AS en_hits FROM documents""".stripMargin,
-    "p12_quality_score" ->
+        |AS en_hits FROM documents""".stripMargin)),
+    QuerySpec("p12_quality_score", p12, Oracle(
       """WITH t AS (SELECT doc_id, text,
         |  regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents)
         |SELECT doc_id,
@@ -3010,8 +2818,8 @@ object SparkEntry {
         |  (CAST(length(text) AS DOUBLE) - len(toks) + 1) / greatest(len(toks), 1) AS mean_word_len,
         |  CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
         |    / greatest(length(text), 1) AS upper_ratio
-        |FROM t""".stripMargin,
-    "p13_jaccard_verify" ->
+        |FROM t""".stripMargin)),
+    QuerySpec("p13_jaccard_verify", p13, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -3046,8 +2854,8 @@ object SparkEntry {
         |        / len(list_distinct(sa.sset || sb.sset)) END AS jaccard
         |  FROM cand
         |  JOIN shs sa ON sa.doc_id = cand.id_a JOIN shs sb ON sb.doc_id = cand.id_b) t
-        |WHERE jaccard >= 0.5""".stripMargin,
-    "q34_sessionize" ->
+        |WHERE jaccard >= 0.5""".stripMargin)),
+    QuerySpec("q34_sessionize", q34, Oracle(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
         |m AS (SELECT user_id, event_id, us,
         |  CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
@@ -3058,22 +2866,22 @@ object SparkEntry {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM m)
         |SELECT user_id, session_id, COUNT(*) AS n_events,
         |  MIN(us) AS start_us, MAX(us) AS end_us
-        |FROM s GROUP BY user_id, session_id""".stripMargin,
-    "p14_length_quantiles" ->
+        |FROM s GROUP BY user_id, session_id""".stripMargin)),
+    QuerySpec("p14_length_quantiles", p14, Oracle(
       """SELECT source, COUNT(*) AS n_docs,
         |quantile_cont(n_chars, 0.25) AS len_q25,
         |quantile_cont(n_chars, 0.5) AS len_q50,
         |quantile_cont(n_chars, 0.75) AS len_q75
-        |FROM documents GROUP BY source""".stripMargin,
-    "q35_asof_join" ->
+        |FROM documents GROUP BY source""".stripMargin)),
+    QuerySpec("q35_asof_join", q35, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us, event_type FROM events),
         |c AS (SELECT event_id, user_id, us FROM e WHERE event_type = 'click'),
         |x AS (SELECT event_id AS last_err_id, user_id, us AS last_err_us FROM e
         |      WHERE event_type = 'error')
         |SELECT c.event_id, c.user_id, c.us, x.last_err_us, x.last_err_id
         |FROM c ASOF LEFT JOIN x
-        |ON c.user_id = x.user_id AND c.us >= x.last_err_us""".stripMargin,
-    "q38_asof_forward" ->
+        |ON c.user_id = x.user_id AND c.us >= x.last_err_us""".stripMargin)),
+    QuerySpec("q38_asof_forward", q38, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us, event_type FROM events),
         |c AS (SELECT event_id, user_id, us FROM e WHERE event_type = 'click'),
         |x AS (SELECT event_id, user_id, us FROM e WHERE event_type = 'error')
@@ -3083,24 +2891,24 @@ object SparkEntry {
         |     ORDER BY x.us LIMIT 1) AS next_err_id,
         |  (SELECT MIN(x.us) FROM x WHERE x.user_id = c.user_id
         |     AND x.us >= c.us AND x.us - c.us <= 600000000) AS next_err_us
-        |FROM c""".stripMargin,
-    "q39_sample_det" ->
+        |FROM c""".stripMargin)),
+    QuerySpec("q39_sample_det", q39, Oracle(
       """SELECT l_orderkey, l_linenumber FROM lineitem
-        |WHERE md5(l_orderkey || '_' || l_linenumber) < '1a'""".stripMargin,
-    "q36_range_join" ->
+        |WHERE md5(l_orderkey || '_' || l_linenumber) < '1a'""".stripMargin)),
+    QuerySpec("q36_range_join", q36, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us, event_type FROM events)
         |SELECT p.event_id, p.user_id, p.us,
         |       x.event_id AS err_id, x.us AS err_us
         |FROM (SELECT * FROM e WHERE event_type = 'purchase') p
         |JOIN (SELECT * FROM e WHERE event_type = 'error') x
         |ON p.user_id = x.user_id AND p.us >= x.us
-        |   AND p.us <= x.us + 1800000000""".stripMargin,
-    "q37_json_destructure" ->
+        |   AND p.us <= x.us + 1800000000""".stripMargin)),
+    QuerySpec("q37_json_destructure", q37, Oracle(
       """SELECT event_type,
         |CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |COUNT(*) AS cnt
-        |FROM events GROUP BY event_type""".stripMargin,
-    "p15_curate" ->
+        |FROM events GROUP BY event_type""".stripMargin)),
+    QuerySpec("p15_curate", p15, Oracle(
       """WITH RECURSIVE gated AS MATERIALIZED (
         |  SELECT doc_id, text, lang, source FROM (
         |    SELECT doc_id, text, lang, source,
@@ -3164,10 +2972,10 @@ object SparkEntry {
         |SELECT d.doc_id, d.lang, d.source FROM gated d
         |LEFT JOIN comp ON comp.id = d.doc_id WHERE comp.id IS NULL
         |UNION ALL
-        |SELECT d.doc_id, d.lang, d.source FROM keep JOIN gated d ON d.doc_id = keep.doc_id""".stripMargin,
+        |SELECT d.doc_id, d.lang, d.source FROM keep JOIN gated d ON d.doc_id = keep.doc_id""".stripMargin)),
     // --- sketch-kernel oracles: the md5-derived kernels (graft.pipeline.Md5)
     // are replicated step-for-step in SQL; md5_number_lower == Md5.lower64.
-    "p05_fingerprint_langid" ->
+    QuerySpec("p05_fingerprint_langid", p05, Oracle(
       """WITH tk AS (
         |  SELECT doc_id,
         |    regexp_split_to_array(lower(trim(text)), '\s+') AS toks,
@@ -3186,10 +2994,11 @@ object SparkEntry {
         |    t -> CAST(md5_number_lower(t) & 2305843009213693951 AS BIGINT))),
         |    (a, b) -> CAST(((a::HUGEINT) * 1000003 + b) % 2305843009213693951 AS BIGINT)) AS fingerprint,
         |  CASE WHEN best.hits > 0 THEN best.lang ELSE 'und' END AS lang_pred
-        |FROM scored""".stripMargin,
-    "p06_minhash_pairs" -> minhashPairsOracleSql,
-    "p90_stream_lsh" -> minhashPairsOracleSql,
-    "p16_capped_candidates" ->
+        |FROM scored""".stripMargin)),
+    QuerySpec("p06_minhash_pairs", p06, Oracle(minhashPairsOracleSql)),
+    replayed("p90_stream_lsh", "append", p90Staged, p90Transform, p90Post)(
+      minhashPairsOracleSql),
+    QuerySpec("p16_capped_candidates", p16, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -3219,8 +3028,8 @@ object SparkEntry {
         |WHERE l.bsz <= 2 AND l.doc_id < r.doc_id
         |UNION
         |SELECT hub AS id_a, doc_id AS id_b FROM sized
-        |WHERE bsz > 2 AND doc_id != hub""".stripMargin,
-    "p07_simhash" ->
+        |WHERE bsz > 2 AND doc_id != hub""".stripMargin)),
+    QuerySpec("p07_simhash", p07, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
         |th AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM tk),
@@ -3232,8 +3041,8 @@ object SparkEntry {
         |  FROM h, generate_series(0, 63) s(b) GROUP BY doc_id, s.b),
         |shu AS (SELECT doc_id, SUM(bit * (1::HUGEINT << b)) AS v FROM bits GROUP BY doc_id)
         |SELECT doc_id, CAST(CASE WHEN v >= 9223372036854775808 THEN v - 18446744073709551616
-        |  ELSE v END AS BIGINT) AS simhash FROM shu""".stripMargin,
-    "p08_knn_brute" ->
+        |  ELSE v END AS BIGINT) AS simhash FROM shu""".stripMargin)),
+    QuerySpec("p08_knn_brute", p08, Oracle(
       """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |p AS (SELECT vec_id AS probe_id, e AS pe FROM c WHERE vec_id < 8),
         |scored AS (
@@ -3245,11 +3054,11 @@ object SparkEntry {
         |SELECT probe_id, corpus_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, corpus_id) AS rn FROM scored) t
-        |WHERE rn <= 10""".stripMargin,
+        |WHERE rn <= 10""".stripMargin)),
     // p34: nProbe = cells ⇒ IVF routing reaches every cell, the candidate
     // set is the full corpus, and the result is definitionally equal to
     // exact brute-force top-k — which the SQL below recomputes
-    "p34_ivf_knn" ->
+    QuerySpec("p34_ivf_knn", p34, Oracle(
       """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |p AS (SELECT vec_id AS probe_id, e AS pe FROM c WHERE vec_id < 6),
         |scored AS (
@@ -3261,8 +3070,8 @@ object SparkEntry {
         |SELECT probe_id, corpus_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, corpus_id) AS rn FROM scored) t
-        |WHERE rn <= 8""".stripMargin,
-    "p09_knn_lsh" ->
+        |WHERE rn <= 8""".stripMargin)),
+    QuerySpec("p09_knn_lsh", p09, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
         |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
@@ -3288,30 +3097,33 @@ object SparkEntry {
         |SELECT probe_id, corpus_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, corpus_id) AS rn FROM scored) t
-        |WHERE rn <= 10""".stripMargin,
-    "p11_neardup_dedup" -> neardupOracleSql,
-    "p17_neardup_star" -> neardupOracleSql,
-    "p76_quality_dedup" -> neardupByOracleSql,
-    "p79_profile" -> profileOracleSql,
+        |WHERE rn <= 10""".stripMargin)),
+    QuerySpec("p11_neardup_dedup", p11, Oracle(neardupOracleSql)),
+    QuerySpec("p17_neardup_star", p17, Oracle(neardupOracleSql)),
+    QuerySpec("p76_quality_dedup", p76, Oracle(neardupByOracleSql)),
+    QuerySpec("p79_profile", p79, Oracle(profileOracleSql)),
     // p81: batched BPE training (numMerges=8, batchMerges=4, the
     // engine's defaults otherwise) — see batchedBpeOracleSql
-    "p81_bpe_batch" -> batchedBpeOracleSql(numMerges = 8, m = 4, minPairFreq = 2),
+    QuerySpec("p81_bpe_batch", p81, Oracle(batchedBpeOracleSql(numMerges = 8, m = 4, minPairFreq = 2))),
     // p82: the streaming complete-mode rollup equals the batch GROUP BY
     // (q22's oracle contract, shared by design like p57/p67 — the SAME
     // string, so the two contracts cannot drift apart silently)
-    "p82_stream_agg" -> eventsAggOracleSql,
+    replayed("p82_stream_agg", "complete", (s, d) => tbl(d, "events")(s), p82Transform)(
+      eventsAggOracleSql),
     // p83: append-mode watermarked daily windows — emitted iff
     // window_end <= floor_ms(max ts) - 6h (inclusive; semantics pinned
     // by StreamReplaySpec's tie case)
-    "p83_stream_window" ->
+    replayed("p83_stream_window", "append", p83Staged, p83Transform,
+      orderedBy = Some("ets"))(
       """WITH e AS (SELECT epoch_us(ts) AS us FROM events WHERE ts IS NOT NULL),
         |wm AS (SELECT (max(us) // 1000) * 1000 - 21600000000 AS w FROM e)
         |SELECT (us // 86400000000) * 86400000000 AS ws_us, COUNT(*) AS cnt
         |FROM e, wm GROUP BY 1, wm.w
-        |HAVING ws_us + 86400000000 <= wm.w""".stripMargin,
+        |HAVING ws_us + 86400000000 <= wm.w""".stripMargin),
     // p84: the streaming upsert's final state = p60's max_by contract
     // over (version, snapshot-vs-delta), payload packed as one string
-    "p84_stream_upsert" ->
+    replayed("p84_stream_upsert", "update", p84Staged, p84Transform, p84Post,
+      orderedBy = Some("v"))(
       """WITH base AS (SELECT o_orderkey, o_custkey, o_orderpriority
         |    FROM orders),
         |u AS (
@@ -3325,10 +3137,11 @@ object SparkEntry {
         |r AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey
         |    ORDER BY version DESC, _src DESC) AS rn FROM u)
         |SELECT o_orderkey, version, payload
-        |FROM r WHERE rn = 1 AND NOT deleted""".stripMargin,
+        |FROM r WHERE rn = 1 AND NOT deleted""".stripMargin),
     // p85: q34's session CTE minus each user's final (still-open)
     // session — the append-mode flatMapGroupsWithState contract
-    "p85_stream_sessions" ->
+    replayed("p85_stream_sessions", "append", p85Staged, p85Transform, p85Post,
+      orderedBy = Some("us"))(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events
         |  WHERE ts IS NOT NULL),
         |m AS (SELECT user_id, us,
@@ -3343,11 +3156,12 @@ object SparkEntry {
         |    MIN(us) AS start_us, MAX(us) AS end_us
         |  FROM s GROUP BY user_id, session_id)
         |SELECT user_id, n_events, start_us, end_us FROM g
-        |QUALIFY session_id < MAX(session_id) OVER (PARTITION BY user_id)""".stripMargin,
+        |QUALIFY session_id < MAX(session_id) OVER (PARTITION BY user_id)""".stripMargin),
     // p86: the stream-stream interval join's emitted pairs = the plain
     // SQL time-range join (exactness argument in p86's scaladoc:
     // ordered replay means no late rows and no premature state eviction)
-    "p86_stream_interval_join" ->
+    replayed("p86_stream_interval_join", "append", p86Staged, p86Transform,
+      orderedBy = Some("ets"))(
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us
         |  FROM events WHERE ts IS NOT NULL),
         |l AS (SELECT user_id, event_id AS l_id, us AS l_us FROM e
@@ -3356,17 +3170,21 @@ object SparkEntry {
         |  WHERE event_type = 'purchase')
         |SELECT l.user_id, l_id, r_id FROM l JOIN r
         |ON l.user_id = r.user_id
-        |  AND r_us BETWEEN l_us AND l_us + 86400000000""".stripMargin,
+        |  AND r_us BETWEEN l_us AND l_us + 86400000000""".stripMargin),
     // p87: streaming dedup with a delay spanning the table = exact
     // distinct keys (first-arrival payload race is engine-internal, so
     // only the key columns are presented)
-    "p87_stream_dedup" ->
+    QuerySpec("p87_stream_dedup", p87, Oracle(
       """SELECT DISTINCT user_id, event_type FROM events
-        |WHERE ts IS NOT NULL""".stripMargin,
+        |WHERE ts IS NOT NULL""".stripMargin),
+      // dropDuplicatesWithinWatermark has no batch execution — lint the
+      // batch-exact analog (same keys, same scan, same shuffle shape)
+      batchPlan = Some((s, d) => p87Staged(s, d).dropDuplicates("user_id", "event_type")
+        .select(col("user_id"), col("event_type")))),
     // p80: expectations report — rows total, null count, duplicated-key
     // participation, tight range violations, FK integrity (semantics in
     // operators/Check.scala scaladoc)
-    "p80_constraints" ->
+    QuerySpec("p80_constraints", p80, Oracle(
       """SELECT 'rows' AS check_name, COUNT(*) AS value FROM lineitem
         |UNION ALL
         |SELECT 'not_null(l_quantity)', COUNT(*) - COUNT(l_quantity) FROM lineitem
@@ -3383,8 +3201,8 @@ object SparkEntry {
         |UNION ALL
         |SELECT 'ref_in(l_orderkey->o_orderkey)', COUNT(*) FROM lineitem l
         |WHERE l_orderkey IS NOT NULL
-        |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)""".stripMargin,
-    "p18_contamination" ->
+        |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)""".stripMargin)),
+    QuerySpec("p18_contamination", p18, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -3399,8 +3217,8 @@ object SparkEntry {
         |  FROM g c JOIN probe p USING (gram) WHERE c.doc_id >= 20)
         |SELECT doc_id, COUNT(DISTINCT gram) AS n_hit_ngrams,
         |  COUNT(DISTINCT probe_id) AS n_probe_docs
-        |FROM hits GROUP BY 1""".stripMargin,
-    "p19_pii_scrub" ->
+        |FROM hits GROUP BY 1""".stripMargin)),
+    QuerySpec("p19_pii_scrub", p19, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    text || ' contact bot' || (doc_id % 100) || '@' || source ||
@@ -3414,8 +3232,8 @@ object SparkEntry {
         |    '[a-z0-9._%+-]+@[a-z0-9-]+\.(com|org|net)', '<EMAIL>', 'g'),
         |    '\d+\.\d+\.\d+\.\d+', '<IP>', 'g'),
         |    '\d{3}-\d{3}-\d{4}', '<PHONE>', 'g') AS scrubbed
-        |FROM t""".stripMargin,
-    "p21_mixture_sample" ->
+        |FROM t""".stripMargin)),
+    QuerySpec("p21_mixture_sample", p21, Oracle(
       """WITH ranked AS (
         |  SELECT doc_id, source, lang,
         |    ROW_NUMBER() OVER (PARTITION BY source
@@ -3424,8 +3242,8 @@ object SparkEntry {
         |      WHEN 'src3' THEN 40 ELSE -1 END AS q
         |  FROM documents)
         |SELECT doc_id, source, lang FROM ranked
-        |WHERE q > 0 AND rk <= q""".stripMargin,
-    "p22_token_packing" ->
+        |WHERE q > 0 AND rk <= q""".stripMargin)),
+    QuerySpec("p22_token_packing", p22, Oracle(
       """WITH t AS (
         |  SELECT doc_id, source,
         |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens
@@ -3436,16 +3254,21 @@ object SparkEntry {
         |      ROWS UNBOUNDED PRECEDING) AS cum
         |  FROM t)
         |SELECT doc_id, source, n_tokens,
-        |  CAST((cum - 1) // 256 AS BIGINT) AS bin FROM c""".stripMargin,
-    "p23_heavy_hitters" ->
+        |  CAST((cum - 1) // 256 AS BIGINT) AS bin FROM c""".stripMargin)),
+    QuerySpec("p23_heavy_hitters", p23, Oracle(
       """WITH t AS (
         |  SELECT unnest(regexp_extract_all(text, '\S+')) AS tok FROM documents),
         |tot AS (SELECT COUNT(*) AS n FROM t)
         |SELECT tok, COUNT(*) AS cnt FROM t, tot
-        |GROUP BY tok, n HAVING COUNT(*) > n // 64""".stripMargin,
+        |GROUP BY tok, n HAVING COUNT(*) > n // 64""".stripMargin)),
     // p91: p28's signature CTE, stopped at the UNVERIFIED bucket pairs —
     // exactly what the streaming bucket-state operator emits
-    "p91_stream_embed" ->
+    replayed("p91_stream_embed", "append", p91Staged, p91Transform,
+      // parquet replay sink: p91's candidate-pair output grows with the
+      // corpus (the one gate query whose RESULT is corpus-sized) — the
+      // memory sink's driver collect kills a 64 GB heap at the sf10 probe
+      // scale, the file sink streams it with bounded driver memory
+      sink = "parquet")(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
         |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
@@ -3458,10 +3281,10 @@ object SparkEntry {
         |        (x, y) -> x + y) AS proj
         |    FROM c0, pl) t GROUP BY vec_id)
         |SELECT l.vec_id AS id_a, r.vec_id AS id_b
-        |FROM sig l JOIN sig r ON l.b = r.b AND l.vec_id < r.vec_id""".stripMargin,
+        |FROM sig l JOIN sig r ON l.b = r.b AND l.vec_id < r.vec_id""".stripMargin),
     // p28: hyperplane planes are md5-derived (Similarity.planeComponents),
     // so buckets AND exact cosines replicate — same kernels p08/p09 check
-    "p28_embedding_neardup" ->
+    QuerySpec("p28_embedding_neardup", p28, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
         |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
@@ -3482,10 +3305,10 @@ object SparkEntry {
         |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*a.e[i]), (x,y) -> x+y)), 1e-12) *
         |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> bb.e[i]*bb.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
         |  FROM pairs JOIN c0 a ON a.vec_id = pairs.id_a JOIN c0 bb ON bb.vec_id = pairs.id_b)
-        |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.2""".stripMargin,
+        |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.2""".stripMargin)),
     // p35: p28's verified pair set fed through the same recursive-CTE
     // label propagation the p11 oracle uses, then min-id survivors
-    "p35_embedding_dedup" ->
+    QuerySpec("p35_embedding_dedup", p35, Oracle(
       """WITH RECURSIVE c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
         |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
@@ -3519,8 +3342,8 @@ object SparkEntry {
         |SELECT e.vec_id FROM embeddings e
         |LEFT JOIN comp ON comp.id = e.vec_id WHERE comp.id IS NULL
         |UNION ALL
-        |SELECT vec_id FROM keep""".stripMargin,
-    "p36_semantic_dedup" ->
+        |SELECT vec_id FROM keep""".stripMargin)),
+    QuerySpec("p36_semantic_dedup", p36, Oracle(
       """WITH RECURSIVE c0 AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |seeds AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
         |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL ORDER BY vec_id LIMIT 8) t),
@@ -3551,8 +3374,8 @@ object SparkEntry {
         |SELECT e.vec_id FROM embeddings e
         |LEFT JOIN comp ON comp.id = e.vec_id WHERE comp.id IS NULL
         |UNION ALL
-        |SELECT vec_id FROM keep""".stripMargin,
-    "p37_incr_semantic" ->
+        |SELECT vec_id FROM keep""".stripMargin)),
+    QuerySpec("p37_incr_semantic", p37, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
         |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL AND vec_id < 400
@@ -3572,10 +3395,10 @@ object SparkEntry {
         |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*a.e[i]), (x,y) -> x+y)), 1e-12) *
         |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> bb.e[i]*bb.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
         |  FROM pairs JOIN c0 a ON a.vec_id = pairs.id_a JOIN c0 bb ON bb.vec_id = pairs.id_b) t
-        |WHERE cosine >= 0.2""".stripMargin,
+        |WHERE cosine >= 0.2""".stripMargin)),
     // dl is the probe's 64-entry (j, code)-ordered distance table; the ADC
     // fold runs ascending j exactly like the Scala kernel, so doubles match
-    "p38_pq_knn" ->
+    QuerySpec("p38_pq_knn", p38, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, e AS s
         |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL ORDER BY vec_id LIMIT 8) t),
@@ -3596,14 +3419,14 @@ object SparkEntry {
         |SELECT probe_id, corpus_id, adist, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY adist, corpus_id) AS rn
         |  FROM scored) t
-        |WHERE rn <= 8""".stripMargin,
+        |WHERE rn <= 8""".stripMargin)),
     // p39: IVFADC — seed centroids (8 lowest vectors with vec_id ≥ 100,
     // disjoint from book seeds), corpus cells by L2² argmin, residuals vs
     // the assigned centroid, seed residual codebooks (8 lowest-id
     // residuals), per-(vec, subspace) code argmin, probes routed to their
     // 2 nearest cells with per-cell residual distance tables,
     // ascending-subspace ADC fold, rank window
-    "p39_ivfpq_knn" ->
+    QuerySpec("p39_ivfpq_knn", p39, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
         |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL AND vec_id >= 100
@@ -3647,11 +3470,11 @@ object SparkEntry {
         |SELECT probe_id, corpus_id, adist, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY adist, corpus_id) AS rn
         |  FROM scored) t
-        |WHERE rn <= 8""".stripMargin,
+        |WHERE rn <= 8""".stripMargin)),
     // p40: ANN recall@10 — brute-force truth (p08 replica) LEFT JOIN LSH
     // approx top-k (p09 replica) on (probe, corpus); truth drives the
     // grouping so index-missed probes report recall 0
-    "p40_ann_recall" ->
+    QuerySpec("p40_ann_recall", p40, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |p AS (SELECT vec_id AS probe_id, e AS pe FROM c0 WHERE vec_id < 8),
         |bscore AS (
@@ -3692,12 +3515,12 @@ object SparkEntry {
         |  CAST(COUNT(*) AS BIGINT) AS truth_k,
         |  CAST(COUNT(ap.corpus_id) AS DOUBLE) / COUNT(*) AS recall
         |FROM bt LEFT JOIN ap ON ap.probe_id = bt.probe_id AND ap.corpus_id = bt.corpus_id
-        |GROUP BY bt.probe_id""".stripMargin,
+        |GROUP BY bt.probe_id""".stripMargin)),
     // p41: SQ8 — per-dim min/max over the corpus, int8 codes
     // clamp(floor((v-mn)·(255/span))), asymmetric L2² against bin
     // midpoints mn + (code+0.5)·(span/255); constant dims code 0 and
     // dequantize to mn. Arithmetic order mirrors the Scala exactly.
-    "p41_sq_knn" ->
+    QuerySpec("p41_sq_knn", p41, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |js AS (SELECT j FROM generate_series(1, 64) g(j)),
         |mm AS (SELECT j, MIN(e[j]) AS mn, MAX(e[j]) AS mx
@@ -3721,11 +3544,11 @@ object SparkEntry {
         |SELECT probe_id, corpus_id, sqdist, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY sqdist, corpus_id) AS rn FROM scored) t
-        |WHERE rn <= 8""".stripMargin,
+        |WHERE rn <= 8""".stripMargin)),
     // p42: IVFADC+R — p39's chain up to the ADC scores, shortlist rn<=16,
     // exact L2² on the raw (double-cast) vectors for the shortlisted
     // pairs only, final rank window on the exact distance
-    "p42_ivfpq_refine" ->
+    QuerySpec("p42_ivfpq_refine", p42, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
         |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL AND vec_id >= 100
@@ -3777,11 +3600,11 @@ object SparkEntry {
         |SELECT probe_id, corpus_id, dist, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY dist, corpus_id) AS rn
         |  FROM ex) t
-        |WHERE rn <= 8""".stripMargin,
+        |WHERE rn <= 8""".stripMargin)),
     // p43: classifier gate — the p12 feature expressions feed a fixed
     // linear model; logit = left-assoc fold matching the Spark Column
     // tree exactly; keep = exact compare. Sigmoid excluded (libm ulps).
-    "p43_clf_gate" ->
+    QuerySpec("p43_clf_gate", p43, Oracle(
       """WITH t AS (SELECT doc_id, text,
         |  regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
         |f AS (SELECT doc_id,
@@ -3798,13 +3621,13 @@ object SparkEntry {
         |SELECT doc_id, logit, logit >= 0.0 AS keep FROM (
         |  SELECT doc_id,
         |    -2.0 + 0.001*f1 + 0.01*f2 + (-8.0)*f3 + 6.0*f4 + 0.2*f5 + (-4.0)*f6 AS logit
-        |  FROM f) s""".stripMargin,
+        |  FROM f) s""".stripMargin)),
     // p44: bigram-LM fluency gate — add-1 bigram LM self-trained on the
     // corpus; per-bigram probability floored to 1e-9 quanta (exact
     // scalar double ops on <2^53 integers both engines round alike),
     // per-doc aggregate = exact BIGINT sum, final mean one double
     // division. Σ log p is deliberately not checked (libm ulps).
-    "p44_lm_score" ->
+    QuerySpec("p44_lm_score", p44, Oracle(
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
@@ -3821,11 +3644,11 @@ object SparkEntry {
         |    CAST(SUM(scaled) AS BIGINT) AS sum_scaled FROM term GROUP BY 1)
         |SELECT tk.doc_id, COALESCE(sc.n_bigrams, 0) AS n_bigrams,
         |  CAST(sc.sum_scaled AS DOUBLE) / (CAST(sc.n_bigrams AS DOUBLE) * 1.0e9) AS lm_score
-        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin,
+        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin)),
     // p45: deterministic shuffle-to-shards — shard = md5-lower64&M61 mod 8,
     // pos = rank of the md5 HEX string within the shard (ties by id);
     // every value a pure function of ('g7', doc_id) on both engines.
-    "p45_shuffle_shards" ->
+    QuerySpec("p45_shuffle_shards", p45, Oracle(
       """WITH h AS (SELECT doc_id,
         |    md5(concat('g7:', CAST(doc_id AS VARCHAR))) AS hx,
         |    CAST((md5_number_lower(concat('g7:', CAST(doc_id AS VARCHAR)))
@@ -3833,11 +3656,11 @@ object SparkEntry {
         |  FROM documents)
         |SELECT doc_id, shard,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS BIGINT) AS pos
-        |FROM h""".stripMargin,
+        |FROM h""".stripMargin)),
     // p46: DSIR importance resampling — weight = p12 stopword_ratio,
     // accept iff CAST(hash61 AS DOUBLE) < clamp(w)·CAST(M61 AS DOUBLE);
     // long→double rounds IEEE-nearest identically on both engines.
-    "p46_importance_sample" ->
+    QuerySpec("p46_importance_sample", p46, Oracle(
       """WITH t AS (SELECT doc_id,
         |  CAST(len(list_intersect(regexp_split_to_array(lower(trim(text)), '\s+'),
         |    ['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','was','at','by'])) AS DOUBLE)
@@ -3846,7 +3669,7 @@ object SparkEntry {
         |SELECT doc_id, weight FROM t
         |WHERE CAST((md5_number_lower(concat('g7:', CAST(doc_id AS VARCHAR)))
         |    & 2305843009213693951) AS DOUBLE)
-        |  < least(greatest(weight, 0.0), 1.0) * CAST(2305843009213693951 AS DOUBLE)""".stripMargin,
+        |  < least(greatest(weight, 0.0), 1.0) * CAST(2305843009213693951 AS DOUBLE)""".stripMargin)),
     // p47: BPE encode with the pinned 8-merge list — recursive CTE walks
     // the merge ranks; within each rank a list_reduce folds the word's
     // symbol string left-to-right, merging non-overlapping (a,b)
@@ -3854,18 +3677,18 @@ object SparkEntry {
     // fold, '·' delimits symbols; \W+ tokens can contain neither).
     // p47: the encode replay, UNROLLED one CTE per merge round
     // (bpeEncodeCtes — VERDICT r15 #4; identical results, sf10-stageable)
-    "p47_bpe_encode" ->
+    QuerySpec("p47_bpe_encode", p47, Oracle(
       (s"""WITH ${bpeEncodeCtes(P47Merges)},
          |fin AS (SELECT doc_id, wi, replace(substr(s, 3), '·', ' ') AS toks
          |        FROM enc${P47Merges.size})
          |SELECT doc_id,
          |  CAST(SUM(len(string_split(toks, ' '))) AS BIGINT) AS n_bpe,
          |  string_agg(toks, ' ' ORDER BY wi) AS enc
-         |FROM fin GROUP BY doc_id""".stripMargin),
+         |FROM fin GROUP BY doc_id""".stripMargin))),
     // p48: modern curation end-to-end — the p43 gate, the p44 LM (its
     // counts trained on the gate's survivors), the p01 dedup window,
     // and the p45 shard layout, chained over the SAME survivor sets.
-    "p48_curate_modern" ->
+    QuerySpec("p48_curate_modern", p48, Oracle(
       """WITH t0 AS (SELECT doc_id, text,
         |  regexp_split_to_array(lower(trim(text)), '\s+') AS stoks FROM documents),
         |clf AS (
@@ -3907,12 +3730,12 @@ object SparkEntry {
         |SELECT doc_id, shard,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS BIGINT) AS pos,
         |  lm_score
-        |FROM sh""".stripMargin,
+        |FROM sh""".stripMargin)),
     // p49: interpolated Kneser-Ney bigram scoring — all statistics fold
     // from the bigram TYPE table; p(w2|w1) = (max(c12-0.75,0) +
     // 0.75*nf(w1)*(nb(w2)/nAll)) / c1(w1), quantized like p44. Self-
     // trained, so every bigram/context is seen (inner joins).
-    "p49_kn_score" ->
+    QuerySpec("p49_kn_score", p49, Oracle(
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
@@ -3935,11 +3758,11 @@ object SparkEntry {
         |    CAST(SUM(scaled) AS BIGINT) AS sum_scaled FROM term GROUP BY 1)
         |SELECT tk.doc_id, COALESCE(sc.n_bigrams, 0) AS n_bigrams,
         |  CAST(sc.sum_scaled AS DOUBLE) / (CAST(sc.n_bigrams AS DOUBLE) * 1.0e9) AS kn_score
-        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin,
+        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin)),
     // p50: BPE id-encoding — the p47 encode replay, then a lexicographic
     // rank vocabulary over the distinct emitted tokens and the per-doc
     // id sequence ordered by (word index, token index).
-    "p50_bpe_ids" ->
+    QuerySpec("p50_bpe_ids", p50, Oracle(
       (s"""WITH ${bpeEncodeCtes(P47Merges)},
          |fin AS (SELECT doc_id, wi, string_split(substr(s, 3), '·') AS wtoks
          |        FROM enc${P47Merges.size}),
@@ -3950,14 +3773,14 @@ object SparkEntry {
          |ids AS (SELECT t.doc_id, t.wi, t.i, v.id FROM tok t JOIN vocab v USING (token))
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_ids,
          |  string_agg(CAST(id AS VARCHAR), ' ' ORDER BY wi, i) AS ids
-         |FROM ids GROUP BY doc_id""".stripMargin),
+         |FROM ids GROUP BY doc_id""".stripMargin))),
     // p51: integer-exact PageRank over the symmetrized p06 candidate
     // graph. r0 = S//N; each step: per-edge contribution rank//outdeg
     // (exact BIGINT), per-node SUM, damped via (85*s)//100 plus the
     // integer base (S*15)//(100*N). The five iteration CTEs below are
     // GENERATED by the same loop the Spark operator runs — fixed
     // iteration count makes the recursion unrollable.
-    "p51_similarity_rank" -> {
+    QuerySpec("p51_similarity_rank", p51, Oracle({
       val prefix = MinhashGraphCte +
         """,
           |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
@@ -3977,13 +3800,13 @@ object SparkEntry {
       }
       prefix + ",\n" + steps.mkString(",\n") +
         "\nSELECT id AS doc_id, rank FROM r5"
-    },
+    })),
     // p54: same pairs CTE as p51; orientation by the (deg, id) total
     // order, wedges only at each triangle's lowest-order apex, closing
     // join = every triangle exactly once (Suri & Vassilvitskii 2011).
     // The coefficient is the single IEEE division 2T/(d(d-1)) on both
     // engines.
-    "p54_similarity_triangles" -> (MinhashGraphCte +
+    QuerySpec("p54_similarity_triangles", p54, Oracle((MinhashGraphCte +
       """,
         |dg AS MATERIALIZED (SELECT id, COUNT(*) AS deg FROM (
         |    SELECT id_a AS id FROM pairs UNION ALL SELECT id_b FROM pairs)
@@ -4006,21 +3829,21 @@ object SparkEntry {
         |            / CAST(dg.deg * (dg.deg - 1) AS DOUBLE)
         |       ELSE 0.0 END AS clustering
         |FROM nodes n LEFT JOIN dg ON dg.id = n.id
-        |LEFT JOIN pn ON pn.id = n.id""".stripMargin),
+        |LEFT JOIN pn ON pn.id = n.id""".stripMargin))),
     // p55: deterministic synchronous LPA, unrolled like p51 — per round:
     // neighbor label votes, max count per node, MIN label among the
     // tied winners, no-in-edge nodes keep their own id. The four round
     // CTEs are generated by the same loop the operator runs.
-    "p55_similarity_communities" -> lpaOracleSql,
+    QuerySpec("p55_similarity_communities", p55, Oracle(lpaOracleSql)),
     // p72: LPA off the persisted candidate tap — contractually
     // identical to p55 (same pair table, same iteration); the shared
     // oracle adjudicates the parquet round-trip, the p57/p67 pattern.
-    "p72_candidates_tap" -> lpaOracleSql,
+    QuerySpec("p72_candidates_tap", p72, Oracle(lpaOracleSql)),
     // p56: histogram-first exact nearest-rank percentiles — the
     // interpolation-free rule (min v with cum >= floor(q*(n-1))+1) both
     // engines compute identically; the p02 token-count kernel supplies
     // the value
-    "p56_length_percentiles" ->
+    QuerySpec("p56_length_percentiles", p56, Oracle(
       """WITH h AS (SELECT source,
         |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS v,
         |    COUNT(*) AS c
@@ -4032,20 +3855,20 @@ object SparkEntry {
         |  FROM cum, unnest([0.25, 0.5, 0.75, 0.9, 0.99]) q(q))
         |SELECT source, q, MIN(v) AS value, CAST(MAX(n) AS BIGINT) AS n
         |FROM e WHERE cum >= floor(q * (n - 1)) + 1
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin)),
     // p57: signatures are per-doc, so banding ALL documents then
     // side-filtering the collision join equals banding each side; the
     // jaccard verify is the p13 shingle-set replica at 0.8; survivors
     // are the train rows minus the contaminated id set, full schema
-    "p57_decontaminate" -> decontamOracleSql,
+    QuerySpec("p57_decontaminate", p57, Oracle(decontamOracleSql)),
     // p67: the bloom-pruned non-broadcast decontamination path — output
     // contractually identical to p57 (bloom false positives are removed
     // by the exact jaccard verify), so the same oracle checks both.
-    "p67_decontam_bloom" -> decontamOracleSql,
+    QuerySpec("p67_decontam_bloom", p67, Oracle(decontamOracleSql)),
     // p58: the Morton mask ladder replicated in integer SQL (`//` = the
     // engine's integral div, same masks), ntile over the tie-broken
     // total z-order, per-bucket two-column min/max spans
-    "p58_zorder_layout" ->
+    QuerySpec("p58_zorder_layout", p58, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
         |st AS (SELECT min(user_id) AS mnu, max(user_id) AS mxu,
         |              min(us) AS mnt, max(us) AS mxt FROM e),
@@ -4070,10 +3893,10 @@ object SparkEntry {
         |SELECT bucket, COUNT(*) AS n,
         |  MIN(user_id) AS u_min, MAX(user_id) AS u_max,
         |  MIN(us) AS t_min, MAX(us) AS t_max
-        |FROM nt GROUP BY bucket""".stripMargin,
+        |FROM nt GROUP BY bucket""".stripMargin)),
     // p59: cumulative weights built by the SAME double additions the
     // Scala side folds, so every floor boundary is IEEE-identical
-    "p59_stratified_split" ->
+    QuerySpec("p59_stratified_split", p59, Oracle(
       """WITH rk AS (SELECT doc_id, source,
         |  row_number() OVER (PARTITION BY source
         |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk,
@@ -4083,11 +3906,11 @@ object SparkEntry {
         |  WHEN rk <= floor(n * (0.8::DOUBLE)) THEN 'train'
         |  WHEN rk <= floor(n * (0.8::DOUBLE + 0.1::DOUBLE)) THEN 'val'
         |  ELSE 'test' END AS split
-        |FROM rk""".stripMargin,
+        |FROM rk""".stripMargin)),
     // p60: merge is latest-(version, delta-wins) per key minus
     // tombstones — replayed as a window rank (the agg and the rank agree
     // because (key, version) is unique within each input)
-    "p60_snapshot_upsert" ->
+    QuerySpec("p60_snapshot_upsert", p60, Oracle(
       """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice,
         |    o_orderpriority FROM orders),
         |snap AS (SELECT *, 0::BIGINT AS version, false AS deleted,
@@ -4100,9 +3923,9 @@ object SparkEntry {
         |r AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey
         |    ORDER BY version DESC, _src DESC) AS rn FROM u)
         |SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority, version
-        |FROM r WHERE rn = 1 AND NOT deleted""".stripMargin,
+        |FROM r WHERE rn = 1 AND NOT deleted""".stripMargin)),
     // p61: full-outer key join, null-safe payload compare, changes only
-    "p61_snapshot_diff" ->
+    QuerySpec("p61_snapshot_diff", p61, Oracle(
       """WITH base AS (SELECT o_orderkey, o_custkey, o_orderpriority
         |    FROM orders),
         |neu AS (
@@ -4121,10 +3944,10 @@ object SparkEntry {
         |         THEN 'changed'
         |       ELSE 'unchanged' END AS change
         |  FROM base o FULL JOIN neu n ON o.o_orderkey = n.o_orderkey)
-        |SELECT o_orderkey, change FROM j WHERE change <> 'unchanged'""".stripMargin,
+        |SELECT o_orderkey, change FROM j WHERE change <> 'unchanged'""".stripMargin)),
     // p62: same Unicode-standard NFC on both engines, same RE2-safe
     // regex subset ('g' = replace-all, Spark's default)
-    "p62_normalize_text" ->
+    QuerySpec("p62_normalize_text", p62, Oracle(
       """SELECT doc_id,
         |  trim(regexp_replace(regexp_replace(nfc_normalize(text),
         |    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
@@ -4133,10 +3956,10 @@ object SparkEntry {
         |    nfc_normalize(text),
         |    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
         |    '[ \t]+', ' ', 'g'))) AS delta
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
     // p63: grid = per-key generate_series over slot bounds; fill = the
     // same IGNORE-NULLS running last; values are copied, never summed
-    "p63_resample_ffill" ->
+    QuerySpec("p63_resample_ffill", p63, Oracle(
       """WITH e AS (SELECT user_id, epoch_us(ts) // 3600000000 AS slot,
         |    value FROM events),
         |obs AS (SELECT user_id, slot, max(value) AS v FROM e GROUP BY 1, 2),
@@ -4150,12 +3973,12 @@ object SparkEntry {
         |  last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
         |    ORDER BY slot ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS value
-        |FROM j""".stripMargin,
+        |FROM j""".stripMargin)),
     // p64: BM25 with k1=6/5, b=3/4 → integer saturation ratio
     // 22·S·tf / (10·S·tf + 3·S + 9·dl·N); Robertson idf as the exact
     // ratio (2N−2df+1)/(2df+1); both floor-quantized at 1e6 and the
     // per-term product summed in DECIMAL so no Long overflow at any N.
-    "p64_bm25_relevance" ->
+    QuerySpec("p64_bm25_relevance", p64, Oracle(
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
@@ -4180,10 +4003,10 @@ object SparkEntry {
         |  FROM term_sc GROUP BY 1)
         |SELECT tk.doc_id, COALESCE(sc.n_hits, 0) AS n_hits,
         |  CAST(CAST(sc.rel AS DECIMAL(38,0)) AS VARCHAR) AS bm25_rel
-        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin,
+        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin)),
     // p65: tf·idfq keywords; idfq = floor(1e6·(N+1)/(df+1)); ties by
     // term ascending make the per-doc top-3 deterministic.
-    "p65_tfidf_keywords" ->
+    QuerySpec("p65_tfidf_keywords", p65, Oracle(
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
@@ -4201,11 +4024,11 @@ object SparkEntry {
         |      ORDER BY score DESC, term ASC) AS rank
         |  FROM sc)
         |SELECT doc_id, rank, term, CAST(score AS VARCHAR) AS score
-        |FROM rk WHERE rank <= 3""".stripMargin,
+        |FROM rk WHERE rank <= 3""".stripMargin)),
     // p66: iters=0 centroids = the 8 lowest-vec_id embeddings; nearest
     // cell by sequential-sum squared L2 (ties to the lower cell); then
     // the mixtureSample md5-rank idiom with cells as strata.
-    "p66_cluster_sample" ->
+    QuerySpec("p66_cluster_sample", p66, Oracle(
       """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
         |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
         |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL
@@ -4223,12 +4046,12 @@ object SparkEntry {
         |      ORDER BY md5('g9:' || CAST(vec_id AS VARCHAR)), vec_id) AS pos
         |  FROM assign)
         |SELECT vec_id, CAST(cell AS INTEGER) AS cell, pos
-        |FROM rk WHERE pos <= 20""".stripMargin,
+        |FROM rk WHERE pos <= 20""".stripMargin)),
     // p52: trigram KN over the bigram-KN backoff — self-trained, so
     // every level is seen and the seen-branch formula is total; the
     // nested p2 expression is the p49 replica verbatim, composed inside
     // the trigram fold with explicit parenthesization.
-    "p52_kn3_score" ->
+    QuerySpec("p52_kn3_score", p52, Oracle(
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
@@ -4263,14 +4086,14 @@ object SparkEntry {
         |    CAST(SUM(scaled) AS BIGINT) AS sum_scaled FROM term GROUP BY 1)
         |SELECT tk.doc_id, COALESCE(sc.n_trigrams, 0) AS n_trigrams,
         |  CAST(sc.sum_scaled AS DOUBLE) / (CAST(sc.n_trigrams AS DOUBLE) * 1.0e9) AS kn3_score
-        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin,
+        |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin)),
     // p53: the lined-docs construction is the p32 chunk replica (size 10,
     // overlap 0, minTokens 1) re-joined by \n in chunk order; then the
     // line-dedup pass — trimmed-line keys counted by DISTINCT doc, keys in
     // >= 2 docs removed everywhere, text rebuilt from survivors in
     // position order (string_agg skips the removed lines' NULLs; a doc of
     // only boilerplate COALESCEs to '').
-    "p53_line_dedup" ->
+    QuerySpec("p53_line_dedup", p53, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -4291,8 +4114,8 @@ object SparkEntry {
         |  CAST(COALESCE(SUM(CASE WHEN rm THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_removed,
         |  COALESCE(string_agg(CASE WHEN NOT rm THEN ln END, chr(10) ORDER BY pos), '')
         |    AS text_clean
-        |FROM m GROUP BY doc_id""".stripMargin,
-    "p29_rare_tokens" ->
+        |FROM m GROUP BY doc_id""".stripMargin)),
+    QuerySpec("p29_rare_tokens", p29, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '')) AS tok FROM documents),
@@ -4305,11 +4128,11 @@ object SparkEntry {
         |  CASE WHEN COALESCE(j.n_tokens, 0) > 0
         |       THEN CAST(COALESCE(j.n_rare, 0) AS DOUBLE) / CAST(j.n_tokens AS DOUBLE)
         |       ELSE 0.0 END AS rare_ratio
-        |FROM documents d LEFT JOIN j USING (doc_id)""".stripMargin,
+        |FROM documents d LEFT JOIN j USING (doc_id)""".stripMargin)),
     // p30: k-smallest-of-union == k-smallest-of-(kA ∪ kB), and every common
     // hash <= θ is inside both k-sketches — so the full-set SQL below
     // computes the identical estimate to the sketch-side kernel
-    "p30_kmv_overlap" ->
+    QuerySpec("p30_kmv_overlap", p30, Oracle(
       """WITH ha AS (SELECT DISTINCT CAST(md5_number_lower(CAST(l_orderkey AS VARCHAR))
         |    & 2305843009213693951 AS BIGINT) AS hv FROM lineitem WHERE l_returnflag = 'A'),
         |hr AS (SELECT DISTINCT CAST(md5_number_lower(CAST(l_orderkey AS VARCHAR))
@@ -4332,11 +4155,11 @@ object SparkEntry {
         |            * CAST(2305843009213693951 AS DOUBLE)
         |            / CAST(kth.hv AS DOUBLE) END AS intersect_est,
         |  ex.eu AS exact_union, ex.ei AS exact_intersect
-        |FROM nu, kth, c, ex""".stripMargin,
+        |FROM nu, kth, c, ex""".stripMargin)),
     // p31: canonical = row_number 1 over (doc, pos) per duplicated gram;
     // rebuilt text compared verbatim (COALESCE: array_to_string([]) is
     // NULL in DuckDB, the engine emits '')
-    "p31_span_excise" ->
+    QuerySpec("p31_span_excise", p31, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -4358,10 +4181,10 @@ object SparkEntry {
         |  COALESCE(array_to_string(list_filter(t.toks,
         |    (x, i) -> rm.rm IS NULL OR NOT list_contains(rm.rm, i - 1)), ' '), '')
         |    AS text_clean
-        |FROM tk t LEFT JOIN rm USING (doc_id)""".stripMargin,
+        |FROM tk t LEFT JOIN rm USING (doc_id)""".stripMargin)),
     // p33: sqrt weights (alpha 0.5) summed in DECIMAL — order-free, so the
     // quota division is the identical double expression in both engines
-    "p33_mixture_weights" ->
+    QuerySpec("p33_mixture_weights", p33, Oracle(
       """WITH c AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
         |w AS (SELECT source, n_docs,
         |    CAST(sqrt(CAST(n_docs AS DOUBLE)) AS DECIMAL(18,8)) AS w FROM c),
@@ -4369,10 +4192,10 @@ object SparkEntry {
         |SELECT source, n_docs,
         |  CAST(FLOOR(CAST(100 AS DOUBLE) * CAST(w AS DOUBLE) / CAST(t.t AS DOUBLE))
         |    AS BIGINT) AS quota
-        |FROM w, t""".stripMargin,
+        |FROM w, t""".stripMargin)),
     // p32: stride 12 = size 16 − overlap 4; only tail windows can fall
     // under minTokens, so emitted ordinal == window ordinal
-    "p32_chunking" ->
+    QuerySpec("p32_chunking", p32, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -4381,41 +4204,41 @@ object SparkEntry {
         |  FROM tk, LATERAL unnest(generate_series(1, len(toks), 12)) s(s))
         |SELECT doc_id, chunk_idx, CAST(len(ctoks) AS BIGINT) AS n_chunk_tokens,
         |  array_to_string(ctoks, ' ') AS chunk_text
-        |FROM ch WHERE len(ctoks) >= 4""".stripMargin,
+        |FROM ch WHERE len(ctoks) >= 4""".stripMargin)),
     // q40: bloom pruning is result-invariant — the oracle is the plain join
-    "q40_bloom_join" ->
+    QuerySpec("q40_bloom_join", q40, Oracle(
       """SELECT s_nationkey, COUNT(*) AS n_items,
         |  COUNT(DISTINCT l_suppkey) AS n_supps
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         |WHERE s_nationkey < 5
-        |GROUP BY s_nationkey""".stripMargin,
+        |GROUP BY s_nationkey""".stripMargin)),
     // q42: RANGE frame — peer-inclusive, so tie-order-independent
-    "q42_moving_window" ->
+    QuerySpec("q42_moving_window", q42, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events)
         |SELECT event_id, user_id, us,
         |  COUNT(*) OVER (PARTITION BY user_id ORDER BY us
         |    RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW) AS n_win,
         |  MIN(us) OVER (PARTITION BY user_id ORDER BY us
         |    RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW) AS win_start
-        |FROM e""".stripMargin,
+        |FROM e""".stripMargin)),
     // q43: standard-SQL GROUPING bit encoding (first arg = MSB)
-    "q43_cube" ->
+    QuerySpec("q43_cube", q43, Oracle(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |  COUNT(*) AS cnt
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin)),
     // q44: built through the Java API (japi.JApi) — the oracle is the
     // plain SQL of the same relational plan; column names are the
     // sigil-stripped logic vars
-    "q44_japi_agg" ->
+    QuerySpec("q44_japi_agg", q44, Oracle(
       """SELECT c_mktsegment AS seg, COUNT(*) AS n_cust,
         |  MAX(c_acctbal) AS max_bal
         |FROM customer WHERE c_acctbal > 0.0
-        |GROUP BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment""".stripMargin)),
     // q45: the min-cascade replayed as step CTEs; conversion window
     // anchored at the step-1 time; strict-after ordering between steps
-    "q45_funnel" ->
+    QuerySpec("q45_funnel", q45, Oracle(
       """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS t, event_type AS et
         |  FROM events WHERE ts IS NOT NULL),
         |s1 AS (SELECT k, MIN(t) AS ts_1 FROM e WHERE et = 'view' GROUP BY 1),
@@ -4430,19 +4253,19 @@ object SparkEntry {
         |  CASE WHEN ts_3 IS NOT NULL THEN 3
         |       WHEN ts_2 IS NOT NULL THEN 2 ELSE 1 END AS stage,
         |  ts_1, ts_2, ts_3
-        |FROM s1 LEFT JOIN s2 USING (k) LEFT JOIN s3 USING (k)""".stripMargin,
+        |FROM s1 LEFT JOIN s2 USING (k) LEFT JOIN s3 USING (k)""".stripMargin)),
     // q46: dedupe-first cohort retention; `//` = integral div, matching
     // the engine's call_function("div") bucket snap
-    "q46_retention" ->
+    QuerySpec("q46_retention", q46, Oracle(
       """WITH e AS (SELECT user_id AS k, epoch_us(ts) // 604800000000 AS b
         |  FROM events WHERE ts IS NOT NULL),
         |p AS (SELECT DISTINCT k, b FROM e),
         |c AS (SELECT k, MIN(b) AS cohort FROM p GROUP BY 1)
         |SELECT cohort, b - cohort AS offset, COUNT(*) AS n_keys
-        |FROM p JOIN c USING (k) GROUP BY 1, 2""".stripMargin,
+        |FROM p JOIN c USING (k) GROUP BY 1, 2""".stripMargin)),
     // q47: change points via null-safe lag compare, running-sum run ids,
     // per-run first version, lead for the interval end
-    "q47_scd2_history" ->
+    QuerySpec("q47_scd2_history", q47, Oracle(
       """WITH v AS (
         |  SELECT o_orderkey AS k, o_orderpriority AS p, CAST(0 AS BIGINT) AS ver
         |  FROM orders
@@ -4462,23 +4285,23 @@ object SparkEntry {
         |    LEAD(valid_from) OVER (PARTITION BY k ORDER BY valid_from) AS valid_to
         |  FROM g)
         |SELECT k AS o_orderkey, p AS o_orderpriority, valid_from, valid_to
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin)),
     // q48: trap diversion replayed as a WHERE partition — survivors
     // (key % 7 <> 0) aggregate through the query, failures aggregate on
     // the trap side; sums cast back to BIGINT (DuckDB SUM(BIGINT) widens
     // to HUGEINT)
-    "q48_trap_divert" ->
+    QuerySpec("q48_trap_divert", q48, Oracle(
       """SELECT l_returnflag, 'ok' AS kind, COUNT(*) AS cnt,
         |  CAST(SUM(l_orderkey * 2) AS BIGINT) AS s
         |FROM lineitem WHERE l_orderkey % 7 <> 0 GROUP BY l_returnflag
         |UNION ALL
         |SELECT l_returnflag, 'trapped', COUNT(*),
         |  CAST(SUM(l_orderkey) AS BIGINT)
-        |FROM lineitem WHERE l_orderkey % 7 = 0 GROUP BY l_returnflag""".stripMargin,
+        |FROM lineitem WHERE l_orderkey % 7 = 0 GROUP BY l_returnflag""".stripMargin)),
     // q49: the checkpoint-workflow DAG replayed as its SQL composition —
     // urgent orders ⋈ per-order quantity rollups, custkey totals;
     // quantities sum in decimal on both engines, presented as double
-    "q49_checkpoint_flow" ->
+    QuerySpec("q49_checkpoint_flow", q49, Oracle(
       """WITH urgent AS (
         |  SELECT o_orderkey, o_custkey FROM orders
         |  WHERE o_orderpriority = '1-URGENT'),
@@ -4488,60 +4311,65 @@ object SparkEntry {
         |SELECT u.o_custkey, COUNT(*) AS n_orders,
         |  CAST(SUM(q.qty) AS DOUBLE) AS total_qty
         |FROM urgent u JOIN qty q ON q.l_orderkey = u.o_orderkey
-        |GROUP BY u.o_custkey""".stripMargin,
+        |GROUP BY u.o_custkey""".stripMargin)),
     // q50: the template-tap round trip is lossless, so the oracle is the
     // plain aggregate over the source table
-    "q50_template_tap" ->
+    QuerySpec("q50_template_tap", q50, Oracle(
       """SELECT l_returnflag, COUNT(*) AS cnt,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  COUNT(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
     // q51: the accumulator row must equal COUNT(*) — the counted op ran
     // exactly once per tuple
-    "q51_stats_counters" ->
+    QuerySpec("q51_stats_counters", q51, Oracle(
       """SELECT l_returnflag AS k, COUNT(*) AS cnt,
         |  CAST(SUM(l_orderkey * 2) AS BIGINT) AS s
         |FROM lineitem GROUP BY l_returnflag
         |UNION ALL
         |SELECT 'stat:graft/li_rows', COUNT(*), CAST(0 AS BIGINT)
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin)),
     // q52: the bucketed round trip is lossless, so the oracle is the
     // plain per-order join aggregate
-    "q52_bucket_join" ->
+    QuerySpec("q52_bucket_join", q52, Oracle(
       """SELECT o.o_orderkey, o.o_orderpriority, COUNT(*) AS n_items,
         |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |GROUP BY o.o_orderkey, o.o_orderpriority""".stripMargin,
+        |GROUP BY o.o_orderkey, o.o_orderpriority""".stripMargin)),
     // q53: the protobuf wire round trip is lossless (fixed64 = exact
     // double bits), so the oracle is the plain source aggregate
-    "q53_proto_tap" ->
+    QuerySpec("q53_proto_tap", q53, Oracle(
       """SELECT l_returnflag AS flag, COUNT(*) AS cnt,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_keys
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
     // q54: the headered-TSV round trip is exact for integer keys and
     // space-free strings; the oracle is the plain source aggregate
-    "q54_delimited_tap" ->
+    QuerySpec("q54_delimited_tap", q54, Oracle(
       """SELECT o_orderpriority AS prio, COUNT(*) AS cnt,
         |  CAST(SUM(o_custkey) AS BIGINT) AS skeys
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority""".stripMargin)),
     // q55: the thrift TBinaryProtocol round trip is lossless, so the
     // oracle is the plain source aggregate
-    "q55_thrift_tap" ->
+    QuerySpec("q55_thrift_tap", q55, Oracle(
       """SELECT o_orderpriority AS prio, COUNT(*) AS cnt,
         |  CAST(SUM(o_orderkey) AS BIGINT) AS sum_keys,
         |  CAST(SUM(o_custkey) AS BIGINT) AS sum_cust
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority""".stripMargin)),
     // q56: the SequenceFile string round trip is exact for integer keys,
     // so the oracle is the plain source aggregate
-    "q56_seqfile_tap" ->
+    QuerySpec("q56_seqfile_tap", q56, Oracle(
       """SELECT o_orderpriority AS prio, COUNT(*) AS cnt,
         |  CAST(SUM(o_orderkey) AS BIGINT) AS sum_keys
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority""".stripMargin)),
     // p88: p25's KMV replay (the sketch is exact given the md5 hash)
     // with COUNT(*) beside it — the streaming build's n_seen marker
     // lands as the per-flag row count
-    "p88_stream_kmv" ->
+    replayed("p88_stream_kmv", "update", p88Staged, p88Transform, p88Post,
+      // sketch-shaped state: 3 returnflag keys hold the entire state (128
+      // longs each) however many rows fold in, so the row-based partition
+      // sizing is capped at the key count — empty state partitions would
+      // pay store init/commit/checkpoint IO per micro-batch for nothing
+      stateKeyHint = Some(3L))(
       """WITH h AS (
         |  SELECT DISTINCT l_returnflag,
         |    CAST(md5_number_lower(CAST(l_orderkey AS VARCHAR))
@@ -4562,16 +4390,17 @@ object SparkEntry {
         |            / CAST(k.hv AS DOUBLE) END AS kmv_estimate
         |FROM agg a JOIN nr n USING (l_returnflag)
         |LEFT JOIN (SELECT l_returnflag, hv FROM kth WHERE rn = 128) k
-        |  USING (l_returnflag)""".stripMargin,
+        |  USING (l_returnflag)""".stripMargin),
     // p68: the count-min sketch replayed cell-for-cell — md5 row hashes
     // assign cells, counters aggregate per (row, cell), estimates MIN
     // over each top token's cells. Shared verbatim by p89 (the sharded
     // streaming build of the SAME sketch — identical by the CMS monoid).
-    "p68_cms_heavy" -> cmsHeavyOracleSql,
-    "p89_stream_cms" -> cmsHeavyOracleSql,
+    QuerySpec("p68_cms_heavy", p68, Oracle(cmsHeavyOracleSql)),
+    QuerySpec("p89_stream_cms", p89, Oracle(cmsHeavyOracleSql),
+      batchPlan = Some((s, d) => p89Post(s, d)(p89Transform(p89Staged(s, d))))),
     // p69: the same single-aggregate datasheet; DuckDB's md5() replays
     // the exact-dup probe and the mean rides at 1e6 quanta
-    "p69_data_card" ->
+    QuerySpec("p69_data_card", p69, Oracle(
       """WITH a AS (SELECT COUNT(*) AS n_docs,
         |    COUNT(DISTINCT source) AS n_sources,
         |    COUNT(DISTINCT lang) AS n_langs,
@@ -4588,10 +4417,10 @@ object SparkEntry {
         |UNION ALL SELECT 'exact_dup_docs', exact_dup_docs FROM a
         |UNION ALL SELECT 'mean_doc_tokens_q6',
         |  CAST(floor(1e6 * (CAST(total_tokens AS DOUBLE)
-        |    / CAST(n_docs AS DOUBLE))) AS BIGINT) FROM a""".stripMargin,
+        |    / CAST(n_docs AS DOUBLE))) AS BIGINT) FROM a""".stripMargin)),
     // p70: p64's BM25 replica ranked (rel DESC, id) top-50, p08's cosine
     // replica for probe 0 top-50, fused with floor(1e9/(60+rank)) terms
-    "p70_hybrid_rank" ->
+    QuerySpec("p70_hybrid_rank", p70, Oracle(
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
@@ -4633,16 +4462,16 @@ object SparkEntry {
         |    COUNT(*) AS n_lists FROM u GROUP BY 1)
         |SELECT doc_id, rrf_q, n_lists,
         |  ROW_NUMBER() OVER (ORDER BY rrf_q DESC, doc_id) AS rank
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin)),
     // q41: salting is result-invariant — the oracle is the plain join
-    "q41_salted_join" ->
+    QuerySpec("q41_salted_join", q41, Oracle(
       """SELECT s_nationkey, COUNT(*) AS n_items,
         |  COUNT(DISTINCT l_suppkey) AS n_supps
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey""".stripMargin,
+        |GROUP BY s_nationkey""".stripMargin)),
     // p24: positional 6-gram hashes -> global occurrence counts -> per-doc
     // duplicated-start and covered-position stats (span-dedup signals)
-    "p24_span_dedup" ->
+    QuerySpec("p24_span_dedup", p24, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -4664,10 +4493,10 @@ object SparkEntry {
         |  CASE WHEN len(t.toks) > 0
         |       THEN CAST(COALESCE(c.covered_tokens, 0) AS DOUBLE) / CAST(len(t.toks) AS DOUBLE)
         |       ELSE 0.0 END AS dup_fraction
-        |FROM tk t LEFT JOIN starts s USING (doc_id) LEFT JOIN cov c USING (doc_id)""".stripMargin,
+        |FROM tk t LEFT JOIN starts s USING (doc_id) LEFT JOIN cov c USING (doc_id)""".stripMargin)),
     // p25: KMV k-minimum-values sketch is exact given the md5 hash — the
     // oracle takes the 128th-smallest distinct hash per group directly
-    "p25_kmv_distinct" ->
+    QuerySpec("p25_kmv_distinct", p25, Oracle(
       """WITH h AS (
         |  SELECT DISTINCT l_returnflag,
         |    CAST(md5_number_lower(CAST(l_orderkey AS VARCHAR))
@@ -4685,10 +4514,10 @@ object SparkEntry {
         |       ELSE CAST(127 AS DOUBLE) * CAST(2305843009213693951 AS DOUBLE)
         |            / CAST(k.hv AS DOUBLE) END AS kmv_estimate
         |FROM agg a LEFT JOIN (SELECT l_returnflag, hv FROM kth WHERE rn = 128) k
-        |  USING (l_returnflag)""".stripMargin,
+        |  USING (l_returnflag)""".stripMargin)),
     // p26: the same regexp canonicalization chain, step for step (DuckDB
     // regexp_replace needs the 'g' flag where Spark replaces all matches)
-    "p26_url_dedup" ->
+    QuerySpec("p26_url_dedup", p26, Oracle(
       """WITH u0 AS (SELECT doc_id,
         |  'HTTPS://WWW.' || source || '.Example.ORG:443/Docs/'
         |    || CAST(doc_id % 100 AS VARCHAR) || '/?utm_source=feed&id='
@@ -4709,10 +4538,10 @@ object SparkEntry {
         |  regexp_extract(regexp_extract(u, '^[a-z]+://([^/:?#]*)', 1),
         |    '[^.]+\.[^.]+$') AS domain FROM u5)
         |SELECT canonical_url, domain, MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
-        |FROM c GROUP BY canonical_url, domain""".stripMargin,
+        |FROM c GROUP BY canonical_url, domain""".stripMargin)),
     // p27: the p06 banding pipeline restricted to pairs touching the
     // delta (doc_id % 5 = 0) — exactly incrementalCandidates' contract
-    "p27_incremental_neardup" ->
+    QuerySpec("p27_incremental_neardup", p27, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -4735,8 +4564,8 @@ object SparkEntry {
         |SELECT LEAST(l.doc_id, r.doc_id) AS id_a, GREATEST(l.doc_id, r.doc_id) AS id_b
         |FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
         |WHERE l.doc_id != r.doc_id AND (l.doc_id % 5 = 0 OR r.doc_id % 5 = 0)
-        |GROUP BY 1, 2""".stripMargin,
-    "p20_repetition" ->
+        |GROUP BY 1, 2""".stripMargin)),
+    QuerySpec("p20_repetition", p20, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -4752,8 +4581,8 @@ object SparkEntry {
         |  CAST(top AS BIGINT) AS top_2gram_count,
         |  CAST(total - dist AS DOUBLE) / total AS dup_2gram_frac,
         |  CAST(top AS DOUBLE) / total AS top_2gram_frac
-        |FROM s""".stripMargin,
-    "p10_simhash_neardup" ->
+        |FROM s""".stripMargin)),
+    QuerySpec("p10_simhash_neardup", p10, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
         |th AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM tk),
@@ -4773,11 +4602,11 @@ object SparkEntry {
         |  CAST(bit_count(xor(l.s, r.s)) AS BIGINT) AS hamming
         |FROM blk l JOIN blk r ON l.blk = r.blk AND l.blk_val = r.blk_val
         |  AND l.doc_id < r.doc_id
-        |WHERE bit_count(xor(l.s, r.s)) <= 10 GROUP BY 1, 2, 3""".stripMargin,
+        |WHERE bit_count(xor(l.s, r.s)) <= 10 GROUP BY 1, 2, 3""".stripMargin)),
     // p71: hammingCandidates over synthetic md5 codes — replays the
     // block bucketing, the >64 hot-bucket star guard (hub = min doc_id
     // with its code), and the exact Hamming verify, branch for branch.
-    "p71_hamming_neardup" ->
+    QuerySpec("p71_hamming_neardup", p71, Oracle(
       """WITH c0 AS (
         |  SELECT doc_id, md5_number_lower('p71:' || CAST(doc_id AS VARCHAR)) AS hu
         |  FROM documents),
@@ -4808,12 +4637,12 @@ object SparkEntry {
         |  WHERE m.doc_id != hubs.hub_id)
         |SELECT id_a, id_b, hamming FROM (
         |  SELECT * FROM pairs UNION ALL SELECT * FROM stars) u
-        |WHERE hamming <= 24 GROUP BY 1, 2, 3""".stripMargin,
+        |WHERE hamming <= 24 GROUP BY 1, 2, 3""".stripMargin)),
     // p73: unigram seed replay — word-type table, overlapping substring
     // counts (≤4 chars), coverage chars + top-(400−nChars) multi by
     // (cnt DESC, piece ASC), integral HUGEINT score quantization with
     // the single-char floor at 1.
-    "p73_unigram_seed" ->
+    QuerySpec("p73_unigram_seed", p73, Oracle(
       """WITH wt AS (SELECT w, COUNT(*) AS n FROM (
         |    SELECT unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |      x -> x != '')) AS w FROM documents) u GROUP BY 1),
@@ -4832,11 +4661,11 @@ object SparkEntry {
         |SELECT piece, CAST(cnt AS BIGINT) AS cnt,
         |  GREATEST(CAST(CAST(cnt AS HUGEINT) * 1000000000000000000 // t AS BIGINT),
         |    CASE WHEN len(piece) = 1 THEN 1 ELSE 0 END) AS score_q
-        |FROM kept, tot""".stripMargin,
+        |FROM kept, tot""".stripMargin)),
     // p74: exact 6-gram overlap vs the src0/src1 "benchmark" slice —
     // per train doc: gram positions, positions whose gram is in the
     // eval distinct-gram set, any-hit flag (gram hash = p24 contract)
-    "p74_ngram_decontam" ->
+    QuerySpec("p74_ngram_decontam", p74, Oracle(
       """WITH tr AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks
@@ -4861,17 +4690,17 @@ object SparkEntry {
         |  CAST(GREATEST(len(tr.toks) - 5, 0) AS BIGINT) AS n_grams,
         |  COALESCE(h.hit_grams, 0) AS hit_grams,
         |  COALESCE(h.hit_grams, 0) > 0 AS contaminated
-        |FROM tr LEFT JOIN hits h USING (doc_id)""".stripMargin,
+        |FROM tr LEFT JOIN hits h USING (doc_id)""".stripMargin)),
     // p75: bottom-8 probe hashes vs the df<=64-capped inverted shingle
     // index -> exact containment |A∩B|/|A| >= 0.8 (hash = 61-bit md5 of
     // the 3-word shingle string; <=3-token docs shingle as whole text)
-    "p75_containment" -> (containCte +
+    QuerySpec("p75_containment", p75, Oracle((containCte +
       """
         |SELECT inner_id, outer_id, containment FROM scored
-        |WHERE containment >= 0.8""".stripMargin),
+        |WHERE containment >= 0.8""".stripMargin))),
     // p77: subsumption dedup — drop every doc >=0.8-contained in a doc
     // with a strictly larger shingle set (ties -> smaller id survives)
-    "p77_subsumption" -> (containCte +
+    QuerySpec("p77_subsumption", p77, Oracle((containCte +
       """,
         |dropd AS (SELECT DISTINCT s.inner_id AS doc_id
         |  FROM scored s JOIN sz a ON a.doc_id = s.inner_id
@@ -4879,11 +4708,11 @@ object SparkEntry {
         |  WHERE s.containment >= 0.8
         |    AND (b.n > a.n OR (b.n = a.n AND s.outer_id < s.inner_id)))
         |SELECT d.doc_id, d.lang, d.source FROM documents d
-        |LEFT JOIN dropd USING (doc_id) WHERE dropd.doc_id IS NULL""".stripMargin),
+        |LEFT JOIN dropd USING (doc_id) WHERE dropd.doc_id IS NULL""".stripMargin))),
     // p78: incremental containment — src0/src1 delta vs the rest as the
     // indexed corpus; both directions, per-side df caps, >=6-of-8
     // clamped probe prefilter, exact |inner∩outer|/|inner| at 0.8
-    "p78_incr_containment" ->
+    QuerySpec("p78_incr_containment", p78, Oracle(
       """WITH tk AS (
         |  SELECT doc_id, source, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
         |    x -> x != '') AS toks FROM documents),
@@ -4950,19 +4779,19 @@ object SparkEntry {
         |  FROM bcand a LEFT JOIN bint i
         |    ON i.delta_id = a.delta_id AND i.corpus_id = a.corpus_id
         |  JOIN szc ON szc.doc_id = a.corpus_id) t
-        |WHERE containment >= 0.8""".stripMargin,
+        |WHERE containment >= 0.8""".stripMargin)),
     // p92: the compaction rewrite is lossless (the file-layout and
     // range-disjointness requires live in the query), so the oracle is
     // the plain source aggregate
-    "p92_compact" ->
+    QuerySpec("p92_compact", p92, Oracle(
       """SELECT l_orderkey % 53 AS bucket, COUNT(*) AS cnt,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(l_partkey) AS BIGINT) AS sum_pk
-        |FROM lineitem GROUP BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1""".stripMargin)),
     // p93: readers see exactly v2 = upsert(v1, delta) — p60's
     // window-rank replay without tombstones (the rejected v3 never
     // becomes visible; the query's requires pin that on disk)
-    "p93_publish" ->
+    QuerySpec("p93_publish", p93, Oracle(
       """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice,
         |    o_orderpriority FROM orders),
         |v1 AS (SELECT *, 0::BIGINT AS version, 0 AS _src FROM base),
@@ -4973,11 +4802,11 @@ object SparkEntry {
         |r AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey
         |    ORDER BY version DESC, _src DESC) AS rn FROM u)
         |SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority, version
-        |FROM r WHERE rn = 1""".stripMargin,
+        |FROM r WHERE rn = 1""".stripMargin)),
     // p94: p11's component CTE extended with the per-cluster size +
     // min-id representative — one row per document, kept = unclustered
     // or the representative (exactly p11's survivor set)
-    "p94_dedup_audit" -> (neardupCompCte +
+    QuerySpec("p94_dedup_audit", p94, Oracle((neardupCompCte +
       """,
         |sz AS (SELECT component, COUNT(*) AS cluster_size, MIN(id) AS rep
         |  FROM comp GROUP BY component)
@@ -4986,18 +4815,23 @@ object SparkEntry {
         |  (comp.id IS NULL OR d.doc_id = sz.rep) AS kept
         |FROM documents d
         |LEFT JOIN comp ON comp.id = d.doc_id
-        |LEFT JOIN sz ON sz.component = comp.component""".stripMargin),
+        |LEFT JOIN sz ON sz.component = comp.component""".stripMargin))),
     // p95: the fold/expire cycle is lossless and the rejected batch
     // (slice 3, nulled o_custkey) never became visible — the served
     // union (fold v1 ∪ late batches) is the plain bucket-filtered
     // source aggregate; the manifest/expiry/no-op-re-delivery layout
     // requires live in the query
-    "p95_stream_retention" ->
+    QuerySpec("p95_stream_retention", p95, Oracle(
       """SELECT o_orderkey % 97 AS bucket, COUNT(*) AS cnt,
         |  CAST(SUM(o_custkey) AS BIGINT) AS sum_ck,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_orderkey % 6 <> 3 GROUP BY 1""".stripMargin
-  )
+        |FROM orders WHERE o_orderkey % 6 <> 3 GROUP BY 1""".stripMargin),
+      // p95's computation is the aggregate over the served union; the
+      // batch-equivalent plan is the same aggregate over the clean slices
+      batchPlan = Some((s, d) => p95Agg(
+        tbl(d, "orders")(s).select("o_orderkey", "o_custkey", "o_totalprice")
+          .filter(col("o_orderkey") % 6 =!= 3))))
+  ))
 
   /** p81: batched BPE training replayed round-for-round. Generated by
     * the same loop shape the engine runs (`numMerges` unrolled rounds —

@@ -1,7 +1,11 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.QuerySpec.{Contract, Oracle}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.collection.immutable.ListMap
+/** Driver-run correctness dump: each SparkEntry.registry query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -37,64 +41,49 @@ object Verify {
     // of custom expressions, must leave the dump unchanged
     val spark = LocalSession("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (comma-separated names); the driver never
+    // local-iteration filter (SparkEntry.onlyNames); the driver never
     // sets it, so the contract run always dumps every query
-    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",")
-      .map(_.trim).filter(_.nonEmpty).toSet
-    val sel = if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
-    sel.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val sel = SparkEntry.select(SparkEntry.onlyNames)
+    sel.foreach { q =>
+      try q.plan(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
         // an ENVIRONMENT death (disk full, OOM) must stop the run and
         // classify — swallowing it per-query would burn an hour failing
         // 150 more times and still produce a misleading artifact
         if (Bench.classifyEnvFailure(e).isDefined) throw e
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val json = new ObjectMapper().registerModule(DefaultScalaModule)
+    def write(file: String, value: Any): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), json.writeValueAsString(value))
     // contract oracles join the map at write time: their SQL reads the
     // dumped parquet (absolute path) and recomputes the statistical
     // contract in DuckDB, so the by-design rows-only queries (q23's
     // Bernoulli sample) become CHECKED cells in the driver's compare
     // instead of `no_oracle` nulls (VERDICT r16 #3)
     val absOut = new java.io.File(outDir).getAbsolutePath
-    val json = (SparkEntry.oracleSql ++ SparkEntry.contractOracleSql(absOut))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    write("oracle_sql.json", ListMap(SparkEntry.registry.map(q => q.name -> (q.check match {
+      case Oracle(sql) => sql
+      case c: Contract => c.oracleSqlFor(absOut)
+    })): _*))
     // statistical contracts for the by-design rows-only queries: run the
     // named distributed checks and write <name>.contract.json, so the
     // correctness artifact self-describes the gate instead of `no_oracle`
-    SparkEntry.statContracts
-      .filter { case (n, _) => sel.contains(n) }
-      .foreach { case (name, fn) =>
-        val (status, checks) =
-          try {
-            val cs = fn(spark, sfDir)
-            (if (cs.forall(_._2)) "stat_contract_ok" else "stat_contract_FAILED", cs)
-          } catch { case e: Throwable =>
-            ("stat_contract_ERROR", Seq(("contract_ran", false,
-              String.valueOf(e.getMessage).take(200))))
-          }
-        val body = checks.map { case (n2, ok, detail) =>
-          s"""{"name": ${q(n2)}, "ok": $ok, "detail": ${q(detail)}}"""
-        }.mkString("[", ",", "]")
-        Files.writeString(Paths.get(s"$outDir/$name.contract.json"),
-          s"""{"contract": ${q(status)}, "checks": $body}""")
-      }
+    for (QuerySpec(name, _, c: Contract, _) <- sel) {
+      val (status, checks) =
+        try {
+          val cs = c.checks(spark, sfDir)
+          (if (cs.forall(_._2)) "stat_contract_ok" else "stat_contract_FAILED", cs)
+        } catch { case e: Throwable =>
+          ("stat_contract_ERROR", Seq(("contract_ran", false,
+            String.valueOf(e.getMessage).take(200))))
+        }
+      write(s"$name.contract.json", ListMap("contract" -> status,
+        "checks" -> checks.map { case (n, ok, detail) =>
+          ListMap("name" -> n, "ok" -> ok, "detail" -> detail) }))
+    }
     spark.stop()
   }
 }

@@ -20,9 +20,22 @@ class BenchSf1Spec extends org.scalatest.funsuite.AnyFunSuite {
     assert(r.dropped.isEmpty)
   }
 
-  test("bench_ratio --sf1 reports no shared queries instead of dividing by zero") {
+  private def assumePython(): Unit =
     assume(sys.env.getOrElse("PATH", "").split(':').exists(d =>
       new java.io.File(d, "python3").canExecute), "python3 not on PATH")
+
+  test("bench_ratio full_names maps each short key to one registry query") {
+    assumePython()
+    val code = "import sys; sys.path.insert(0, 'tools'); import bench_ratio; " +
+      "print('\\n'.join(bench_ratio.full_names().values()))"
+    val names = scala.sys.process.Process(Seq("python3", "-c", code)).!!.split('\n').toSet
+    assert(names == SparkEntry.queries.keySet,
+      s"parsed ${names.size} names; differs by ${(names -- SparkEntry.queries.keySet) ++
+        (SparkEntry.queries.keySet -- names)}")
+  }
+
+  test("bench_ratio --sf1 reports no shared queries instead of dividing by zero") {
+    assumePython()
     val dir = Files.createTempDirectory("graft_bench_ratio")
     def write(name: String, body: String): Path = Files.writeString(dir.resolve(name), body)
     try {

@@ -1,19 +1,38 @@
 package graft
 
+import graft.QuerySpec.Contract
+import org.apache.spark.sql.DataFrame
+import scala.util.{Failure, Success, Try}
+
 /** Exercises exactly what the driver runs: entry() smoke (rows>0 at
-  * sf0.001) and every queries() entry executing without error. */
+  * sf0.001), every registry query executing without error, and the
+  * registry's checks and selection. */
 class DriverContractSpec extends SparkTestBase {
+
+  private val sf = "/root/testdata/sf0.001"
+
+  private def q23Contract: Contract = SparkEntry.select(Seq("q23_sample")).head.check match {
+    case c: Contract => c
+    case other => fail(s"q23_sample must carry a Contract, got $other")
+  }
 
   test("entry: flagship query returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  // one frame per query, shared by the two sweeps below: a streaming
+  // query runs its stream when its plan is built, so building each plan
+  // once halves the cost of the pair
+  private lazy val frames: Seq[(String, Try[DataFrame])] =
+    SparkEntry.registry.map(q => q.name -> Try(q.plan(spark, sf)))
+
   test("every registered query runs and returns rows at sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        val n = fn(spark, "/root/testdata/sf0.001").count()
-        if (n == 0 && name != "q07_anti_join") Some(s"$name: 0 rows") else None
-      } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+    val failures = frames.flatMap { case (name, frame) =>
+      frame.flatMap(df => Try(df.count())) match {
+        case Success(0L) if name != "q07_anti_join" => Some(s"$name: 0 rows")
+        case Success(_) => None
+        case Failure(e) => Some(s"$name: ${e.getMessage}")
+      }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
@@ -25,58 +44,54 @@ class DriverContractSpec extends SparkTestBase {
     // fine INSIDE a query; the presented schema must be primitive
     // (cast to string/bigint/double at the query boundary).
     import org.apache.spark.sql.types.DecimalType
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        fn(spark, "/root/testdata/sf0.001").schema.fields.collect {
-          case f if f.dataType.isInstanceOf[DecimalType] =>
-            s"$name.${f.name}: ${f.dataType.simpleString}"
-        }
+    val offenders = frames.flatMap {
+      case (name, Success(df)) => df.schema.fields.toSeq.collect {
+        case f if f.dataType.isInstanceOf[DecimalType] =>
+          s"$name.${f.name}: ${f.dataType.simpleString}"
+      }
+      case (name, Failure(e)) => Seq(s"$name: ${e.getMessage}")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
-  }
-
-  test("streamingBatchPlans and the streaming gate queries cover each other") {
-    // PlanLintSpec lints these batch-applied transforms IN PLACE OF the
-    // gate query for each key — a key without a gate query would be a
-    // lint entry shadowing nothing, and a "_stream" gate query WITHOUT an
-    // entry would fall through to executing the stream inside the lint
-    // and handing it an empty memory-sink plan (a vacuous lint row)
-    val missing = SparkEntry.streamingBatchPlans.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"streaming batch plan without query: $missing")
-    val unlinted = SparkEntry.queries.keySet.filter(_.contains("_stream")) --
-      SparkEntry.streamingBatchPlans.keySet
-    assert(unlinted.isEmpty, s"streaming gate query without a batch lint plan: $unlinted")
-  }
-
   test("every query is oracle-keyed except the by-design RNG exception") {
     // q23's Bernoulli sample is engine-RNG-specific (rows-only by
-    // design, VERDICT r4+). Anything else missing here means a new
-    // query shipped without its correctness gate.
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unoracled == Set("q23_sample"), s"queries without oracle: $unoracled")
-    // ...and every by-design rows-only query carries its statistical
-    // contract (Verify writes it as <name>.contract.json): the two sets
-    // must be EQUAL — a new unoracled query without a contract, or a
-    // contract shadowing an oracled query, both fail here
-    assert(SparkEntry.statContracts.keySet == unoracled,
-      s"statContracts must cover exactly the unoracled set: " +
-        s"${SparkEntry.statContracts.keySet} vs $unoracled")
-    // ...and the dump-time contract oracles (Verify merges them into
-    // oracle_sql.json so the driver's compare checks the contract in
-    // DuckDB) must target exactly that same set — a contract oracle for
-    // an already-oracled query would shadow its real oracle
-    assert(SparkEntry.contractOracleSql("/dump").keySet == unoracled,
-      s"contractOracleSql must cover exactly the unoracled set: " +
-        s"${SparkEntry.contractOracleSql("/dump").keySet} vs $unoracled")
+    // design, VERDICT r4+). Any other Contract means a query shipped
+    // without its hash gate.
+    assert(SparkEntry.registry.collect { case QuerySpec(n, _, _: Contract, _) => n } ==
+      Seq("q23_sample"))
+  }
+
+  test("the streaming gate queries are exactly the _stream names") {
+    val mismatched = SparkEntry.registry.filter(q => q.name.contains("_stream") != q.streaming)
+    assert(mismatched.isEmpty, s"_stream name without a batch plan, or the reverse: ${mismatched.map(_.name)}")
+  }
+
+  test("select: empty selects every query, an unknown name fails, shipped query lists resolve") {
+    assert(SparkEntry.select(Nil) == SparkEntry.registry)
+    assert(SparkEntry.registry.size == 151)
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Seq("q01_multi_agg", "q99_nope")))
+    assert(e.getMessage.contains("unknown query q99_nope"), e.getMessage)
+    assert(e.getMessage.contains("p95_stream_retention"), "the message lists the valid names")
+    assert(SparkEntry.select(Seq("p51_similarity_rank", "q01_multi_agg")).map(_.name) ==
+      Seq("p51_similarity_rank", "q01_multi_agg"))
+    Seq(Bench.Sf1Tier, HeavyShuffleProbe.DefaultQueries).foreach { names =>
+      assert(SparkEntry.select(names).map(_.name) == names)
+    }
+  }
+
+  test("the registry rejects a repeated name or short key") {
+    val plan: QuerySpec.Plan = (s, _) => s.emptyDataFrame
+    def spec(n: String) = QuerySpec(n, plan, QuerySpec.Oracle("SELECT 1"))
+    Seq(Seq("q01_a", "q01_a"), Seq("q01_a", "q01_b")).foreach { names =>
+      val e = intercept[IllegalArgumentException](SparkEntry.unique(names.map(spec)))
+      assert(e.getMessage.contains("duplicate query keys"), e.getMessage)
+    }
+    assert(SparkEntry.unique(Seq(spec("q01_a"), spec("q02_a"))).size == 2)
   }
 
   test("contract oracle SQL embeds the dump dir it is authored for") {
-    val sql = SparkEntry.contractOracleSql("/some/out")("q23_sample")
+    val sql = q23Contract.oracleSqlFor("/some/out")
     assert(sql.contains("read_parquet('/some/out/q23_sample/*.parquet')"),
       s"contract oracle must read the dumped sample back:\n$sql")
     // the checks must reference the SOURCE table independently — an
@@ -86,27 +101,13 @@ class DriverContractSpec extends SparkTestBase {
   }
 
   test("q23 sample: deterministic at fixed seed, rows a subset of the source, fraction inside the binomial bound") {
-    // the lone rows-only query gets a statistical contract instead of a
-    // hash: (1) the engine's Bernoulli RNG is seeded, so two runs on the
-    // same data and partitioning return the SAME rows; (2) every sampled
-    // row exists in the source; (3) the sampled count sits within 5σ of
-    // fraction·n (binomial) — a wrong-fraction or wrong-source
-    // regression trips this long before a human would notice
-    val d = "/root/testdata/sf0.001"
-    val q = SparkEntry.queries("q23_sample")
-    val run1 = q(spark, d).collect().map(_.toSeq).toSeq
-    val run2 = q(spark, d).collect().map(_.toSeq).toSeq
-    assert(run1 == run2, "fixed-seed sample must be run-to-run identical")
-    val srcRows = spark.read.parquet(s"$d/lineitem.parquet")
-      .select("l_orderkey", "l_linenumber").collect().map(_.toSeq)
-    val src = srcRows.toSet
-    assert(run1.forall(src.contains), "sampled rows must come from the source")
-    // n = true row count (the generated data carries duplicate pairs, so
-    // the distinct set undercounts the Bernoulli trials)
-    val n = srcRows.length.toDouble
-    val expect = 0.1 * n
-    val sigma = math.sqrt(n * 0.1 * 0.9)
-    assert(math.abs(run1.size - expect) <= 5 * sigma,
-      s"sampled ${run1.size} of $n rows — outside 5σ of the 10% Bernoulli bound")
+    // the shipped statistical contract Verify runs at dump time: (1) the
+    // engine's Bernoulli RNG is seeded, so two runs on the same data and
+    // partitioning return the SAME rows; (2) every sampled row exists in
+    // the source; (3) the sampled count sits within 5σ of fraction·n
+    val checks = q23Contract.checks(spark, sf)
+    assert(checks.map(_._1) ==
+      Seq("deterministic_fixed_seed", "subset_of_source", "binomial_5sigma"))
+    assert(checks.forall(_._2), checks.mkString("\n"))
   }
 }

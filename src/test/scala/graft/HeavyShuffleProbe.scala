@@ -67,14 +67,17 @@ object HeavyShuffleProbe {
       }.toMap
   }
 
+  /** The dedup/graph heavy queries probed when none are named. */
+  val DefaultQueries: Seq[String] = Seq("p11_neardup_dedup", "p15_curate",
+    "p17_neardup_star", "p36_semantic_dedup", "p51_similarity_rank", "p72_candidates_tap")
+
   def main(args: Array[String]): Unit = {
     require(args.length <= 2, "usage: HeavyShuffleProbe [dir] [query,...]; session " +
       "conf overrides (once a third argument) go in SPARK_GRAFT_CONF, e.g. " +
       "SPARK_GRAFT_CONF=spark.graft.maxBucketSize=256")
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft_sf10"
-    val names = (if (args.length > 1) args(1).split(",").toSeq
-      else Seq("p11_neardup_dedup", "p15_curate", "p17_neardup_star",
-        "p36_semantic_dedup", "p51_similarity_rank", "p72_candidates_tap"))
+    val queries = SparkEntry.select(
+      if (args.length > 1) args(1).split(",").toSeq.map(_.trim) else DefaultQueries)
     val spark = LocalSession("ERROR", cpus = "32")
     val budget = readBudget()
     val violations = scala.collection.mutable.ArrayBuffer[String]()
@@ -84,11 +87,11 @@ object HeavyShuffleProbe {
     // GRAFT_STRAGGLER_OUT (default STRAGGLER_latest.json in the cwd).
     val jsonRows = scala.collection.mutable.ArrayBuffer[String]()
     println(f"${"query"}%-24s ${"wall_s"}%8s ${"rows"}%9s ${"shuf_rd"}%9s ${"shuf_wr"}%9s ${"hot_stage"}%10s ${"straggler"}%9s")
-    names.foreach { name =>
+    queries.foreach { case QuerySpec(name, plan, _, _) =>
       val acc = new Acc
       spark.sparkContext.addSparkListener(acc)
       val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(name)(spark, dir).count()
+      val rows = plan(spark, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(acc)
       val rd = acc.stages.map(_.shuffleRead).sum

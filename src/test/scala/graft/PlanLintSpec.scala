@@ -1,7 +1,7 @@
 package graft
 
 /** Plan-quality regression gate over the ENTIRE driver query surface:
-  * every `SparkEntry.queries` entry is compiled at sf0.001 and its
+  * every `SparkEntry.registry` query is compiled at sf0.001 and its
   * physical plan linted for the two classes of scale-killer that a
   * 100×-data bump would expose first:
   *
@@ -104,14 +104,12 @@ class PlanLintSpec extends SparkTestBase {
     // plan instead — at real scale AQE only improves on it.
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, f) =>
+    try SparkEntry.registry.foreach { case QuerySpec(name, f, _, batchPlan) =>
       try {
-        // the streaming gate queries (every "_stream" name) return a
-        // memory-sink table (LocalTableScan — nothing to lint) and EXECUTE
-        // the stream when called; lint their transform's batch plan
-        // instead (DriverContractSpec enforces the map covers them all)
-        val builder = SparkEntry.streamingBatchPlans.getOrElse(name, f)
-        val plan = builder(spark, sf).queryExecution.executedPlan
+        // a streaming gate query returns a memory-sink table
+        // (LocalTableScan — nothing to lint) and EXECUTES the stream when
+        // called; lint its transform's batch plan instead
+        val plan = batchPlan.getOrElse(f)(spark, sf).queryExecution.executedPlan
         val all = nodes(plan)
         queriesSeen += 1
         if (!cartesianOk(name) && all.exists(

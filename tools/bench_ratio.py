@@ -72,13 +72,12 @@ def positions(queries):
 
 def full_names():
     """Map short headline keys (q01, p32) -> full query names, parsed from
-    SparkEntry's queries map (the short key is the unique '_'-prefix)."""
+    the `QuerySpec("name", ...)` and `replayed("name", ...)` entries of
+    SparkEntry's registry (which fails at init on a repeated '_'-prefix,
+    so each short key is unique)."""
     src = (REPO / "src/main/scala/graft/SparkEntry.scala").read_text()
-    names = re.findall(r'"((?:q|p)\d+[a-z0-9_]*)"\s*->', src)
-    out = {}
-    for n in dict.fromkeys(names):
-        out.setdefault(n.split("_")[0], n)
-    return out
+    names = re.findall(r'(?:QuerySpec|replayed)\("((?:q|p)\d+[a-z0-9_]*)"', src)
+    return {n.split("_")[0]: n for n in names}
 
 
 def recheck(flagged, sf_name, ref_norm):
