@@ -602,12 +602,17 @@ object SparkEntry {
       maxBucketSize = 2)
 
   /** p11's end-to-end dedup via the large-star/small-star components
-    * (O(log d) contraction) — must match the same recursive-CTE oracle as
+    * (O(log d) contraction) over the same verified pairs, then the same
+    * consolidation tail — must match the same recursive-CTE oracle as
     * min-label propagation bit-for-bit. */
-  private def p17(s: SparkSession, d: String): DataFrame =
-    Dedup.nearDupDedup(tbl(d, "documents")(s), threshold = 0.6,
-      ccAlgorithm = "star")
+  private def p17(s: SparkSession, d: String): DataFrame = {
+    val docs = tbl(d, "documents")(s)
+    val verified = Dedup.jaccardVerify(Dedup.minhashCandidates(docs), docs,
+      threshold = 0.6)
+    Dedup.survivorsOf(docs, "doc_id",
+        Dedup.componentsStar(verified.select("id_a", "id_b")))
       .select("doc_id", "lang", "source")
+  }
 
   /** Benchmark-contamination: corpus docs sharing any word 8-gram with
     * the probe set (docs 0-19 standing in for an eval benchmark) —

@@ -404,8 +404,8 @@ object Publish {
   }
 
   private def writeManifest(spark: SparkSession, root: String,
-      m: BatchManifest, batchBytes: Map[Long, Long] = Map.empty,
-      foldedBytes: Option[Long] = None): Unit = {
+      m: BatchManifest, batchBytes: Map[Long, Long],
+      foldedBytes: Option[Long]): Unit = {
     val sb = new StringBuilder
     m.foldedVersion.foreach(v => sb ++= s"foldedVersion=$v\n")
     sb ++= s"foldedThrough=${m.foldedThrough}\n"

@@ -49,10 +49,6 @@ object Bpe {
     out.result()
   }
 
-  private val mergeUdf = udf { (syms: Seq[String], a: String, b: String) =>
-    mergePass(syms.toArray, a, b).toSeq
-  }
-
   /** Learn `numMerges` BPE merges from a corpus. Stops early when no
     * adjacent pair reaches `minPairFreq`. `maxTrainRows` > 0 samples
     * the corpus deterministically first (md5-threshold, the p21/

@@ -34,7 +34,7 @@ object Dedup {
     * bigger than √target are therefore split into B = ceil(s/√target)
     * hash blocks and self-joined on (key, block_i, block_j) instead:
     * per-task pair volume drops to ~target while the emitted pair SET
-    * is identical by construction ([[minhashCandidates]]). */
+    * is identical by construction ([[saltedSelfJoin]]). */
   private[graft] def resolveSaltTarget(df: DataFrame): Long = {
     val t = df.sparkSession.conf
       .get("spark.graft.saltTargetPairs", (1L << 20).toString).toLong
@@ -99,13 +99,159 @@ object Dedup {
     aSide.repartition(n, key: _*)
       .join(bSide.repartition(n, key: _*), keyCols ++ Seq("_i", "_j"))
       .filter(col("_i") =!= col("_j") || col("_ida") < col("_idb"))
-      .select(Seq(
-        least(col("_ida"), col("_idb")).as("id_a"),
-        greatest(col("_ida"), col("_idb")).as("id_b")) ++
-        payload.map(p => when(col("_ida") < col("_idb"), col(s"${p}_xa"))
-          .otherwise(col(s"${p}_xb")).as(s"${p}_a")) ++
-        payload.map(p => when(col("_ida") < col("_idb"), col(s"${p}_xb"))
-          .otherwise(col(s"${p}_xa")).as(s"${p}_b")): _*)
+      .select(ordered(col("_ida"), col("_idb"),
+        payload.map(p => (p, col(s"${p}_xa"), col(s"${p}_xb")))): _*)
+  }
+
+  /** The unordered pair (x, y) with its payloads as
+    * (id_a, id_b, <p>_a…, <p>_b…), id_a < id_b: each payload
+    * `(p, px, py)` follows its id to the side it lands on. */
+  private def ordered(x: Column, y: Column,
+      payload: Seq[(String, Column, Column)]): Seq[Column] =
+    Seq(least(x, y).as("id_a"), greatest(x, y).as("id_b")) ++
+      payload.map { case (p, px, py) => when(x < y, px).otherwise(py).as(s"${p}_a") } ++
+      payload.map { case (p, px, py) => when(x < y, py).otherwise(px).as(s"${p}_b") }
+
+  /** The bucket key of [[bandedSignatures]] rows. */
+  private val BandKey = Seq("band", "band_key")
+
+  /** Per-bucket statistics of any bucketing — minhash bands, simhash
+    * blocks, hyperplane buckets, IVF cells: one row per `keyCols` value
+    * with `bucket_size` and the min-id `hub`, a plain `min(id)` when
+    * there is no payload and `min(struct(id, payload…))` otherwise (the
+    * star branch reads the hub's payload to score its edges). One
+    * map-side-combined aggregation — degenerate buckets collapse in the
+    * combine, so the shuffled stats are tiny — and the one code path
+    * every guard runs, so MacroMultigroupPlanSpec's plan contract is
+    * asserted on the aggregation the operators actually execute.
+    * Mergeable: sizes add, hubs take the min. */
+  private[graft] def bucketStats(rows: DataFrame, keyCols: Seq[String],
+      idCol: String, payload: Seq[String]): DataFrame = {
+    val hub =
+      if (payload.isEmpty) min(col(idCol))
+      else min(struct((idCol +: payload).map(col): _*))
+    rows.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("bucket_size"), hub.as("hub"))
+  }
+
+  /** The hot-bucket guard over a full corpus: every within-bucket pair of
+    * `rows` (`idCol`, `payload`, `keyCols`) as (id_a, id_b, <p>_a…,
+    * <p>_b…), id_a < id_b, not yet distinct (a pair sharing several
+    * buckets repeats). A degenerate bucket key (viral boilerplate,
+    * shared templates, an all-duplicate IVF cell) would make one
+    * bucket's self-join quadratic — a single 10⁶-row bucket is 10¹²
+    * pairs — so buckets split three ways by size:
+    *
+    *  - at most √saltTargetPairs: the plain key self-join;
+    *  - up to `cap`: the salted block-pair self-join
+    *    ([[saltedSelfJoin]]) — the identical pair SET, per-task pair
+    *    volume ~target instead of size²/2 from one reducer;
+    *  - over `cap`: STAR EDGES from the bucket's min-id hub to every
+    *    other member, linear in bucket size. For the dominant case
+    *    (near-identical members) the scored star connects the same
+    *    component; members far from the hub drop out at verification
+    *    exactly as their full-pair edges mostly would.
+    *
+    * Bucket sizes come from [[bucketStats]], and only the notable set
+    * (buckets over √target: each holds ≥ √target rows, so there are
+    * ≤ N/√target of them) broadcasts back onto the rows — no sort, no
+    * extra shuffle of the rows (a window count would sort every
+    * partition). The caller materializes `rows` when producing them is
+    * costly: every branch reads them. */
+  private def bucketPairs(rows: DataFrame, keyCols: Seq[String],
+      idCol: String, payload: Seq[String], cap: Int): DataFrame = {
+    val sqrtT = math.max(2L, math.sqrt(resolveSaltTarget(rows).toDouble).toLong)
+    val notableThreshold = math.min(sqrtT, cap.toLong)
+    val notable = bucketStats(rows, keyCols, idCol, payload)
+      .select(keyCols.map(col) ++
+        Seq(col("bucket_size").as("_bsz"), col("hub").as("_hub")): _*)
+      .filter(col("_bsz") > notableThreshold)
+      // _hub is only read by the star branch (> cap): nulling it for
+      // the (far more numerous) near-cap entries keeps the broadcast
+      // at ~a count per entry even when there are N/sqrtT of them and
+      // the hub carries a payload (a full embedding vector)
+      .withColumn("_hub", when(col("_bsz") > cap, col("_hub")))
+      // staged: `flagged` feeds THREE branches (small pairs, salted
+      // near-cap join, stars) and the salted join reads it twice more —
+      // without a boundary each subtree re-aggregates the full rows
+      // (5 corpus-sized scans+partial-aggs in the plan; exchange reuse
+      // does not collapse them across the union branches). The table
+      // is tiny (≤ N/√target entries) when the threshold is at the
+      // default regime, so the boundary costs one small job and deletes
+      // 4 corpus passes — but ONLY then: an adversarially small cap
+      // makes the table bucket-count-sized and the eager checkpoint a
+      // corpus-scale job, so it stays lazy below the floor
+      // ([[statsStageFloor]]).
+      .transform(stageStatsIfSmall(_, notableThreshold))
+    val flagged = rows.join(broadcast(notable), keyCols, "left_outer")
+    val small = flagged.filter(col("_bsz").isNull)
+      .select(((idCol +: payload) ++ keyCols).map(col): _*)
+    def side(s: String): DataFrame =
+      small.toDF((s"id_$s" +: payload.map(p => s"${p}_$s")) ++ keyCols: _*)
+    val pairs = side("a").join(side("b"), keyCols)
+      .filter(col("id_a") < col("id_b"))
+      .select((Seq("id_a", "id_b") ++ payload.map(p => s"${p}_a") ++
+        payload.map(p => s"${p}_b")).map(col): _*)
+    val saltPairs = saltedSelfJoin(flagged, keyCols, idCol, payload, cap, sqrtT)
+    // hub = bucket min id, so id_a < id_b holds on star edges too
+    val hubId = if (payload.isEmpty) col("_hub") else col(s"_hub.$idCol")
+    val stars = flagged.filter(col("_bsz") > cap && col(idCol) =!= hubId)
+      .select(Seq(hubId.as("id_a"), col(idCol).as("id_b")) ++
+        payload.map(p => col(s"_hub.$p").as(s"${p}_a")) ++
+        payload.map(p => col(p).as(s"${p}_b")): _*)
+    pairs.unionAll(saltPairs).unionAll(stars)
+  }
+
+  /** The hot-bucket guard for a delta batch against an existing corpus:
+    * delta×corpus and delta×delta within-bucket pairs of the same shape
+    * as [[bucketPairs]] — corpus×corpus pairs are never generated, so
+    * the work scales with |delta|·bucket-occupancy, not |corpus|².
+    * Bucket sizes are taken over corpus+delta: `corpusStats` (a
+    * persisted [[bucketStats]] rollup, maintained with the corpus index)
+    * merges monoid-wise with the delta's stats — sizes add, hubs take
+    * the min — so the corpus is not re-aggregated per batch; without it
+    * the corpus rows are aggregated here. Over-cap buckets emit star
+    * edges from their DELTA members to the merged hub (only
+    * delta-touching edges are this contract); their corpus members emit
+    * nothing new. */
+  private def deltaBucketPairs(corpusRows: DataFrame, deltaRows: DataFrame,
+      corpusStats: Option[DataFrame], keyCols: Seq[String], idCol: String,
+      payload: Seq[String], cap: Int): DataFrame = {
+    def tagged(stats: DataFrame, t: String): DataFrame =
+      stats.select(keyCols.map(col) ++ Seq(col("bucket_size").as(s"_${t}sz"),
+        col("hub").as(s"_${t}hub")): _*)
+    val stats = tagged(corpusStats.getOrElse(
+        bucketStats(corpusRows, keyCols, idCol, payload)), "c")
+      .join(tagged(bucketStats(deltaRows, keyCols, idCol, payload), "d"),
+        keyCols, "full_outer")
+      .select(keyCols.map(col) ++ Seq(
+        (coalesce(col("_csz"), lit(0L)) + coalesce(col("_dsz"), lit(0L))).as("_bsz"),
+        least(col("_chub"), col("_dhub")).as("_hub")): _*) // least skips nulls
+      .filter(col("_bsz") > cap)
+      // staged: broadcast twice (delta flag + corpus anti-join) —
+      // without a boundary each broadcast re-runs the stats merge (and,
+      // without `corpusStats`, re-aggregates the corpus); the table is
+      // tiny (over-cap buckets only) when the cap is at the default
+      // regime — an adversarially small cap leaves it lazy
+      // ([[statsStageFloor]])
+      .transform(stageStatsIfSmall(_, cap.toLong))
+    val rowCols = ((idCol +: payload) ++ keyCols).map(col)
+    val dFlag = deltaRows.join(broadcast(stats), keyCols, "left_outer")
+    val dSmall = dFlag.filter(col("_bsz").isNull).select(rowCols: _*)
+    val cSmall = corpusRows.join(broadcast(stats), keyCols, "left_anti")
+      .select(rowCols: _*) // using-cols joins reorder
+    def side(df: DataFrame, t: String): DataFrame =
+      df.toDF((s"_${t}id" +: payload.map(p => s"_$t$p")) ++ keyCols: _*)
+    val pairs = side(dSmall, "d")
+      .join(side(cSmall, "o").unionAll(side(dSmall, "o")), keyCols)
+      .filter(col("_did") =!= col("_oid"))
+      .select(ordered(col("_did"), col("_oid"),
+        payload.map(p => (p, col(s"_d$p"), col(s"_o$p")))): _*)
+    val hubId = if (payload.isEmpty) col("_hub") else col(s"_hub.$idCol")
+    val stars = dFlag.filter(col("_bsz").isNotNull && col(idCol) =!= hubId)
+      .select(ordered(col(idCol), hubId,
+        payload.map(p => (p, col(p), col(s"_hub.$p")))): _*)
+    pairs.unionAll(stars)
   }
 
   /** Exact dedup: keep the smallest id per exact content hash. One shuffle
@@ -225,16 +371,9 @@ object Dedup {
     * 64-bit hash of the band would; a hashed key would also admit the
     * collision pairs this contract excludes.
     *
-    * Hot-bucket guard: a degenerate band key (viral boilerplate, shared
-    * templates) would make one bucket's self-join quadratic — a single
-    * 10⁶-doc bucket is 10¹² pairs. Buckets larger than `maxBucketSize`
-    * instead emit STAR EDGES to the bucket's min id: linear in bucket
-    * size, and for the dominant case (near-identical members) the star
-    * connects the same component once pairs are verified — members far
-    * from the hub drop out at verification exactly as their full-pair
-    * edges mostly would. The guard costs one window pass over the rows
-    * the self-join was about to shuffle on the same key — no extra
-    * shuffle boundary. */
+    * Hot-bucket guard ([[bucketPairs]]): buckets larger than
+    * `maxBucketSize` emit STAR EDGES to the bucket's min id instead of a
+    * quadratic self-join, and near-cap buckets self-join salted. */
   def minhashCandidates(
       df: DataFrame,
       textCol: String = "text",
@@ -244,64 +383,13 @@ object Dedup {
       shingleWords: Int = 3,
       maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val cap = resolveBucketCap(df, maxBucketSize)
-    // materialize the banded rows once: both sides of the self-join read
-    // them, and without the checkpoint the minhash kernel would run twice
-    // over the full corpus (the dominant cost of candidate generation)
+    // materialize the banded rows once: every guard branch reads them,
+    // and without the checkpoint the minhash kernel would run once per
+    // read over the full corpus (the dominant cost of candidate
+    // generation)
     val banded = bandedSignatures(df, textCol, idCol, k, bands, shingleWords)
       .transform(graft.Stage.materialize)
-    // the guard reads bucket stats from a map-side-combined aggregation —
-    // degenerate buckets collapse in the combine, so the shuffled stats are
-    // tiny — and the notable set (buckets > √target: rare by the skew
-    // argument, each holds ≥ √target rows so there are ≤ N/√target of
-    // them) broadcasts back onto the banded rows: no sort, no extra
-    // shuffle of the full banded data (a window count would sort every
-    // partition). The same broadcast serves the oversize guard (> cap →
-    // star edges) and the near-cap salting ((√target, cap] → blocked
-    // self-join).
-    val saltT = resolveSaltTarget(df)
-    val sqrtT = math.max(2L, math.sqrt(saltT.toDouble).toLong)
-    val notableThreshold = math.min(sqrtT, cap.toLong)
-    // the stats aggregation IS [[bandBucketStats]] (the persistable
-    // rollup): one named code path, so the map-side-combine plan
-    // contract is asserted on the aggregation the operator actually
-    // runs (MacroMultigroupPlanSpec)
-    val notable = bandBucketStats(banded, idCol)
-      .select(col("band"), col("band_key"),
-        col("bucket_size").as("_bsz"), col("hub").as("_hub"))
-      .filter(col("_bsz") > notableThreshold)
-      // _hub is only read by the star branch (> cap): nulling it for
-      // the (far more numerous) near-cap entries keeps the broadcast
-      // at ~a count per entry even when there are N/sqrtT of them
-      .withColumn("_hub", when(col("_bsz") > cap, col("_hub")))
-      // staged: `flagged` feeds THREE branches (small pairs, salted
-      // near-cap join, stars) and the salted join reads it twice more —
-      // without a boundary each subtree re-aggregates the full banded
-      // table (5 corpus-sized scans+partial-aggs in the plan; exchange
-      // reuse does not collapse them across the union branches). The
-      // table is tiny (≤ N/√target entries) when the threshold is at
-      // the default regime, so the boundary costs one small job and
-      // deletes 4 corpus passes — but ONLY then: an adversarially small
-      // cap makes the table bucket-count-sized and the eager checkpoint
-      // a corpus-scale job, so it stays lazy below the floor
-      // ([[statsStageFloor]]).
-      .transform(stageStatsIfSmall(_, notableThreshold))
-    val flagged = banded.join(broadcast(notable), Seq("band", "band_key"), "left_outer")
-    val small = flagged.filter(col("_bsz").isNull)
-      .select(col(idCol), col("band"), col("band_key"))
-    val l = small.toDF("id_a", "band", "band_key")
-    val rr = small.toDF("id_b", "band", "band_key")
-    val pairs = l.join(rr, Seq("band", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // Near-cap buckets (√target < size <= cap) are salted
-    // ([[saltedSelfJoin]]): identical pair SET, per-task pair volume
-    // ~target instead of size²/2 from one reducer — the physical-plan
-    // rewrite that deleted the r15 straggler-budget whitelist.
-    val saltPairs = saltedSelfJoin(flagged, Seq("band", "band_key"),
-      idCol, Nil, cap, sqrtT).select("id_a", "id_b")
-    val stars = flagged.filter(col("_bsz") > cap && col(idCol) =!= col("_hub"))
-      .select(col("_hub").as("id_a"), col(idCol).as("id_b"))
-    pairs.unionAll(saltPairs).unionAll(stars).distinct()
+    bucketPairs(banded, BandKey, idCol, Nil, cap).distinct()
   }
 
   /** Persist the MinHash candidate graph as a reusable parquet tap —
@@ -348,11 +436,20 @@ object Dedup {
       shingleWords: Int = 3,
       maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val cap = resolveBucketCap(df, maxBucketSize)
-    bandedSignatures(df, textCol, idCol, k, bands, shingleWords)
-      .groupBy("band", "band_key")
-      .agg(count(lit(1)).as("bucket_size"))
+    bandBucketStats(bandedSignatures(df, textCol, idCol, k, bands, shingleWords), idCol)
       .filter(col("bucket_size") > cap)
+      .drop("hub")
   }
+
+  /** Per-bucket statistics of a [[bandedSignatures]] table:
+    * (band, band_key, bucket_size, hub: min id) — [[bucketStats]] over
+    * the band key. Persist NEXT TO the banded corpus index and hand to
+    * [[incrementalCandidates]]' `corpusStats` so delta batches never
+    * re-aggregate the corpus — the stats table is the map-side-combined
+    * rollup computed once per corpus build, KBs–MBs at any corpus size.
+    * Mergeable: sizes add, hubs take the min. */
+  def bandBucketStats(banded: DataFrame, idCol: String = "doc_id"): DataFrame =
+    bucketStats(banded, BandKey, idCol, Nil)
 
   /** Incremental near-dup candidates: a delta batch against an existing
     * corpus WITHOUT re-pairing the corpus against itself — the daily-crawl
@@ -361,28 +458,16 @@ object Dedup {
     * computed once, persisted bucketed by (band, band_key), and this
     * operator's corpus-side work reduces to a co-located join plus a
     * map-side-combined stats aggregation; pass `corpusBanded = true` to
-    * supply it pre-banded. Candidates are delta×corpus and delta×delta
-    * bucket pairs — corpus×corpus pairs are never generated, so the work
-    * scales with |delta|·bucket-occupancy, not |corpus|².
-    *
-    * The same hot-bucket guard as [[minhashCandidates]] applies, with
-    * sizes taken over corpus+delta: oversize buckets emit star edges from
-    * their DELTA members to the bucket's min id (only delta-touching edges
-    * are this operator's contract).
+    * supply it pre-banded, and `corpusStats` ([[bandBucketStats]] of that
+    * table) to skip the corpus aggregation too. Candidates are
+    * delta×corpus and delta×delta bucket pairs ([[deltaBucketPairs]]):
+    * the same hot-bucket guard as [[minhashCandidates]], with sizes taken
+    * over corpus+delta and oversize buckets emitting star edges from
+    * their DELTA members to the bucket's min id.
     *
     * Emits (id_a, id_b), id_a < id_b, distinct; with no bucket over the
     * cap this equals the full-corpus [[minhashCandidates]] pair set
     * restricted to pairs touching ≥ 1 delta doc. */
-  /** Per-bucket statistics of a [[bandedSignatures]] table:
-    * (band, band_key, bucket_size, hub). Persist NEXT TO the banded corpus
-    * index and hand to [[incrementalCandidates]]' `corpusStats` so delta
-    * batches never re-aggregate the corpus — the stats table is the
-    * map-side-combined rollup computed once per corpus build, KBs–MBs at
-    * any corpus size. Mergeable: sizes add, hubs take the min. */
-  def bandBucketStats(banded: DataFrame, idCol: String = "doc_id"): DataFrame =
-    banded.groupBy("band", "band_key")
-      .agg(count(lit(1)).as("bucket_size"), min(col(idCol)).as("hub"))
-
   def incrementalCandidates(
       corpus: DataFrame,
       delta: DataFrame,
@@ -409,58 +494,15 @@ object Dedup {
       require(need.forall(st.columns.contains),
         s"corpusStats expects bandBucketStats columns $need, got ${st.columns.toSeq}")
     }
-    // select by NAME before the positional unionAll below — a pre-banded
-    // table with the same columns in a different order would otherwise
-    // union positionally and silently corrupt the bucket stats
+    // select by NAME before the positional unionAll of the pair join — a
+    // pre-banded table with the same columns in a different order would
+    // otherwise union positionally and silently corrupt the pairs
     val cb = (if (corpusBanded) corpus.select(col(idCol), col("band"), col("band_key"))
               else bandedSignatures(corpus, textCol, idCol, k, bands, shingleWords))
       .transform(graft.Stage.materialize)
     val db = bandedSignatures(delta, textCol, idCol, k, bands, shingleWords)
       .transform(graft.Stage.materialize)
-    // bucket stats over both sides. With a persisted corpus stats table
-    // (bandBucketStats, maintained with the banded index) the corpus is
-    // NOT re-aggregated per delta batch: delta stats merge monoid-wise
-    // (sizes add, hubs min) into the precomputed rollup, so the only
-    // corpus-wide work left in this operator is the co-located candidate
-    // join itself.
-    val stats = corpusStats match {
-      case Some(st) =>
-        val ds = db.groupBy("band", "band_key")
-          .agg(count(lit(1)).as("_dsz"), min(col(idCol)).as("_dhub"))
-        st.select(col("band"), col("band_key"),
-            col("bucket_size").as("_csz"), col("hub").as("_chub"))
-          .join(ds, Seq("band", "band_key"), "full_outer")
-          .select(col("band"), col("band_key"),
-            (coalesce(col("_csz"), lit(0L)) + coalesce(col("_dsz"), lit(0L))).as("_bsz"),
-            least(col("_chub"), col("_dhub")).as("_hub")) // least skips nulls
-          .filter(col("_bsz") > cap)
-      case None =>
-        cb.unionAll(db).groupBy("band", "band_key")
-          .agg(count(lit(1)).as("_bsz"), min(col(idCol)).as("_hub"))
-          .filter(col("_bsz") > cap)
-    }
-    // staged: broadcast twice (delta flag + corpus anti-join) —
-    // without a boundary each broadcast re-aggregates the corpus+delta
-    // banded union (or re-runs the stats merge); the table is tiny
-    // (over-cap buckets only) when the cap is at the default regime —
-    // an adversarially small cap leaves it lazy ([[statsStageFloor]])
-    val statsM = stats.transform(stageStatsIfSmall(_, cap.toLong))
-    val dFlag = db.join(broadcast(statsM), Seq("band", "band_key"), "left_outer")
-    val dSmall = dFlag.filter(col("_bsz").isNull)
-      .select(col(idCol), col("band"), col("band_key"))
-    val cSmall = cb.join(broadcast(statsM), Seq("band", "band_key"), "left_anti")
-      .select(col(idCol), col("band"), col("band_key")) // using-cols joins reorder
-    val left = dSmall.toDF("_d", "band", "band_key")
-    val right = cSmall.toDF("_o", "band", "band_key")
-      .unionAll(dSmall.toDF("_o", "band", "band_key"))
-    val pairs = left.join(right, Seq("band", "band_key"))
-      .filter(col("_d") =!= col("_o"))
-      .select(least(col("_d"), col("_o")).as("id_a"),
-        greatest(col("_d"), col("_o")).as("id_b"))
-    val stars = dFlag.filter(col("_bsz").isNotNull && col(idCol) =!= col("_hub"))
-      .select(least(col(idCol), col("_hub")).as("id_a"),
-        greatest(col(idCol), col("_hub")).as("id_b"))
-    pairs.unionAll(stars).distinct()
+    deltaBucketPairs(cb, db, corpusStats, BandKey, idCol, Nil, cap).distinct()
   }
 
   /** Positional word n-gram hashes kernel: (n_tokens, [(pos, hash)]).
@@ -667,17 +709,6 @@ object Dedup {
     * ([[Multimodal.imagePHash]]), audio fingerprints, any 64-bit
     * locality-preserving code. Same guarantee (pairs within Hamming d
     * ≤ 3 share at least one block) and the same scale posture. */
-  /** Per-block statistics of the simhash block bucketing — the hamming
-    * analog of [[bandBucketStats]]: one row per (blk, blk_val) with its
-    * size and min-id (id, simhash) hub. A named single code path so the
-    * map-side-combine plan contract is assertable on the aggregation
-    * [[hammingCandidates]] actually runs. */
-  private[graft] def hammingBlockStats(bucketed: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    bucketed.groupBy("blk", "blk_val")
-      .agg(count(lit(1)).as("block_size"),
-        min(struct(col(idCol), col("sh"))).as("hub"))
-
   def hammingCandidates(
       withHash: DataFrame,
       hashCol: String,
@@ -691,51 +722,19 @@ object Dedup {
       struct(lit(i).as("blk"),
         shiftright(col("sh"), i * 16).bitwiseAND(0xFFFFL).as("blk_val"))): _*)
     // same self-join-recompute rule as minhashCandidates: materialize the
-    // bucketed rows so the simhash kernel runs once, not once per side.
+    // bucketed rows so the simhash kernel runs once, not once per read.
     // Same hot-bucket guard too: 16-bit blocks of boilerplate-heavy corpora
     // collide massively (e.g. block 3 of short docs is often all-zero) —
     // oversize buckets emit linear star edges to (min id, its simhash),
-    // still Hamming-verified, instead of a quadratic self-join. Stats ride
-    // a map-side-combined agg + broadcast join, not a window sort.
+    // still Hamming-verified, instead of a quadratic self-join.
     val bucketed = withSh.select(col(idCol), col("sh"), explode(blocks).as("b"))
       .select(col(idCol), col("sh"), col("b.blk"), col("b.blk_val"))
       .transform(graft.Stage.materialize)
-    // same near-cap salting as minhashCandidates: the notable set
-    // (> √target) serves both the oversize guard and the salted join
-    val saltT = resolveSaltTarget(withSh)
-    val sqrtT = math.max(2L, math.sqrt(saltT.toDouble).toLong)
-    val notableThreshold = math.min(sqrtT, cap.toLong)
-    val notable = hammingBlockStats(bucketed, idCol)
-      .select(col("blk"), col("blk_val"),
-        col("block_size").as("_bsz"), col("hub").as("_hub"))
-      .filter(col("_bsz") > notableThreshold)
-      // star-branch-only payload nulled for near-cap entries (see
-      // minhashCandidates) — bounds the broadcast at N/sqrtT counts
-      .withColumn("_hub", when(col("_bsz") > cap, col("_hub")))
-      // one bucket-stats pass, not one per union branch (see
-      // minhashCandidates); staged only when the threshold proves the
-      // table corpus-small ([[statsStageFloor]])
-      .transform(stageStatsIfSmall(_, notableThreshold))
-    val flagged = bucketed.join(broadcast(notable), Seq("blk", "blk_val"), "left_outer")
-    val small = flagged.filter(col("_bsz").isNull)
-      .select(col(idCol), col("sh"), col("blk"), col("blk_val"))
-    val l = small.toDF("id_a", "sh_a", "blk", "blk_val")
-    val r = small.toDF("id_b", "sh_b", "blk", "blk_val")
-    val pairs = l.join(r, Seq("blk", "blk_val"))
-      .filter(col("id_a") < col("id_b"))
+    bucketPairs(bucketed, Seq("blk", "blk_val"), idCol, Seq("sh"), cap)
       .select(col("id_a"), col("id_b"),
         hammingDistance(col("sh_a"), col("sh_b")).cast("long").as("hamming"))
-    val saltPairs = saltedSelfJoin(flagged, Seq("blk", "blk_val"),
-      idCol, Seq("sh"), cap, sqrtT)
-      .select(col("id_a"), col("id_b"),
-        hammingDistance(col("sh_a"), col("sh_b")).cast("long").as("hamming"))
-    val stars = flagged
-      .filter(col("_bsz") > cap && col(idCol) =!= col(s"_hub.$idCol"))
-      .select(col(s"_hub.$idCol").as("id_a"), col(idCol).as("id_b"),
-        hammingDistance(col("_hub.sh"), col("sh")).cast("long").as("hamming"))
-    pairs.unionAll(saltPairs).unionAll(stars)
       .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming").distinct()
+      .distinct()
   }
 
   /** Connected components over near-dup candidate pairs → duplicate
@@ -972,10 +971,9 @@ object Dedup {
 
   /** End-to-end near-dup dedup: candidates → verified pairs → components →
     * survivors (min doc id per component + all unclustered docs).
-    * `ccAlgorithm`: "label" (min-label propagation, O(diameter) — right
-    * for the tiny clusters real near-dup graphs produce) or "star"
-    * ([[componentsStar]], O(log d) — the guard against adversarial long
-    * chains). Both produce identical (id, min id) labels. */
+    * [[components]] picks its own path: union-find in one task when the
+    * pair graph is small, else min-label propagation with a
+    * [[componentsStar]] fallback when the loop does not converge. */
   def nearDupDedup(
       df: DataFrame,
       textCol: String = "text",
@@ -983,12 +981,18 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.8,
-      maxBucketSize: Int = SessionBucketCap,
-      ccAlgorithm: String = "label"): DataFrame = {
+      maxBucketSize: Int = SessionBucketCap): DataFrame =
+    survivorsOf(df, idCol, components(
+      verifiedPairs(df, textCol, idCol, k, bands, threshold, maxBucketSize)))
+
+  /** Jaccard-verified minhash candidate pairs (id_a, id_b): the edge set
+    * the near-dup consolidations cluster. */
+  private def verifiedPairs(df: DataFrame, textCol: String, idCol: String,
+      k: Int, bands: Int, threshold: Double, maxBucketSize: Int): DataFrame = {
     val cands = minhashCandidates(df, textCol, idCol, k, bands,
       maxBucketSize = maxBucketSize)
-    val verified = jaccardVerify(cands, df, textCol, idCol, threshold = threshold)
-    survivors(df, idCol, verified.select("id_a", "id_b"), ccAlgorithm)
+    jaccardVerify(cands, df, textCol, idCol, threshold = threshold)
+      .select("id_a", "id_b")
   }
 
   /** End-to-end embedding near-dup dedup: hyperplane-bucketed candidates
@@ -1002,10 +1006,9 @@ object Dedup {
       idCol: String = "vec_id",
       planes: Int = 12,
       threshold: Double = 0.95,
-      maxBucketSize: Int = SessionBucketCap,
-      ccAlgorithm: String = "label"): DataFrame = {
+      maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val pairs = embeddingNearDup(df, embCol, idCol, planes, threshold, maxBucketSize)
-    survivors(df, idCol, pairs.select("id_a", "id_b"), ccAlgorithm)
+    survivorsOf(df, idCol, components(pairs.select("id_a", "id_b")))
   }
 
   /** [[nearDupDedup]] with QUALITY-AWARE survivor selection: each
@@ -1024,14 +1027,10 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.8,
-      maxBucketSize: Int = SessionBucketCap,
-      ccAlgorithm: String = "label"): DataFrame = {
-    val cands = minhashCandidates(df, textCol, idCol, k, bands,
-      maxBucketSize = maxBucketSize)
-    val verified = jaccardVerify(cands, df, textCol, idCol, threshold = threshold)
-    survivorsBy(df, idCol, Some(scoreCol), verified.select("id_a", "id_b"),
-      ccAlgorithm)
-  }
+      maxBucketSize: Int = SessionBucketCap): DataFrame =
+    survivorsOf(df, idCol, components(
+        verifiedPairs(df, textCol, idCol, k, bands, threshold, maxBucketSize)),
+      Some(scoreCol))
 
   /** Per-document AUDIT of a near-dup dedup run — the explainability
     * face of [[nearDupDedup]]: for every document, which cluster it
@@ -1052,25 +1051,15 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.8,
-      maxBucketSize: Int = SessionBucketCap,
-      ccAlgorithm: String = "label"): DataFrame = {
-    val cands = minhashCandidates(df, textCol, idCol, k, bands,
-      maxBucketSize = maxBucketSize)
-    val verified = jaccardVerify(cands, df, textCol, idCol, threshold = threshold)
-    auditFromPairs(df, idCol, verified.select("id_a", "id_b"), ccAlgorithm)
-  }
+      maxBucketSize: Int = SessionBucketCap): DataFrame =
+    auditFromPairs(df, idCol,
+      verifiedPairs(df, textCol, idCol, k, bands, threshold, maxBucketSize))
 
   /** [[dedupAudit]] from an already-materialized pair table (the
     * [[candidatesTap]] ingest-once pattern: pair once, then survivors,
     * graph analytics, and this audit all read the same tap). */
-  def auditFromPairs(df: DataFrame, idCol: String, pairs: DataFrame,
-      ccAlgorithm: String = "label"): DataFrame = {
-    val comp = ccAlgorithm match {
-      case "label" => components(pairs)
-      case "star" => componentsStar(pairs)
-      case other => throw new IllegalArgumentException(
-        s"ccAlgorithm must be 'label' or 'star', got '$other'")
-    }
+  def auditFromPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val comp = components(pairs)
     val stats = comp.groupBy("component")
       .agg(count(lit(1)).as("cluster_size"), min(col("id")).as("_rep"))
     df.select(col(idCol))
@@ -1082,25 +1071,16 @@ object Dedup {
         (col("component").isNull || col(idCol) === col("_rep")).as("kept"))
   }
 
-  /** Shared consolidation tail of the end-to-end dedups: cluster the
-    * verified pairs, keep min id per component + all unclustered rows. */
-  private def survivors(df: DataFrame, idCol: String, pairs: DataFrame,
-      ccAlgorithm: String): DataFrame =
-    survivorsBy(df, idCol, None, pairs, ccAlgorithm)
-
-  /** Consolidation with an optional quality key: representative = max
-    * score then min id (no score: min id). The component table is
-    * cluster-sized — a small fraction of the corpus — so the extra
+  /** The consolidation tail of every end-to-end dedup: given a
+    * component table `comp` (id, component) — [[components]] or
+    * [[componentsStar]] output over the verified pairs — keep one
+    * representative per component plus every never-clustered row of
+    * `df`, with all of `df`'s columns. The representative is the min id,
+    * or with `scoreCol` the max score then min id. The component table
+    * is cluster-sized — a small fraction of the corpus — so the extra
     * best-score aggregation is cheap next to candidate generation. */
-  private def survivorsBy(df: DataFrame, idCol: String,
-      scoreCol: Option[String], pairs: DataFrame,
-      ccAlgorithm: String): DataFrame = {
-    val comp = ccAlgorithm match {
-      case "label" => components(pairs)
-      case "star" => componentsStar(pairs)
-      case other => throw new IllegalArgumentException(
-        s"ccAlgorithm must be 'label' or 'star', got '$other'")
-    }
+  def survivorsOf(df: DataFrame, idCol: String, comp: DataFrame,
+      scoreCol: Option[String] = None): DataFrame = {
     val keep = scoreCol match {
       case None =>
         comp.groupBy("component").agg(min("id").as(idCol)).select(idCol)
@@ -1535,32 +1515,42 @@ object Dedup {
     val common = index.groupBy("gh").agg(count(lit(1)).as("_df"))
       .filter(col("_df") > maxDocFreq).select("gh")
       .transform(graft.Stage.materialize)
-    val kept = index.join(broadcast(common), Seq("gh"), "left_anti")
-    // The probe-hit count IS a containment sketch: bottom-m is a uniform
-    // m-sample of the inner set, so a pair at true containment c hits
-    // ~c·m probes. `minProbeHits` (deterministic, oracle-replayable
-    // PREFILTER semantics) drops pairs whose sketch cannot plausibly
-    // clear the verify threshold BEFORE the expensive exact merge — at
-    // sf0.1 a hits>=6-of-8 prefilter cut 382k candidate pairs to 512
-    // with the verified survivor set IDENTICAL, verify 9.0 s → 0.5 s
-    // (BASELINE round 10); default 1 keeps every sharing pair (pure
-    // recall).
-    // the gate clamps to the doc's ACHIEVABLE hit count: probes it
-    // actually issued (a doc with fewer than m distinct shingles issues
-    // fewer) MINUS probes whose hash the df cap dropped (a hot probe can
-    // never hit the kept index). Without the hot-probe term, a doc with
-    // > m - minProbeHits hot shingles among its bottom-m could never
-    // emit a candidate even at containment 1.0 — fully-contained docs
-    // must stay eligible.
-    val np = probes.join(broadcast(common), Seq("gh"), "left_anti")
-      .groupBy("_pid").agg(count(lit(1)).as("_np"))
-    probes.join(kept, "gh")
+    probeHitGate(probes, index, common, "_pid", "_iid", minProbeHits)
       .filter(col("_pid") =!= col("_iid"))
-      .groupBy("_pid", "_iid")
-      .agg(count(lit(1)).as("_hits"))
-      .join(np, "_pid")
-      .filter(col("_hits") >= least(lit(minProbeHits), col("_np")))
       .select(col("_pid").as("inner_id"), col("_iid").as("outer_id"))
+  }
+
+  /** The containment probe-hit gate: (probe id, index id) pairs whose
+    * `probes` (`probeId`, gh) hit the `index` (`indexId`, gh) at least
+    * `least(minProbeHits, achievable)` times, after dropping the `hot`
+    * hashes (the df cap) from both. The probe-hit count IS a containment
+    * sketch: bottom-m is a uniform m-sample of the inner set, so a pair
+    * at true containment c hits ~c·m probes. `minProbeHits`
+    * (deterministic, oracle-replayable PREFILTER semantics) drops pairs
+    * whose sketch cannot plausibly clear the verify threshold BEFORE the
+    * expensive exact merge — at sf0.1 a hits>=6-of-8 prefilter cut 382k
+    * candidate pairs to 512 with the verified survivor set IDENTICAL,
+    * verify 9.0 s → 0.5 s (BASELINE round 10); 1 keeps every sharing
+    * pair (pure recall).
+    *
+    * The gate clamps to the probe's ACHIEVABLE hit count: probes it
+    * actually issued (a doc with fewer than m distinct shingles issues
+    * fewer) MINUS probes whose hash the df cap dropped (a hot probe can
+    * never hit the kept index). Without the hot-probe term, a doc with
+    * > m - minProbeHits hot shingles among its bottom-m could never
+    * emit a candidate even at containment 1.0 — fully-contained docs
+    * must stay eligible. `hot` is broadcast twice (the index anti-join
+    * and the clamp), so callers materialize it. */
+  private def probeHitGate(probes: DataFrame, index: DataFrame, hot: DataFrame,
+      probeId: String, indexId: String, minProbeHits: Int): DataFrame = {
+    val np = probes.join(broadcast(hot), Seq("gh"), "left_anti")
+      .groupBy(probeId).agg(count(lit(1)).as("_np"))
+    probes.join(index.join(broadcast(hot), Seq("gh"), "left_anti")
+        .select(indexId, "gh"), "gh")
+      .groupBy(probeId, indexId).agg(count(lit(1)).as("_hits"))
+      .join(np, probeId)
+      .filter(col("_hits") >= least(lit(minProbeHits), col("_np")))
+      .select(probeId, indexId)
   }
 
   /** Exact containment verification for (inner, outer) candidate pairs:
@@ -1657,30 +1647,14 @@ object Dedup {
     val hotD = dExpl.groupBy("gh").agg(count(lit(1)).as("_df"))
       .filter(col("_df") > maxDocFreq).select("gh")
       .transform(graft.Stage.materialize)
-    // Both directions clamp the probe-hit gate to the ACHIEVABLE count:
-    // issued probes minus probes whose hash the opposing side's df cap
-    // dropped (same fix as [[containmentCandidates]] — a hot probe can
-    // never hit, so counting it would let minProbeHits disqualify
-    // fully-contained docs outright).
-    val aProbes = ds.select(col("delta_id"),
-      explode(slice(col("_ss"), 1, m)).as("gh"))
-    val aNp = aProbes.join(broadcast(hotC), Seq("gh"), "left_anti")
-      .groupBy("delta_id").agg(count(lit(1)).as("_np"))
-    val aCand = aProbes
-      .join(ci.join(broadcast(hotC), Seq("gh"), "left_anti")
-        .select("corpus_id", "gh"), "gh")
-      .groupBy("delta_id", "corpus_id").agg(count(lit(1)).as("_hits"))
-      .join(aNp, "delta_id")
-      .filter(col("_hits") >= least(lit(minProbeHits), col("_np")))
-      .select("delta_id", "corpus_id")
-    val bProbes = ci.filter(col("rk") <= m).select(col("corpus_id"), col("gh"))
-    val bNp = bProbes.join(broadcast(hotD), Seq("gh"), "left_anti")
-      .groupBy("corpus_id").agg(count(lit(1)).as("_np"))
-    val bCand = bProbes
-      .join(dExpl.join(broadcast(hotD), Seq("gh"), "left_anti"), "gh")
-      .groupBy("corpus_id", "delta_id").agg(count(lit(1)).as("_hits"))
-      .join(bNp, "corpus_id")
-      .filter(col("_hits") >= least(lit(minProbeHits), col("_np")))
+    // each direction gates against the OPPOSING side's df cap
+    // ([[probeHitGate]])
+    val aCand = probeHitGate(
+      ds.select(col("delta_id"), explode(slice(col("_ss"), 1, m)).as("gh")),
+      ci, hotC, "delta_id", "corpus_id", minProbeHits)
+    val bCand = probeHitGate(
+      ci.filter(col("rk") <= m).select(col("corpus_id"), col("gh")),
+      dExpl, hotD, "corpus_id", "delta_id", minProbeHits)
       .select("delta_id", "corpus_id")
     val touchedC = aCand.select("corpus_id").union(bCand.select("corpus_id"))
       .distinct()
@@ -1744,17 +1718,14 @@ object Dedup {
   /** Embedding cosine near-dup: LSH-bucket by random-hyperplane signs
     * (deterministic seeded planes), verify exact cosine within buckets.
     *
-    * Hot-bucket guard (same shape as [[minhashCandidates]] /
-    * [[simhashNearDup]]): a corpus heavy in near-identical embeddings —
-    * exactly what a near-dup pass processes, e.g. re-encoded duplicate
+    * Hot-bucket guard ([[bucketPairs]], as in [[minhashCandidates]] /
+    * [[hammingCandidates]]): a corpus heavy in near-identical embeddings
+    * — exactly what a near-dup pass processes, e.g. re-encoded duplicate
     * images — collapses into one signature bucket and the unguarded
     * self-join goes quadratic. Buckets larger than `maxBucketSize`
     * instead emit STAR EDGES from the bucket's min-id member (the hub) to
-    * every other member, cosine-verified like any pair: linear in bucket
-    * size, and the verified star connects the same duplicate component.
-    * Bucket stats come from a map-side-combined aggregation (degenerate
-    * buckets collapse in the combine) and the near-empty oversize set
-    * broadcasts back — no window sort, no extra shuffle of the vectors. */
+    * every other member, cosine-verified like any pair. Near-cap salting
+    * matters most here: each pair is a full-vector cosine. */
   def embeddingNearDup(
       df: DataFrame,
       embCol: String = "embedding",
@@ -1764,76 +1735,22 @@ object Dedup {
       maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val cap = resolveBucketCap(df, maxBucketSize)
     val sigCol = Similarity.hyperplaneSignature(col(embCol), planes)
-    bucketedCosinePairs(df.select(col(idCol), col(embCol), sigCol.as("bucket")),
-      idCol, embCol, cap, threshold)
+    // self-joined: the signature kernel must run once
+    val sigs = df.select(col(idCol), col(embCol), sigCol.as("bucket"))
+      .transform(graft.Stage.materialize)
+    cosineVerified(bucketPairs(sigs, Seq("bucket"), idCol, Seq(embCol), cap),
+      embCol, threshold)
   }
 
-  /** Guarded within-bucket exact-cosine pair generation — the shared
-    * engine of [[embeddingNearDup]] (hyperplane buckets) and
-    * [[semanticPairs]] (IVF cells). `sigs0` carries (idCol, embCol,
-    * bucket); buckets larger than `cap` emit cosine-verified STAR EDGES
-    * from the bucket-min member instead of a quadratic self-join, with
-    * bucket stats from a map-side-combined aggregation broadcast back
-    * (no window sort, no extra shuffle of the vectors). */
-  /** Per-bucket statistics of a cosine bucketing (hyperplane signatures
-    * or IVF cells rendered as `bucket`) — the vector analog of
-    * [[bandBucketStats]], named so the map-side-combine plan contract is
-    * assertable on the aggregation [[bucketedCosinePairs]] actually runs
-    * (MacroMultigroupPlanSpec). */
-  private[graft] def cosineBucketStats(sigs: DataFrame, idCol: String,
-      embCol: String): DataFrame =
-    sigs.groupBy("bucket")
-      .agg(count(lit(1)).as("bucket_size"),
-        min(struct(col(idCol), col(embCol))).as("hub"))
-
-  private def bucketedCosinePairs(sigs0: DataFrame, idCol: String,
-      embCol: String, cap: Int, threshold: Double): DataFrame = {
-    val cosineOf = (a: Column, b: Column) =>
-      graft.functions.VectorExpressions.cosine(sigs0.sparkSession, a, b)
-    // self-joined: the signature/assignment kernel must run once
-    val sigs = sigs0.transform(graft.Stage.materialize)
-    // near-cap salting matters MOST here: the per-pair verify is a
-    // full-vector cosine, so a near-cap bucket is cap²/2 dot products
-    // from one task without it
-    val saltT = resolveSaltTarget(sigs0)
-    val sqrtT = math.max(2L, math.sqrt(saltT.toDouble).toLong)
-    val notableThreshold = math.min(sqrtT, cap.toLong)
-    val notable = cosineBucketStats(sigs, idCol, embCol)
-      .select(col("bucket"),
-        col("bucket_size").as("_bsz"), col("hub").as("_hub"))
-      .filter(col("_bsz") > notableThreshold)
-      // CRITICAL here: _hub carries a FULL EMBEDDING VECTOR, and the
-      // near-cap notable set can hold N/sqrtT entries on a collision-
-      // heavy corpus — nulling the star-only payload for sub-cap
-      // entries keeps the forced broadcast at counts, not vectors
-      .withColumn("_hub", when(col("_bsz") > cap, col("_hub")))
-      // one bucket-stats pass over the vectors, not one per union
-      // branch (see minhashCandidates) — entries are counts after the
-      // _hub nulling, so the boundary is small; staged only when the
-      // threshold proves it so ([[statsStageFloor]])
-      .transform(stageStatsIfSmall(_, notableThreshold))
-    val flagged = sigs.join(broadcast(notable), Seq("bucket"), "left_outer")
-    val small = flagged.filter(col("_bsz").isNull)
-      .select(col(idCol), col(embCol), col("bucket"))
-    val l = small.toDF("id_a", "emb_a", "bucket")
-    val r = small.toDF("id_b", "emb_b", "bucket")
-    val pairs = l.join(r, "bucket")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosineOf(col("emb_a"), col("emb_b")).as("cosine"))
-    val saltPairs = saltedSelfJoin(flagged, Seq("bucket"),
-      idCol, Seq(embCol), cap, sqrtT)
-      .select(col("id_a"), col("id_b"),
-        cosineOf(col(s"${embCol}_a"), col(s"${embCol}_b")).as("cosine"))
-    // hub = bucket min id, so id_a < id_b holds on star edges too
-    val stars = flagged
-      .filter(col("_bsz") > cap && col(idCol) =!= col(s"_hub.$idCol"))
-      .select(col(s"_hub.$idCol").as("id_a"), col(idCol).as("id_b"),
-        cosineOf(col(s"_hub.$embCol"), col(embCol)).as("cosine"))
-    pairs.unionAll(saltPairs).unionAll(stars)
+  /** Score guarded `(id_a, id_b, <emb>_a, <emb>_b)` pairs by exact cosine
+    * and keep those ≥ `threshold`: (id_a, id_b, cosine), distinct. */
+  private def cosineVerified(pairs: DataFrame, embCol: String,
+      threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        graft.functions.VectorExpressions.cosine(pairs.sparkSession,
+          col(s"${embCol}_a"), col(s"${embCol}_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine").distinct()
-  }
+      .distinct()
 
   /** SemDeDup-style semantic near-dup pairs (Abbas et al., "SemDeDup:
     * Data-efficient learning at web-scale through semantic
@@ -1856,11 +1773,11 @@ object Dedup {
       threshold: Double = 0.95,
       maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val cap = resolveBucketCap(df, maxBucketSize)
-    val sigs = Similarity.ivfIndex(df, centroids, idCol, embCol)
-      .filter(col("cell").isNotNull)
-      .select(col("corpus_id").as(idCol), col("c_emb").as(embCol),
-        col("cell").as("bucket"))
-    bucketedCosinePairs(sigs, idCol, embCol, cap, threshold)
+    // self-joined: the cell-assignment kernel must run once
+    val cells = ivfRows(Similarity.ivfIndex(df, centroids, idCol, embCol))
+      .transform(graft.Stage.materialize)
+    cosineVerified(bucketPairs(cells, Seq("cell"), "id", Seq("emb"), cap),
+      "emb", threshold)
   }
 
   /** End-to-end SemDeDup: [[semanticPairs]] → connected components → one
@@ -1874,11 +1791,17 @@ object Dedup {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       threshold: Double = 0.95,
-      maxBucketSize: Int = SessionBucketCap,
-      ccAlgorithm: String = "label"): DataFrame = {
+      maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val pairs = semanticPairs(df, centroids, embCol, idCol, threshold, maxBucketSize)
-    survivors(df, idCol, pairs.select("id_a", "id_b"), ccAlgorithm)
+    survivorsOf(df, idCol, components(pairs.select("id_a", "id_b")))
   }
+
+  /** The celled rows of an [[Similarity.ivfIndex]] as (id, emb, cell) —
+    * the row shape whose [[bucketStats]] hub is [[semanticCellStats]]'
+    * `struct<id, emb>`. */
+  private def ivfRows(index: DataFrame): DataFrame =
+    index.filter(col("cell").isNotNull)
+      .select(col("corpus_id").as("id"), col("c_emb").as("emb"), col("cell"))
 
   /** Per-cell rollup of a persisted [[Similarity.ivfIndex]] — the
     * semantic analog of [[bandBucketStats]]: one row per cell with its
@@ -1886,24 +1809,23 @@ object Dedup {
     * hand it to [[incrementalSemanticPairs]] so delta batches never
     * re-aggregate the corpus. Mergeable: sizes add, hubs take the min. */
   def semanticCellStats(index: DataFrame): DataFrame =
-    index.filter(col("cell").isNotNull).groupBy("cell")
-      .agg(count(lit(1)).as("cell_size"),
-        min(struct(col("corpus_id").as("id"), col("c_emb").as("emb"))).as("hub"))
+    bucketStats(ivfRows(index), Seq("cell"), "id", Seq("emb"))
+      .withColumnRenamed("bucket_size", "cell_size")
 
   /** Incremental SemDeDup: a delta batch of embeddings against a
     * PERSISTED corpus IVF index ([[Similarity.ivfIndex]] output:
     * corpus_id, c_emb, cell) WITHOUT re-pairing the corpus against
     * itself — the daily-crawl path, mirroring [[incrementalCandidates]].
     * Delta rows route to cells through the same codebook, then pair
-    * delta×corpus and delta×delta within each cell, cosine-verified;
-    * corpus×corpus (the quadratic bulk, already resolved when the corpus
-    * was built) is never generated. Hot cells — merged corpus+delta size
-    * above the cap — emit verified star edges from each delta member to
-    * the merged cell hub; corpus members of hot cells emit nothing new.
-    * Pass `corpusCellStats` ([[semanticCellStats]], persisted alongside
-    * the index) to skip the per-batch corpus aggregation: delta stats
-    * merge monoid-wise into the rollup. Returns (id_a, id_b, cosine),
-    * id_a < id_b, distinct. */
+    * delta×corpus and delta×delta within each cell, cosine-verified
+    * ([[deltaBucketPairs]]); corpus×corpus (the quadratic bulk, already
+    * resolved when the corpus was built) is never generated. Hot cells —
+    * merged corpus+delta size above the cap — emit verified star edges
+    * from each delta member to the merged cell hub; corpus members of
+    * hot cells emit nothing new. Pass `corpusCellStats`
+    * ([[semanticCellStats]], persisted alongside the index) to skip the
+    * per-batch corpus aggregation: delta stats merge monoid-wise into the
+    * rollup. Returns (id_a, id_b, cosine), id_a < id_b, distinct. */
   def incrementalSemanticPairs(
       corpusIndex: DataFrame,
       delta: DataFrame,
@@ -1914,8 +1836,6 @@ object Dedup {
       maxBucketSize: Int = SessionBucketCap,
       corpusCellStats: Option[DataFrame] = None): DataFrame = {
     val cap = resolveBucketCap(delta, maxBucketSize)
-    val cosineOf = (a: Column, b: Column) =>
-      graft.functions.VectorExpressions.cosine(delta.sparkSession, a, b)
     corpusCellStats.foreach { st =>
       val need = Seq("cell", "cell_size", "hub")
       require(need.forall(st.columns.contains),
@@ -1925,51 +1845,11 @@ object Dedup {
     // materialization (with the stats rollup it is scanned exactly once,
     // by the pair join). The delta assignment kernel IS materialized —
     // its rows feed the stats merge and both sides of the pair join.
-    val ci = corpusIndex.filter(col("cell").isNotNull)
-      .select(col("corpus_id"), col("c_emb"), col("cell"))
-    val di = Similarity.ivfIndex(delta, centroids, idCol, embCol)
-      .filter(col("cell").isNotNull)
+    val di = ivfRows(Similarity.ivfIndex(delta, centroids, idCol, embCol))
       .transform(graft.Stage.materialize)
-    val ds = di.groupBy("cell")
-      .agg(count(lit(1)).as("_dsz"),
-        min(struct(col("corpus_id").as("id"), col("c_emb").as("emb"))).as("_dhub"))
-    val stats = (corpusCellStats match {
-        case Some(st) => st.select(col("cell"),
-          col("cell_size").as("_csz"), col("hub").as("_chub"))
-        case None => ci.groupBy("cell")
-          .agg(count(lit(1)).as("_csz"),
-            min(struct(col("corpus_id").as("id"), col("c_emb").as("emb"))).as("_chub"))
-      })
-      .join(ds, Seq("cell"), "full_outer")
-      .select(col("cell"),
-        (coalesce(col("_csz"), lit(0L)) + coalesce(col("_dsz"), lit(0L))).as("_bsz"),
-        least(col("_chub"), col("_dhub")).as("_hub")) // least skips nulls
-      .filter(col("_bsz") > cap)
-      // staged: broadcast twice (delta flag + corpus anti-join) —
-      // without a boundary the None branch re-aggregates the corpus
-      // index per broadcast, breaking the scanned-exactly-once contract
-      // stated above; over-cap cells only, so the table is tiny at the
-      // default cap regime — lazy below the floor ([[statsStageFloor]])
-      .transform(stageStatsIfSmall(_, cap.toLong))
-    val dFlag = di.join(broadcast(stats), Seq("cell"), "left_outer")
-    val dSmall = dFlag.filter(col("_bsz").isNull)
-      .select(col("corpus_id"), col("c_emb"), col("cell"))
-    val cSmall = ci.join(broadcast(stats), Seq("cell"), "left_anti")
-      .select(col("corpus_id"), col("c_emb"), col("cell")) // using-cols joins reorder
-    val left = dSmall.toDF("_did", "_demb", "cell")
-    val right = cSmall.toDF("_oid", "_oemb", "cell")
-      .unionAll(dSmall.toDF("_oid", "_oemb", "cell"))
-    val pairs = left.join(right, "cell")
-      .filter(col("_did") =!= col("_oid"))
-      .select(least(col("_did"), col("_oid")).as("id_a"),
-        greatest(col("_did"), col("_oid")).as("id_b"),
-        cosineOf(col("_demb"), col("_oemb")).as("cosine"))
-    val stars = dFlag.filter(col("_bsz").isNotNull && col("corpus_id") =!= col("_hub.id"))
-      .select(least(col("corpus_id"), col("_hub.id")).as("id_a"),
-        greatest(col("corpus_id"), col("_hub.id")).as("id_b"),
-        cosineOf(col("c_emb"), col("_hub.emb")).as("cosine"))
-    pairs.unionAll(stars)
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine").distinct()
+    cosineVerified(deltaBucketPairs(ivfRows(corpusIndex), di,
+        corpusCellStats.map(_.withColumnRenamed("cell_size", "bucket_size")),
+        Seq("cell"), "id", Seq("emb"), cap),
+      "emb", threshold)
   }
 }

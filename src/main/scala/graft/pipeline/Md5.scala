@@ -10,8 +10,7 @@ import java.security.MessageDigest
   * DuckDB oracle can check them (`SELECT md5_number_lower(s)` = the last 8
   * digest bytes read little-endian). MD5 is also the standard choice for
   * shingle hashing in large-scale dedup pipelines, so the exactness comes
-  * at no design cost; the murmur/splitmix kernels remain available as the
-  * `*Fast` variants where raw throughput matters more than auditability.
+  * at no design cost.
   */
 private[graft] object Md5 {
 

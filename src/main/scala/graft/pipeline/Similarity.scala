@@ -76,13 +76,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (greatest(norm(a), lit(1e-12)) * greatest(norm(b), lit(1e-12)))
 
-  @inline private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /** Plane components for [[hyperplaneSignature]], deterministic in
     * (plane, dim): md5-lower-64 of "pl<p>_<i>" scaled to [-1, 1) from its
     * top 53 bits. md5-derived (not splitmix) so an external SQL engine can

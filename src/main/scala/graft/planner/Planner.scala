@@ -151,7 +151,7 @@ object Planner {
         tryEagerAggregate(tails.toVector, ops, aggPreds, q)
       else None
 
-    var tail: Tail = eagerTail.map(t => fixedPoint(t, ops)).getOrElse {
+    val tail: Tail = eagerTail.map(t => fixedPoint(t, ops)).getOrElse {
       // 2. merge-tails: greedy maximal shared-var pair (parse.clj:416-432),
       // restricted to JOINABLE tails (parse.clj:394-407): an unground tail
       // may only join when every non-join field is unground — otherwise its

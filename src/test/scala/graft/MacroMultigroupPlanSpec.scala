@@ -282,48 +282,37 @@ class MacroMultigroupPlanSpec extends SparkTestBase {
     // since r17 the stats table materializes at a stage boundary (ONE
     // aggregation pass feeds all union branches, not one per branch), so
     // the candidates' final plan reads a checkpoint; the map-side-combine
-    // contract is asserted on the stats aggregations themselves — each
-    // operator routes its stats through a NAMED single code path
-    // (bandBucketStats / hammingBlockStats / cosineBucketStats), so these
-    // asserts pin the aggregation the operators actually run (r18: the
-    // embedding/semantic asserts deleted in r17 are restored here against
-    // their real code paths)
-    val pstats = plan(graft.pipeline.Dedup.bandBucketStats(
-      graft.pipeline.Dedup.bandedSignatures(docs)))
-    assert(pstats.contains("partial_count"),
-      s"bucket stats must combine map-side:\n$pstats")
-    assert(!pstats.contains("Window"),
-      s"bucket stats must not window-sort:\n$pstats")
-    // hamming block stats: plan shape depends only on the input schema
-    // (doc_id, sh, blk, blk_val) — the operator feeds the same helper
+    // contract is asserted on the stats aggregation itself — every guard
+    // routes its stats through the ONE shared code path (bucketStats),
+    // asserted here over each family's row shape: minhash bands (plain
+    // min-id hub), simhash blocks and cosine buckets (struct hubs)
     val bucketedShape = docs.select(col("doc_id"),
       col("doc_id").cast("bigint").as("sh"),
       (col("doc_id") % 4).cast("int").as("blk"),
       (col("doc_id") % 65536).cast("bigint").as("blk_val"))
-    val phs = plan(graft.pipeline.Dedup.hammingBlockStats(bucketedShape))
-    assert(phs.contains("partial_count"),
-      s"hamming block stats must combine map-side:\n$phs")
-    assert(!phs.contains("Window"),
-      s"hamming block stats must not window-sort:\n$phs")
-    // cosine bucket stats: shared by embeddingNearDup (hyperplane
-    // buckets) and semanticPairs (IVF cells) via bucketedCosinePairs
     val sigsShape = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"),
       (col("vec_id") % 8).cast("string").as("bucket"))
-    val pcs = plan(graft.pipeline.Dedup.cosineBucketStats(
-      sigsShape, "vec_id", "embedding"))
-    assert(pcs.contains("partial_count"),
-      s"cosine bucket stats must combine map-side:\n$pcs")
-    assert(!pcs.contains("Window"),
-      s"cosine bucket stats must not window-sort:\n$pcs")
+    val shapes = Seq(
+      ("minhash", graft.pipeline.Dedup.bandedSignatures(docs),
+        Seq("band", "band_key"), "doc_id", Nil),
+      ("hamming", bucketedShape, Seq("blk", "blk_val"), "doc_id", Seq("sh")),
+      ("cosine", sigsShape, Seq("bucket"), "vec_id", Seq("embedding")))
+    for ((family, rows, keys, id, payload) <- shapes) {
+      val pst = plan(graft.pipeline.Dedup.bucketStats(rows, keys, id, payload))
+      assert(pst.contains("partial_count"),
+        s"$family bucket stats must combine map-side:\n$pst")
+      assert(!pst.contains("Window"),
+        s"$family bucket stats must not window-sort:\n$pst")
+    }
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val pe = plan(graft.pipeline.Dedup.embeddingNearDup(
       emb, planes = 6, threshold = 0.2, maxBucketSize = 64))
     assert(!pe.contains("Window"), s"embedding guard must not window-sort:\n$pe")
     assert(pe.contains("BroadcastHashJoin"),
       s"embedding oversize set must broadcast onto bucketed vectors:\n$pe")
-    // SemDeDup cells ride the same shared guard (bucketedCosinePairs) —
+    // SemDeDup cells ride the same shared guard (bucketPairs) —
     // assert the shape anyway so a future split can't silently lose it
     val cb = graft.pipeline.Similarity.kmeansCentroids(emb, cells = 4, iters = 1)
     val ps = plan(graft.pipeline.Dedup.semanticPairs(

@@ -715,7 +715,9 @@ class PipelineSpec extends SparkTestBase {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept == (0L until 50L).toSet, s"got $kept")
     // star CC produces the identical survivor set
-    val keptStar = Dedup.embeddingDedup(dupped, threshold = 0.999, ccAlgorithm = "star")
+    val starComp = Dedup.componentsStar(
+      Dedup.embeddingNearDup(dupped, threshold = 0.999).select("id_a", "id_b"))
+    val keptStar = Dedup.survivorsOf(dupped, "vec_id", starComp)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(keptStar == kept)
   }
@@ -732,8 +734,10 @@ class PipelineSpec extends SparkTestBase {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept == (0L until 50L).toSet, s"got $kept")
     // star CC parity
-    val keptStar = Dedup.semanticDedup(dupped, codebook, threshold = 0.999,
-      ccAlgorithm = "star").select("vec_id").collect().map(_.getLong(0)).toSet
+    val starComp = Dedup.componentsStar(Dedup.semanticPairs(dupped, codebook,
+      threshold = 0.999).select("id_a", "id_b"))
+    val keptStar = Dedup.survivorsOf(dupped, "vec_id", starComp)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(keptStar == kept)
     // hot cell: 300 copies of one embedding all route to one cell; the
     // guard emits exactly n-1 star edges from the min-id copy

@@ -76,25 +76,35 @@ class ScaleLadderSpec extends SparkTestBase {
       else shifted
     }.reduce(_ unionAll _)
 
-  private def survivorIds(df: DataFrame, cc: String): Set[Long] =
-    Dedup.nearDupDedup(df, threshold = 0.6, ccAlgorithm = cc)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+  private def ids(df: DataFrame): Set[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  private def verifiedPairs(df: DataFrame): DataFrame =
+    Dedup.jaccardVerify(Dedup.minhashCandidates(df), df, threshold = 0.6)
+
+  private def survivorIds(df: DataFrame): Set[Long] =
+    ids(Dedup.nearDupDedup(df, threshold = 0.6))
+
+  /** The same dedup with star-contraction components over the same
+    * verified pairs. */
+  private def starSurvivorIds(df: DataFrame): Set[Long] =
+    ids(Dedup.survivorsOf(df, "doc_id",
+      Dedup.componentsStar(verifiedPairs(df).select("id_a", "id_b"))))
 
   test("law 1: verbatim C-copy replication dedups back to the base survivor set") {
-    val baseSurv = survivorIds(base, "label")
+    val baseSurv = survivorIds(base)
     val verbatim = replicate(gateCap = 0)
-    val scaled = survivorIds(verbatim, "label")
+    val scaled = survivorIds(verbatim)
     assert(scaled == baseSurv,
       s"fixed point broken: ${(scaled -- baseSurv).take(5)} extra, " +
         s"${(baseSurv -- scaled).take(5)} missing of ${baseSurv.size}")
     // law 3 on the verbatim corpus: the star-contraction twin agrees
-    assert(survivorIds(verbatim, "star") == scaled)
+    assert(starSurvivorIds(verbatim) == scaled)
   }
 
   private def crossCopyEdges(fresh: DataFrame) =
-    Dedup.jaccardVerify(Dedup.minhashCandidates(fresh), fresh, threshold = 0.6)
-      .filter((col("id_a") / Offset).cast("long")
-        =!= (col("id_b") / Offset).cast("long"))
+    verifiedPairs(fresh).filter((col("id_a") / Offset).cast("long")
+      =!= (col("id_b") / Offset).cast("long"))
 
   test("law 2: fully re-keyed copies are decorrelated - zero verified cross-copy pairs") {
     val fresh = replicate(gateCap = 256)
@@ -103,17 +113,17 @@ class ScaleLadderSpec extends SparkTestBase {
       s"cross-copy edges exist: ${cross.take(3).mkString(", ")}")
 
     // components therefore live within copies: survivors scale with C
-    val scaled = survivorIds(fresh, "label")
+    val scaled = survivorIds(fresh)
     val per = scaled.groupBy(_ / Offset).map(_._2.size)
     assert(per.size == Copies, s"expected survivors in all $Copies copies")
-    val baseN = survivorIds(base, "label").size
+    val baseN = survivorIds(base).size
     // full re-keying can only BREAK near-twin clusters (misaligned
     // positions diverge), never create ones, so per-copy survivors sit
     // in [baseN, corpus size]
     assert(per.forall(n => n >= baseN && n <= base.count()),
       s"per-copy survivor counts off: $per vs base $baseN")
     // law 3 on the fresh corpus
-    assert(survivorIds(fresh, "star") == scaled)
+    assert(starSurvivorIds(fresh) == scaled)
   }
 
   test("law 2': at the production 45% rate the cross-copy tail is bounded, not zero") {
@@ -122,6 +132,6 @@ class ScaleLadderSpec extends SparkTestBase {
     // measured 4 at this seed; bound leaves room for threshold drift
     // without letting a real decorrelation bug (hundreds of edges) pass
     assert(crossN <= 10, s"cross-copy tail blew up: $crossN edges")
-    assert(survivorIds(fresh, "star") == survivorIds(fresh, "label"))
+    assert(starSurvivorIds(fresh) == survivorIds(fresh))
   }
 }
