@@ -650,7 +650,7 @@ object Bench {
       val offset = 1000000000L // far above any sf0.1 key (make_sf1.py scheme)
       Seq("documents" -> "doc_id", "embeddings" -> "vec_id").foreach {
         case (t, key) =>
-          val src = spark.read.parquet(s"$sfDir/$t.parquet")
+          val src = sources.Taps.parquet(spark, s"$sfDir/$t.parquet")
           (0 until copies).map(i => src.withColumn(key,
               col(key).cast("long") + lit(i.toLong * offset)))
             .reduce(_ unionAll _)

@@ -11,11 +11,27 @@ import scala.jdk.CollectionConverters._
   * jobs inside p51 costs the time" view the aggregate bench can't give.
   * Given an out dir, it also writes each query's formatted plan to
   * `<outDir>/<query>.txt` (the plans/rN evidence of an optimization
-  * round). Usage:
+  * round), normalised by [[normalisePlan]] so that the dirs of two runs
+  * or two trees compare with a plain `diff -r`. Usage:
   *   SPARK_GRAFT_ONLY=p51_similarity_rank runMain graft.Prof [outDir]
   * Reads SPARK_GRAFT_SF_DIR (default sf0.1) and the LocalSession
   * variables (SPARK_GRAFT_CPUS, SPARK_GRAFT_CONF). */
 object Prof {
+
+  /** Renumbers a plan dump's session-global counters in order of first
+    * appearance: the `plan_id=` of exchanges, the `#<exprId>` of
+    * attributes and subqueries, the planner's fresh variables (`_g<n>`,
+    * [[logic.Vars.gen]]) and the ids of checkpointed RDDs (`RDD[<n>]`).
+    * All of them grow with every plan or job a session runs, so the same
+    * query's raw dumps differ between runs; the renumbered ones differ
+    * only where the plans do. */
+  def normalisePlan(plan: String): String =
+    Seq("(?<=plan_id=)\\d+", "(?<=#)\\d+", "(?<=\\b_g)\\d+", "(?<=RDD\\[)\\d+")
+      .foldLeft(plan) { (text, counter) =>
+        val ids = scala.collection.mutable.HashMap[String, Int]()
+        counter.r.replaceAllIn(text, m => ids.getOrElseUpdate(m.matched, ids.size + 1).toString)
+      }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
@@ -24,7 +40,7 @@ object Prof {
     val outDir = args.headOption.map(new java.io.File(_))
     outDir.foreach(_.mkdirs())
     val spark = LocalSession("ERROR")
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    sources.Taps.parquet(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
@@ -50,8 +66,8 @@ object Prof {
         // stage-boundary queries (localCheckpoint / scratch taps) must
         // EXECUTE their upstream stages before the final frame can even
         // be planned, so building the frame is the dump, not a dry run
-        val plan = fn(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
+        val plan = normalisePlan(fn(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted")))
         java.nio.file.Files.writeString(new java.io.File(dir, s"$name.txt").toPath, plan)
         println(s"[prof] wrote plan $name (${plan.length} chars)")
       }

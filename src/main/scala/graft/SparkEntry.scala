@@ -4,6 +4,7 @@ import graft.dsl._
 import graft.logic.Query
 import graft.ops.Ops
 import graft.pipeline.{Bpe, Dedup, Similarity, TextAnalysis}
+import graft.sources.Taps
 import graft.QuerySpec.{Contract, Oracle}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +23,7 @@ import org.apache.spark.sql.types._
 object SparkEntry {
 
   private def tbl(dir: String, name: String)(s: SparkSession): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Taps.parquet(s, s"$dir/$name.parquet")
 
   /** Registers `path` (a scratch tap dir) for recursive deletion when
     * this JVM exits — idempotent per path, so repeated query runs in one
@@ -1148,8 +1149,8 @@ object SparkEntry {
         .write.mode("overwrite").parquet(qtyOut)
     }
     wf.step("combine")("urgent", "qty") { _ =>
-      s.read.parquet(urgentOut)
-        .join(s.read.parquet(qtyOut), col("o_orderkey") === col("l_orderkey"))
+      Taps.parquet(s, urgentOut)
+        .join(Taps.parquet(s, qtyOut), col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n_orders"),
           sum(col("qty")).cast(DoubleType).as("total_qty"))
@@ -1167,7 +1168,7 @@ object SparkEntry {
     require(r2.values.forall(_.isSuccess), s"workflow resume failed: $r2")
     require(Files.exists(sentinel),
       "resume re-executed a token-marked step (sentinel wiped)")
-    s.read.parquet(finalOut)
+    Taps.parquet(s, finalOut)
   }
 
   /** TEMPLATE TAP round trip in the oracle gate (reference
@@ -1191,7 +1192,7 @@ object SparkEntry {
       .map(_.getName).toSet
     require(partDirs == Set("l_returnflag=A", "l_returnflag=N", "l_returnflag=R"),
       s"template tap wrote unexpected partition dirs: $partDirs")
-    s.read.parquet(root)
+    Taps.parquet(s, root)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("cnt"),
         sum(col("qty")).cast(DoubleType).as("sum_qty"),
@@ -1301,7 +1302,7 @@ object SparkEntry {
       .select(enc(col("l_orderkey"), col("l_returnflag"),
         col("l_quantity")).as("bin"))
       .write.mode("overwrite").parquet(root)
-    Proto.parse(s.read.parquet(root), "bin", spec)
+    Proto.parse(Taps.parquet(s, root), "bin", spec)
       .groupBy("flag")
       .agg(count(lit(1)).as("cnt"),
         sum(col("qty").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_qty"),
@@ -1328,7 +1329,7 @@ object SparkEntry {
       .select(enc(col("o_orderkey"), col("o_orderpriority"),
         col("o_custkey")).as("bin"))
       .write.mode("overwrite").parquet(root)
-    Thrift.parse(s.read.parquet(root), "bin", spec)
+    Thrift.parse(Taps.parquet(s, root), "bin", spec)
       .groupBy("prio")
       .agg(count(lit(1)).as("cnt"),
         sum(col("okey")).as("sum_keys"),
@@ -1922,7 +1923,7 @@ object SparkEntry {
     require(rep.filesOut >= 1 && rep.filesOut <= 4,
       s"compaction must land at most 4 target-sized files, got ${rep.filesOut}")
     // clustering proof: per-file key ranges (4 driver rows) are disjoint
-    val ranges = s.read.parquet(s"$root/compacted")
+    val ranges = Taps.parquet(s, s"$root/compacted")
       .groupBy(input_file_name().as("f"))
       .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"))
       .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
@@ -1930,7 +1931,7 @@ object SparkEntry {
       require(w(0)._2 <= w(1)._1,
         s"compacted files overlap on the sort key: ${ranges.mkString(" ")}")
     }
-    s.read.parquet(s"$root/compacted")
+    Taps.parquet(s, s"$root/compacted")
       .groupBy((col("l_orderkey") % 53).as("bucket"))
       .agg(count(lit(1)).as("cnt"),
         sum(col("qty")).cast(DoubleType).as("sum_qty"),
@@ -2043,7 +2044,7 @@ object SparkEntry {
     }
     val checks = Seq(Check.NotNull("o_custkey"))
     def run(): Unit = {
-      val src = s.readStream.schema(s.read.parquet(stage).schema)
+      val src = s.readStream.schema(Taps.parquet(s, stage).schema)
         .option("maxFilesPerTrigger", 1).parquet(stage)
       graft.streaming.Streams.streamingPublish(
         src, pub, s"$root/ckpt", checks): Unit

@@ -50,7 +50,7 @@ object Stage {
             s"$ModeKey=reliable needs SparkContext.setCheckpointDir or $DirKey")
           val path = s"$base/stage_${java.util.UUID.randomUUID().toString.take(12)}"
           df.write.parquet(path)
-          spark.read.parquet(path)
+          graft.sources.Taps.parquet(spark, path)
         }
       case other =>
         throw new IllegalArgumentException(

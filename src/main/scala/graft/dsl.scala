@@ -43,7 +43,7 @@ object dsl {
     GenPred(load, fields)
 
   def parquet(path: String)(fields: Any*): GenPred =
-    GenPred(_.read.parquet(path), fields)
+    GenPred(graft.sources.Taps.parquet(_, path), fields)
 
   /** In-memory rows as a generator (reference memory-source-tap,
     * cascading/tap.clj:230-236). Small by construction → broadcast hint.

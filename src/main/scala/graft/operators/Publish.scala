@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Taps
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -206,7 +207,7 @@ object Publish {
     require(in.nonEmpty, s"compact: no data files under $inDir")
     val bytesIn = in.map(_._2).sum
     val nOut = math.max(1L, (bytesIn + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(inDir)
+    val df = Taps.parquet(spark, inDir)
     val shaped =
       if (sortCols.isEmpty) df.repartition(nOut)
       else df.repartitionByRange(nOut, sortCols.map(col): _*)
@@ -274,7 +275,7 @@ object Publish {
   def current(spark: SparkSession, root: String): DataFrame = {
     val v = currentVersion(spark, root).getOrElse(
       sys.error(s"publish root $root has no published version"))
-    spark.read.parquet(s"$root/v$v")
+    Taps.parquet(spark, s"$root/v$v")
   }
 
   // ---- writer lease -------------------------------------------------
@@ -524,7 +525,7 @@ object Publish {
     df.write.mode("error").parquet(stagingPath.toString)
     hook("staged")
     val clean = constraints.isEmpty || {
-      val staged = spark.read.parquet(stagingPath.toString)
+      val staged = Taps.parquet(spark, stagingPath.toString)
       !Check.check(staged, constraints).collect()
         .exists(r => r.getString(0) != "rows" && r.getLong(1) > 0)
     }
@@ -826,7 +827,7 @@ object Publish {
     df.write.mode("error").parquet(stagingPath.toString)
     hook("staged")
 
-    val staged = spark.read.parquet(stagingPath.toString)
+    val staged = Taps.parquet(spark, stagingPath.toString)
     val report =
       if (constraints.isEmpty)
         staged.agg(count(lit(1)).as("value"))

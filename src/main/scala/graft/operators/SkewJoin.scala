@@ -67,7 +67,7 @@ object SkewJoin {
     * joined input; feed the result to `saltedJoin(hot = Some(...))`. */
   def hotFromStats(spark: org.apache.spark.sql.SparkSession, path: String,
       keys: Seq[String], threshold: Long): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Taps.parquet(spark, path)
       .filter(col("_n") > threshold)
       .select(keys.map(col): _*)
 

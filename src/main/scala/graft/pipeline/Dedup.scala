@@ -422,7 +422,7 @@ object Dedup {
     * construction (same pair table, p72 pins it in the oracle gate). */
   def candidatesTap(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Taps.parquet(spark, path)
 
   /** Oversize LSH buckets (the guard's side channel): one row per capped
     * (band, band_key) with its size — feed to monitoring; members are in

@@ -960,10 +960,10 @@ object TextAnalysis {
     * ones. */
   def verifyShards(spark: org.apache.spark.sql.SparkSession, dir: String,
       idCol: String = "doc_id", seed: String = "shuffle"): DataFrame = {
-    val stored = spark.read.parquet(s"$dir/_manifest")
+    val stored = graft.sources.Taps.parquet(spark, s"$dir/_manifest")
       .select(col("shard"), col("rows").as("rows_stored"),
         col("id_fold").as("fold_stored"))
-    val observed = shardManifest(spark.read.parquet(dir), idCol, seed)
+    val observed = shardManifest(graft.sources.Taps.parquet(spark, dir), idCol, seed)
       .select(col("shard"), col("rows").as("rows_seen"),
         col("id_fold").as("fold_seen"))
     stored.join(observed, Seq("shard"), "full_outer")

@@ -1,7 +1,15 @@
 package graft.sources
 
 import graft.logic.GenPred
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.control.NonFatal
 
 /** Tap surface — sources and sinks (reference
   * cascalog-core/src/clj/cascalog/cascading/tap.clj and
@@ -27,7 +35,112 @@ object Taps {
 
   /** parquet is the native tuple format (the seqfile role). */
   def seqfile(path: String)(fields: Any*): GenPred =
-    GenPred(_.read.parquet(path), fields)
+    GenPred(parquet(_, path), fields)
+
+  /** A parquet source whose fields are known before the query runs (a
+    * tap's `get-out-fields`, PAPER §1.2): the schema comes from one
+    * footer read on the driver, so building the frame launches no
+    * Spark job. A plain `spark.read.parquet` infers the same schema
+    * with a one-task job per read.
+    *
+    * The footer is the one Spark's inference would open: the first
+    * data file by path. It converts the way Spark's inference does: the
+    * writer's Spark schema when the footer carries one, else the
+    * parquet schema under the session's parquet confs (nanos as long,
+    * INT96, NTZ). Falls back to the plain read, job and all, when
+    * `spark.sql.parquet.mergeSchema` is on, the path is a glob, the dir
+    * holds summary files (`_metadata`, `_common_metadata`) or a
+    * streaming sink log (`_spark_metadata`), its layout is neither flat
+    * nor `k=v` partitioned, it holds no data file, a data column shares
+    * a partition column's name, or the footer read or parse throws.
+    * Nothing is cached: every call lists and reads afresh. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
+  /** The writer's Spark schema in a parquet footer (Spark's own key). */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Summary files and the streaming sink log: each makes Spark read
+    * the dir differently from its plain listing. */
+  private val SpecialNames = Set("_metadata", "_common_metadata", "_spark_metadata")
+
+  /** Names Spark's file index skips: `_`-prefixed (except `k=v` dirs),
+    * `.`-prefixed and in-flight `._COPYING_` files. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** A parquet path's data files, listed through Hadoop `FileSystem`
+    * with the session's Hadoop conf (the one Spark's scan of the same
+    * path uses), sorted by path as Spark's schema inference sorts them;
+    * `keys` are the partition column names of a `k=v` layout. None when
+    * no footer can stand in for Spark's own listing (see [[parquet]]). */
+  private[graft] final case class Leaves(conf: Configuration, files: Seq[FileStatus],
+      keys: Set[String])
+
+  private[graft] def leaves(spark: SparkSession, path: String): Option[Leaves] = {
+    if (path.exists("*?[]{}\\".contains(_))) return None
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val top = fs.getFileStatus(root)
+    // flat dir: its files; `k=v` dirs only: their leaves, recursively
+    def walk(dir: Path): Option[Seq[FileStatus]] = {
+      val all = fs.listStatus(dir).toSeq
+      val (dirs, files) = all.filterNot(f => hidden(f.getPath.getName)).partition(_.isDirectory)
+      if (all.exists(f => SpecialNames(f.getPath.getName))) None
+      else if (dirs.isEmpty) Some(files)
+      else if (files.isEmpty && dirs.forall(_.getPath.getName.contains("=")))
+        dirs.foldLeft(Option(Seq.empty[FileStatus]))((acc, d) =>
+          acc.flatMap(a => walk(d.getPath).map(a ++ _)))
+      else None
+    }
+    val found =
+      if (top.isDirectory) walk(top.getPath)
+      else Option.when(!hidden(root.getName))(Seq(top))
+    found.map { files =>
+      val sorted = files.sortBy(_.getPath.toString)
+      val keys = sorted.headOption.toSeq.flatMap { f =>
+        Iterator.iterate(f.getPath.getParent)(_.getParent)
+          .takeWhile(p => p != null && p.depth > top.getPath.depth)
+          .map(_.getName).filter(_.contains("=")).map(_.takeWhile(_ != '='))
+      }
+      Leaves(conf, sorted, keys.toSet)
+    }
+  }
+
+  /** Reads one parquet file's footer. */
+  private[graft] def withFooter[T](conf: Configuration, f: FileStatus)(
+      read: ParquetMetadata => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try read(r.getFooter) finally r.close()
+  }
+
+  /** The schema a plain read of `path` would infer, from the first data
+    * file's footer; None where [[parquet]] falls back. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sql = spark.sessionState.conf
+    if (sql.isParquetSchemaMergingEnabled) None
+    else try leaves(spark, path).flatMap { l =>
+      l.files.headOption.map { f =>
+        withFooter(l.conf, f) { footer =>
+          val meta = footer.getFileMetaData
+          Option(meta.getKeyValueMetaData.get(SparkRowMetadata)) match {
+            case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
+            // the converter arguments Spark's own inference passes
+            case None => new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = sql.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+              nanosAsLong = sql.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+              .convert(meta.getSchema)
+          }
+        }
+      }.filterNot(_.fieldNames.exists(n => l.keys.exists(_.equalsIgnoreCase(n))))
+    } catch { case NonFatal(_) => None }
+  }
 
   /** hfs-textline (tap.clj:50-57): one tuple per line. */
   def textline(path: String)(fields: Any*): GenPred =

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Taps
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -14,7 +15,7 @@ object Streams {
 
   /** File-based stream source over a directory of parquet drops. */
   def parquetStream(s: SparkSession, path: String, schemaFrom: String): DataFrame =
-    s.readStream.schema(s.read.parquet(schemaFrom).schema).parquet(path)
+    s.readStream.schema(Taps.parquet(s, schemaFrom).schema).parquet(path)
 
   /** Event-time tumbling/sliding window aggregation with a watermark —
     * the streaming analog of the engine's Grouping node. */
@@ -749,7 +750,7 @@ object Streams {
     }
     // ordered staging adds the __slice partition column to the staged
     // schema — select it away so `f` sees exactly the input columns
-    val src = s.readStream.schema(s.read.parquet(stage).schema)
+    val src = s.readStream.schema(Taps.parquet(s, stage).schema)
       .option("maxFilesPerTrigger", 1).parquet(stage)
       .select(inCols.map(col): _*)
     if (sink == "parquet") {
@@ -803,23 +804,19 @@ object Streams {
   /** Total row count of a directory of parquet part files, read from
     * the file FOOTERS on the driver — metadata only, no Spark job (the
     * staging dir holds `parts` files, so this is a handful of footer
-    * reads). Listed through Hadoop `FileSystem`, so `file:` URIs and
-    * non-local stores count too; a directory with no `part-` files falls
-    * back to a Spark count rather than reporting 0 rows. */
+    * reads). Lists and opens footers as [[graft.sources.Taps.parquet]]
+    * does: through Hadoop `FileSystem` with the session's Hadoop conf,
+    * so `file:` URIs, non-local stores and session-level Hadoop
+    * settings count too; a layout the tap would not read from footers,
+    * or one with no data file, falls back to a Spark count rather than
+    * reporting 0 rows. */
   private[graft] def parquetFooterRowCount(s: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val parts = fs.listStatus(root).toSeq
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-    if (parts.isEmpty) s.read.parquet(dir).count()
-    else parts.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+    import scala.jdk.CollectionConverters._
+    Taps.leaves(s, dir).filter(_.files.nonEmpty) match {
+      case Some(l) => l.files.map(f => Taps.withFooter(l.conf, f)(
+        _.getBlocks.asScala.map(_.getRowCount).sum)).sum
+      case None => Taps.parquet(s, dir).count()
+    }
   }
 
   private[graft] def deleteRecursivelyNoFollow(path: String): Unit = {

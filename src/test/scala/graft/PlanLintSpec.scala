@@ -18,7 +18,8 @@ package graft
   * sections before it). This gate makes the whole-surface audit a
   * driver-checkable invariant instead of a per-round manual read.
   *
-  * One source lint rides along: local sessions are built in one place. */
+  * Two source lints ride along: local sessions are built in one place,
+  * and single-path parquet reads go through `Taps.parquet`. */
 class PlanLintSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -149,16 +150,49 @@ class PlanLintSpec extends SparkTestBase {
       s"only $dimBroadcastSeen dimension-side broadcast joins seen — dim lint walking nothing?")
   }
 
+  test("Prof's normalised plan dumps of one query match across builds") {
+    def dump() = SparkEntry.queries("q03_join_agg")(spark, sf).queryExecution
+      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val (a, b) = (dump(), dump())
+    assert(a != b, "raw dumps already equal: nothing left to normalise?")
+    assert(Prof.normalisePlan(a) == Prof.normalisePlan(b))
+    assert(Prof.normalisePlan(a).contains("plan_id=1]"))
+    assert(Prof.normalisePlan(
+      "_g9#7 = y#3, z#7 [plan_id=40] [plan_id=9] [plan_id=40] a_g5 MapPartitionsRDD[192]") ==
+      "_g1#1 = y#2, z#1 [plan_id=1] [plan_id=2] [plan_id=1] a_g5 MapPartitionsRDD[1]")
+  }
+
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+    }
+
   test("local sessions under src/ are built only in LocalSession.scala") {
     val needle = "SparkSession" + ".builder" // split so this file does not match
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
-      }
     val all = scalaFiles(new java.io.File("src"))
     assert(all.size > 100, s"only ${all.size} sources under src/ — wrong working dir?")
     val sites = all.filter(f => java.nio.file.Files.readString(f.toPath).contains(needle))
     assert(sites.map(_.getName) == Seq("LocalSession.scala"),
       s"build sessions through graft.LocalSession, not in ${sites.mkString(", ")}")
+  }
+
+  /** Multi-path reads, which no single footer describes: Publish's
+    * committed-batch union and its fold input. */
+  private val multiPathReads = Set(
+    "Publish.scala" -> "spark.read.parquet(parts: _*)",
+    "Publish.scala" -> "spark.read.parquet(dirs: _*)")
+
+  test("single-path parquet reads under src/main go through Taps.parquet") {
+    // a parquet read without a schema launches an inference job
+    val call = """[\w.]*\.read\s*\.parquet\([^)]*\)""".r
+    val all = scalaFiles(new java.io.File("src/main"))
+    assert(all.size > 50, s"only ${all.size} sources under src/main — wrong working dir?")
+    val sites = all.flatMap { f =>
+      call.findAllIn(java.nio.file.Files.readString(f.toPath)).map(f.getName -> _)
+    }
+    assert(sites.exists(_._1 == "Taps.scala"), "Taps.parquet reads no parquet?")
+    val stray = sites.filterNot { case (file, c) => file == "Taps.scala" || multiPathReads((file, c)) }
+    assert(stray.isEmpty, s"read parquet through graft.sources.Taps.parquet: ${stray.mkString(", ")}")
+    assert(multiPathReads.forall(sites.contains), "a listed multi-path read is gone: drop it from the list")
   }
 }
