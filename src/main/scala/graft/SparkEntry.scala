@@ -5,6 +5,7 @@ import graft.logic.Query
 import graft.ops.Ops
 import graft.pipeline.{Bpe, Dedup, Similarity, TextAnalysis}
 import graft.sources.Taps
+import graft.OracleSql._
 import graft.QuerySpec.{Contract, Oracle}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2439,76 +2440,19 @@ object SparkEntry {
       |  WHERE dt.source NOT IN ('src0', 'src1')
       |    AND de.source IN ('src0', 'src1')
       |  GROUP BY 1, 2),
-      |shs AS (
-      |  SELECT doc_id, CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-      |    ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-      |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS sset
-      |  FROM tk),
+      |""".stripMargin + shingleSets(mat = false) + s""",
       |bad AS (
       |  SELECT DISTINCT train_id FROM cand
       |  JOIN shs sa ON sa.doc_id = cand.train_id
       |  JOIN shs sb ON sb.doc_id = cand.eval_id
-      |  WHERE (CASE WHEN len(list_distinct(sa.sset || sb.sset)) = 0 THEN 1.0
-      |    ELSE CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE)
-      |      / len(list_distinct(sa.sset || sb.sset)) END) >= 0.8)
+      |  WHERE (${jaccard("sa", "sb")}) >= 0.8)
       |SELECT d.* FROM documents d
       |WHERE d.source NOT IN ('src0', 'src1')
       |  AND d.doc_id NOT IN (SELECT train_id FROM bad)""".stripMargin
 
-  /** Shared by p11 (min-label CC) and p17 (star CC): identical output. */
-  /** Common oracle chain of the end-to-end near-dup dedups: minhash →
-    * banding → jaccard-0.6 verify → recursive-CTE components, ending at
-    * `comp (id, component)`. p11/p17 append min-id survivor selection;
-    * p76 appends the quality-keyed (max n_chars, ties min id) variant. */
-  private lazy val neardupCompCte: String =
-    """WITH RECURSIVE tk AS MATERIALIZED (
-          |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-          |    x -> x != '') AS toks FROM documents),
-          |sh AS MATERIALIZED (
-          |  SELECT doc_id, (md5_number_lower(s) & 2147483647) AS base
-          |  FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-          |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM tk) u),
-          |perm AS MATERIALIZED (
-          |  SELECT s.s AS s, ((md5_number_lower('ga' || s.s) & 2147483647) | 1) AS a,
-          |         (md5_number_lower('gb' || s.s) & 2147483647) AS b
-          |  FROM generate_series(0, 63) s(s)),
-          |mins AS MATERIALIZED (
-          |  SELECT doc_id, s, CAST(MIN((a * base + b) % 2305843009213693951) AS BIGINT) AS v
-          |  FROM sh, perm GROUP BY doc_id, s),
-          |sig AS MATERIALIZED (SELECT doc_id, list(v ORDER BY s) AS sig FROM mins GROUP BY doc_id),
-          |banded AS MATERIALIZED (
-          |  SELECT doc_id, b.b AS band,
-          |    array_to_string(list_slice(sig, 4*b.b + 1, 4*b.b + 4), ',') AS band_key
-          |  FROM sig, generate_series(0, 15) b(b)),
-          |cand AS MATERIALIZED (
-          |  SELECT l.doc_id AS id_a, r.doc_id AS id_b
-          |  FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
-          |  WHERE l.doc_id < r.doc_id GROUP BY 1, 2),
-          |shs AS MATERIALIZED (
-          |  SELECT doc_id, CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-          |    ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-          |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS sset FROM tk),
-          |verified AS MATERIALIZED (
-          |  SELECT id_a, id_b FROM cand
-          |  JOIN shs sa ON sa.doc_id = cand.id_a JOIN shs sb ON sb.doc_id = cand.id_b
-          |  WHERE (CASE WHEN len(list_distinct(sa.sset || sb.sset)) = 0 THEN 1.0
-          |    ELSE CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE)
-          |      / len(list_distinct(sa.sset || sb.sset)) END) >= 0.6),
-          |sym AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM verified
-          |        UNION ALL SELECT id_b, id_a FROM verified),
-          |reach AS (
-          |  SELECT DISTINCT s AS id, s AS lab FROM sym
-          |  UNION
-          |  SELECT sym.d AS id, reach.lab FROM reach JOIN sym ON sym.s = reach.id),
-          |comp AS MATERIALIZED (SELECT id, MIN(lab) AS component FROM reach GROUP BY id)""".stripMargin
-
-  private lazy val neardupOracleSql: String = neardupCompCte +
-    """,
-      |keep AS (SELECT component, MIN(id) AS doc_id FROM comp GROUP BY component)
-      |SELECT d.doc_id, d.lang, d.source FROM documents d
-      |LEFT JOIN comp ON comp.id = d.doc_id WHERE comp.id IS NULL
-      |UNION ALL
-      |SELECT d.doc_id, d.lang, d.source FROM keep JOIN documents d ON d.doc_id = keep.doc_id""".stripMargin
+  /** p11 and p17: min-id survivors of the near-dup components. */
+  private lazy val neardupOracleSql: String =
+    neardupCompCte + ",\n" + minIdSurvivors("documents", mat = false)
 
   /** p76: quality-keyed survivors — per component keep the max-n_chars
     * member, ties broken by min id (the engine casts scores to double;
@@ -2529,64 +2473,25 @@ object SparkEntry {
       |SELECT d.doc_id, d.lang, d.source, d.n_chars
       |FROM keep JOIN documents d ON d.doc_id = keep.doc_id""".stripMargin
 
-  /** Shared oracle CTE chain replicating [[Dedup.minhashCandidates]]
-    * (k=64, bands=16, 3-word shingles) over `documents`: ends at `pairs`
-    * (distinct id_a < id_b) and `nodes` — the similarity-graph base the
-    * p51 (PageRank) and p54 (triangles) oracles both build on. */
-  private val MinhashGraphCte: String =
-    """WITH tk AS MATERIALIZED (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-      |    x -> x != '') AS toks FROM documents),
-      |sh AS MATERIALIZED (
-      |  SELECT doc_id, (md5_number_lower(s) & 2147483647) AS base
-      |  FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-      |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM tk) u),
-      |perm AS MATERIALIZED (
-      |  SELECT s.s AS s, ((md5_number_lower('ga' || s.s) & 2147483647) | 1) AS a,
-      |         (md5_number_lower('gb' || s.s) & 2147483647) AS b
-      |  FROM generate_series(0, 63) s(s)),
-      |mins AS MATERIALIZED (
-      |  SELECT doc_id, s, CAST(MIN((a * base + b) % 2305843009213693951) AS BIGINT) AS v
-      |  FROM sh, perm GROUP BY doc_id, s),
-      |sig AS MATERIALIZED (SELECT doc_id, list(v ORDER BY s) AS sig FROM mins GROUP BY doc_id),
-      |banded AS MATERIALIZED (
-      |  SELECT doc_id, b.b AS band,
-      |    array_to_string(list_slice(sig, 4*b.b + 1, 4*b.b + 4), ',') AS band_key
-      |  FROM sig, generate_series(0, 15) b(b)),
-      |pairs AS MATERIALIZED (
-      |  SELECT l.doc_id AS id_a, r.doc_id AS id_b
-      |  FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
-      |  WHERE l.doc_id < r.doc_id GROUP BY 1, 2),
-      |nodes AS MATERIALIZED (SELECT doc_id AS id FROM documents)""".stripMargin
-
   /** Shared by p06 (batch banded candidates) and p90 (the streaming
     * bucket-state build of the SAME pair set — batch-boundary-
     * invariant because every arrival pairs against all prior bucket
     * members): shingle → 64 md5-permutation minima → 16 bands →
     * all pairs per (band, band_key), dedup'd across bands. */
   private lazy val minhashPairsOracleSql: String =
-    """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id, (md5_number_lower(s) & 2147483647) AS base
-        |  FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM tk) u),
-        |perm AS (
-        |  SELECT s.s AS s, ((md5_number_lower('ga' || s.s) & 2147483647) | 1) AS a,
-        |         (md5_number_lower('gb' || s.s) & 2147483647) AS b
-        |  FROM generate_series(0, 63) s(s)),
-        |mins AS (
-        |  SELECT doc_id, s, CAST(MIN((a * base + b) % 2305843009213693951) AS BIGINT) AS v
-        |  FROM sh, perm GROUP BY doc_id, s),
-        |sig AS (SELECT doc_id, list(v ORDER BY s) AS sig FROM mins GROUP BY doc_id),
-        |banded AS (
-        |  SELECT doc_id, b.b AS band,
-        |    array_to_string(list_slice(sig, 4*b.b + 1, 4*b.b + 4), ',') AS band_key
-        |  FROM sig, generate_series(0, 15) b(b))
-        |SELECT l.doc_id AS id_a, r.doc_id AS id_b
-        |FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
-        |WHERE l.doc_id < r.doc_id GROUP BY 1, 2""".stripMargin
+    "WITH " + minhashBands("documents", mat = false) + "\n" + bandPairs
+
+  /** Exact cosine top-`k` over the whole corpus for the probes `vec_id <
+    * probes`: p08, and p34, whose full-nProbe IVF routing reaches every
+    * cell and so equals brute force by definition. */
+  private def bruteKnnOracleSql(probes: Int, k: Int): String =
+    "WITH " + vectors("c") + s""",
+      |p AS (SELECT vec_id AS probe_id, e AS pe FROM c WHERE vec_id < $probes),
+      |scored AS (
+      |  SELECT p.probe_id, c.vec_id AS corpus_id,
+      |    ${cosine("e", "pe")} AS cosine
+      |  FROM c, p)
+      |${topKByCosine(k)}""".stripMargin
 
   /** q23's statistical contract, the check that replaces the hash for the
     * rows-only engine-RNG Bernoulli sample. [[Verify]] executes it at
@@ -2826,38 +2731,11 @@ object SparkEntry {
         |    / greatest(length(text), 1) AS upper_ratio
         |FROM t""".stripMargin)),
     QuerySpec("p13_jaccard_verify", p13, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id, (md5_number_lower(s) & 2147483647) AS base
-        |  FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM tk) u),
-        |perm AS (
-        |  SELECT s.s AS s, ((md5_number_lower('ga' || s.s) & 2147483647) | 1) AS a,
-        |         (md5_number_lower('gb' || s.s) & 2147483647) AS b
-        |  FROM generate_series(0, 63) s(s)),
-        |mins AS (
-        |  SELECT doc_id, s, CAST(MIN((a * base + b) % 2305843009213693951) AS BIGINT) AS v
-        |  FROM sh, perm GROUP BY doc_id, s),
-        |sig AS (SELECT doc_id, list(v ORDER BY s) AS sig FROM mins GROUP BY doc_id),
-        |banded AS (
-        |  SELECT doc_id, b.b AS band,
-        |    array_to_string(list_slice(sig, 4*b.b + 1, 4*b.b + 4), ',') AS band_key
-        |  FROM sig, generate_series(0, 15) b(b)),
-        |cand AS (
-        |  SELECT l.doc_id AS id_a, r.doc_id AS id_b
-        |  FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
-        |  WHERE l.doc_id < r.doc_id GROUP BY 1, 2),
-        |shs AS (
-        |  SELECT doc_id, CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |    ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS sset FROM tk)
+      "WITH " + minhashBands("documents", mat = false) + ",\n" +
+        bandPairsCte("cand", mat = false) + ",\n" + shingleSets(mat = false) + s"""
         |SELECT id_a, id_b, jaccard FROM (
         |  SELECT id_a, id_b,
-        |    CASE WHEN len(list_distinct(sa.sset || sb.sset)) = 0 THEN 1.0
-        |      ELSE CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE)
-        |        / len(list_distinct(sa.sset || sb.sset)) END AS jaccard
+        |    ${jaccard("sa", "sb")} AS jaccard
         |  FROM cand
         |  JOIN shs sa ON sa.doc_id = cand.id_a JOIN shs sb ON sb.doc_id = cand.id_b) t
         |WHERE jaccard >= 0.5""".stripMargin)),
@@ -2934,51 +2812,7 @@ object SparkEntry {
         |          FROM documents) d0) t
         |  WHERE length(text) >= 100 AND pr <= 0.2 AND sr >= 0.01
         |    AND (CASE WHEN best.hits > 0 THEN best.lang ELSE 'und' END) = 'en'),
-        |tk AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM gated),
-        |sh AS MATERIALIZED (
-        |  SELECT doc_id, (md5_number_lower(s) & 2147483647) AS base
-        |  FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM tk) u),
-        |perm AS MATERIALIZED (
-        |  SELECT s.s AS s, ((md5_number_lower('ga' || s.s) & 2147483647) | 1) AS a,
-        |         (md5_number_lower('gb' || s.s) & 2147483647) AS b
-        |  FROM generate_series(0, 63) s(s)),
-        |mins AS MATERIALIZED (
-        |  SELECT doc_id, s, CAST(MIN((a * base + b) % 2305843009213693951) AS BIGINT) AS v
-        |  FROM sh, perm GROUP BY doc_id, s),
-        |sig AS MATERIALIZED (SELECT doc_id, list(v ORDER BY s) AS sig FROM mins GROUP BY doc_id),
-        |banded AS MATERIALIZED (
-        |  SELECT doc_id, b.b AS band,
-        |    array_to_string(list_slice(sig, 4*b.b + 1, 4*b.b + 4), ',') AS band_key
-        |  FROM sig, generate_series(0, 15) b(b)),
-        |cand AS MATERIALIZED (
-        |  SELECT l.doc_id AS id_a, r.doc_id AS id_b
-        |  FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
-        |  WHERE l.doc_id < r.doc_id GROUP BY 1, 2),
-        |shs AS MATERIALIZED (
-        |  SELECT doc_id, CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |    ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS sset FROM tk),
-        |verified AS MATERIALIZED (
-        |  SELECT id_a, id_b FROM cand
-        |  JOIN shs sa ON sa.doc_id = cand.id_a JOIN shs sb ON sb.doc_id = cand.id_b
-        |  WHERE (CASE WHEN len(list_distinct(sa.sset || sb.sset)) = 0 THEN 1.0
-        |    ELSE CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE)
-        |      / len(list_distinct(sa.sset || sb.sset)) END) >= 0.6),
-        |sym AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM verified
-        |        UNION ALL SELECT id_b, id_a FROM verified),
-        |reach AS (
-        |  SELECT DISTINCT s AS id, s AS lab FROM sym
-        |  UNION
-        |  SELECT sym.d AS id, reach.lab FROM reach JOIN sym ON sym.s = reach.id),
-        |comp AS MATERIALIZED (SELECT id, MIN(lab) AS component FROM reach GROUP BY id),
-        |keep AS MATERIALIZED (SELECT component, MIN(id) AS doc_id FROM comp GROUP BY component)
-        |SELECT d.doc_id, d.lang, d.source FROM gated d
-        |LEFT JOIN comp ON comp.id = d.doc_id WHERE comp.id IS NULL
-        |UNION ALL
-        |SELECT d.doc_id, d.lang, d.source FROM keep JOIN gated d ON d.doc_id = keep.doc_id""".stripMargin)),
+        |""".stripMargin + neardupComponents("gated") + ",\n" + minIdSurvivors("gated", mat = true))),
     // --- sketch-kernel oracles: the md5-derived kernels (graft.pipeline.Md5)
     // are replicated step-for-step in SQL; md5_number_lower == Md5.lower64.
     QuerySpec("p05_fingerprint_langid", p05, Oracle(
@@ -3005,25 +2839,7 @@ object SparkEntry {
     replayed("p90_stream_lsh", "append", p90Staged, p90Transform, p90Post)(
       minhashPairsOracleSql),
     QuerySpec("p16_capped_candidates", p16, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id, (md5_number_lower(s) & 2147483647) AS base
-        |  FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM tk) u),
-        |perm AS (
-        |  SELECT s.s AS s, ((md5_number_lower('ga' || s.s) & 2147483647) | 1) AS a,
-        |         (md5_number_lower('gb' || s.s) & 2147483647) AS b
-        |  FROM generate_series(0, 63) s(s)),
-        |mins AS (
-        |  SELECT doc_id, s, CAST(MIN((a * base + b) % 2305843009213693951) AS BIGINT) AS v
-        |  FROM sh, perm GROUP BY doc_id, s),
-        |sig AS (SELECT doc_id, list(v ORDER BY s) AS sig FROM mins GROUP BY doc_id),
-        |banded AS (
-        |  SELECT doc_id, b.b AS band,
-        |    array_to_string(list_slice(sig, 4*b.b + 1, 4*b.b + 4), ',') AS band_key
-        |  FROM sig, generate_series(0, 15) b(b)),
+      "WITH " + minhashBands("documents", mat = false) + """,
         |sized AS (
         |  SELECT doc_id, band, band_key,
         |    COUNT(*) OVER (PARTITION BY band, band_key) AS bsz,
@@ -3036,74 +2852,17 @@ object SparkEntry {
         |SELECT hub AS id_a, doc_id AS id_b FROM sized
         |WHERE bsz > 2 AND doc_id != hub""".stripMargin)),
     QuerySpec("p07_simhash", p07, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
-        |th AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM tk),
-        |h AS (SELECT doc_id, n, md5_number_lower(tok) AS h FROM th),
-        |bits AS (
-        |  SELECT doc_id, s.b AS b,
-        |    CASE WHEN 2 * SUM(CASE WHEN (h >> s.b) & 1 = 1 THEN 1 ELSE 0 END) > MAX(n)
-        |         THEN 1::HUGEINT ELSE 0::HUGEINT END AS bit
-        |  FROM h, generate_series(0, 63) s(b) GROUP BY doc_id, s.b),
-        |shu AS (SELECT doc_id, SUM(bit * (1::HUGEINT << b)) AS v FROM bits GROUP BY doc_id)
+      "WITH " + simhashBits + """
         |SELECT doc_id, CAST(CASE WHEN v >= 9223372036854775808 THEN v - 18446744073709551616
         |  ELSE v END AS BIGINT) AS simhash FROM shu""".stripMargin)),
-    QuerySpec("p08_knn_brute", p08, Oracle(
-      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |p AS (SELECT vec_id AS probe_id, e AS pe FROM c WHERE vec_id < 8),
-        |scored AS (
-        |  SELECT p.probe_id, c.vec_id AS corpus_id,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> e[i]*pe[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> e[i]*e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> pe[i]*pe[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |  FROM c, p)
-        |SELECT probe_id, corpus_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, corpus_id) AS rn FROM scored) t
-        |WHERE rn <= 10""".stripMargin)),
+    QuerySpec("p08_knn_brute", p08, Oracle(bruteKnnOracleSql(probes = 8, k = 10))),
     // p34: nProbe = cells ⇒ IVF routing reaches every cell, the candidate
     // set is the full corpus, and the result is definitionally equal to
-    // exact brute-force top-k — which the SQL below recomputes
-    QuerySpec("p34_ivf_knn", p34, Oracle(
-      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |p AS (SELECT vec_id AS probe_id, e AS pe FROM c WHERE vec_id < 6),
-        |scored AS (
-        |  SELECT p.probe_id, c.vec_id AS corpus_id,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> e[i]*pe[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> e[i]*e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> pe[i]*pe[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |  FROM c, p)
-        |SELECT probe_id, corpus_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, corpus_id) AS rn FROM scored) t
-        |WHERE rn <= 8""".stripMargin)),
+    // exact brute-force top-k — which bruteKnnOracleSql recomputes
+    QuerySpec("p34_ivf_knn", p34, Oracle(bruteKnnOracleSql(probes = 6, k = 8))),
     QuerySpec("p09_knn_lsh", p09, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
-        |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
-        |      * (1.0/4503599627370496) - 1.0) AS comp
-        |  FROM generate_series(0, 3) p(p)),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS b
-        |  FROM (SELECT c0.vec_id, pl.p,
-        |      list_reduce(list_transform(generate_series(1, 64), i -> e[i] * comp[i]),
-        |        (x, y) -> x + y) AS proj
-        |    FROM c0, pl) t GROUP BY vec_id),
-        |pbuck AS (SELECT vec_id AS probe_id, unnest([b, xor(b, 1), xor(b, 2), xor(b, 4), xor(b, 8)]) AS b
-        |  FROM sig WHERE vec_id < 8),
-        |cand AS (SELECT DISTINCT pbuck.probe_id, sig.vec_id AS corpus_id
-        |  FROM sig JOIN pbuck USING (b)),
-        |scored AS (
-        |  SELECT cand.probe_id, cand.corpus_id,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> ce.e[i]*pe.e[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> ce.e[i]*ce.e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> pe.e[i]*pe.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |  FROM cand JOIN c0 ce ON ce.vec_id = cand.corpus_id
-        |            JOIN c0 pe ON pe.vec_id = cand.probe_id)
-        |SELECT probe_id, corpus_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, corpus_id) AS rn FROM scored) t
-        |WHERE rn <= 10""".stripMargin)),
+      "WITH " + vectors("c0") + ",\n" + hyperplaneSig(planes = 4) + ",\n" +
+        multiProbe("scored") + "\n" + topKByCosine(10))),
     QuerySpec("p11_neardup_dedup", p11, Oracle(neardupOracleSql)),
     QuerySpec("p17_neardup_star", p17, Oracle(neardupOracleSql)),
     QuerySpec("p76_quality_dedup", p76, Oracle(neardupByOracleSql)),
@@ -3209,9 +2968,7 @@ object SparkEntry {
         |WHERE l_orderkey IS NOT NULL
         |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)""".stripMargin)),
     QuerySpec("p18_contamination", p18, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
+      "WITH " + words("documents", mat = false) + """,
         |g AS (
         |  SELECT doc_id, unnest(CASE WHEN len(toks) <= 4
         |    THEN [array_to_string(toks, ' ')]
@@ -3275,137 +3032,38 @@ object SparkEntry {
       // memory sink's driver collect kills a 64 GB heap at the sf10 probe
       // scale, the file sink streams it with bounded driver memory
       sink = "parquet")(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
-        |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
-        |      * (1.0/4503599627370496) - 1.0) AS comp
-        |  FROM generate_series(0, 5) p(p)),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS b
-        |  FROM (SELECT c0.vec_id, pl.p,
-        |      list_reduce(list_transform(generate_series(1, 64), i -> e[i] * comp[i]),
-        |        (x, y) -> x + y) AS proj
-        |    FROM c0, pl) t GROUP BY vec_id)
-        |SELECT l.vec_id AS id_a, r.vec_id AS id_b
-        |FROM sig l JOIN sig r ON l.b = r.b AND l.vec_id < r.vec_id""".stripMargin),
+      "WITH " + vectors("c0") + ",\n" + hyperplaneSig(planes = 6) + "\n" + sigPairs),
     // p28: hyperplane planes are md5-derived (Similarity.planeComponents),
     // so buckets AND exact cosines replicate — same kernels p08/p09 check
     QuerySpec("p28_embedding_neardup", p28, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
-        |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
-        |      * (1.0/4503599627370496) - 1.0) AS comp
-        |  FROM generate_series(0, 5) p(p)),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS b
-        |  FROM (SELECT c0.vec_id, pl.p,
-        |      list_reduce(list_transform(generate_series(1, 64), i -> e[i] * comp[i]),
-        |        (x, y) -> x + y) AS proj
-        |    FROM c0, pl) t GROUP BY vec_id),
+      "WITH " + vectors("c0") + ",\n" + hyperplaneSig(planes = 6) + s""",
         |pairs AS (
-        |  SELECT l.vec_id AS id_a, r.vec_id AS id_b
-        |  FROM sig l JOIN sig r ON l.b = r.b AND l.vec_id < r.vec_id),
+        |  $sigPairs),
         |scored AS (
-        |  SELECT id_a, id_b,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*bb.e[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*a.e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> bb.e[i]*bb.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |  FROM pairs JOIN c0 a ON a.vec_id = pairs.id_a JOIN c0 bb ON bb.vec_id = pairs.id_b)
+        |  $pairCosines)
         |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.2""".stripMargin)),
     // p35: p28's verified pair set fed through the same recursive-CTE
     // label propagation the p11 oracle uses, then min-id survivors
     QuerySpec("p35_embedding_dedup", p35, Oracle(
-      """WITH RECURSIVE c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
-        |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
-        |      * (1.0/4503599627370496) - 1.0) AS comp
-        |  FROM generate_series(0, 5) p(p)),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS b
-        |  FROM (SELECT c0.vec_id, pl.p,
-        |      list_reduce(list_transform(generate_series(1, 64), i -> e[i] * comp[i]),
-        |        (x, y) -> x + y) AS proj
-        |    FROM c0, pl) t GROUP BY vec_id),
-        |pairs AS (
-        |  SELECT l.vec_id AS id_a, r.vec_id AS id_b
-        |  FROM sig l JOIN sig r ON l.b = r.b AND l.vec_id < r.vec_id),
-        |verified AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT id_a, id_b,
-        |      list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*bb.e[i]), (x,y) -> x+y) /
-        |      (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*a.e[i]), (x,y) -> x+y)), 1e-12) *
-        |       greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> bb.e[i]*bb.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |    FROM pairs JOIN c0 a ON a.vec_id = pairs.id_a JOIN c0 bb ON bb.vec_id = pairs.id_b) t
-        |  WHERE cosine >= 0.2),
-        |sym AS (SELECT id_a AS s, id_b AS d FROM verified
-        |        UNION ALL SELECT id_b, id_a FROM verified),
-        |reach AS (
-        |  SELECT DISTINCT s AS id, s AS lab FROM sym
-        |  UNION
-        |  SELECT sym.d AS id, reach.lab FROM reach JOIN sym ON sym.s = reach.id),
-        |comp AS (SELECT id, MIN(lab) AS component FROM reach GROUP BY id),
-        |keep AS (SELECT component, MIN(id) AS vec_id FROM comp GROUP BY component)
-        |SELECT e.vec_id FROM embeddings e
-        |LEFT JOIN comp ON comp.id = e.vec_id WHERE comp.id IS NULL
-        |UNION ALL
-        |SELECT vec_id FROM keep""".stripMargin)),
+      "WITH RECURSIVE " + vectors("c0") + ",\n" + hyperplaneSig(planes = 6) +
+        s",\npairs AS (\n  $sigPairs),\n" + cosineSurvivors(mat = false))),
     QuerySpec("p36_semantic_dedup", p36, Oracle(
-      """WITH RECURSIVE c0 AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |seeds AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
-        |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL ORDER BY vec_id LIMIT 8) t),
-        |dist AS MATERIALIZED (SELECT c0.vec_id, seeds.cell,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> (e[i]-s[i])*(e[i]-s[i])), (x,y) -> x+y) AS d
-        |  FROM c0, seeds WHERE c0.e IS NOT NULL),
-        |assign AS MATERIALIZED (SELECT vec_id, cell FROM (
-        |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |    FROM dist) t WHERE rn = 1),
+      "WITH RECURSIVE " + vectors("c0", mat = true) + ",\n" + ivfCells(mat = true) + """,
         |pairs AS MATERIALIZED (SELECT a.vec_id AS id_a, b.vec_id AS id_b
         |  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id),
-        |verified AS MATERIALIZED (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT id_a, id_b,
-        |      list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*bb.e[i]), (x,y) -> x+y) /
-        |      (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*a.e[i]), (x,y) -> x+y)), 1e-12) *
-        |       greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> bb.e[i]*bb.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |    FROM pairs JOIN c0 a ON a.vec_id = pairs.id_a JOIN c0 bb ON bb.vec_id = pairs.id_b) t
-        |  WHERE cosine >= 0.2),
-        |sym AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM verified
-        |        UNION ALL SELECT id_b, id_a FROM verified),
-        |reach AS (
-        |  SELECT DISTINCT s AS id, s AS lab FROM sym
-        |  UNION
-        |  SELECT sym.d AS id, reach.lab FROM reach JOIN sym ON sym.s = reach.id),
-        |comp AS MATERIALIZED (SELECT id, MIN(lab) AS component FROM reach GROUP BY id),
-        |keep AS MATERIALIZED (SELECT component, MIN(id) AS vec_id FROM comp GROUP BY component)
-        |SELECT e.vec_id FROM embeddings e
-        |LEFT JOIN comp ON comp.id = e.vec_id WHERE comp.id IS NULL
-        |UNION ALL
-        |SELECT vec_id FROM keep""".stripMargin)),
+        |""".stripMargin + cosineSurvivors(mat = true))),
     QuerySpec("p37_incr_semantic", p37, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
-        |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL AND vec_id < 400
-        |        ORDER BY vec_id LIMIT 8) t),
-        |dist AS (SELECT c0.vec_id, seeds.cell,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> (e[i]-s[i])*(e[i]-s[i])), (x,y) -> x+y) AS d
-        |  FROM c0, seeds WHERE c0.e IS NOT NULL),
-        |assign AS (SELECT vec_id, cell FROM (
-        |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |    FROM dist) t WHERE rn = 1),
+      "WITH " + vectors("c0") + ",\n" + ivfCells(seedFilter = "vec_id < 400") + s""",
         |pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
         |  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
         |  WHERE NOT (a.vec_id < 400 AND b.vec_id < 400))
         |SELECT id_a, id_b, cosine FROM (
-        |  SELECT id_a, id_b,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*bb.e[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> a.e[i]*a.e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> bb.e[i]*bb.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |  FROM pairs JOIN c0 a ON a.vec_id = pairs.id_a JOIN c0 bb ON bb.vec_id = pairs.id_b) t
+        |  $pairCosines) t
         |WHERE cosine >= 0.2""".stripMargin)),
     // dl is the probe's 64-entry (j, code)-ordered distance table; the ADC
     // fold runs ascending j exactly like the Scala kernel, so doubles match
     QuerySpec("p38_pq_knn", p38, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
+      "WITH " + vectors("c0") + """,
         |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, e AS s
         |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL ORDER BY vec_id LIMIT 8) t),
         |js AS (SELECT j FROM generate_series(0, 7) g(j)),
@@ -3433,46 +3091,7 @@ object SparkEntry {
     // 2 nearest cells with per-cell residual distance tables,
     // ascending-subspace ADC fold, rank window
     QuerySpec("p39_ivfpq_knn", p39, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
-        |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL AND vec_id >= 100
-        |        ORDER BY vec_id LIMIT 8) t),
-        |cdist AS (SELECT c0.vec_id, seeds.cell,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> (e[i]-s[i])*(e[i]-s[i])), (x,y) -> x+y) AS d
-        |  FROM c0, seeds WHERE c0.e IS NOT NULL),
-        |asg AS (SELECT vec_id, cell FROM (
-        |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |    FROM cdist) t WHERE rn = 1),
-        |res AS (SELECT c0.vec_id, asg.cell,
-        |    list_transform(generate_series(1, 64), i -> c0.e[i] - seeds.s[i]) AS r
-        |  FROM c0 JOIN asg USING (vec_id) JOIN seeds ON seeds.cell = asg.cell),
-        |bseeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, r AS bs
-        |  FROM (SELECT vec_id, r FROM res ORDER BY vec_id LIMIT 8) t),
-        |js AS (SELECT j FROM generate_series(0, 7) g(j)),
-        |bdist AS (SELECT res.vec_id, js.j, bseeds.code,
-        |    list_reduce(list_transform(generate_series(1, 8),
-        |      i -> (r[js.j*8+i]-bs[js.j*8+i])*(r[js.j*8+i]-bs[js.j*8+i])), (x,y) -> x+y) AS d
-        |  FROM res, js, bseeds),
-        |al AS (SELECT b.vec_id, asg.cell, list(code ORDER BY j) AS cl
-        |  FROM (SELECT vec_id, j, code FROM (
-        |      SELECT vec_id, j, code, ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d, code) AS rn
-        |      FROM bdist) t WHERE rn = 1) b
-        |  JOIN asg ON asg.vec_id = b.vec_id GROUP BY b.vec_id, asg.cell),
-        |proute AS (SELECT vec_id AS probe_id, cell FROM (
-        |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |    FROM cdist WHERE vec_id < 4) t WHERE rn <= 2),
-        |pres AS (SELECT p.probe_id, p.cell,
-        |    list_transform(generate_series(1, 64), i -> c0.e[i] - seeds.s[i]) AS pr
-        |  FROM proute p JOIN c0 ON c0.vec_id = p.probe_id JOIN seeds ON seeds.cell = p.cell),
-        |pdt0 AS (SELECT pres.probe_id, pres.cell, js.j, bseeds.code,
-        |    list_reduce(list_transform(generate_series(1, 8),
-        |      i -> (pr[js.j*8+i]-bs[js.j*8+i])*(pr[js.j*8+i]-bs[js.j*8+i])), (x,y) -> x+y) AS d
-        |  FROM pres, js, bseeds),
-        |pdt AS (SELECT probe_id, cell, list(d ORDER BY j, code) AS dl
-        |  FROM pdt0 GROUP BY probe_id, cell),
-        |scored AS (SELECT pdt.probe_id, al.vec_id AS corpus_id,
-        |    list_reduce(list_transform(generate_series(1, 8), j -> dl[(j-1)*8 + cl[j] + 1]), (x,y) -> x+y) AS adist
-        |  FROM pdt JOIN al ON al.cell = pdt.cell)
+      ivfAdcCte + """
         |SELECT probe_id, corpus_id, adist, CAST(rn AS INTEGER) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY adist, corpus_id) AS rn
         |  FROM scored) t
@@ -3481,38 +3100,17 @@ object SparkEntry {
     // approx top-k (p09 replica) on (probe, corpus); truth drives the
     // grouping so index-missed probes report recall 0
     QuerySpec("p40_ann_recall", p40, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
+      "WITH " + vectors("c0") + s""",
         |p AS (SELECT vec_id AS probe_id, e AS pe FROM c0 WHERE vec_id < 8),
         |bscore AS (
         |  SELECT p.probe_id, c0.vec_id AS corpus_id,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> e[i]*pe[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> e[i]*e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> pe[i]*pe[i]), (x,y) -> x+y)), 1e-12)) AS cosine
+        |    ${cosine("e", "pe")} AS cosine
         |  FROM c0, p),
         |bt AS (SELECT probe_id, corpus_id FROM (
         |  SELECT probe_id, corpus_id, ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, corpus_id) AS rn FROM bscore) t WHERE rn <= 10),
-        |pl AS (SELECT p.p AS p, list_transform(generate_series(0, 63),
-        |    i -> CAST(md5_number_lower('pl' || p.p || '_' || i) >> 11 AS DOUBLE)
-        |      * (1.0/4503599627370496) - 1.0) AS comp
-        |  FROM generate_series(0, 3) p(p)),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS b
-        |  FROM (SELECT c0.vec_id, pl.p,
-        |      list_reduce(list_transform(generate_series(1, 64), i -> e[i] * comp[i]),
-        |        (x, y) -> x + y) AS proj
-        |    FROM c0, pl) t GROUP BY vec_id),
-        |pbuck AS (SELECT vec_id AS probe_id, unnest([b, xor(b, 1), xor(b, 2), xor(b, 4), xor(b, 8)]) AS b
-        |  FROM sig WHERE vec_id < 8),
-        |cand AS (SELECT DISTINCT pbuck.probe_id, sig.vec_id AS corpus_id
-        |  FROM sig JOIN pbuck USING (b)),
-        |ascore AS (
-        |  SELECT cand.probe_id, cand.corpus_id,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> ce.e[i]*pe.e[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> ce.e[i]*ce.e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> pe.e[i]*pe.e[i]), (x,y) -> x+y)), 1e-12)) AS cosine
-        |  FROM cand JOIN c0 ce ON ce.vec_id = cand.corpus_id
-        |            JOIN c0 pe ON pe.vec_id = cand.probe_id),
+        |${hyperplaneSig(planes = 4)},
+        |${multiProbe("ascore")},
         |ap AS (SELECT probe_id, corpus_id FROM (
         |  SELECT probe_id, corpus_id, ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, corpus_id) AS rn FROM ascore) t WHERE rn <= 10)
@@ -3527,7 +3125,7 @@ object SparkEntry {
     // midpoints mn + (code+0.5)·(span/255); constant dims code 0 and
     // dequantize to mn. Arithmetic order mirrors the Scala exactly.
     QuerySpec("p41_sq_knn", p41, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
+      "WITH " + vectors("c0") + """,
         |js AS (SELECT j FROM generate_series(1, 64) g(j)),
         |mm AS (SELECT j, MIN(e[j]) AS mn, MAX(e[j]) AS mx
         |  FROM c0, js WHERE e IS NOT NULL GROUP BY j),
@@ -3555,46 +3153,7 @@ object SparkEntry {
     // exact L2² on the raw (double-cast) vectors for the shortlisted
     // pairs only, final rank window on the exact distance
     QuerySpec("p42_ivfpq_refine", p42, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
-        |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL AND vec_id >= 100
-        |        ORDER BY vec_id LIMIT 8) t),
-        |cdist AS (SELECT c0.vec_id, seeds.cell,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> (e[i]-s[i])*(e[i]-s[i])), (x,y) -> x+y) AS d
-        |  FROM c0, seeds WHERE c0.e IS NOT NULL),
-        |asg AS (SELECT vec_id, cell FROM (
-        |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |    FROM cdist) t WHERE rn = 1),
-        |res AS (SELECT c0.vec_id, asg.cell,
-        |    list_transform(generate_series(1, 64), i -> c0.e[i] - seeds.s[i]) AS r
-        |  FROM c0 JOIN asg USING (vec_id) JOIN seeds ON seeds.cell = asg.cell),
-        |bseeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, r AS bs
-        |  FROM (SELECT vec_id, r FROM res ORDER BY vec_id LIMIT 8) t),
-        |js AS (SELECT j FROM generate_series(0, 7) g(j)),
-        |bdist AS (SELECT res.vec_id, js.j, bseeds.code,
-        |    list_reduce(list_transform(generate_series(1, 8),
-        |      i -> (r[js.j*8+i]-bs[js.j*8+i])*(r[js.j*8+i]-bs[js.j*8+i])), (x,y) -> x+y) AS d
-        |  FROM res, js, bseeds),
-        |al AS (SELECT b.vec_id, asg.cell, list(code ORDER BY j) AS cl
-        |  FROM (SELECT vec_id, j, code FROM (
-        |      SELECT vec_id, j, code, ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d, code) AS rn
-        |      FROM bdist) t WHERE rn = 1) b
-        |  JOIN asg ON asg.vec_id = b.vec_id GROUP BY b.vec_id, asg.cell),
-        |proute AS (SELECT vec_id AS probe_id, cell FROM (
-        |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |    FROM cdist WHERE vec_id < 4) t WHERE rn <= 2),
-        |pres AS (SELECT p.probe_id, p.cell,
-        |    list_transform(generate_series(1, 64), i -> c0.e[i] - seeds.s[i]) AS pr
-        |  FROM proute p JOIN c0 ON c0.vec_id = p.probe_id JOIN seeds ON seeds.cell = p.cell),
-        |pdt0 AS (SELECT pres.probe_id, pres.cell, js.j, bseeds.code,
-        |    list_reduce(list_transform(generate_series(1, 8),
-        |      i -> (pr[js.j*8+i]-bs[js.j*8+i])*(pr[js.j*8+i]-bs[js.j*8+i])), (x,y) -> x+y) AS d
-        |  FROM pres, js, bseeds),
-        |pdt AS (SELECT probe_id, cell, list(d ORDER BY j, code) AS dl
-        |  FROM pdt0 GROUP BY probe_id, cell),
-        |scored AS (SELECT pdt.probe_id, al.vec_id AS corpus_id,
-        |    list_reduce(list_transform(generate_series(1, 8), j -> dl[(j-1)*8 + cl[j] + 1]), (x,y) -> x+y) AS adist
-        |  FROM pdt JOIN al ON al.cell = pdt.cell),
+      ivfAdcCte + """,
         |cands AS (SELECT probe_id, corpus_id FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY adist, corpus_id) AS rn
         |  FROM scored) t WHERE rn <= 16),
@@ -3637,17 +3196,7 @@ object SparkEntry {
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
-        |bg AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-        |  FROM tk, unnest(generate_series(1, len(toks)-1)) AS u(i)
-        |  WHERE len(toks) >= 2),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT t) AS vs FROM (SELECT unnest(toks) AS t FROM tk)),
-        |term AS (SELECT bg.doc_id, CAST(floor(1.0e9 *
-        |    (CAST(c12.c12 + 1 AS DOUBLE) / CAST(c1.c1 + v.vs AS DOUBLE))) AS BIGINT) AS scaled
-        |  FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v),
-        |sc AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-        |    CAST(SUM(scaled) AS BIGINT) AS sum_scaled FROM term GROUP BY 1)
+        |""".stripMargin + addOneBigramLm + """
         |SELECT tk.doc_id, COALESCE(sc.n_bigrams, 0) AS n_bigrams,
         |  CAST(sc.sum_scaled AS DOUBLE) / (CAST(sc.n_bigrams AS DOUBLE) * 1.0e9) AS lm_score
         |FROM tk LEFT JOIN sc USING (doc_id)""".stripMargin)),
@@ -3709,16 +3258,7 @@ object SparkEntry {
         |    FROM t0) s WHERE logit >= 0.0),
         |tk AS (SELECT doc_id, text, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks FROM clf),
-        |bg AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-        |  FROM tk, unnest(generate_series(1, len(toks)-1)) AS u(i) WHERE len(toks) >= 2),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT t) AS vs FROM (SELECT unnest(toks) AS t FROM tk)),
-        |term AS (SELECT bg.doc_id, CAST(floor(1.0e9 *
-        |    (CAST(c12.c12 + 1 AS DOUBLE) / CAST(c1.c1 + v.vs AS DOUBLE))) AS BIGINT) AS scaled
-        |  FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v),
-        |sc AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-        |    CAST(SUM(scaled) AS BIGINT) AS sum_scaled FROM term GROUP BY 1),
+        |""".stripMargin + addOneBigramLm + """,
         |fluent AS (
         |  SELECT tk.doc_id, tk.text,
         |    CAST(sc.sum_scaled AS DOUBLE) / (CAST(sc.n_bigrams AS DOUBLE) * 1.0e9) AS lm_score
@@ -3745,14 +3285,7 @@ object SparkEntry {
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
-        |bg AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-        |  FROM tk, unnest(generate_series(1, len(toks)-1)) AS u(i)
-        |  WHERE len(toks) >= 2),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |ctx AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1, COUNT(*) AS nf
-        |  FROM c12 GROUP BY 1),
-        |cont AS (SELECT w2, COUNT(*) AS nb FROM c12 GROUP BY 1),
-        |na AS (SELECT COUNT(*) AS nall FROM c12),
+        |""".stripMargin + knBigramStats + """,
         |term AS (SELECT bg.doc_id, CAST(floor(1.0e9 * (
         |    (greatest(CAST(c12.c12 AS DOUBLE) - 0.75, 0.0)
         |     + 0.75 * CAST(ctx.nf AS DOUBLE)
@@ -3980,30 +3513,10 @@ object SparkEntry {
         |    ORDER BY slot ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS value
         |FROM j""".stripMargin)),
-    // p64: BM25 with k1=6/5, b=3/4 → integer saturation ratio
-    // 22·S·tf / (10·S·tf + 3·S + 9·dl·N); Robertson idf as the exact
-    // ratio (2N−2df+1)/(2df+1); both floor-quantized at 1e6 and the
-    // per-term product summed in DECIMAL so no Long overflow at any N.
+    // p64: the quantized BM25 terms (OracleSql.bm25Terms), the per-term
+    // product summed in DECIMAL so no Long overflow at any N.
     QuerySpec("p64_bm25_relevance", p64, Oracle(
-      """WITH tk AS (SELECT doc_id, list_filter(
-        |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
-        |  FROM documents),
-        |st AS (SELECT COUNT(*) AS n, CAST(SUM(len(toks)) AS BIGINT) AS s FROM tk),
-        |dft AS (SELECT term, COUNT(*) AS df FROM (
-        |    SELECT doc_id, unnest(list_distinct(toks)) AS term FROM tk) u
-        |  WHERE term IN ('spark', 'window', 'stream', 'merge') GROUP BY 1),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM (
-        |    SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tk) u
-        |  WHERE term IN ('spark', 'window', 'stream', 'merge') GROUP BY 1, 2, 3),
-        |term_sc AS (SELECT tf.doc_id,
-        |    CAST(floor(1.0e6 * ((CAST(tf.tf AS DOUBLE) * (22.0 * CAST(st.s AS DOUBLE)))
-        |      / (CAST(tf.tf AS DOUBLE) * (10.0 * CAST(st.s AS DOUBLE))
-        |         + 3.0 * CAST(st.s AS DOUBLE)
-        |         + CAST(tf.dl AS DOUBLE) * (9.0 * CAST(st.n AS DOUBLE)))))
-        |      AS BIGINT) AS tfq,
-        |    CAST(floor(1.0e6 * (CAST(2 * st.n + 1 - 2 * dft.df AS DOUBLE)
-        |      / CAST(2 * dft.df + 1 AS DOUBLE))) AS BIGINT) AS idfq
-        |  FROM tf JOIN dft USING (term) CROSS JOIN st),
+      "WITH " + bm25Terms + """,
         |sc AS (SELECT doc_id, COUNT(*) AS n_hits,
         |    SUM(CAST(tfq AS DECIMAL(19,0)) * CAST(idfq AS DECIMAL(19,0))) AS rel
         |  FROM term_sc GROUP BY 1)
@@ -4035,18 +3548,7 @@ object SparkEntry {
     // cell by sequential-sum squared L2 (ties to the lower cell); then
     // the mixtureSample md5-rank idiom with cells as strata.
     QuerySpec("p66_cluster_sample", p66, Oracle(
-      """WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-        |seeds AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, e AS s
-        |  FROM (SELECT vec_id, e FROM c0 WHERE e IS NOT NULL
-        |        ORDER BY vec_id LIMIT 8) t),
-        |dist AS (SELECT c0.vec_id, seeds.cell,
-        |    list_reduce(list_transform(generate_series(1, 64),
-        |      i -> (e[i]-s[i])*(e[i]-s[i])), (x,y) -> x+y) AS d
-        |  FROM c0, seeds WHERE c0.e IS NOT NULL),
-        |assign AS (SELECT vec_id, cell FROM (
-        |    SELECT vec_id, cell,
-        |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |    FROM dist) t WHERE rn = 1),
+      "WITH " + vectors("c0") + ",\n" + ivfCells() + """,
         |rk AS (SELECT vec_id, cell,
         |    ROW_NUMBER() OVER (PARTITION BY cell
         |      ORDER BY md5('g9:' || CAST(vec_id AS VARCHAR)), vec_id) AS pos
@@ -4061,14 +3563,7 @@ object SparkEntry {
       """WITH tk AS (SELECT doc_id, list_filter(
         |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
         |  FROM documents),
-        |bg AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-        |  FROM tk, unnest(generate_series(1, len(toks)-1)) AS u(i)
-        |  WHERE len(toks) >= 2),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |ctx AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1, COUNT(*) AS nf
-        |  FROM c12 GROUP BY 1),
-        |cont AS (SELECT w2, COUNT(*) AS nb FROM c12 GROUP BY 1),
-        |na AS (SELECT COUNT(*) AS nall FROM c12),
+        |""".stripMargin + knBigramStats + """,
         |tg AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2, toks[i+2] AS w3
         |  FROM tk, unnest(generate_series(1, len(toks)-2)) AS u(i)
         |  WHERE len(toks) >= 3),
@@ -4100,9 +3595,7 @@ object SparkEntry {
     // position order (string_agg skips the removed lines' NULLs; a doc of
     // only boilerplate COALESCEs to '').
     QuerySpec("p53_line_dedup", p53, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
+      "WITH " + words("documents", mat = false) + """,
         |lined AS (SELECT doc_id,
         |    string_agg(array_to_string(list_slice(toks, s.s, least(s.s + 9, len(toks))), ' '),
         |      chr(10) ORDER BY s.s) AS text
@@ -4166,9 +3659,7 @@ object SparkEntry {
     // rebuilt text compared verbatim (COALESCE: array_to_string([]) is
     // NULL in DuckDB, the engine emits '')
     QuerySpec("p31_span_excise", p31, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
+      "WITH " + words("documents", mat = false) + """,
         |g AS (SELECT doc_id, i - 1 AS pos,
         |    CAST(md5_number_lower(array_to_string(list_slice(toks, i, i + 5), ' '))
         |      & 2305843009213693951 AS BIGINT) AS gh
@@ -4202,9 +3693,7 @@ object SparkEntry {
     // p32: stride 12 = size 16 − overlap 4; only tail windows can fall
     // under minTokens, so emitted ordinal == window ordinal
     QuerySpec("p32_chunking", p32, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
+      "WITH " + words("documents", mat = false) + """,
         |ch AS (SELECT doc_id, CAST((s.s - 1) // 12 AS BIGINT) AS chunk_idx,
         |    list_slice(toks, s.s, least(s.s + 15, len(toks))) AS ctoks
         |  FROM tk, LATERAL unnest(generate_series(1, len(toks), 12)) s(s))
@@ -4427,36 +3916,16 @@ object SparkEntry {
     // p70: p64's BM25 replica ranked (rel DESC, id) top-50, p08's cosine
     // replica for probe 0 top-50, fused with floor(1e9/(60+rank)) terms
     QuerySpec("p70_hybrid_rank", p70, Oracle(
-      """WITH tk AS (SELECT doc_id, list_filter(
-        |    regexp_split_to_array(lower(trim(text)), '\W+'), x -> x != '') AS toks
-        |  FROM documents),
-        |st AS (SELECT COUNT(*) AS n, CAST(SUM(len(toks)) AS BIGINT) AS s FROM tk),
-        |dft AS (SELECT term, COUNT(*) AS df FROM (
-        |    SELECT doc_id, unnest(list_distinct(toks)) AS term FROM tk) u
-        |  WHERE term IN ('spark', 'window', 'stream', 'merge') GROUP BY 1),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM (
-        |    SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tk) u
-        |  WHERE term IN ('spark', 'window', 'stream', 'merge') GROUP BY 1, 2, 3),
-        |term_sc AS (SELECT tf.doc_id,
-        |    CAST(floor(1.0e6 * ((CAST(tf.tf AS DOUBLE) * (22.0 * CAST(st.s AS DOUBLE)))
-        |      / (CAST(tf.tf AS DOUBLE) * (10.0 * CAST(st.s AS DOUBLE))
-        |         + 3.0 * CAST(st.s AS DOUBLE)
-        |         + CAST(tf.dl AS DOUBLE) * (9.0 * CAST(st.n AS DOUBLE)))))
-        |      AS BIGINT) AS tfq,
-        |    CAST(floor(1.0e6 * (CAST(2 * st.n + 1 - 2 * dft.df AS DOUBLE)
-        |      / CAST(2 * dft.df + 1 AS DOUBLE))) AS BIGINT) AS idfq
-        |  FROM tf JOIN dft USING (term) CROSS JOIN st),
+      "WITH " + bm25Terms + s""",
         |sc AS (SELECT doc_id, SUM(CAST(tfq AS DECIMAL(19,0))
         |    * CAST(idfq AS DECIMAL(19,0))) AS rel FROM term_sc GROUP BY 1),
         |lex AS (SELECT doc_id, rk AS rank FROM (
         |    SELECT doc_id, ROW_NUMBER() OVER (ORDER BY rel DESC, doc_id) AS rk
         |    FROM sc) t WHERE rk <= 50),
-        |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
+        |${vectors("c")},
         |p0 AS (SELECT e AS pe FROM c WHERE vec_id = 0),
         |cos AS (SELECT c.vec_id AS doc_id,
-        |    list_reduce(list_transform(generate_series(1, 64), i -> e[i]*pe[i]), (x,y) -> x+y) /
-        |    (greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> e[i]*e[i]), (x,y) -> x+y)), 1e-12) *
-        |     greatest(sqrt(list_reduce(list_transform(generate_series(1, 64), i -> pe[i]*pe[i]), (x,y) -> x+y)), 1e-12)) AS cosine
+        |    ${cosine("e", "pe")} AS cosine
         |  FROM c, p0),
         |sem AS (SELECT doc_id, rk AS rank FROM (
         |    SELECT doc_id, ROW_NUMBER() OVER (ORDER BY cosine DESC, doc_id) AS rk
@@ -4478,9 +3947,7 @@ object SparkEntry {
     // p24: positional 6-gram hashes -> global occurrence counts -> per-doc
     // duplicated-start and covered-position stats (span-dedup signals)
     QuerySpec("p24_span_dedup", p24, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
+      "WITH " + words("documents", mat = false) + """,
         |g AS (
         |  SELECT doc_id, i - 1 AS pos,
         |    CAST(md5_number_lower(array_to_string(list_slice(toks, i, i + 5), ' '))
@@ -4548,33 +4015,13 @@ object SparkEntry {
     // p27: the p06 banding pipeline restricted to pairs touching the
     // delta (doc_id % 5 = 0) — exactly incrementalCandidates' contract
     QuerySpec("p27_incremental_neardup", p27, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id, (md5_number_lower(s) & 2147483647) AS base
-        |  FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM tk) u),
-        |perm AS (
-        |  SELECT s.s AS s, ((md5_number_lower('ga' || s.s) & 2147483647) | 1) AS a,
-        |         (md5_number_lower('gb' || s.s) & 2147483647) AS b
-        |  FROM generate_series(0, 63) s(s)),
-        |mins AS (
-        |  SELECT doc_id, s, CAST(MIN((a * base + b) % 2305843009213693951) AS BIGINT) AS v
-        |  FROM sh, perm GROUP BY doc_id, s),
-        |sig AS (SELECT doc_id, list(v ORDER BY s) AS sig FROM mins GROUP BY doc_id),
-        |banded AS (
-        |  SELECT doc_id, b.b AS band,
-        |    array_to_string(list_slice(sig, 4*b.b + 1, 4*b.b + 4), ',') AS band_key
-        |  FROM sig, generate_series(0, 15) b(b))
+      "WITH " + minhashBands("documents", mat = false) + """
         |SELECT LEAST(l.doc_id, r.doc_id) AS id_a, GREATEST(l.doc_id, r.doc_id) AS id_b
         |FROM banded l JOIN banded r ON l.band = r.band AND l.band_key = r.band_key
         |WHERE l.doc_id != r.doc_id AND (l.doc_id % 5 = 0 OR r.doc_id % 5 = 0)
         |GROUP BY 1, 2""".stripMargin)),
     QuerySpec("p20_repetition", p20, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-        |    x -> x != '') AS toks FROM documents),
+      "WITH " + words("documents", mat = false) + """,
         |bg AS (
         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
         |    i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -4589,16 +4036,7 @@ object SparkEntry {
         |  CAST(top AS DOUBLE) / total AS top_2gram_frac
         |FROM s""".stripMargin)),
     QuerySpec("p10_simhash_neardup", p10, Oracle(
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
-        |th AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok FROM tk),
-        |h AS (SELECT doc_id, n, md5_number_lower(tok) AS h FROM th),
-        |bits AS (
-        |  SELECT doc_id, s.b AS b,
-        |    CASE WHEN 2 * SUM(CASE WHEN (h >> s.b) & 1 = 1 THEN 1 ELSE 0 END) > MAX(n)
-        |         THEN 1::HUGEINT ELSE 0::HUGEINT END AS bit
-        |  FROM h, generate_series(0, 63) s(b) GROUP BY doc_id, s.b),
-        |shu AS (SELECT doc_id, SUM(bit * (1::HUGEINT << b)) AS v FROM bits GROUP BY doc_id),
+      "WITH " + simhashBits + """,
         |sh AS (SELECT doc_id, CAST(v AS UBIGINT) AS v,
         |  CAST(CASE WHEN v >= 9223372036854775808 THEN v - 18446744073709551616
         |    ELSE v END AS BIGINT) AS s FROM shu),
@@ -4967,48 +4405,4 @@ object SparkEntry {
            |FROM lineitem""".stripMargin)
     blocks.mkString("\nUNION ALL\n")
   }
-
-  /** Shared oracle chain of the containment family (p75/p77): shingle
-    * sets → 61-bit hashes → df-capped index, bottom-8 probes, ≥6-of-8
-    * (clamped) prefilter, exact intersection — ending at
-    * `scored (inner_id, outer_id, containment)` and `sz (doc_id, n)`. */
-  private lazy val containCte: String =
-    """WITH tk AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(trim(text)), '\W+'),
-      |    x -> x != '') AS toks FROM documents),
-      |shs AS (
-      |  SELECT doc_id, CASE
-      |    WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-      |    WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-      |    ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-      |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS sset
-      |  FROM tk),
-      |sh AS (
-      |  SELECT doc_id, CAST(md5_number_lower(s) & 2305843009213693951 AS BIGINT) AS gh
-      |  FROM (SELECT doc_id, unnest(sset) AS s FROM shs) u GROUP BY 1, 2),
-      |keep AS (SELECT gh FROM sh GROUP BY gh HAVING COUNT(*) <= 64),
-      |botm AS (SELECT doc_id, gh FROM (
-      |    SELECT doc_id, gh, row_number() OVER (PARTITION BY doc_id ORDER BY gh) AS rn
-      |    FROM sh) q WHERE rn <= 8),
-      |np AS (SELECT b.doc_id, COUNT(*) AS np
-      |  FROM botm b JOIN keep USING (gh) GROUP BY b.doc_id),
-      |cand AS (
-      |  SELECT inner_id, outer_id FROM (
-      |    SELECT b.doc_id AS inner_id, i.doc_id AS outer_id, COUNT(*) AS h
-      |    FROM botm b JOIN sh i USING (gh) JOIN keep USING (gh)
-      |    WHERE b.doc_id != i.doc_id GROUP BY 1, 2) c
-      |  JOIN np ON np.doc_id = c.inner_id
-      |  WHERE c.h >= LEAST(6, np.np)),
-      |inter AS (
-      |  SELECT c.inner_id, c.outer_id, COUNT(*) AS i_n
-      |  FROM cand c JOIN sh sa ON sa.doc_id = c.inner_id
-      |    JOIN sh sb ON sb.doc_id = c.outer_id AND sb.gh = sa.gh
-      |  GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      |scored AS (
-      |  SELECT c.inner_id, c.outer_id,
-      |    CAST(COALESCE(i.i_n, 0) AS DOUBLE) / sz.n AS containment
-      |  FROM cand c LEFT JOIN inter i
-      |    ON i.inner_id = c.inner_id AND i.outer_id = c.outer_id
-      |  JOIN sz ON sz.doc_id = c.inner_id)""".stripMargin
 }

@@ -1,7 +1,10 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.QuerySpec.Contract
 import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ListMap
 import scala.util.{Failure, Success, Try}
 
 /** Exercises exactly what the driver runs: entry() smoke (rows>0 at
@@ -88,6 +91,40 @@ class DriverContractSpec extends SparkTestBase {
       assert(e.getMessage.contains("duplicate query keys"), e.getMessage)
     }
     assert(SparkEntry.unique(Seq(spec("q01_a"), spec("q02_a"))).size == 2)
+  }
+
+  test("the sf10 oracle tools' CTE cuts hold on the registry's oracle SQL") {
+    assume(sys.env.getOrElse("PATH", "").split(':').exists(d =>
+      new java.io.File(d, "python3").canExecute), "python3 not on PATH")
+    // staged_oracle.py and cc_oracle.py take the oracle text verbatim from
+    // oracle_sql.json and cut it by CTE name; these are the cuts they make
+    val staged = ListMap(
+      "p06_minhash_pairs" -> "tk sh perm mins sig banded",
+      "p13_jaccard_verify" -> "tk sh perm mins sig banded cand shs",
+      "p28_embedding_neardup" -> "c0 pl sig pairs scored",
+      "p91_stream_embed" -> "c0 pl sig")
+    val closures = Seq("p11_neardup_dedup", "p15_curate", "p17_neardup_star",
+      "p35_embedding_dedup", "p36_semantic_dedup", "p76_quality_dedup", "p94_dedup_audit")
+    val json = java.nio.file.Files.createTempFile("graft_oracle_sql_", ".json")
+    java.nio.file.Files.writeString(json, new ObjectMapper().registerModule(DefaultScalaModule)
+      .writeValueAsString(SparkEntry.oracleSql))
+    val code =
+      s"""import json, re, sys
+         |sys.path.insert(0, 'tools')
+         |import staged_oracle
+         |sql = json.load(open('$json'))
+         |for n in ${staged.keys.mkString("['", "', '", "']")}:
+         |    print(n, *[c for c, _ in staged_oracle.parse_ctes(sql[n])[0]])
+         |for n in ${closures.mkString("['", "', '", "']")}:
+         |    print(n, 'sym', bool(re.search(r',\\s*sym\\s+AS\\b', sql[n])))
+         |print('p36 pairs', 'pairs AS MATERIALIZED (' in sql['p36_semantic_dedup'])
+         |print('p28 pairs', any(c == 'pairs' and re.search(r'FROM\\s+sig\\s+l\\s+JOIN\\s+sig\\s+r\\b', b)
+         |    for c, b in staged_oracle.parse_ctes(sql['p28_embedding_neardup'])[0]))
+         |""".stripMargin
+    val got = try scala.sys.process.Process(Seq("python3", "-c", code)).!!.trim.split('\n').toSeq
+      finally java.nio.file.Files.delete(json)
+    assert(got == staged.map { case (n, ctes) => s"$n $ctes" }.toSeq ++
+      closures.map(n => s"$n sym True") ++ Seq("p36 pairs True", "p28 pairs True"))
   }
 
   test("contract oracle SQL embeds the dump dir it is authored for") {

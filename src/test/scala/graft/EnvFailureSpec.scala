@@ -56,6 +56,32 @@ class EnvFailureSpec extends SparkTestBase {
     assert(large == 20.0, s"sf0.1 needs $large GB")
   }
 
+  test("compare_oracle --only: an unknown name fails and is listed, never silently skipped") {
+    assume(sys.env.getOrElse("PATH", "").split(':').exists(d =>
+      new java.io.File(d, "python3").canExecute), "python3 not on PATH")
+    val out = java.nio.file.Files.createTempDirectory("graft_only_")
+    java.nio.file.Files.writeString(out.resolve("oracle_sql.json"), """{"q01_multi_agg": "SELECT 1 AS x"}""")
+    def run(only: String): (Int, String) = {
+      val log = new StringBuffer
+      val code = scala.sys.process.Process(Seq("python3", "tools/compare_oracle.py",
+        "/root/testdata/sf0.01", out.toString, "--only", only))
+        .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n')))
+      (code, log.toString)
+    }
+    try {
+      // one typo beside a valid name: the run stops before evaluating any
+      val (c1, o1) = run("q01_multi_agg,q01_multi_ag")
+      assert(c1 != 0 && o1.contains("unknown query q01_multi_ag; valid: q01_multi_agg"), o1)
+      // typos only: this used to print "0/0 queries match" and exit 0
+      val (c2, o2) = run("q01_multi_ag,q03_join")
+      assert(c2 != 0 && o2.contains("unknown query q01_multi_ag, q03_join;"), o2)
+      assert(!o2.contains("queries match"), o2)
+    } finally {
+      java.nio.file.Files.delete(out.resolve("oracle_sql.json"))
+      java.nio.file.Files.delete(out)
+    }
+  }
+
   test("envFailureHeadline: the simulated disk-full artifact parses and self-describes") {
     // the full path a disk-full round takes: preflight message -> headline.
     // The headline must (a) start with {"metric" (the driver's parse

@@ -18,8 +18,9 @@ package graft
   * sections before it). This gate makes the whole-surface audit a
   * driver-checkable invariant instead of a per-round manual read.
   *
-  * Two source lints ride along: local sessions are built in one place,
-  * and single-path parquet reads go through `Taps.parquet`. */
+  * Three source lints ride along: local sessions are built in one place,
+  * oracle kernels are spelled once, and single-path parquet reads go
+  * through `Taps.parquet`. */
 class PlanLintSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -174,6 +175,19 @@ class PlanLintSpec extends SparkTestBase {
     val sites = all.filter(f => java.nio.file.Files.readString(f.toPath).contains(needle))
     assert(sites.map(_.getName) == Seq("LocalSession.scala"),
       s"build sessions through graft.LocalSession, not in ${sites.mkString(", ")}")
+  }
+
+  test("each oracle kernel is spelled once under src/main/scala") {
+    // the minhash permutations, the hyperplane planes and the recursive
+    // closure are OracleSql fragments; a second copy is a kernel pasted
+    // back into an oracle string
+    val all = scalaFiles(new java.io.File("src/main/scala"))
+    assert(all.size > 50, s"only ${all.size} sources under src/main/scala — wrong working dir?")
+    val text = all.map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
+    val counts = Seq("md5_number_lower('ga'", "md5_number_lower('pl'", "reach AS (").map { k =>
+      k -> java.util.regex.Pattern.quote(k).r.findAllIn(text).size
+    }
+    assert(counts.forall(_._2 == 1), s"compose oracles from OracleSql: ${counts.mkString(", ")}")
   }
 
   /** Multi-path reads, which no single footer describes: Publish's

@@ -21,7 +21,8 @@ sf0.1 sweeps; plain mode is fine at sf0.01 and below.
 
 `--only` (comma-separated names) restricts the run — re-checking a
 flagged query or finishing an interrupted sweep without re-evaluating
-everything.
+everything. A name the dump does not hold fails the run before any
+query is evaluated.
 """
 import json, os, subprocess, sys
 import pandas as pd
@@ -132,6 +133,13 @@ def main():
               + open(f'{out}/env_failure.json').read())
         sys.exit(2)
     oracle = json.load(open(f'{out}/oracle_sql.json'))
+    # an unknown --only name fails and lists the valid ones, as
+    # SparkEntry.select does: a typo must not pass as an empty clean run
+    valid = set(oracle) | {fn[:-len('.contract.json')] for fn in os.listdir(out)
+                           if fn.endswith('.contract.json')}
+    unknown = sorted((only or set()) - valid)
+    if unknown:
+        sys.exit(f"unknown query {', '.join(unknown)}; valid: {', '.join(sorted(valid))}")
     items = [(n, s) for n, s in sorted(oracle.items())
              if only is None or n in only]
     fails = []
