@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.ExplainMode
-import scala.jdk.CollectionConverters._
 
 /** Local tuning profiler (the driver's Bench stays as it is): for each
   * selected SparkEntry query, the min of `SPARK_GRAFT_REPS` (default 3)
-  * timed runs and the per-job table of the last one — every job's wall
-  * duration and the callsite that scheduled it, the "which of the 30
-  * jobs inside p51 costs the time" view the aggregate bench can't give.
+  * timed runs and the per-job table of the last one, recorded through
+  * [[obs.Recorder]] — every job's wall duration and label, the "which of
+  * the 30 jobs inside p51 costs the time" view the aggregate bench can't
+  * give — with the union of the job intervals and `outside_jobs`, the
+  * run's wall time minus that union (the time outside any job).
   * Given an out dir, it also writes each query's formatted plan to
   * `<outDir>/<query>.txt` (the plans/rN evidence of an optimization
   * round), normalised by [[normalisePlan]] so that the dirs of two runs
@@ -42,24 +42,6 @@ object Prof {
     val spark = LocalSession("ERROR")
     sources.Taps.parquet(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        // the job's domain label when an operator set one, else its
-        // result stage's name (the action's call site)
-        val site = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
-          .getOrElse("?")
-        starts.put(js.jobId, (js.time, site))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(starts.remove(je.jobId)).foreach { case (t0, site) =>
-          jobs.add((je.jobId, (je.time - t0) / 1e3, site))
-        }
-      }
-    }
     var total = 0.0
     sel.foreach { case QuerySpec(name, fn, _, _) =>
       outDir.foreach { dir =>
@@ -71,27 +53,20 @@ object Prof {
         java.nio.file.Files.writeString(new java.io.File(dir, s"$name.txt").toPath, plan)
         println(s"[prof] wrote plan $name (${plan.length} chars)")
       }
-      val times = (1 to reps).map { rep =>
-        if (rep == reps) spark.sparkContext.addSparkListener(listener)
+      def run(): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
-      // drain: wait (bounded) until every started job has ended, so a
-      // straggler job is neither dropped nor attributed to the next
-      // query's rows
-      var waited = 0
-      while (!starts.isEmpty && waited < 100) { Thread.sleep(100); waited += 1 }
-      Thread.sleep(500) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
-      starts.clear()
+      val warm = (1 until reps).map(_ => run())
+      val (last, rec) = obs.Recorder.record(spark)(run())
+      val times = warm :+ last
       total += times.min
-      val last = jobs.asScala.toSeq.sortBy(_._1)
-      jobs.clear()
+      val inJobs = rec.jobUnionMs / 1e3
       println(f"[prof] $name%-24s min=${times.min}%.2f  all=${times.map(t => f"$t%.2f").mkString(",")}" +
-        f"  last: ${last.size} jobs, sum=${last.map(_._2).sum}%.2f s")
-      last.foreach { case (id, d, site) =>
-        println(f"[prof]   job $id%3d $d%6.3f s  $site")
+        f"  last: ${rec.jobs.size} jobs, union=$inJobs%.2f s, outside_jobs=${last - inJobs}%.2f s")
+      rec.jobs.foreach { j =>
+        println(f"[prof]   job ${j.id}%3d ${(j.endMs - j.startMs) / 1e3}%6.3f s  ${j.label}")
       }
     }
     println(f"[prof] TOTAL(min) $total%.2f s")

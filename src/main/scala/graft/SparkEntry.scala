@@ -4277,16 +4277,6 @@ object SparkEntry {
           .filter(col("o_orderkey") % 6 =!= 3))))
   ))
 
-  /** p81: batched BPE training replayed round-for-round. Generated by
-    * the same loop shape the engine runs (`numMerges` unrolled rounds —
-    * NOT numMerges/batchMerges, so under-filled batches and early stops
-    * replay exactly; rounds after completion degenerate to identity via
-    * the `cap <= 0` guard). Per round: pair counts over the current type
-    * table, (count desc, a, b) ranking cut at the engine's fetch window,
-    * sequential symbol-disjoint acceptance as a list_reduce fold over
-    * 'a,b' strings (accumulator = ';'-joined accepted list — a member or
-    * product colliding with a higher-ranked acceptance is rejected), and
-    * the p47 merge-application fold per accepted rank. */
   /** p47/p50: the BPE ENCODE replay as an UNROLLED per-merge-round CTE
     * chain (VERDICT r15 #4). The recursive form kept the whole 9-step
     * working set live in one DuckDB recursion and was environment-bound
@@ -4320,6 +4310,16 @@ object SparkEntry {
     (base +: steps).mkString(",\n")
   }
 
+  /** p81: batched BPE training replayed round-for-round. Generated by
+    * the same loop shape the engine runs (`numMerges` unrolled rounds —
+    * NOT numMerges/batchMerges, so under-filled batches and early stops
+    * replay exactly; rounds after completion degenerate to identity via
+    * the `cap <= 0` guard). Per round: pair counts over the current type
+    * table, (count desc, a, b) ranking cut at the engine's fetch window,
+    * sequential symbol-disjoint acceptance as a list_reduce fold over
+    * 'a,b' strings (accumulator = ';'-joined accepted list — a member or
+    * product colliding with a higher-ranked acceptance is rejected), and
+    * the p47 merge-application fold per accepted rank. */
   private def batchedBpeOracleSql(numMerges: Int, m: Int, minPairFreq: Int): String = {
     val sb = new StringBuilder
     sb ++= """WITH RECURSIVE wt AS MATERIALIZED (

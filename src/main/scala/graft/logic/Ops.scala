@@ -33,8 +33,9 @@ final case class ColumnFilter(f: Seq[Column] => Column) extends Op
   * sum and count — merged as sum(sums)/sum(counts)). Lawful when
   * `merge(partial(xs₁) ∪ partial(xs₂)) == f(xs₁ ∪ xs₂)` for any split of
   * the group's rows — sums/counts/mins/maxes/averages, not
-  * count-distinct or variance. */
-/** `exactOnFloating`: whether the split preserves bit-identical results
+  * count-distinct or variance.
+  *
+  * `exactOnFloating`: whether the split preserves bit-identical results
   * when the partial columns are float/double. Min/max/count always do;
   * re-summed floating sums/averages regroup additions (last-ULP drift),
   * so the planner declines the rewrite for them unless the partials are

@@ -112,9 +112,14 @@ object Ops {
   // n-ary symmetric where the reference is (sum/min/max: k ins → k outs,
   // logic/ops_impl.clj:11-21)
 
+  /** Merge of partial counts: a sum over no partials is null, where a
+    * count over no rows (a global count of an empty input) is 0. */
+  private def sumCounts(ps: Seq[Column]): Seq[Column] =
+    ps.map(p => F.coalesce(F.sum(p), F.lit(0L)))
+
   /** c/count (ops.clj:160-162): zero-input aggregator. */
   val count: ColumnAgg = ColumnAgg(1, _ => Seq(F.count(F.lit(1))),
-    Some(AggDecompose(_ => Seq(F.count(F.lit(1))), _.map(F.sum))))
+    Some(AggDecompose(_ => Seq(F.count(F.lit(1))), sumCounts)))
   val sum: ColumnAgg = ColumnAgg(-1, _.map(F.sum),
     Some(AggDecompose(_.map(F.sum), _.map(F.sum), exactOnFloating = false)))
   val min: ColumnAgg = ColumnAgg(-1, _.map(F.min),
@@ -123,7 +128,7 @@ object Ops {
     Some(AggDecompose(_.map(F.max), _.map(F.max))))
   /** !count (ops.clj:170): counts non-null values of a nullable var. */
   val countNotNull: ColumnAgg = ColumnAgg(1, cs => Seq(F.count(cs.head)),
-    Some(AggDecompose(cs => Seq(F.count(cs.head)), _.map(F.sum))))
+    Some(AggDecompose(cs => Seq(F.count(cs.head)), sumCounts)))
   val avg: ColumnAgg = ColumnAgg(1, cs => Seq(F.avg(cs.head)),
     Some(AggDecompose(cs => Seq(F.sum(cs.head), F.count(cs.head)),
       ps => Seq(F.sum(ps(0)).cast(DoubleType) / F.sum(ps(1))),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
+import graft.obs.Recorder
+
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB path: hash-partitioned group-bys, band-bucketed candidate
   * generation instead of all-pairs, and pure Column expressions end-to-end.
@@ -761,9 +763,9 @@ object Dedup {
     * same rows including the fallback's.
     * Returns (id, component) with component = min id in the cluster. */
   def components(edges: DataFrame, maxIter: Int = 10): DataFrame =
-    GraphLocal.describing(edges.sparkSession) {
+    Recorder.describing(edges.sparkSession) {
       val spark = edges.sparkSession
-      GraphLocal.describe(spark, "dedup.components")
+      Recorder.describe(spark, "dedup.components")
       // undirected: both directions. Materialize the FORWARD edges once —
       // the union references them twice, and they usually sit atop an
       // expensive candidate-generation chain (minhash → jaccard) that must
@@ -775,10 +777,10 @@ object Dedup {
       val integral = GraphLocal.integral(
         fwd.schema("src").dataType, fwd.schema("dst").dataType)
       if (GraphLocal.path(spark, m, m, integral) == "local") {
-        GraphLocal.describe(spark, s"dedup.components local n<=$m m=$m")
+        Recorder.describe(spark, s"dedup.components local n<=$m m=$m")
         GraphLocal.components(fwd, symmetric(fwd).schema("src").dataType, maxIter)
       } else {
-        GraphLocal.describe(spark, s"dedup.components distributed n<=$m m=$m")
+        Recorder.describe(spark, s"dedup.components distributed n<=$m m=$m")
         labelLoop(fwd, maxIter)
       }
     }

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.obs.Recorder
+
 /** Graph centrality signals for corpus curation. The motivating use:
   * PageRank over the near-dup SIMILARITY graph — boilerplate and
   * template families form dense clusters, so their members accumulate
@@ -114,13 +116,13 @@ object Graph {
       dampNum: Long = 85L,
       dampDen: Long = 100L,
       nNodes: Option[Long] = None): DataFrame =
-    GraphLocal.describing(nodes.sparkSession)(
+    Recorder.describing(nodes.sparkSession)(
       rank(edges, nodes, iters, nNodes, None, scale, dampNum, dampDen))
 
   /** [[pageRankInt]] with the directed edge count when the caller
     * already has it (`nEdges`); otherwise the out-degree job counts it.
     * Labels its jobs; callers restore the description
-    * ([[GraphLocal.describing]]). */
+    * ([[Recorder.describing]]). */
   private def rank(edges: DataFrame, nodes: DataFrame, iters: Int,
       nNodes: Option[Long], nEdges: Option[Long], scale: Long = 1000000000000L,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
@@ -128,7 +130,7 @@ object Graph {
     require(dampNum >= 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen must lie in [0, 1]")
     val spark = nodes.sparkSession
-    GraphLocal.describe(spark, "graph.pageRankInt")
+    Recorder.describe(spark, "graph.pageRankInt")
     // the invariant id set, materialized once: the per-iteration
     // join-back reads it, so the running rank table is read exactly
     // ONCE per iteration (the contribution join) and iterations need
@@ -153,7 +155,7 @@ object Graph {
         (rows.value.longValue, Some(out))
     }
     val path = pathOf(nodes, edges, n, m)
-    GraphLocal.describe(spark, s"graph.pageRankInt $path n=$n m=$m")
+    Recorder.describe(spark, s"graph.pageRankInt $path n=$n m=$m")
     if (path == "local")
       GraphLocal.pageRank(ids, edges, iters, n, scale, base, dampNum, dampDen)
     else {
@@ -301,10 +303,10 @@ object Graph {
       nodes: DataFrame, // (id)
       iters: Int,
       nNodes: Option[Long] = None): DataFrame =
-    GraphLocal.describing(nodes.sparkSession) {
+    Recorder.describing(nodes.sparkSession) {
       require(iters >= 0, s"iters must be >= 0, got $iters")
       val spark = nodes.sparkSession
-      GraphLocal.describe(spark, "graph.labelPropagate")
+      Recorder.describe(spark, "graph.labelPropagate")
       // read every iteration; the same job counts the edges
       val (counted, rows) = GraphLocal.counting(edges)
       val e = counted.transform(graft.Stage.materialize)
@@ -316,7 +318,7 @@ object Graph {
       // n only picks the path; a known count skips the count job
       val n = nNodes.getOrElse(ids.count())
       val path = pathOf(nodes, edges, n, m)
-      GraphLocal.describe(spark, s"graph.labelPropagate $path n=$n m=$m")
+      Recorder.describe(spark, s"graph.labelPropagate $path n=$n m=$m")
       if (path == "local") GraphLocal.labelPropagate(ids, e, iters)
       else {
         val bcast = path == "broadcast"
@@ -362,8 +364,8 @@ object Graph {
     * point, like [[communitiesFromPairs]]). Returns (id, rank). */
   def rankFromPairs(pairs: DataFrame, nodes: DataFrame,
       iters: Int = 5, nNodes: Option[Long] = None): DataFrame =
-    GraphLocal.describing(nodes.sparkSession) {
-      GraphLocal.describe(nodes.sparkSession, "graph.pageRankInt")
+    Recorder.describing(nodes.sparkSession) {
+      Recorder.describe(nodes.sparkSession, "graph.pageRankInt")
       // the materialization job counts the directed edges for the path
       val (counted, rows) = GraphLocal.counting(symmetrize(pairs))
       val edges = counted.transform(graft.Stage.materialize)

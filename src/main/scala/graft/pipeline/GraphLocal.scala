@@ -61,17 +61,6 @@ private[graft] object GraphLocal {
     (df.filter(tick()), acc)
   }
 
-  /** Runs `body`, which labels its jobs through [[describe]]; the
-    * caller's job description comes back afterwards. */
-  def describing[A](spark: SparkSession)(body: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    try body finally sc.setJobDescription(prev)
-  }
-
-  def describe(spark: SparkSession, what: String): Unit =
-    spark.sparkContext.setJobDescription(s"graft $what")
-
   // ---- Spark side: gather into one task, run a kernel, materialize ----
 
   /** Node rows (tag 0, id) and edge rows (tag 1, src, dst), ids as longs,

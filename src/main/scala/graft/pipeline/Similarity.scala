@@ -430,17 +430,31 @@ object Similarity {
     var j = 0
     while (j < m) {
       var c = 0
-      while (c < codes) {
-        val ctr = codebooks(j)(c)
-        var d = 0.0; var i = 0
-        while (i < dsub) { val diff = v(j * dsub + i) - ctr(i); d += diff * diff; i += 1 }
-        dt(j * codes + c) = d
-        c += 1
-      }
+      while (c < codes) { dt(j * codes + c) = subSqDist(codebooks(j)(c), v, j * dsub); c += 1 }
       j += 1
     }
     dt
   }
+
+  /** L2² from the subvector of `v` at `off` to a centroid, ascending-i
+    * fold — the distance of the ADC table and of the code assignment. */
+  private def subSqDist(ctr: Array[Double], v: Seq[Double], off: Int): Double = {
+    var d = 0.0; var i = 0
+    while (i < ctr.length) { val diff = v(off + i) - ctr(i); d += diff * diff; i += 1 }
+    d
+  }
+
+  /** A code's ADC distance: the sum of its m table lookups in
+    * [[adcTable]]'s layout (`codes` centroids per subspace), folded in
+    * ascending j — the order the p38/p39 oracles replicate. Shared by
+    * [[pqKnn]] and [[ivfPqKnn]] like the table itself. */
+  private def adcSum(codes: Int) = udf((dt: Seq[Double], code: Seq[Int]) =>
+    if (dt == null || code == null) null
+    else {
+      var s = 0.0; var j = 0
+      while (j < code.length) { s += dt(j * codes + code(j)); j += 1 }
+      java.lang.Double.valueOf(s)
+    })
 
   /** Subspace code argmin over a double vector (raw subvectors widen
     * exactly from float; residuals are native double) — lowest-code
@@ -449,9 +463,7 @@ object Similarity {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
     while (c < book.length) {
-      val ctr = book(c)
-      var d = 0.0; var i = 0
-      while (i < ctr.length) { val diff = v(off + i) - ctr(i); d += diff * diff; i += 1 }
+      val d = subSqDist(book(c), v, off)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
@@ -497,16 +509,8 @@ object Similarity {
       embCol: String = "embedding",
       broadcastProbes: Option[Boolean] = None,
       heap: Boolean = false): DataFrame = {
-    val codes = codebooks(0).length
     val tableU = udf((emb: Seq[Float]) =>
       if (emb == null) null else adcTable(codebooks, widen(emb)))
-    val adcU = udf((dt: Seq[Double], code: Seq[Int]) =>
-      if (dt == null || code == null) null
-      else {
-        var s = 0.0; var j = 0
-        while (j < code.length) { s += dt(j * codes + code(j)); j += 1 }
-        java.lang.Double.valueOf(s)
-      })
     // null-embedding probes must drop BEFORE the corpus-wide join, not
     // score the whole index into discarded nulls
     val p = probes.select(col(probeId).as("probe_id"), tableU(col(embCol)).as("_dt"))
@@ -514,7 +518,7 @@ object Similarity {
     val pSide = if (resolveBroadcastProbes(probes, broadcastProbes)) broadcast(p) else p
     val scored = index.join(pSide)
       .select(col("probe_id"), col("corpus_id"),
-        adcU(col("_dt"), col("code")).as("adist"))
+        adcSum(codebooks(0).length)(col("_dt"), col("code")).as("adist"))
       .filter(col("adist").isNotNull)
     rankTopK(scored, "adist", ascending = true, k, heap)
   }
@@ -565,14 +569,20 @@ object Similarity {
     require(ctr.length == emb.length,
       s"vector length mismatch in cell routing: ${emb.length} vs ${ctr.length}")
 
+  /** Squared L2 from `emb` to a centroid, ascending-i fold — the cell
+    * routing distance of [[nearestCell]] and [[nearestCells]]. */
+  private def sqDist(ctr: Array[Double], emb: Seq[Float]): Double = {
+    requireDims(ctr, emb)
+    var d = 0.0; var i = 0
+    while (i < ctr.length) { val diff = emb(i) - ctr(i); d += diff * diff; i += 1 }
+    d
+  }
+
   private def nearestCell(centroids: Array[Array[Double]], emb: Seq[Float]): Int = {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
     while (c < centroids.length) {
-      val ctr = centroids(c)
-      requireDims(ctr, emb)
-      var d = 0.0; var i = 0
-      while (i < ctr.length) { val diff = emb(i) - ctr(i); d += diff * diff; i += 1 }
+      val d = sqDist(centroids(c), emb)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
@@ -581,13 +591,7 @@ object Similarity {
 
   private def nearestCells(centroids: Array[Array[Double]], emb: Seq[Float],
       nProbe: Int): Array[Int] = {
-    val ds = centroids.indices.map { c =>
-      val ctr = centroids(c)
-      requireDims(ctr, emb)
-      var d = 0.0; var i = 0
-      while (i < ctr.length) { val diff = emb(i) - ctr(i); d += diff * diff; i += 1 }
-      (d, c)
-    }
+    val ds = centroids.indices.map(c => (sqDist(centroids(c), emb), c))
     ds.sorted.take(nProbe).map(_._2).toArray
   }
 
@@ -781,19 +785,10 @@ object Similarity {
       embCol: String = "embedding",
       broadcastProbes: Option[Boolean] = None,
       heap: Boolean = false): DataFrame = {
-    val codes = codebooks(0).length
     val routeU = udf((emb: Seq[Float]) =>
       if (emb == null) null
       else nearestCells(centroids, emb, nProbe).map { cell =>
         (cell, adcTable(codebooks, residualOf(centroids(cell), emb)))
-      })
-    // ascending-j fold, like pqKnn's ADC — keeps the oracle replicable
-    val adcU = udf((dt: Seq[Double], code: Seq[Int]) =>
-      if (dt == null || code == null) null
-      else {
-        var s = 0.0; var j = 0
-        while (j < code.length) { s += dt(j * codes + code(j)); j += 1 }
-        java.lang.Double.valueOf(s)
       })
     val p = probes.select(col(probeId).as("probe_id"),
         explode(routeU(col(embCol))).as("_r"))
@@ -801,7 +796,7 @@ object Similarity {
     val pSide = if (resolveBroadcastProbes(probes, broadcastProbes)) broadcast(p) else p
     val scored = index.join(pSide, "cell")
       .select(col("probe_id"), col("corpus_id"),
-        adcU(col("_dt"), col("code")).as("adist"))
+        adcSum(codebooks(0).length)(col("_dt"), col("code")).as("adist"))
       .filter(col("adist").isNotNull)
     rankTopK(scored, "adist", ascending = true, k, heap)
   }

@@ -420,21 +420,6 @@ object Streams {
       }
   }
 
-  /** Run a streaming query to a memory sink (testing/inspection). */
-  /** Stateless streaming BM25 gate — the streaming twin of
-    * [[graft.pipeline.TextAnalysis.bm25Score]], following the
-    * streaming-gate contract its scaladoc names: the model prunes to
-    * the QUERY-SLICED df entries (O(query terms) — KBs however large
-    * the corpus), rides in the closure as plain data, and every
-    * arriving doc scores row-locally with the same quantized-rational
-    * arithmetic — no state store, no stream aggregation, no join.
-    * Batch parity is exact for the corpus alphabet (both sides run the
-    * identical IEEE ops; the row-local tokenizer mirrors the batch
-    * `lower∘trim∘split(\W+)` expression — Java and Spark share the
-    * regex engine, and `trim`/ASCII lowering agree; locale-sensitive
-    * Unicode casing is the one documented divergence). Output schema
-    * matches the batch gate: (idCol, n_hits, bm25_rel DECIMAL(38,0)).
-    */
   /** Streaming twin of [[graft.pipeline.Dedup.ngramOverlapReport]]'s
     * broadcast path: the eval suite's sorted distinct gram hashes are
     * computed ONCE batch-side ([[graft.pipeline.Dedup.evalGramSet]]) and
@@ -505,6 +490,20 @@ object Streams {
     wide.select(explode(array(rows: _*)).as("_r")).select("_r.*")
   }
 
+  /** Stateless streaming BM25 gate — the streaming twin of
+    * [[graft.pipeline.TextAnalysis.bm25Score]], following the
+    * streaming-gate contract its scaladoc names: the model prunes to
+    * the QUERY-SLICED df entries (O(query terms) — KBs however large
+    * the corpus), rides in the closure as plain data, and every
+    * arriving doc scores row-locally with the same quantized-rational
+    * arithmetic — no state store, no stream aggregation, no join.
+    * Batch parity is exact for the corpus alphabet (both sides run the
+    * identical IEEE ops; the row-local tokenizer mirrors the batch
+    * `lower∘trim∘split(\W+)` expression — Java and Spark share the
+    * regex engine, and `trim`/ASCII lowering agree; locale-sensitive
+    * Unicode casing is the one documented divergence). Output schema
+    * matches the batch gate: (idCol, n_hits, bm25_rel DECIMAL(38,0)).
+    */
   def streamingBm25Gate(docs: DataFrame,
       model: graft.pipeline.TextAnalysis.Bm25Model,
       queryTerms: Seq[String], idCol: String = "doc_id",
@@ -626,8 +625,9 @@ object Streams {
     * event-time watermark starts at 0 and only advances, so pre-1970
     * rows sit behind the initial watermark and are late-dropped from
     * the second micro-batch on (a Spark contract, not a harness one —
-    * StreamReplayPropSpec documents the boundary). */
-  /** `stateKeyHint`: upper bound on the DISTINCT STATE KEYS the
+    * StreamReplayPropSpec documents the boundary).
+    *
+    * `stateKeyHint`: upper bound on the DISTINCT STATE KEYS the
     * transform's stateful operator will hold (pass it for sketch-shaped
     * state — KMV/CMS/sharded folds — where state volume is ~constant
     * bytes per KEY, so the row-based sizing wildly overestimates: p88
@@ -837,6 +837,7 @@ object Streams {
     }
   }
 
+  /** Run a streaming query to a memory sink (testing/inspection). */
   def toMemory(df: DataFrame, name: String, outputMode: String = "update"): StreamingQuery =
     df.writeStream.format("memory").queryName(name)
       .outputMode(outputMode).start()

@@ -96,37 +96,21 @@ class BloomJoinSpec extends SparkTestBase {
   test("decontaminate broadcastEval=false takes the bloom-pruned path " +
       "and matches the broadcast path exactly") {
     import graft.pipeline.Dedup
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.obs.Recorder
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val train = docs.filter(!col("source").isin("src0", "src1"))
     val eval_ = docs.filter(col("source").isin("src0", "src1"))
     // the band join executes inside the Stage.materialize boundary, so
     // the bloom shape is only visible in the plans that RUN, not in the
     // final (lineage-truncated) plan — capture executed-plan texts
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case e: SparkListenerSQLExecutionStart =>
-          plans.add(e.physicalPlanDescription)
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (got, rec) = Recorder.record(spark) {
       val viaBloom = Dedup.decontaminate(train, eval_, threshold = 0.8,
         broadcastEval = false)
-      val got = viaBloom.select("doc_id").collect().toSeq.map(_.toSeq)
-      var tries = 0 // listener bus delivery is async
-      while (tries < 50 && !plans.toArray(Array.empty[String])
-          .exists(_.contains("graft_bloom_check"))) {
-        Thread.sleep(100); tries += 1
-      }
-      assert(plans.toArray(Array.empty[String])
-        .exists(_.contains("graft_bloom_check")),
-        "non-broadcast path should bloom-prune the band join")
-      val viaBroadcast = Dedup.decontaminate(train, eval_, threshold = 0.8)
-      assertProduces(viaBroadcast.select("doc_id"), got)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      viaBloom.select("doc_id").collect().toSeq.map(_.toSeq)
+    }
+    assert(rec.plans.exists(_.contains("graft_bloom_check")),
+      "non-broadcast path should bloom-prune the band join")
+    val viaBroadcast = Dedup.decontaminate(train, eval_, threshold = 0.8)
+    assertProduces(viaBroadcast.select("doc_id"), got)
   }
 }

@@ -82,6 +82,35 @@ class EnvFailureSpec extends SparkTestBase {
     }
   }
 
+  test("dump_diff --only: a name neither dump holds fails and is listed, never silently skipped") {
+    assume(sys.env.getOrElse("PATH", "").split(':').exists(d =>
+      new java.io.File(d, "python3").canExecute), "python3 not on PATH")
+    val root = java.nio.file.Files.createTempDirectory("graft_dd_only_")
+    val dumps = Seq("a", "b").map(d => root.resolve(d).resolve("q01_multi_agg"))
+    dumps.foreach(java.nio.file.Files.createDirectories(_))
+    def run(only: String): (Int, String) = {
+      val log = new StringBuffer
+      val code = scala.sys.process.Process(Seq("python3", "tools/dump_diff.py",
+        dumps(0).getParent.toString, dumps(1).getParent.toString, "--only", only))
+        .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n')))
+      (code, log.toString)
+    }
+    try {
+      // one typo beside a valid name: the run stops before comparing any
+      val (c1, o1) = run("q01_multi_agg,q01_multi_ag")
+      assert(c1 != 0 && o1.contains("unknown query q01_multi_ag; valid: q01_multi_agg"), o1)
+      // typos only: this used to print "0/0 queries identical" and exit 0
+      val (c2, o2) = run("q01_multi_ag,q03_join")
+      assert(c2 != 0 && o2.contains("unknown query q01_multi_ag, q03_join;"), o2)
+      assert(!o2.contains("queries identical"), o2)
+    } finally {
+      dumps.foreach { d =>
+        java.nio.file.Files.delete(d); java.nio.file.Files.delete(d.getParent)
+      }
+      java.nio.file.Files.delete(root)
+    }
+  }
+
   test("envFailureHeadline: the simulated disk-full artifact parses and self-describes") {
     // the full path a disk-full round takes: preflight message -> headline.
     // The headline must (a) start with {"metric" (the driver's parse

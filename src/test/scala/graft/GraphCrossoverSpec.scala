@@ -1,12 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
+import graft.obs.Recorder
 import graft.pipeline.Graph
 
 /** VERDICT r15 #5/#7: pins the `spark.graft.broadcastNodeLimit`
@@ -31,56 +27,14 @@ class GraphCrossoverSpec extends SparkTestBase {
 
   /** Run `thunk` with executed-plan descriptions captured (the graph
     * iterations execute inside Stage.materialize, so join shapes are
-    * only visible in the plans that RUN — same capture idiom as
-    * BloomJoinSpec). Polls the async listener bus until the expected
-    * marker verdict is stable. */
-  private def plansOf[A](thunk: => A): (A, Seq[String]) = {
-    val plans = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit =
-        event match {
-          case e: SparkListenerSQLExecutionStart =>
-            plans.add(e.physicalPlanDescription)
-          case _ =>
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = thunk
-      // listener delivery is async: wait until the count stops moving
-      var last = -1
-      var stable = 0
-      var tries = 0
-      while (stable < 3 && tries < 60) {
-        val n = plans.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-        Thread.sleep(100); tries += 1
-      }
-      (a, plans.toArray(Array.empty[String]).toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+    * only visible in the plans that RUN — same capture as
+    * BloomJoinSpec). */
+  private def plansOf[A](thunk: => A): (A, Seq[String]) =
+    Recorder.record(spark)(thunk) match { case (a, rec) => (a, rec.plans) }
 
-  /** Jobs launched by `thunk` (poll-stable, same async caveat). */
-  private def jobsOf[A](thunk: => A): (A, Int) = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = thunk
-      var last = -1
-      var stable = 0
-      var tries = 0
-      while (stable < 3 && tries < 60) {
-        val n = jobs.get
-        if (n == last) stable += 1 else { stable = 0; last = n }
-        Thread.sleep(100); tries += 1
-      }
-      (a, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Jobs launched by `thunk`. */
+  private def jobsOf[A](thunk: => A): (A, Int) =
+    Recorder.record(spark)(thunk) match { case (a, rec) => (a, rec.jobs.size) }
 
   /** Disable Spark's own size-based auto-broadcast so the ONLY possible
     * BroadcastHashJoin is the one `broadcastNodeLimit` hints — the plan

@@ -1,13 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
+import graft.obs.Recorder
 import graft.pipeline.{Dedup, Graph}
 
 /** The in-task path of the iterative graph analytics against their
@@ -23,23 +20,9 @@ class GraphLocalSpec extends SparkTestBase {
 
   private val Limit = "spark.graft.broadcastNodeLimit"
 
-  /** Job descriptions of the jobs `thunk` starts. The listener bus is
-    * asynchronous: waits up to 10 s for one that satisfies `expect`. */
-  private def described[A](expect: String => Boolean)(thunk: => A): (A, Seq[String]) = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = thunk
-      val deadline = System.nanoTime() + 10000000000L
-      while (!seen.asScala.exists(expect) && System.nanoTime() < deadline) Thread.sleep(20)
-      (a, seen.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Labels of the jobs `thunk` starts. */
+  private def described[A](thunk: => A): (A, Seq[String]) =
+    Recorder.record(spark)(thunk) match { case (a, rec) => (a, rec.jobs.map(_.label)) }
 
   private def withLimit[A](limit: Long)(thunk: => A): A = {
     spark.conf.set(Limit, limit.toString)
@@ -58,7 +41,7 @@ class GraphLocalSpec extends SparkTestBase {
       spark.sparkContext.setJobDescription("caller")
       try {
         val expected = s"graft $label $path"
-        val (rowsAndTypes, labels) = described(_.startsWith(expected))(withLimit(limit) {
+        val (rowsAndTypes, labels) = described(withLimit(limit) {
           val df = analytic
           (multiset(df), df.schema.map(_.dataType))
         })
@@ -160,8 +143,7 @@ class GraphLocalSpec extends SparkTestBase {
   test("components: non-integral ids stay on the distributed loop") {
     val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_a", "id_b")
     val distributed = "graft dedup.components distributed"
-    val (rows, labels) = described(_.startsWith(distributed))(
-      Dedup.components(pairs).collect())
+    val (rows, labels) = described(Dedup.components(pairs).collect())
     assert(labels.exists(_.startsWith(distributed)),
       s"string ids must not run locally: ${labels.distinct}")
     assert(rows.map(r => r.getString(0) -> r.getString(1)).toMap ==

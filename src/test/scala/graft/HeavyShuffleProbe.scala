@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler._
+import graft.obs.{Recorder, StageRecord}
 
 /** sf10 heavy-family probe (run manually, results in BASELINE.md):
   * executes the dedup/graph heavy queries at a derived 100×-sf0.1
@@ -18,34 +18,6 @@ import org.apache.spark.scheduler._
   * hot-bucket guard.
   */
 object HeavyShuffleProbe {
-
-  private class Acc extends SparkListener {
-    final case class Stage(id: Int, shuffleRead: Long, shuffleWrite: Long,
-        tasks: Int, maxTaskMs: Long, medTaskMs: Long, wallMs: Long)
-    val stages = scala.collection.mutable.ArrayBuffer[Stage]()
-    private val durs =
-      scala.collection.mutable.HashMap[Int, scala.collection.mutable.ArrayBuffer[Long]]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      if (t.taskInfo != null)
-        durs.getOrElseUpdate(t.stageId,
-          scala.collection.mutable.ArrayBuffer[Long]()) += t.taskInfo.duration
-    }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
-      val m = s.stageInfo.taskMetrics
-      val d = durs.getOrElse(s.stageInfo.stageId,
-        scala.collection.mutable.ArrayBuffer[Long]()).sorted
-      val wall = (for {
-        sub <- s.stageInfo.submissionTime
-        done <- s.stageInfo.completionTime
-      } yield done - sub).getOrElse(0L)
-      stages += Stage(s.stageInfo.stageId,
-        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-        s.stageInfo.numTasks,
-        if (d.nonEmpty) d.last else 0L,
-        if (d.nonEmpty) d(d.length / 2) else 0L,
-        wall)
-    }
-  }
 
   /** Straggler budget gate (VERDICT r13 item #6): a DOMINANT stage
     * (>10% of the query's wall-clock) whose max/median task ratio
@@ -88,29 +60,28 @@ object HeavyShuffleProbe {
     val jsonRows = scala.collection.mutable.ArrayBuffer[String]()
     println(f"${"query"}%-24s ${"wall_s"}%8s ${"rows"}%9s ${"shuf_rd"}%9s ${"shuf_wr"}%9s ${"hot_stage"}%10s ${"straggler"}%9s")
     queries.foreach { case QuerySpec(name, plan, _, _) =>
-      val acc = new Acc
-      spark.sparkContext.addSparkListener(acc)
-      val t0 = System.nanoTime()
-      val rows = plan(spark, dir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(acc)
-      val rd = acc.stages.map(_.shuffleRead).sum
-      val wr = acc.stages.map(_.shuffleWrite).sum
-      val hot = if (acc.stages.isEmpty) 0L
-        else acc.stages.map(s => math.max(s.shuffleRead, s.shuffleWrite)).max
+      val ((rows, wall), rec) = Recorder.record(spark) {
+        val t0 = System.nanoTime()
+        (plan(spark, dir).count(), (System.nanoTime() - t0) / 1e9)
+      }
+      val stages = rec.stages
+      val rd = stages.map(_.shuffleReadBytes).sum
+      val wr = stages.map(_.shuffleWriteBytes).sum
+      val hot = if (stages.isEmpty) 0L
+        else stages.map(s => math.max(s.shuffleReadBytes, s.shuffleWriteBytes)).max
       // straggler = worst max/median task ratio. Two flavors: SHUFFLE
       // stages (where a hot key actually skews the engine) and scan
       // stages. Scan-stage ratios are gated on med >= 250ms because a
       // single-file parquet input yields empty byte-range splits whose
       // ~0ms median turns any real task into a fake 100x "straggler"
       // (input-layout artifact, not a plan property).
-      def ratio(ss: Iterable[Acc#Stage]): Double = ss
-        .map(s => s.maxTaskMs.toDouble / math.max(s.medTaskMs, 1L))
+      def ratio(ss: Iterable[StageRecord]): Double = ss
+        .map(s => s.maxTaskMs.toDouble / math.max(s.medianTaskMs, 1L))
         .reduceOption(_ max _).getOrElse(1.0)
-      val shufStages = acc.stages.filter(s =>
-        s.tasks >= 8 && s.medTaskMs >= 50 && (s.shuffleRead > 0 || s.shuffleWrite > 0))
-      val scanStages = acc.stages.filter(s =>
-        s.tasks >= 8 && s.medTaskMs >= 250 && s.shuffleRead == 0 && s.shuffleWrite == 0)
+      val shufStages = stages.filter(s =>
+        s.tasks >= 8 && s.medianTaskMs >= 50 && (s.shuffleReadBytes > 0 || s.shuffleWriteBytes > 0))
+      val scanStages = stages.filter(s =>
+        s.tasks >= 8 && s.medianTaskMs >= 250 && s.shuffleReadBytes == 0 && s.shuffleWriteBytes == 0)
       val strag = ratio(shufStages)
       val stragScan = ratio(scanStages)
       def mb(b: Long) = f"${b / 1048576.0}%.0fMB"
@@ -118,8 +89,8 @@ object HeavyShuffleProbe {
       // the three stages whose WORST task ran longest — where a
       // straggler actually costs wall-clock, with enough context
       // (task count, median, shuffle volume) to name the operator
-      acc.stages.sortBy(-_.maxTaskMs).take(3).foreach { s =>
-        println(f"    stage ${s.id}%4d: tasks=${s.tasks}%3d med=${s.medTaskMs / 1000.0}%7.2fs max=${s.maxTaskMs / 1000.0}%7.2fs rd=${mb(s.shuffleRead)} wr=${mb(s.shuffleWrite)}")
+      stages.sortBy(-_.maxTaskMs).take(3).foreach { s =>
+        println(f"    stage ${s.id}%4d: tasks=${s.tasks}%3d med=${s.medianTaskMs / 1000.0}%7.2fs max=${s.maxTaskMs / 1000.0}%7.2fs rd=${mb(s.shuffleReadBytes)} wr=${mb(s.shuffleWriteBytes)}")
       }
       // straggler budget gate: only DOMINANT shuffle stages count (a
       // 10x ratio on a 50ms stage costs nothing; scan-stage ratios are
@@ -131,8 +102,8 @@ object HeavyShuffleProbe {
       // a query with no shuffle stage wide enough for a ratio (too small
       // a corpus, or partitions coalesced away) was not checked at all:
       // that fails the gate rather than passing it on an empty set
-      val wideShuffles = acc.stages.count(s =>
-        s.tasks >= 8 && (s.shuffleRead > 0 || s.shuffleWrite > 0))
+      val wideShuffles = stages.count(s =>
+        s.tasks >= 8 && (s.shuffleReadBytes > 0 || s.shuffleWriteBytes > 0))
       val qPass = wideShuffles > 0 && (dominant.isEmpty || worstDom <= allowed)
       jsonRows += f"""{"query":"$name","wall_s":$wall%.1f,"rows":$rows,""" +
         f""""shuffle_read_mb":${rd / 1048576.0}%.0f,"shuffle_write_mb":${wr / 1048576.0}%.0f,""" +

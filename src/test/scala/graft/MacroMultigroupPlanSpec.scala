@@ -164,6 +164,24 @@ class MacroMultigroupPlanSpec extends SparkTestBase {
     assert(varQ.collect().length == 5)
   }
 
+  test("eager aggregation: a global count over no fact rows is 0, as without the rewrite") {
+    // every fact row fails the ?v null filter; with no group key the
+    // merge must still return the one row count returns over no input
+    def q(withKeys: Boolean) = {
+      val dim = mem(Seq(Seq(1L, "a")))("?k", "?name")
+      query("?n", "?m")(
+        if (withKeys) uniqueOn(dim, "?k") else dim,
+        mem(Seq(Seq(1L, null), Seq(1L, null)))("?k", "?v"),
+        Ops.countNotNull("?v") :> "?n",
+        Ops.count() :> "?m")
+    }
+    val eager = q(withKeys = true).toDF(spark)
+    val analyzed = eager.queryExecution.analyzed.toString
+    assert(analyzed.indexOf("Aggregate", analyzed.indexOf("Join")) > 0, s"rewrite not taken:\n$analyzed")
+    assertProducesInOrder(q(withKeys = false), Seq(Seq(0L, 0L)))
+    assertProducesInOrder(eager, Seq(Seq(0L, 0L)))
+  }
+
   test("filters and pruning reach the parquet scan") {
     val d = "/root/testdata/sf0.001"
     val df = query("?l_orderkey", "?q")(

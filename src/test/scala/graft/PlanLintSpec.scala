@@ -18,9 +18,9 @@ package graft
   * sections before it). This gate makes the whole-surface audit a
   * driver-checkable invariant instead of a per-round manual read.
   *
-  * Three source lints ride along: local sessions are built in one place,
-  * oracle kernels are spelled once, and single-path parquet reads go
-  * through `Taps.parquet`. */
+  * Four source lints ride along: local sessions are built in one place,
+  * Spark listeners are added in one place, oracle kernels are spelled
+  * once, and single-path parquet reads go through `Taps.parquet`. */
 class PlanLintSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -175,6 +175,15 @@ class PlanLintSpec extends SparkTestBase {
     val sites = all.filter(f => java.nio.file.Files.readString(f.toPath).contains(needle))
     assert(sites.map(_.getName) == Seq("LocalSession.scala"),
       s"build sessions through graft.LocalSession, not in ${sites.mkString(", ")}")
+  }
+
+  test("Spark listeners under src/ are added only in graft.obs") {
+    val needle = "addSpark" + "Listener" // split so this file does not match
+    val all = scalaFiles(new java.io.File("src"))
+    assert(all.size > 100, s"only ${all.size} sources under src/ — wrong working dir?")
+    val sites = all.filter(f => java.nio.file.Files.readString(f.toPath).contains(needle))
+    assert(sites.map(_.getPath) == Seq("src/main/scala/graft/obs/Recorder.scala"),
+      s"record jobs, stages and plans through graft.obs.Recorder, not in ${sites.mkString(", ")}")
   }
 
   test("each oracle kernel is spelled once under src/main/scala") {

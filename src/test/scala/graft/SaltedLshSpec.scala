@@ -97,25 +97,8 @@ class SaltedLshSpec extends SparkTestBase {
   test("stats-stage guard: a sub-floor cap skips the eager stats " +
       "checkpoint (fewer construction-time jobs), pair set unchanged") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def jobsDuring[A](thunk: => A): (A, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val a = thunk
-        var last = -1; var stable = 0; var tries = 0
-        while (stable < 3 && tries < 60) {
-          val n = jobs.get
-          if (n == last) stable += 1 else { stable = 0; last = n }
-          Thread.sleep(100); tries += 1
-        }
-        (a, jobs.get)
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    def jobsDuring[A](thunk: => A): (A, Int) =
+      graft.obs.Recorder.record(spark)(thunk) match { case (a, rec) => (a, rec.jobs.size) }
     def withFloor[A](f: Long)(thunk: => A): A = {
       spark.conf.set("spark.graft.statsStageMinThreshold", f.toString)
       try thunk finally spark.conf.unset("spark.graft.statsStageMinThreshold")

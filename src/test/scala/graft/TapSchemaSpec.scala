@@ -1,13 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import graft.sources.Taps
 import graft.streaming.Streams
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** `Taps.parquet` resolves a parquet source's schema from one footer on
@@ -201,29 +197,11 @@ class TapSchemaSpec extends SparkTestBase {
 
   test("building the relational queries launches no Spark job") {
     val sf = "/root/testdata/sf0.001"
-    val marker = "graft-tap-schema-marker"
     Seq("q01_multi_agg", "q03_join_agg", "q06_semi_join", "q13_topk_pergroup",
         "q17_wordcount", "q29_full_outer").foreach { name =>
-      val seen = new ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          seen.add(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("?"))
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        SparkEntry.queries(name)(spark, sf)
-        // the bus delivers in order: once the marker job shows, every
-        // job the build started has shown before it
-        spark.sparkContext.setJobDescription(marker)
-        try spark.sparkContext.parallelize(Seq(1), 1).count()
-        finally spark.sparkContext.setJobDescription(null)
-        val deadline = System.nanoTime() + 10000000000L
-        while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(seen.contains(marker), "marker job never reached the listener")
-        val jobs = seen.asScala.toSeq.takeWhile(_ != marker)
-        assert(jobs.isEmpty, s"$name launched ${jobs.size} job(s) while building: $jobs")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (_, rec) = obs.Recorder.record(spark)(SparkEntry.queries(name)(spark, sf))
+      val jobs = rec.jobs.map(_.label)
+      assert(jobs.isEmpty, s"$name launched ${jobs.size} job(s) while building: $jobs")
     }
   }
 }

@@ -9,7 +9,8 @@ query, both counts, and both checksums.
     python3 tools/dump_diff.py <dump_a> <dump_b> [--only a,b,c]
 
 Queries present in only one dump are reported as such (a new query or
-a failed dump is visible, never silently skipped). Column sets are
+a failed dump is visible, never silently skipped). An `--only` name
+neither dump holds fails the run before any query is compared. Column sets are
 compared too — a renamed column is a schema break even at equal
 checksums (the image is built per-dump from ITS sorted columns).
 
@@ -55,6 +56,12 @@ def main():
     qs_a = {d for d in os.listdir(a) if os.path.isdir(os.path.join(a, d))}
     qs_b = {d for d in os.listdir(b) if os.path.isdir(os.path.join(b, d))}
     if only is not None:
+        # a name neither dump holds fails and is listed, as
+        # compare_oracle.py --only does: a typo must not pass as 0/0
+        unknown = sorted(only - (qs_a | qs_b))
+        if unknown:
+            sys.exit(f"unknown query {', '.join(unknown)}; "
+                     f"valid: {', '.join(sorted(qs_a | qs_b))}")
         qs_a &= only
         qs_b &= only
     diffs = []
