@@ -83,7 +83,10 @@ object Dedup {
   private def saltedSelfJoin(flagged: DataFrame, keyCols: Seq[String],
       idCol: String, payload: Seq[String], cap: Int,
       sqrtT: Long): DataFrame = {
-    val salted = flagged.filter(col("_bsz").isNotNull && col("_bsz") <= cap)
+    // a null id pairs with nothing, as in the plain join's id_a < id_b;
+    // kept, it would get a block and pair with itself through least/greatest
+    val salted = flagged.filter(col("_bsz").isNotNull && col("_bsz") <= cap &&
+        col(idCol).isNotNull)
       .select(keyCols.map(col) ++ Seq(col(idCol)) ++ payload.map(col) :+
         ceil(col("_bsz").cast("double") / sqrtT).cast("int").as("_nb"): _*)
       .withColumn("_blk", pmod(xxhash64(col(idCol)), col("_nb")).cast("int"))
@@ -138,11 +141,14 @@ object Dedup {
 
   /** The hot-bucket guard over a full corpus: every within-bucket pair of
     * `rows` (`idCol`, `payload`, `keyCols`) as (id_a, id_b, <p>_a…,
-    * <p>_b…), id_a < id_b, not yet distinct (a pair sharing several
-    * buckets repeats). A degenerate bucket key (viral boilerplate,
-    * shared templates, an all-duplicate IVF cell) would make one
-    * bucket's self-join quadratic — a single 10⁶-row bucket is 10¹²
-    * pairs — so buckets split three ways by size:
+    * <p>_b…), id_a < id_b. The distributed guard repeats a pair sharing
+    * several buckets: `distinct` dedupes it, for callers that take the
+    * pairs as they are; callers that score the payloads first dedupe the
+    * scored pairs instead.
+    * A degenerate bucket key (viral boilerplate, shared templates, an
+    * all-duplicate IVF cell) would make one bucket's self-join quadratic
+    * — a single 10⁶-row bucket is 10¹² pairs — so buckets split three
+    * ways by size:
     *
     *  - at most √saltTargetPairs: the plain key self-join;
     *  - up to `cap`: the salted block-pair self-join
@@ -154,13 +160,61 @@ object Dedup {
     *    component; members far from the hub drop out at verification
     *    exactly as their full-pair edges mostly would.
     *
-    * Bucket sizes come from [[bucketStats]], and only the notable set
-    * (buckets over √target: each holds ≥ √target rows, so there are
-    * ≤ N/√target of them) broadcasts back onto the rows — no sort, no
-    * extra shuffle of the rows (a window count would sort every
-    * partition). The caller materializes `rows` when producing them is
-    * costly: every branch reads them. */
+    * `rows` are materialized here, once — every branch reads them, and
+    * producing them (a signature kernel) is the costly part — and the
+    * same job counts them and their width. When the ids and payloads are
+    * integral and the rows plus the pair volume fit
+    * `spark.graft.broadcastNodeLimit`, the whole guard runs in ONE task
+    * ([[GraphLocal.bucketPairs]]): the same pair rules over the gathered
+    * rows, returned distinct and materialized, in one job. The kernel
+    * sizes the buckets before it pairs, and hands a volume over the limit
+    * back to the distributed guard ([[distributedPairs]]). That wastes the
+    * kernel's job, so the counting job also sketches the bucket sizes
+    * ([[GraphLocal.Tally]]), and a volume estimated well over the limit
+    * goes to the distributed guard directly. The jobs are labelled
+    * `graft dedup.candidates local rows=… pairs<=…` (the room the kernel
+    * has) or `… distributed rows=… pairs=…` (the volume the kernel
+    * measured; `pairs~…` the estimate, `pairs=?` for ids or payloads the
+    * kernel does not take). */
   private def bucketPairs(rows: DataFrame, keyCols: Seq[String],
+      idCol: String, payload: Seq[String], cap: Int, distinct: Boolean): DataFrame =
+    Recorder.describing(rows.sparkSession) {
+      val spark = rows.sparkSession
+      Recorder.describe(spark, "dedup.candidates")
+      val local = GraphLocal.pairable(rows.schema, keyCols, idCol, payload)
+      val (counted, tally) =
+        if (!local) GraphLocal.counting(rows)
+        else GraphLocal.counting(rows,
+          GraphLocal.rowUnits(rows.schema, (idCol +: payload) ++ keyCols),
+          Some(xxhash64(keyCols.map(col): _*)))
+      val staged = counted.transform(graft.Stage.materialize)
+      val (n, units, lim) = (tally.count, tally.value, GraphLocal.limit(spark))
+      val guess = tally.pairEstimate
+      // the sketch's error stays well under a half: past 1.5 times the
+      // room left, the kernel would only measure a volume it cannot hold.
+      // It counts a bucket past the cap at s(s−1)/2, not s − 1, so a hot
+      // bucket can send a corpus that would fit to the distributed guard
+      val (pairs, volume) =
+        if (!local) (None, "=?")
+        else if (units > lim || guess > (lim - units) * 3 / 2) (None, s"~$guess")
+        else {
+          Recorder.describe(spark, s"dedup.candidates local rows=$n pairs<=${lim - units}")
+          val (pairs, measured) = GraphLocal.bucketPairs(staged, keyCols, idCol, payload, cap, units)
+          (pairs, s"=$measured")
+        }
+      pairs.getOrElse {
+        Recorder.describe(spark, s"dedup.candidates distributed rows=$n pairs$volume")
+        val all = distributedPairs(staged, keyCols, idCol, payload, cap)
+        if (distinct) all.distinct() else all
+      }
+    }
+
+  /** [[bucketPairs]] across the cluster. Bucket sizes come from
+    * [[bucketStats]], and only the notable set (buckets over √target:
+    * each holds ≥ √target rows, so there are ≤ N/√target of them)
+    * broadcasts back onto the rows — no sort, no extra shuffle of the
+    * rows (a window count would sort every partition). */
+  private def distributedPairs(rows: DataFrame, keyCols: Seq[String],
       idCol: String, payload: Seq[String], cap: Int): DataFrame = {
     val sqrtT = math.max(2L, math.sqrt(resolveSaltTarget(rows).toDouble).toLong)
     val notableThreshold = math.min(sqrtT, cap.toLong)
@@ -385,13 +439,11 @@ object Dedup {
       shingleWords: Int = 3,
       maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val cap = resolveBucketCap(df, maxBucketSize)
-    // materialize the banded rows once: every guard branch reads them,
-    // and without the checkpoint the minhash kernel would run once per
-    // read over the full corpus (the dominant cost of candidate
-    // generation)
+    // the guard materializes the banded rows once: without the
+    // checkpoint the minhash kernel would run once per read over the
+    // full corpus (the dominant cost of candidate generation)
     val banded = bandedSignatures(df, textCol, idCol, k, bands, shingleWords)
-      .transform(graft.Stage.materialize)
-    bucketPairs(banded, BandKey, idCol, Nil, cap).distinct()
+    bucketPairs(banded, BandKey, idCol, Nil, cap, distinct = true)
   }
 
   /** Persist the MinHash candidate graph as a reusable parquet tap —
@@ -723,16 +775,15 @@ object Dedup {
     val blocks = array((0 until 4).map(i =>
       struct(lit(i).as("blk"),
         shiftright(col("sh"), i * 16).bitwiseAND(0xFFFFL).as("blk_val"))): _*)
-    // same self-join-recompute rule as minhashCandidates: materialize the
-    // bucketed rows so the simhash kernel runs once, not once per read.
-    // Same hot-bucket guard too: 16-bit blocks of boilerplate-heavy corpora
-    // collide massively (e.g. block 3 of short docs is often all-zero) —
-    // oversize buckets emit linear star edges to (min id, its simhash),
-    // still Hamming-verified, instead of a quadratic self-join.
+    // same guard as minhashCandidates, which materializes the bucketed
+    // rows so the simhash kernel runs once, not once per read: 16-bit
+    // blocks of boilerplate-heavy corpora collide massively (e.g. block 3
+    // of short docs is often all-zero) — oversize buckets emit linear star
+    // edges to (min id, its simhash), still Hamming-verified, instead of a
+    // quadratic self-join.
     val bucketed = withSh.select(col(idCol), col("sh"), explode(blocks).as("b"))
       .select(col(idCol), col("sh"), col("b.blk"), col("b.blk_val"))
-      .transform(graft.Stage.materialize)
-    bucketPairs(bucketed, Seq("blk", "blk_val"), idCol, Seq("sh"), cap)
+    bucketPairs(bucketed, Seq("blk", "blk_val"), idCol, Seq("sh"), cap, distinct = false)
       .select(col("id_a"), col("id_b"),
         hammingDistance(col("sh_a"), col("sh_b")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -773,7 +824,7 @@ object Dedup {
       val (counted, rows) = GraphLocal.counting(
         edges.select(col("id_a").as("src"), col("id_b").as("dst")))
       val fwd = counted.transform(graft.Stage.materialize)
-      val m = 2 * rows.value.longValue // directed; nodes are at most as many
+      val m = 2 * rows.value // directed; nodes are at most as many
       val integral = GraphLocal.integral(
         fwd.schema("src").dataType, fwd.schema("dst").dataType)
       if (GraphLocal.path(spark, m, m, integral) == "local") {
@@ -1737,10 +1788,10 @@ object Dedup {
       maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val cap = resolveBucketCap(df, maxBucketSize)
     val sigCol = Similarity.hyperplaneSignature(col(embCol), planes)
-    // self-joined: the signature kernel must run once
+    // the guard materializes them: the signature kernel must run once
     val sigs = df.select(col(idCol), col(embCol), sigCol.as("bucket"))
-      .transform(graft.Stage.materialize)
-    cosineVerified(bucketPairs(sigs, Seq("bucket"), idCol, Seq(embCol), cap),
+    cosineVerified(
+      bucketPairs(sigs, Seq("bucket"), idCol, Seq(embCol), cap, distinct = false),
       embCol, threshold)
   }
 
@@ -1775,10 +1826,10 @@ object Dedup {
       threshold: Double = 0.95,
       maxBucketSize: Int = SessionBucketCap): DataFrame = {
     val cap = resolveBucketCap(df, maxBucketSize)
-    // self-joined: the cell-assignment kernel must run once
+    // the guard materializes them: the cell-assignment kernel must run once
     val cells = ivfRows(Similarity.ivfIndex(df, centroids, idCol, embCol))
-      .transform(graft.Stage.materialize)
-    cosineVerified(bucketPairs(cells, Seq("cell"), "id", Seq("emb"), cap),
+    cosineVerified(
+      bucketPairs(cells, Seq("cell"), "id", Seq("emb"), cap, distinct = false),
       "emb", threshold)
   }
 

@@ -74,9 +74,13 @@ object Graph {
     * the node source (round-17 lesson) or re-reading the running
     * rank/label table — the latter is what forced a materialization
     * every iteration (a twice-read unmaterialized iteration would
-    * execute twice). */
-  private def materializedIds(nodes: DataFrame): DataFrame =
-    graft.Stage.materialize(nodes.select(col("id")))
+    * execute twice). The same job counts the ids: |nodes| for callers
+    * that do not pass it, with no count job of its own. */
+  private def materializedIds(nodes: DataFrame): (DataFrame, Long) = {
+    val (counted, n) = GraphLocal.counting(nodes.select(col("id")))
+    val ids = graft.Stage.materialize(counted)
+    (ids, n.value)
+  }
 
   /** Integer-exact PageRank.
     *
@@ -135,12 +139,10 @@ object Graph {
     // join-back reads it, so the running rank table is read exactly
     // ONCE per iteration (the contribution join) and iterations need
     // not materialize individually to avoid recomputation
-    val ids = materializedIds(nodes)
-    // callers that already know |nodes| pass it (nNodes) so the count
-    // job — needed here for the base-rank divisor AND the path
-    // decision — is not re-paid per analytic over the same node table
-    // (counted off the materialized ids, not the source)
-    val n = nNodes.getOrElse(ids.count())
+    // and counted by the same job: |nodes| is the base-rank divisor AND
+    // picks the path (a caller's nNodes takes precedence)
+    val (ids, idCount) = materializedIds(nodes)
+    val n = nNodes.getOrElse(idCount)
     require(n > 0, "pageRankInt needs at least one node")
     val base = (scale * (dampDen - dampNum)) / (dampDen * n)
     def outDegrees(e: DataFrame) = e.groupBy("src").agg(count(lit(1)).as("_outdeg"))
@@ -152,7 +154,7 @@ object Graph {
       case None =>
         val (e, rows) = GraphLocal.counting(edges)
         val out = outDegrees(e)
-        (rows.value.longValue, Some(out))
+        (rows.value, Some(out))
     }
     val path = pathOf(nodes, edges, n, m)
     Recorder.describe(spark, s"graph.pageRankInt $path n=$n m=$m")
@@ -310,13 +312,13 @@ object Graph {
       // read every iteration; the same job counts the edges
       val (counted, rows) = GraphLocal.counting(edges)
       val e = counted.transform(graft.Stage.materialize)
-      val m = rows.value.longValue
+      val m = rows.value
       // invariant id set materialized once — the join-back target, so the
       // running label table is read exactly once per iteration (the vote
-      // join) and need not materialize every round (see pageRankInt)
-      val ids = materializedIds(nodes)
-      // n only picks the path; a known count skips the count job
-      val n = nNodes.getOrElse(ids.count())
+      // join) and need not materialize every round (see pageRankInt); n,
+      // counted by the same job, only picks the path
+      val (ids, idCount) = materializedIds(nodes)
+      val n = nNodes.getOrElse(idCount)
       val path = pathOf(nodes, edges, n, m)
       Recorder.describe(spark, s"graph.labelPropagate $path n=$n m=$m")
       if (path == "local") GraphLocal.labelPropagate(ids, e, iters)
@@ -369,7 +371,7 @@ object Graph {
       // the materialization job counts the directed edges for the path
       val (counted, rows) = GraphLocal.counting(symmetrize(pairs))
       val edges = counted.transform(graft.Stage.materialize)
-      rank(edges, nodes, iters, nNodes, Some(rows.value.longValue))
+      rank(edges, nodes, iters, nNodes, Some(rows.value))
     }
 
   /** Template-family communities of a corpus: [[labelPropagate]] over the

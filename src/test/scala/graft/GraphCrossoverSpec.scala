@@ -9,8 +9,9 @@ import graft.pipeline.Graph
   * CROSSOVER itself at the plan level (below the limit the iteration
   * join must broadcast; above it the plan must degrade to sort-merge —
   * with bit-identical results on both sides), and the `nNodes`
-  * known-count threading (a caller-supplied count must eliminate the
-  * analytic's own count job, at equal output). The test graph has 6
+  * known-count threading (a caller-supplied count gives equal output;
+  * triangleCounts then skips its count job, and the iterative analytics
+  * count their nodes in the job that materializes the ids). The test graph has 6
   * nodes and 10 directed edges: at a limit of 16 or more pageRankInt and
   * labelPropagate run in one task ([[graft.pipeline.GraphLocal]]), so
   * the tests of the distributed loops pin them with a limit of 10
@@ -99,8 +100,8 @@ class GraphCrossoverSpec extends SparkTestBase {
     assert(under == over, s"crossover must be result-neutral: $under vs $over")
   }
 
-  test("nNodes threading: a caller-supplied count removes the analytic's " +
-      "count job, output unchanged") {
+  test("nNodes threading: a caller-supplied count gives the same output; " +
+      "only triangleCounts has a count job for it to remove") {
     val (pairs, nodes, edges) = graph()
     distributed {
       // LPA: n is ONLY used for the broadcast decision
@@ -110,9 +111,8 @@ class GraphCrossoverSpec extends SparkTestBase {
         Graph.labelPropagate(edges, nodes, iters = 2, nNodes = Some(6L))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(a1 == a2, s"nNodes must not change LPA output: $a1 vs $a2")
-      assert(j2 < j1,
-        s"known count must remove the count job(s) (AQE splits a count " +
-          s"into 2): $j1 -> $j2")
+      assert(j2 == j1,
+        s"the node count must ride the ids job, leaving none to remove: $j1 -> $j2")
       // triangles: likewise broadcast-decision-only
       val (t1, tj1) = jobsOf(Graph.triangleCounts(pairs, nodes)
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSet)
@@ -130,8 +130,8 @@ class GraphCrossoverSpec extends SparkTestBase {
         Graph.pageRankInt(edges, nodes, iters = 2, nNodes = Some(6L))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(r1 == r2, s"nNodes must not change rank output: $r1 vs $r2")
-      assert(rj2 < rj1,
-        s"known count must remove the count job(s): $rj1 -> $rj2")
+      assert(rj2 == rj1,
+        s"the node count must ride the ids job, leaving none to remove: $rj1 -> $rj2")
     }
   }
 

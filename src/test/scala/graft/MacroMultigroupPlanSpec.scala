@@ -293,6 +293,18 @@ class MacroMultigroupPlanSpec extends SparkTestBase {
     // rows — a Window count instead would sort every partition of the
     // full banded data
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    // in one task (the default limit: the sf0.001 rows and their pairs
+    // fit) the candidates read one checkpoint, the kernel's, and join
+    // nothing
+    val local = plan(graft.pipeline.Dedup.minhashCandidates(docs, maxBucketSize = 64))
+    assert("ExistingRDD".r.findAllIn(local).size == 1 && !local.contains("Join"),
+      s"the local guard must read its one checkpoint:\n$local")
+    // the distributed guard, pinned by a limit below the banded rows
+    spark.conf.set("spark.graft.broadcastNodeLimit", "0")
+    try distributedGuards(docs) finally spark.conf.unset("spark.graft.broadcastNodeLimit")
+  }
+
+  private def distributedGuards(docs: org.apache.spark.sql.DataFrame): Unit = {
     val pm = plan(graft.pipeline.Dedup.minhashCandidates(docs, maxBucketSize = 64))
     assert(!pm.contains("Window"), s"minhash guard must not window-sort:\n$pm")
     assert(pm.contains("BroadcastHashJoin"),

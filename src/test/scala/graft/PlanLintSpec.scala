@@ -18,9 +18,10 @@ package graft
   * sections before it). This gate makes the whole-surface audit a
   * driver-checkable invariant instead of a per-round manual read.
   *
-  * Four source lints ride along: local sessions are built in one place,
+  * Five source lints ride along: local sessions are built in one place,
   * Spark listeners are added in one place, oracle kernels are spelled
-  * once, and single-path parquet reads go through `Taps.parquet`. */
+  * once, single-path parquet reads go through `Taps.parquet`, and local
+  * regions gather their rows through `GraphLocal`. */
 class PlanLintSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -197,6 +198,17 @@ class PlanLintSpec extends SparkTestBase {
       k -> java.util.regex.Pattern.quote(k).r.findAllIn(text).size
     }
     assert(counts.forall(_._2 == 1), s"compose oracles from OracleSql: ${counts.mkString(", ")}")
+  }
+
+  test("local regions gather their rows in one place: GraphLocal.scala") {
+    // `.coalesce(1)`, any sort within the partition, then `.rdd`: the one
+    // gather the in-task kernels share, so no second local region grows
+    val gather = """\.coalesce\(1\)(\s*\.\w+\([^()]*\))*\s*\.rdd\b""".r
+    val all = scalaFiles(new java.io.File("src/main/scala"))
+    assert(all.size > 50, s"only ${all.size} sources under src/main/scala — wrong working dir?")
+    val sites = all.filter(f => gather.findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined)
+    assert(sites.map(_.getName) == Seq("GraphLocal.scala"),
+      s"gather through GraphLocal's gather, not in ${sites.mkString(", ")}")
   }
 
   /** Multi-path reads, which no single footer describes: Publish's

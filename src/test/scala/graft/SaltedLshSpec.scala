@@ -8,16 +8,28 @@ import graft.pipeline.Dedup
   * buckets bigger than √(spark.graft.saltTargetPairs) split into
   * B = ceil(size/√target) hash blocks and pair per block-pair task —
   * and the rewrite must be a pure physical change: the emitted pair
-  * set is identical to the plain self-join on every corpus shape. */
+  * set is identical to the plain self-join on every corpus shape.
+  *
+  * Every corpus here is small enough for the in-task guard, which never
+  * salts; `spark.graft.broadcastNodeLimit` 0 pins each test to the
+  * distributed guard, so both sides of every comparison are the
+  * distributed joins. */
 class SaltedLshSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def pairsWith(target: Long)(mk: => org.apache.spark.sql.DataFrame)
-      : Set[(Any, Any)] = {
-    spark.conf.set("spark.graft.saltTargetPairs", target.toString)
-    try mk.collect().map(r => (r.get(0), r.get(1))).toSet
-    finally spark.conf.unset("spark.graft.saltTargetPairs")
+  private def withConf[A](kv: (String, String)*)(thunk: => A): A = {
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try thunk finally kv.foreach { case (k, _) => spark.conf.unset(k) }
   }
+
+  /** `thunk` on the distributed guard, at salt target `target`. */
+  private def salting[A](target: Long)(thunk: => A): A =
+    withConf("spark.graft.broadcastNodeLimit" -> "0",
+      "spark.graft.saltTargetPairs" -> target.toString)(thunk)
+
+  private def pairsWith(target: Long)(mk: => org.apache.spark.sql.DataFrame)
+      : Set[(Any, Any)] =
+    salting(target)(mk.collect().map(r => (r.get(0), r.get(1))).toSet)
 
   test("salting is pair-set neutral on the real documents corpus") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -54,12 +66,8 @@ class SaltedLshSpec extends SparkTestBase {
     val salted = pairsWith(16L)(Dedup.simhashCandidates(docs))
     // (hamming rides the row; set-compare over (id_a, id_b) + the
     // distance proves the payload pairing survived the block swap)
-    def full(t: Long) = {
-      spark.conf.set("spark.graft.saltTargetPairs", t.toString)
-      try Dedup.simhashCandidates(docs)
-        .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSet
-      finally spark.conf.unset("spark.graft.saltTargetPairs")
-    }
+    def full(t: Long) = salting(t)(Dedup.simhashCandidates(docs)
+      .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSet)
     assert(salted == plain, "simhash pair ids must be salt-invariant")
     assert(full(16L) == full(1L << 40),
       "hamming values must be salt-invariant (payload pairing)")
@@ -67,13 +75,8 @@ class SaltedLshSpec extends SparkTestBase {
 
   test("embedding (cosine) salted self-join is pair-set neutral") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    def full(t: Long) = {
-      spark.conf.set("spark.graft.saltTargetPairs", t.toString)
-      try Dedup.embeddingNearDup(docs, threshold = -1.0)
-        .collect().map(r => (r.get(0), r.get(1),
-          math.round(r.getDouble(2) * 1e9))).toSet
-      finally spark.conf.unset("spark.graft.saltTargetPairs")
-    }
+    def full(t: Long) = salting(t)(Dedup.embeddingNearDup(docs, threshold = -1.0)
+      .collect().map(r => (r.get(0), r.get(1), math.round(r.getDouble(2) * 1e9))).toSet)
     val plain = full(1L << 40)
     val salted = full(16L)
     assert(plain.nonEmpty, "corpus must produce cosine candidates")
@@ -99,18 +102,16 @@ class SaltedLshSpec extends SparkTestBase {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def jobsDuring[A](thunk: => A): (A, Int) =
       graft.obs.Recorder.record(spark)(thunk) match { case (a, rec) => (a, rec.jobs.size) }
-    def withFloor[A](f: Long)(thunk: => A): A = {
-      spark.conf.set("spark.graft.statsStageMinThreshold", f.toString)
-      try thunk finally spark.conf.unset("spark.graft.statsStageMinThreshold")
-    }
+    def withFloor[A](f: Long)(thunk: => A): A =
+      withConf("spark.graft.statsStageMinThreshold" -> f.toString)(thunk)
     // cap = 2 (the p16 shape): the notable filter keeps every bucket of
     // >= 3 rows — bucket-count-sized, NOT provably small. Constructing
     // the frame must not run the eager stats job (floor 16 default);
     // forcing the floor to 0 restores the old always-stage behavior.
-    val (dfLazy, jLazy) = jobsDuring(
-      Dedup.minhashCandidates(docs, maxBucketSize = 2))
-    val (dfStaged, jStaged) = withFloor(0L)(jobsDuring(
+    val (dfLazy, jLazy) = salting(1L << 20)(jobsDuring(
       Dedup.minhashCandidates(docs, maxBucketSize = 2)))
+    val (dfStaged, jStaged) = salting(1L << 20)(withFloor(0L)(jobsDuring(
+      Dedup.minhashCandidates(docs, maxBucketSize = 2))))
     assert(jLazy < jStaged,
       s"sub-floor cap must skip the eager stats checkpoint at " +
         s"construction: lazy=$jLazy staged=$jStaged jobs")
@@ -118,5 +119,20 @@ class SaltedLshSpec extends SparkTestBase {
     val b = dfStaged.collect().map(r => (r.get(0), r.get(1))).toSet
     assert(a == b && a.nonEmpty,
       s"stage guard must be result-neutral: ${(a -- b).take(3)} / ${(b -- a).take(3)}")
+  }
+
+  test("a null id in a salted bucket pairs with nothing") {
+    // 30 identical docs and one with a null id: one 31-row bucket per
+    // band. The null row gets a block of its own; kept in the salted
+    // rows, it passed the cross-block filter and least/greatest turned
+    // its pairs into (x, x) self-pairs
+    val docs = ((1 to 30).map(i => Option(i.toLong)) :+ None).map(i =>
+      (i, "the quick brown fox jumps over the lazy dog again and again"))
+      .toDF("doc_id", "text")
+    val plain = pairsWith(1L << 40)(Dedup.minhashCandidates(docs, maxBucketSize = 100000))
+    val salted = pairsWith(25L)(Dedup.minhashCandidates(docs, maxBucketSize = 100000))
+    assert(plain.size == 30 * 29 / 2, s"expected C(30,2), got ${plain.size}")
+    assert(salted.forall { case (a, b) => a != b }, s"self-pairs: ${salted.filter(p => p._1 == p._2)}")
+    assert(salted == plain, "the salted join must emit the plain set")
   }
 }
